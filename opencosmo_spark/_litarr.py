@@ -21,6 +21,7 @@ SQL literal form and fall back to the per-element path.
 from __future__ import annotations
 
 import math
+import numbers
 
 from pyspark.sql import Column, functions as F
 
@@ -44,6 +45,30 @@ def lit_long_array(values) -> Column:
     if not vals:
         return F.array().cast("array<bigint>")
     return F.expr("array(" + ",".join(f"{v}L" for v in vals) + ")")
+
+
+def sql_num(v) -> str:
+    """SQL literal for a number, typed as ``F.lit`` types it: integers
+    render unsuffixed (the parser makes them INT when they fit, else
+    BIGINT — ``F.lit``'s rule, so an INT column is never widened),
+    everything else as a DOUBLE through ``_sql_cell`` (``repr`` round
+    trip; NaN and ±Inf stay exact)."""
+    if isinstance(v, numbers.Integral) and not isinstance(v, bool):
+        return str(int(v))
+    return _sql_cell(float(v))
+
+
+def sql_in(expr: str, values) -> str:
+    """SQL text ``expr IN (v1, ..., vn)`` for a filter — the predicate
+    ``Column.isin(values)`` builds with one py4j round-trip per value,
+    here parsed once by ``F.expr`` (a 1,452-cell octree set: ~7,000
+    calls and 0.7 s vs one call under a millisecond). It optimizes to
+    the same ``INSET`` and Parquet ``In`` pushed filter. No values
+    render ``FALSE``, which a filter treats as ``x IN ()``."""
+    vals = [sql_num(v) for v in values]
+    if not vals:
+        return "FALSE"
+    return f"{expr} IN ({', '.join(vals)})"
 
 
 def sql_str(s: str) -> str:

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .._litarr import sql_ident, sql_in
 from ..dataset import Dataset
 from ..spatial.region import ConeRegion, HealpixRegion, SkyboxRegion
 
@@ -93,21 +94,22 @@ class HealpixMap(Dataset):
     def bound(self, region, select_by=None) -> "HealpixMap":
         """Restrict to pixels intersecting a sky region."""
         if isinstance(region, HealpixRegion):
-            pix = F.col(PIX)
+            pix = sql_ident(PIX)
             if region.nside != self._nside:
                 if region.nside > self._nside:
                     raise ValueError("region nside finer than map nside")
                 ratio = (self._nside // region.nside) ** 2
-                pix = F.floor(pix / F.lit(ratio)).cast("long")
+                pix = f"CAST(floor({pix} / {ratio}) AS BIGINT)"
             return self._clone(
-                self._df.filter(pix.isin(list(region.pixels))), region=region
+                self._df.filter(F.expr(sql_in(pix, region.pixels))),
+                region=region,
             )
         if isinstance(region, (ConeRegion, SkyboxRegion)):
             from ..spatial.healpix import query_region
 
             interior, boundary = query_region(self._nside, region)
             return self._clone(
-                self._df.filter(F.col(PIX).isin(interior + boundary)),
+                self._df.filter(F.expr(sql_in(sql_ident(PIX), interior + boundary))),
                 region=region,
             )
         raise TypeError(f"unsupported region {type(region).__name__}")

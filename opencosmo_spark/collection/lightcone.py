@@ -11,7 +11,7 @@ DataFrame — union is free, and ``with_redshift_range`` /
 
 from __future__ import annotations
 
-from .._litarr import lit_double_array
+from .._litarr import lit_double_array, sql_ident, sql_in
 from pyspark.sql import functions as F
 
 from ..dataset import Dataset
@@ -89,7 +89,9 @@ class Lightcone(Dataset):
         )
 
     def with_steps(self, steps: list[int]) -> "Lightcone":
-        return self._clone(self._df.filter(F.col(self.STEP_COL).isin(list(steps))))
+        return self._clone(
+            self._df.filter(F.expr(sql_in(sql_ident(self.STEP_COL), steps)))
+        )
 
     # -- sky queries ---------------------------------------------------
     def cone_search(self, ra: float, dec: float, radius: float) -> "Lightcone":
@@ -114,16 +116,13 @@ class Lightcone(Dataset):
             interior, boundary = query_region(nside, region)
             coords = find_coords(self.columns, 2, select_by)
             exact = exact_predicate(region, coords)
-            cell = F.col(PIXEL_COL)
-            pred = None
-            if interior:
-                pred = cell.isin(interior)
-            if boundary:
-                b = cell.isin(boundary) & exact
-                pred = b if pred is None else (pred | b)
-            if pred is None:
-                pred = F.lit(False)
-            return self._clone(self._df.filter(pred), region=region)
+            cell = sql_ident(PIXEL_COL)
+            # an empty pixel set renders FALSE, which the optimizer folds
+            pred = (
+                f"{sql_in(cell, interior)}"
+                f" OR ({sql_in(cell, boundary)} AND {exact})"
+            )
+            return self._clone(self._df.filter(F.expr(pred)), region=region)
         if isinstance(region, HealpixRegion):
             from ..spatial.bound import bound_dataset
 
@@ -132,7 +131,7 @@ class Lightcone(Dataset):
 
         coords = find_coords(self.columns, 2, select_by)
         return self._clone(
-            self._df.filter(exact_predicate(region, coords)), region=region
+            self._df.filter(F.expr(exact_predicate(region, coords))), region=region
         )
 
     def get_pixels(self, nside: int | None = None) -> list[int]:
@@ -153,11 +152,11 @@ class Lightcone(Dataset):
         """Restrict to a pixel list (reference lightcone.py:715-766)."""
         base_nside = int(self._header.extra.get("nside", 64))
         nside = nside or base_nside
-        col = F.col(PIXEL_COL)
+        col = sql_ident(PIXEL_COL)
         if nside != base_nside:
             ratio = (base_nside // nside) ** 2
-            col = F.floor(col / F.lit(ratio)).cast("long")
-        return self._clone(self._df.filter(col.isin(list(pixels))))
+            col = f"CAST(floor({col} / {ratio}) AS BIGINT)"
+        return self._clone(self._df.filter(F.expr(sql_in(col, pixels))))
 
 
 def lightcone_to_cartesian(

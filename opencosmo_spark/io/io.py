@@ -8,7 +8,10 @@ SPEC.md) maps to:
 * ``<name>.ocs/data.parquet/`` — Spark-written Parquet (partitioned,
   clustered on the spatial cell column when present);
 * ``<name>.ocs/header.json`` — header + per-column units/descriptions
-  + link metadata (replaces HDF5 attrs);
+  + link metadata (replaces HDF5 attrs) + the Parquet data's Spark
+  schema, so ``oc.open`` reads with it and starts no schema-inference
+  job (a sidecar without ``schema``, written before it was stored,
+  still opens by inference);
 * collections are directories of member datasets + ``collection.json``.
 
 Positional links (start/size, idx) become explicit key columns at
@@ -24,7 +27,7 @@ import os
 import shutil
 from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F, types as T
 
 from ..dataset import ROW_ID, Dataset
 from ..header import OpenCosmoHeader
@@ -45,6 +48,24 @@ def _active_spark() -> SparkSession:
 
         spark = get_spark()
     return spark
+
+
+def _read_schema(dt):
+    """The schema a Parquet read of ``dt`` infers: Spark writes every
+    field, array element and map value as nullable; names, types and
+    column metadata are kept."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _read_schema(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_read_schema(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_read_schema(dt.keyType), _read_schema(dt.valueType), True)
+    return dt
 
 
 def write_dataset(path: str, ds, overwrite: bool = False) -> None:
@@ -136,6 +157,7 @@ def write_dataset(path: str, ds, overwrite: bool = False) -> None:
         "descriptions": dict(ds._descriptions),
         "convention": ds.convention,
         "extra": {"nside": ds.nside} if isinstance(ds, HealpixMap) else {},
+        "schema": _read_schema(df.schema).jsonValue(),
     }
     with open(os.path.join(path, HEADER_FILE), "w") as f:
         json.dump(sidecar, f, indent=2)
@@ -163,7 +185,12 @@ def _open_single(spark: SparkSession, path: str):
         return fire("dataset_open", Dataset(spark.read.parquet(path)))
     with open(os.path.join(path, HEADER_FILE)) as f:
         sidecar = json.load(f)
-    df = spark.read.parquet(os.path.join(path, DATA_DIR))
+    reader = spark.read
+    if "schema" in sidecar:
+        # the stored schema spares the one-job-per-open Parquet footer
+        # inference; older sidecars have none and infer
+        reader = reader.schema(T.StructType.fromJson(sidecar["schema"]))
+    df = reader.parquet(os.path.join(path, DATA_DIR))
     header = OpenCosmoHeader.from_json(json.dumps(sidecar.get("header", {})))
     if "__cell_id" in df.columns:
         # storage-resident cell column: bound() may emit the INSET pruning

@@ -51,6 +51,14 @@ _DEFAULTS = {
 }
 
 
+def _driver_memory() -> str:
+    """A sixth of physical RAM, between 1 and 8 GB: room beside the JVM
+    for the Python process, its Arrow buffers, the pandas-UDF workers
+    and any other local sessions on the host."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{int(max(1, min(8, ram / 2**30 // 6)))}g"
+
+
 def get_spark(
     app_name: str = "opencosmo_spark",
     master: str | None = None,
@@ -74,7 +82,7 @@ def get_spark(
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
-        conf.setdefault("spark.driver.memory", "48g")
+        conf.setdefault("spark.driver.memory", _driver_memory())
         conf.setdefault("spark.ui.enabled", "false")
     if extra_conf:
         conf.update(extra_conf)

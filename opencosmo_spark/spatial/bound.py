@@ -8,16 +8,22 @@ test); (2) final selection = interior ∪ (boundary ∧ exact).
 
 Spark realization: the cell walk happens on the driver
 (``octree.region_to_cells``); the result is ONE predicate
-``cell IN interior OR (cell IN boundary AND exact(x,y,z))``. With data
-z-order-clustered on the cell column, Parquet row-group min/max stats
-prune interior/boundary misses — the same chunk-skip the reference gets
-from its tree, with no custom execution path.
+``cell IN (interior ∪ boundary) AND exact(x,y,z)``, rendered as SQL
+text and parsed by a single ``F.expr`` — its driver cost is a few py4j
+calls whatever the region's size (a ``Column`` chain paid one call per
+cell and per literal). With data z-order-clustered on the cell column,
+Parquet row-group min/max stats prune cells outside the set — the same
+chunk-skip the reference gets from its tree, with no custom execution
+path.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
+from .._litarr import sql_ident, sql_in, sql_num
 from .octree import region_to_cells
 from .region import (
     BoxRegion,
@@ -54,36 +60,41 @@ def find_coords(columns: list[str], dims: int, select_by=None):
     )
 
 
-def exact_predicate(region, coords):
-    """The fine-phase geometric test as a Spark Column."""
+def exact_predicate(region, coords) -> str:
+    """The fine-phase geometric test as SQL text, parenthesised so it
+    parses to the same expression tree a ``Column`` chain would build."""
     if isinstance(region, BoxRegion):
-        x, y, z = (F.col(c) for c in coords)
-        p = None
-        for c, lo, hi in zip((x, y, z), region.p1, region.p2):
-            leg = (c >= F.lit(lo)) & (c < F.lit(hi))
-            p = leg if p is None else (p & leg)
-        return p
+        pred = None
+        for c, lo, hi in zip(coords, region.p1, region.p2):
+            c = sql_ident(c)
+            leg = f"({c} >= {sql_num(lo)} AND {c} < {sql_num(hi)})"
+            pred = leg if pred is None else f"({pred} AND {leg})"
+        return pred
     if isinstance(region, ConeRegion):
-        ra, dec = (F.radians(F.col(c)) for c in coords)
-        ra0, dec0 = F.radians(F.lit(region.ra)), F.radians(F.lit(region.dec))
-        import math
-
-        cosr = F.lit(math.cos(math.radians(region.radius)))
+        ra, dec = (f"radians({sql_ident(c)})" for c in coords)
+        ra0 = f"radians({sql_num(region.ra)})"
+        dec0 = f"radians({sql_num(region.dec)})"
+        cosr = sql_num(math.cos(math.radians(region.radius)))
         cos_sep = (
-            F.sin(dec) * F.sin(dec0)
-            + F.cos(dec) * F.cos(dec0) * F.cos(ra - ra0)
+            f"((sin({dec}) * sin({dec0}))"
+            f" + ((cos({dec}) * cos({dec0})) * cos({ra} - {ra0})))"
         )
-        return cos_sep >= cosr
+        return f"({cos_sep} >= {cosr})"
     if isinstance(region, SkyboxRegion):
-        ra, dec = F.pmod(F.col(coords[0]), F.lit(360.0)), F.col(coords[1])
-        decp = (dec >= F.lit(region.dec_min)) & (dec <= F.lit(region.dec_max))
-        if region.wraps:
-            rap = (ra >= F.lit(region.ra_min)) | (ra <= F.lit(region.ra_max))
-        else:
-            rap = (ra >= F.lit(region.ra_min)) & (ra <= F.lit(region.ra_max))
-        return decp & rap
+        ra = f"pmod({sql_ident(coords[0])}, {sql_num(360.0)})"
+        dec = sql_ident(coords[1])
+        decp = (
+            f"({dec} >= {sql_num(region.dec_min)}"
+            f" AND {dec} <= {sql_num(region.dec_max)})"
+        )
+        op = "OR" if region.wraps else "AND"
+        rap = (
+            f"({ra} >= {sql_num(region.ra_min)}"
+            f" {op} {ra} <= {sql_num(region.ra_max)})"
+        )
+        return f"({decp} AND {rap})"
     if isinstance(region, FullSkyRegion):
-        return F.lit(True)
+        return "TRUE"
     raise TypeError(f"unsupported region {type(region).__name__}")
 
 
@@ -99,9 +110,16 @@ def bound_dataset(ds, region, select_by=None):
 
             coords = find_coords(ds.columns, 2, select_by)
             pix = ang2pix_expr(region.nside, F.col(coords[0]), F.col(coords[1]))
-            out = df.filter(pix.isin(list(region.pixels)))
+            # the UDF pixel has no SQL text: project it under a hidden
+            # name, filter on that, drop it (the plan Spark extracts
+            # for a UDF inside a filter anyway)
+            out = (
+                df.withColumn("__bound_pix", pix)
+                .filter(F.expr(sql_in("__bound_pix", region.pixels)))
+                .drop("__bound_pix")
+            )
         else:
-            out = df.filter(F.col(PIXEL_COL).isin(list(region.pixels)))
+            out = df.filter(F.expr(sql_in(sql_ident(PIXEL_COL), region.pixels)))
         return ds._clone(out, region=region)
 
     dims = 3 if isinstance(region, BoxRegion) else 2
@@ -125,14 +143,14 @@ def bound_dataset(ds, region, select_by=None):
         interior, boundary = region_to_cells(
             region, [0.0, 0.0, 0.0], float(header.box_size), level, dims=3
         )
-        if not (interior or boundary):
-            return ds._clone(df.filter(F.lit(False)), region=region)
         # interior ∪ (boundary ∧ exact) ≡ (cell ∈ interior∪boundary) ∧ exact
         # for a precise exact predicate: one INSET probe instead of two,
         # same rows, same row-group pruning on the clustered cell column.
-        pred = F.col(CELL_COL).isin(interior + boundary) & exact
-        return ds._clone(df.filter(pred), region=region)
+        # No cells at all renders FALSE: the optimizer empties the scan.
+        cells = sql_in(sql_ident(CELL_COL), interior + boundary)
+        pred = f"{cells} AND {exact}"
+        return ds._clone(df.filter(F.expr(pred)), region=region)
 
     # no spatial index: exact predicate only (still pushed to Parquet
     # row groups when data is clustered on the coordinate columns)
-    return ds._clone(df.filter(exact), region=region)
+    return ds._clone(df.filter(F.expr(exact)), region=region)

@@ -23,7 +23,7 @@ from opencosmo_spark.units import parse_unit
 BOX = 64.0
 N_HALOS = 2000
 SEED = 42
-FIXDIR = "/tmp/ocs_fixtures_v4"
+FIXDIR = "/tmp/ocs_fixtures_v5"
 
 
 @pytest.fixture(scope="session")

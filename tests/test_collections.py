@@ -155,7 +155,15 @@ def test_write_roundtrip_collection(coll, spark, tmp_path):
     f = coll.filter(col("fof_halo_mass") > 5e13)
     path = str(tmp_path / "coll_out")
     oc.write(path, f)
-    re = oc.open(path)
+    # the members open with their stored schemas: no inference job
+    sc = spark.sparkContext
+    sc.setJobGroup("open_written_collection", "oc.open")
+    try:
+        re = oc.open(path)
+        assert sc.statusTracker().getJobIdsForGroup("open_written_collection") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert len(re) == len(f)
     a = f["dm_particles"].get_data("pandas").sort_values("id").reset_index(drop=True)
     b = re["dm_particles"].get_data("pandas").sort_values("id").reset_index(drop=True)

@@ -6,10 +6,11 @@ r15: the nine examples LAUNCH CONCURRENTLY at module setup. They were
 serialized before — nine JVM startups plus sf0.001 workloads
 back-to-back made this file ~10 of the suite's 41 minutes, and the
 driver's verify window truncated mid-suite (VERIFY_r14 tests_ok:false
-on a green suite). Each subprocess runs local[8] (SPARK_GRAFT_CPUS=8)
-so nine sessions share the machine instead of nine local[32] fighting;
-every assertion is unchanged — the tests just read pre-collected
-outputs. Wall for the module ≈ the slowest example instead of the sum.
+on a green suite). Each subprocess gets a slice of the host's cores
+(SPARK_GRAFT_CPUS) so nine sessions share the machine instead of nine
+full-width sessions fighting; every assertion is unchanged — the tests
+just read pre-collected outputs. Wall for the module ≈ the slowest
+example instead of the sum.
 """
 
 import os
@@ -20,11 +21,12 @@ import tempfile
 
 import pytest
 
-# name -> (argv tail, generous per-process timeout, cores). "__TMP__"
-# becomes a module-scoped temp dir (web_pipeline's output root). The
-# two longest examples (curation, clustering) get the bigger core
-# slice — the module's wall is their runtime; the rest finish earlier
-# on less.
+# name -> (argv tail, generous per-process timeout, core weight).
+# "__TMP__" becomes a module-scoped temp dir (web_pipeline's output
+# root). The two longest examples (curation, clustering) get the bigger
+# core slice — the module's wall is their runtime; the rest finish
+# earlier on less. A weight is the example's cores on a 32-core host;
+# each example runs on the same share of this host's cores (at least 1).
 _SPECS = {
     "embedding": (["examples/embedding_pipeline.py", "/root/testdata/sf0.001"], 900, 6),
     "curation": (["examples/curation_pipeline.py", "/root/testdata/sf0.001"], 1200, 16),
@@ -38,13 +40,20 @@ _SPECS = {
 }
 
 
+_NPROC = len(os.sched_getaffinity(0))
+
+
+def _cores(weight: int) -> int:
+    return max(1, round(weight * _NPROC / 32))
+
+
 @pytest.fixture(scope="module")
 def example_runs():
     tmp = tempfile.mkdtemp(prefix="web_pipeline_out_")
     procs: dict[str, tuple[subprocess.Popen, int]] = {}
-    for name, (tail, timeout, cores) in _SPECS.items():
+    for name, (tail, timeout, weight) in _SPECS.items():
         env = dict(os.environ)
-        env["SPARK_GRAFT_CPUS"] = str(cores)
+        env["SPARK_GRAFT_CPUS"] = str(_cores(weight))
         argv = [sys.executable] + [
             a.replace("__TMP__", tmp) for a in tail
         ]

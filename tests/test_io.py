@@ -54,6 +54,66 @@ def test_overwrite_flag(halos, tmp_path):
     assert len(oc.open(path)) == 20
 
 
+def _mixed_frame(spark):
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType(), False, {"comment": "row key"}),
+        T.StructField("s", T.StructType([
+            T.StructField("a", T.IntegerType(), False),
+            T.StructField("b", T.ArrayType(T.DoubleType(), False), False),
+        ]), False),
+        T.StructField("arr", T.ArrayType(T.StructType([
+            T.StructField("k", T.StringType(), False),
+        ]), False)),
+        T.StructField("m", T.MapType(T.StringType(), T.LongType(), False), False),
+        T.StructField("d", T.DecimalType(12, 3), False),
+        T.StructField("ts", T.TimestampType(), False),
+        T.StructField("tsn", T.TimestampNTZType()),
+        T.StructField("dt", T.DateType()),
+        T.StructField("f", T.FloatType(), False),
+        T.StructField("bin", T.BinaryType()),
+    ])
+    t = datetime.datetime(2020, 1, 2, 3, 4, 5)
+    rows = [
+        (1, (2, [1.0, 2.5]), [("x",)], {"a": 1}, decimal.Decimal("1.234"),
+         t, t, t.date(), 1.5, b"ab"),
+        (2, (3, []), None, {}, decimal.Decimal("-0.001"),
+         t, None, None, -0.0, None),
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
+def test_sidecar_schema_equals_inferred(spark, tmp_path):
+    """oc.open reads with the schema the sidecar stores: it must be the
+    one Parquet inference gives (every field nullable, metadata kept),
+    and a sidecar without it (written before it was stored) still
+    opens by inference to the same schema and rows."""
+    import json
+    import os
+
+    path = str(tmp_path / "mixed")
+    oc.write(path, oc.Dataset(_mixed_frame(spark)))
+    inferred = spark.read.parquet(os.path.join(path, "data.parquet"))
+    want = sorted(inferred.collect())
+    opened = oc.open(path).spark_df
+    assert opened.schema == inferred.schema
+    assert sorted(opened.collect()) == want
+
+    hfile = os.path.join(path, "header.json")
+    with open(hfile) as f:
+        side = json.load(f)
+    del side["schema"]
+    with open(hfile, "w") as f:
+        json.dump(side, f)
+    older = oc.open(path).spark_df
+    assert older.schema == inferred.schema
+    assert sorted(older.collect()) == want
+
+
 def test_open_bare_parquet(spark):
     ds = oc.open("/root/testdata/sf0.001/nation.parquet")
     assert len(ds) == 25

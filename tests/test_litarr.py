@@ -132,3 +132,27 @@ def test_sql_str_roundtrips_every_string(spark):
     row = spark.range(1).selectExpr(*exprs).first()
     for i, s in enumerate(cases):
         assert row[f"c{i}"] == s, (i, s, row[f"c{i}"])
+
+
+def test_sql_in_matches_isin(spark):
+    """sql_in filters the same rows as Column.isin, with F.lit's
+    literal typing (an INT column is compared as INT) and exact
+    non-finite doubles; no values select nothing."""
+    from opencosmo_spark._litarr import sql_in
+
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(
+            [0.5, float("inf"), float("-inf"), float("nan"), -2.0, 1e300]
+        )],
+        "i int, v double",
+    )
+    for col, vals in [
+        ("i", [0, 3, 5, 2**40]),
+        ("v", [0.5, float("inf"), float("nan"), 1e300]),
+        ("i", []),
+    ]:
+        got = df.filter(F.expr(sql_in(col, vals))).orderBy("i").collect()
+        want = df.filter(F.col(col).isin(vals)).orderBy("i").collect()
+        assert [r.i for r in got] == [r.i for r in want]
+    plan = df.filter(F.expr(sql_in("i", range(20))))._jdf.queryExecution()
+    assert "cast(i" not in plan.optimizedPlan().toString()

@@ -22,18 +22,77 @@ def lc(spark, fixtures):
 
 def test_box_bound_equals_brute(halos):
     data = halos.get_data("numpy")
-    region = make_box((10.0, 5.0, 20.0), (35.0, 50.0, 44.0))
     x, y, z = (
         data["fof_halo_center_x"],
         data["fof_halo_center_y"],
         data["fof_halo_center_z"],
     )
-    expected = np.sum(
-        (x >= 10) & (x < 35) & (y >= 5) & (y < 50) & (z >= 20) & (z < 44)
-    )
-    out = halos.bound(region)
-    assert len(out) == expected
-    assert out.region == region
+    # a mid-sized box and one of ~30 % of the volume (1,452 cells)
+    for p1, p2 in [
+        ((10.0, 5.0, 20.0), (35.0, 50.0, 44.0)),
+        ((0.0, 0.0, 0.0), (43.0, 43.0, 45.0)),
+    ]:
+        region = make_box(p1, p2)
+        expected = np.sum(
+            (x >= p1[0]) & (x < p2[0])
+            & (y >= p1[1]) & (y < p2[1])
+            & (z >= p1[2]) & (z < p2[2])
+        )
+        out = halos.bound(region)
+        assert len(out) == expected
+        assert out.region == region
+
+
+def test_bound_driver_cost_is_constant_and_pushes_cells(spark, halos):
+    """bound() compiles its cell set and exact test into one parsed
+    predicate: a few py4j calls however many cells the box covers,
+    and the Parquet scan still receives the whole cell set."""
+    import re
+    import threading
+
+    from opencosmo_spark.spatial.octree import region_to_cells
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+    me = threading.get_ident()
+
+    def counted(*a, **k):
+        # py4j's finalizer thread releases dead JVM references through
+        # the same client; count only the calls bound() itself makes
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(*a, **k)
+
+    boxes = {
+        8: ((30.0, 30.0, 30.0), (34.0, 34.0, 34.0)),
+        216: ((10.0, 10.0, 10.0), (30.0, 30.0, 30.0)),
+        1452: ((0.0, 0.0, 0.0), (43.0, 43.0, 45.0)),
+    }
+    for ncells, (p1, p2) in boxes.items():
+        region = make_box(p1, p2)
+        interior, boundary = region_to_cells(
+            region, [0.0, 0.0, 0.0], halos.header.box_size, 4
+        )
+        cells = set(interior + boundary)
+        assert len(cells) == ncells
+        calls.clear()
+        client.send_command = counted
+        try:
+            out = halos.bound(region)
+        finally:
+            client.send_command = send
+        assert len(calls) <= 30, (ncells, len(calls))
+        leaves = out.spark_df._jdf.queryExecution().sparkPlan().collectLeaves()
+        pushed = [
+            leaves.apply(i).metadata().apply("PushedFilters")
+            for i in range(leaves.size())
+            if "FileSourceScan" in leaves.apply(i).getClass().getName()
+        ]
+        assert len(pushed) == 1
+        m = re.search(r"In\(__cell_id, \[([\d,]+)\]\)", pushed[0])
+        assert m is not None, pushed[0]
+        assert {int(v) for v in m.group(1).split(",")} == cells
 
 
 def test_box_bound_small_region(halos):
