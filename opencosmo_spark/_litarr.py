@@ -14,8 +14,12 @@ array<double> literal) with ONE py4j call by rendering the SQL
 ``array(...)`` literal as text. ``repr(float)`` is the shortest
 round-trip decimal form, and Java's ``Double.parseDouble`` of that
 form recovers the identical IEEE-754 bits, so values are bit-equal to
-the ``F.lit`` path (cross-checked in tests). Non-finite values have no
-SQL literal form and fall back to the per-element path.
+the ``F.lit`` path (cross-checked in tests). NaN and ±Inf render as
+constant casts that the optimizer folds to the same literals.
+
+The module is also the one home of SQL-text rendering: literals
+(``sql_num``, ``sql_str``, ``sql_double_array``), identifiers
+(``sql_ident``, ``sql_col``) and types (``sql_type``).
 """
 
 from __future__ import annotations
@@ -26,14 +30,17 @@ import numbers
 from pyspark.sql import Column, functions as F
 
 
+def sql_double_array(values) -> str:
+    """SQL text of a literal ``array<double>``: every element through
+    ``_sql_cell`` (``repr`` round trip; NaN and ±Inf exact)."""
+    return "array(" + ",".join(_sql_cell(float(v)) for v in values) + ")"
+
+
 def lit_double_array(values) -> Column:
     """A literal ``array<double>`` Column, bit-identical to
     ``F.array(*[F.lit(float(v)) for v in values])`` but built with one
     py4j round-trip instead of one per element."""
-    vals = [float(v) for v in values]
-    if not vals or not all(math.isfinite(v) for v in vals):
-        return F.array(*[F.lit(v) for v in vals])
-    return F.expr("array(" + ",".join(f"{v!r}D" for v in vals) + ")")
+    return F.expr(sql_double_array(values))
 
 
 def lit_long_array(values) -> Column:
@@ -114,6 +121,36 @@ def sql_str(s: str) -> str:
 def sql_ident(name: str) -> str:
     """Backtick-quote an identifier for SQL text."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def sql_col(name) -> str:
+    """SQL text of a column given by NAME, for the helpers that render
+    their expression as parsed SQL text. A ``Column`` has no SQL text,
+    so it raises ``TypeError`` pointing to the name form."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"expected a column name (str), got {type(name).__name__};"
+            " pass the column's name — project a Column under a name"
+            " first (df.withColumn(name, col)) and pass that name"
+        )
+    return sql_ident(name)
+
+
+def sql_type(dt) -> str:
+    """DDL text of a ``DataType`` that parses back to the same type,
+    every struct field name backtick-quoted (``simpleString`` leaves
+    names bare, so a field like ``my-meta`` would not parse)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            f"{sql_ident(f.name)}:{sql_type(f.dataType)}" for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{sql_type(dt.keyType)},{sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 # Above this many cells the rendered SQL text stops being "driver-

@@ -18,7 +18,6 @@ NOTE on std/var semantics: the reference reduces with numpy defaults
 
 from __future__ import annotations
 
-import math
 from fractions import Fraction
 from typing import Any, Iterable
 
@@ -460,11 +459,3 @@ def lit(value: float, unit: str | Unit | None = None) -> Lit:
 
     u = unit if isinstance(unit, Unit) else parse_unit(unit)
     return Lit(float(value), u)
-
-
-def expr_is_mask(e: ColumnExpr) -> bool:
-    return isinstance(e, Mask)
-
-
-def infinite_or_nan(x: float) -> bool:  # small helper used by take()
-    return math.isnan(x) or math.isinf(x)

@@ -11,7 +11,7 @@ string are assistant content (supervised) vs prompt scaffolding
 regex-recovering them later, or re-rendering in the loader — breaks
 the moment the template changes. Here the offsets are computed by the
 SAME expressions that render: the span start is ``part_start +
-length(header_expr(role))`` where ``header_expr`` is the expression
+length(header_sql(role))`` where ``header_sql`` is the expression
 that rendered the header, so ``rendered[start:end] == content`` holds
 by construction for ANY template (differentially tested per turn
 across templates).
@@ -39,7 +39,7 @@ class ChatTemplate:
     unless ``footers`` overrides it for the role.
 
     The span arithmetic in :func:`render_chat` is derived from the
-    same ``header_expr``/``footer_expr`` expressions that render, so
+    same ``header_sql``/``footer_sql`` expressions that render, so
     any template expressible here keeps the exact-offset contract
     with no per-template code.
     """
@@ -50,23 +50,9 @@ class ChatTemplate:
     headers: Mapping[str, str] | None = field(default=None)
     footers: Mapping[str, str] | None = field(default=None)
 
-    def header_expr(self, role: Column) -> Column:
-        out = F.concat(
-            F.lit(self.header_prefix), role, F.lit(self.header_suffix)
-        )
-        for r, h in (self.headers or {}).items():
-            out = F.when(role == F.lit(r), F.lit(h)).otherwise(out)
-        return out
-
-    def footer_expr(self, role: Column) -> Column:
-        out = F.lit(self.footer)
-        for r, ft in (self.footers or {}).items():
-            out = F.when(role == F.lit(r), F.lit(ft)).otherwise(out)
-        return out
-
-    # SQL-text twins (the _litarr idiom, r15): same CASE nesting order
-    # as the Column forms (later overrides wrap earlier ones), template
-    # strings escaped through sql_str so any literal renders exactly
+    # SQL text over a role EXPRESSION: later overrides wrap earlier
+    # ones in CASE, template strings escaped through sql_str so any
+    # literal renders exactly
     def header_sql(self, role: str) -> str:
         from .._litarr import sql_str
 
@@ -134,32 +120,20 @@ def conversation_turns(
     )
 
 
-def _tok(c: Column, mode: str) -> Column:
-    """Additive token counter: counts non-overlapping regex matches,
-    so empty strings count 0 and ``tok(a)+tok(b) == tok(a+b)``
-    whenever the a|b boundary is whitespace-adjacent. (The public
-    ``token_count`` uses trim+split, which maps '' -> 1 — fine for
-    document stats, wrong for span algebra.)"""
-    if mode == "whitespace":
-        return F.size(F.regexp_extract_all(c, F.lit(r"\S+"), 0))
-    if mode == "bpe":
-        return F.size(
-            F.regexp_extract_all(
-                c, F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"), 0
-            )
-        )
-    raise ValueError(f"unknown token mode {mode!r}")
-
-
 def _tok_sql(c: str, mode: str) -> str:
-    """SQL-text twin of :func:`_tok` (same regexes)."""
+    """Additive token counter over a text EXPRESSION: counts
+    non-overlapping regex matches, so empty strings count 0 and
+    ``tok(a)+tok(b) == tok(a+b)`` whenever the a|b boundary is
+    whitespace-adjacent. (The public ``token_count`` uses trim+split,
+    which maps '' -> 1 — fine for document stats, wrong for span
+    algebra.) The "bpe" pattern is ``token_count``'s."""
+    from .._litarr import sql_str
+    from .text import BPE_TOKEN_RE
+
     if mode == "whitespace":
         return f"size(regexp_extract_all({c}, '\\\\S+', 0))"
     if mode == "bpe":
-        return (
-            f"size(regexp_extract_all({c},"
-            " '[A-Za-z]+|[0-9]+|[^\\\\sA-Za-z0-9]', 0))"
-        )
+        return f"size(regexp_extract_all({c}, {sql_str(BPE_TOKEN_RE)}, 0))"
     raise ValueError(f"unknown token mode {mode!r}")
 
 
@@ -181,7 +155,7 @@ def render_chat(
     template.footer(role)``, concatenated in turn order. Span
     arithmetic is pure expression algebra over the same expressions
     that build the string: a running-sum aggregate gives each part's
-    start and ``length(header_expr(role))`` offsets to the content,
+    start and ``length(header_sql(role))`` offsets to the content,
     so ``substring(text, start+1, end-start) == content`` for every
     supervised turn UNDER ANY TEMPLATE — the invariant the loss mask
     depends on and the tests assert across templates. NULL message
@@ -209,19 +183,19 @@ def render_chat(
     """
     if on_long not in ("error", "truncate"):
         raise ValueError(f"on_long must be 'error' or 'truncate', got {on_long!r}")
-    # The whole render is built as parsed SQL text (the _litarr idiom,
-    # r15): the Column form registered ~10 HOF lambdas per call (~20 ms
-    # of py4j round-trips each) and render_preference_pairs calls this
-    # three times per construction. The expressions are the same tree
-    # shapes — NULL-coalesced role/content, running-sum aggregate
-    # starts, zip_with span structs — with internal struct fields named
-    # s/e/ts/te/r (projected away before output; 'end' would need
-    # keyword quoting). Value equivalence is pinned by the chat tests'
-    # substring==content differentials and the q30 oracle.
-    from .._litarr import sql_ident, sql_str
+    # The whole render is built as parsed SQL text (the _litarr idiom):
+    # a Column-API build registered ~10 HOF lambdas per call (~20 ms of
+    # py4j round-trips each) and render_preference_pairs calls this
+    # three times per construction. NULL-coalesced role/content,
+    # running-sum aggregate starts, zip_with span structs — with
+    # internal struct fields named s/e/ts/te/r (projected away before
+    # output; 'end' would need keyword quoting). Values are pinned by
+    # the chat tests' substring==content differentials and the q30
+    # oracle.
+    from .._litarr import sql_ident, sql_str, sql_type
 
     mq = sql_ident(messages_col)
-    ddl = df.schema[messages_col].dataType.simpleString()
+    ddl = sql_type(df.schema[messages_col].dataType)
     msgs_raw = f"coalesce({mq}, cast(array() as {ddl}))"
     out_cols: dict[str, Column] = {}
     if on_long == "truncate":
@@ -464,7 +438,7 @@ def pack_sft_rows(
     if token_count_col is not None:
         nt = F.col(token_count_col).cast("long")
     else:
-        nt = token_count(F.col(text_col), token_mode).cast("long")
+        nt = token_count(text_col, token_mode).cast("long")
     with_tok = sft.withColumn("__nt", nt).withColumn("__ci", F.lit(0))
     packed = pack_chunks_bfd(
         with_tok,

@@ -55,18 +55,18 @@ def gopher_quality_flags(
       words appear
     - per-rule booleans ``g_ok_*`` and the conjunction ``keep``
 
-    Thresholds are the paper's defaults, overridable per corpus.
+    Thresholds are the paper's defaults, overridable per corpus; each
+    renders as ``F.lit`` would type it (``sql_num``), so a fractional
+    ``min_words`` compares exactly.
 
-    Rendered as parsed SQL text (the _litarr idiom, r15): the Column
-    form registered 8 higher-order-function lambdas (~20 ms of py4j
+    Rendered as parsed SQL text (the _litarr idiom): a Column-API
+    build registered 8 higher-order-function lambdas (~20 ms of py4j
     round-trips each) plus 15 chained withColumn projections per call
     — ~0.3-0.9 s of serial driver time per construction (guide §4's
-    boundary cost at the driver↔JVM boundary). Same expressions:
-    split's regex, the 0.0D aggregate init, the int->double cast
-    points and round(…, 6) are all spelled identically, and the flags
-    are value-checked by the oracle (q30) and the clean tests.
+    boundary cost at the driver↔JVM boundary). The flags are
+    value-checked by the oracle (q30) and the clean tests.
     """
-    from .._litarr import sql_ident, sql_str
+    from .._litarr import sql_ident, sql_num, sql_str
 
     t = sql_ident(text_col)
     words = f"filter(split(trim({t}), '\\\\s+'), w -> w != '')"
@@ -112,154 +112,44 @@ def gopher_quality_flags(
     )
     checks = {
         "g_ok_word_count": (
-            f"g_word_count BETWEEN {int(min_words)} AND {int(max_words)}"
+            f"g_word_count BETWEEN {sql_num(min_words)}"
+            f" AND {sql_num(max_words)}"
         ),
         "g_ok_mean_word_len": (
-            f"g_mean_word_len BETWEEN {float(min_mean_word_len)!r}D"
-            f" AND {float(max_mean_word_len)!r}D"
+            f"g_mean_word_len BETWEEN {sql_num(min_mean_word_len)}"
+            f" AND {sql_num(max_mean_word_len)}"
         ),
-        "g_ok_symbol_ratio": (
-            f"g_symbol_ratio <= {float(max_symbol_ratio)!r}D"
-        ),
-        "g_ok_bullet_ratio": (
-            f"g_bullet_ratio <= {float(max_bullet_ratio)!r}D"
-        ),
+        "g_ok_symbol_ratio": f"g_symbol_ratio <= {sql_num(max_symbol_ratio)}",
+        "g_ok_bullet_ratio": f"g_bullet_ratio <= {sql_num(max_bullet_ratio)}",
         "g_ok_ellipsis_ratio": (
-            f"g_ellipsis_ratio <= {float(max_ellipsis_ratio)!r}D"
+            f"g_ellipsis_ratio <= {sql_num(max_ellipsis_ratio)}"
         ),
         "g_ok_alpha_word_ratio": (
-            f"g_alpha_word_ratio >= {float(min_alpha_word_ratio)!r}D"
+            f"g_alpha_word_ratio >= {sql_num(min_alpha_word_ratio)}"
         ),
-        "g_ok_stopwords": f"g_stopword_hits >= {int(min_stopword_hits)}",
+        "g_ok_stopwords": (
+            f"g_stopword_hits >= {sql_num(min_stopword_hits)}"
+        ),
     }
     out = out.withColumns({k: F.expr(v) for k, v in checks.items()})
     return out.withColumn("keep", F.expr(" AND ".join(checks.keys())))
 
 
-def _dup_beyond_first(arr: Column) -> Column:
-    """Per-row duplicate census of a string array: struct with ``dups``
-    (# occurrences beyond each element's first) and ``dupchars`` (their
-    summed char lengths). Sort-then-scan inside the row — array_sort
-    puts equal elements adjacent, one aggregate pass counts repeats —
-    so the whole census is a JVM expression: no explode, no shuffle,
-    cost O(k log k) in the row's own element count."""
-    srt = F.array_sort(arr)
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("dups"),
-        F.lit(0).cast("long").alias("dupchars"),
-    )
-    return F.aggregate(
-        srt,
-        init,
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            (
-                acc["dups"]
-                + F.when(x.eqNullSafe(acc["prev"]), F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            ).alias("dups"),
-            (
-                acc["dupchars"]
-                + F.when(
-                    x.eqNullSafe(acc["prev"]), F.length(x).cast("long")
-                ).otherwise(F.lit(0))
-            ).alias("dupchars"),
-        ),
-    )
-
-
-def _word_grams(words: Column, n: int) -> Column:
-    """Space-joined word ``n``-grams of a word array, as a JVM
-    expression (sequence of window starts -> slice -> concat_ws).
-    Empty array when the row has fewer than ``n`` words — the CASE
-    guard keeps ``sequence`` from ever seeing start > stop."""
-    n_words = F.size(words)
-    starts = F.sequence(F.lit(1), n_words - F.lit(n - 1))
-    return F.when(
-        n_words >= F.lit(n),
-        F.transform(starts, lambda i: F.concat_ws(" ", F.slice(words, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def _top_gram_mass(grams: Column) -> Column:
-    """Characters covered by the heaviest repeated gram: the maximum
-    of ``count * length(gram)`` over grams occurring >= 2 times (the
-    most frequent gram, up to frequency ties broken toward the longer
-    gram), 0 when nothing repeats — count < 2 is not repetition.
-    Run-length scan over ``array_sort`` — one aggregate, row-local."""
-    srt = F.array_sort(grams)
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best_mass"),
-    )
-    scanned = F.aggregate(
-        srt,
-        init,
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1)
-            .otherwise(F.lit(1).cast("long"))
-            .alias("run"),
-            F.greatest(
-                acc["best_mass"],
-                F.when(
-                    x.eqNullSafe(acc["prev"]),
-                    (acc["run"] + 1) * F.length(x).cast("long"),
-                ).otherwise(F.lit(0).cast("long")),
-            ).alias("best_mass"),
-        ),
-    )
-    return scanned["best_mass"]
-
-
-def _dup_gram_mass(grams: Column) -> Column:
-    """Characters covered by ALL duplicated grams — every occurrence
-    (including the first) of any gram appearing >= 2 times contributes
-    its char length. Same sorted run-length scan as
-    ``_top_gram_mass``; when a run reaches its second element the
-    first occurrence's mass is back-filled."""
-    srt = F.array_sort(grams)
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("mass"),
-    )
-    scanned = F.aggregate(
-        srt,
-        init,
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1)
-            .otherwise(F.lit(1).cast("long"))
-            .alias("run"),
-            (
-                acc["mass"]
-                + F.when(
-                    x.eqNullSafe(acc["prev"]),
-                    # this occurrence, plus the run's first occurrence
-                    # the moment the gram proves duplicated (run 1->2)
-                    F.length(x).cast("long")
-                    * F.when(acc["run"] == 1, F.lit(2)).otherwise(F.lit(1)),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("mass"),
-        ),
-    )
-    return scanned["mass"]
-
-
-# ----- SQL-text twins of the gram helpers (the _litarr idiom, r15) --
-# Each takes/returns SQL TEXT instead of Columns: the Column forms
-# register one interpreted-lambda aggregate per call (~20 ms of py4j
-# round-trips), and q30's repetition lane builds four of them per
-# construction. Same expressions: array_sort + run-length aggregate,
-# <=> for eqNullSafe, the same long casts and CASE arithmetic.
+# ----- SQL-text gram helpers (the _litarr idiom) --------------------
+# Each takes/returns SQL TEXT: a Column-API build registers one
+# interpreted-lambda aggregate per call (~20 ms of py4j round-trips),
+# and gopher_repetition_flags builds eleven of them per construction.
+# Each census is a sort-then-scan inside the row — array_sort puts
+# equal elements adjacent, one run-length aggregate counts repeats —
+# so it is a JVM expression: no explode, no shuffle, O(k log k) in the
+# row's own element count.
 
 
 def _word_grams_sql(words: str, n: int) -> str:
-    """SQL-text twin of :func:`_word_grams` over a words EXPRESSION."""
+    """Space-joined word ``n``-grams of a words EXPRESSION (sequence
+    of window starts -> slice -> concat_ws). Empty array when the row
+    has fewer than ``n`` words — the CASE guard keeps ``sequence``
+    from ever seeing start > stop."""
     return (
         f"CASE WHEN size({words}) >= {n} THEN "
         f"transform(sequence(1, size({words}) - {n - 1}), "
@@ -269,7 +159,10 @@ def _word_grams_sql(words: str, n: int) -> str:
 
 
 def _top_gram_mass_sql(grams: str) -> str:
-    """SQL-text twin of :func:`_top_gram_mass`."""
+    """Characters covered by the heaviest repeated gram: the maximum
+    of ``count * length(gram)`` over grams occurring >= 2 times (the
+    most frequent gram, up to frequency ties broken toward the longer
+    gram), 0 when nothing repeats — count < 2 is not repetition."""
     return (
         f"aggregate(array_sort({grams}), "
         "named_struct('prev', cast(null as string), 'run', 0L, "
@@ -286,7 +179,11 @@ def _top_gram_mass_sql(grams: str) -> str:
 
 
 def _dup_gram_mass_sql(grams: str) -> str:
-    """SQL-text twin of :func:`_dup_gram_mass`."""
+    """Characters covered by ALL duplicated grams — every occurrence
+    (including the first) of any gram appearing >= 2 times contributes
+    its char length. Same sorted run-length scan as
+    ``_top_gram_mass_sql``; when a run reaches its second element the
+    first occurrence's mass is back-filled."""
     return (
         f"aggregate(array_sort({grams}), "
         "named_struct('prev', cast(null as string), 'run', 0L, "
@@ -299,6 +196,22 @@ def _dup_gram_mass_sql(grams: str) -> str:
         "(CASE WHEN acc.run = 1L THEN 2L ELSE 1L END) "
         "ELSE 0L END), "
         "acc -> acc.mass)"
+    )
+
+
+def _dup_census_sql(arr: str) -> str:
+    """Per-row duplicate census of a string array EXPRESSION: struct
+    with ``dups`` (# occurrences beyond each element's first) and
+    ``dupchars`` (their summed char lengths)."""
+    return (
+        f"aggregate(array_sort({arr}), "
+        "named_struct('prev', cast(null as string), 'dups', 0, "
+        "'dupchars', 0L), "
+        "(acc, x) -> named_struct("
+        "'prev', x, "
+        "'dups', acc.dups + CASE WHEN x <=> acc.prev THEN 1 ELSE 0 END, "
+        "'dupchars', acc.dupchars + CASE WHEN x <=> acc.prev "
+        "THEN cast(length(x) as bigint) ELSE 0 END))"
     )
 
 
@@ -351,86 +264,76 @@ def gopher_repetition_flags(
     Everything is ``array_sort`` + run-length ``aggregate`` JVM
     expressions — row-local, shuffle-free, scan-fused; cost is
     O(words x 9 sorts) per document and nothing leaves the row.
+    Rendered as parsed SQL text (the _litarr idiom), like
+    ``gopher_quality_flags``.
     """
+    from .._litarr import sql_ident, sql_num, sql_str
+
     top_caps = dict(_GOPHER_TOP_GRAM_CAPS if top_gram_caps is None
                     else top_gram_caps)
     dup_caps = dict(_GOPHER_DUP_GRAM_CAPS if dup_gram_caps is None
                     else dup_gram_caps)
-    t = F.col(text_col)
-    lines = F.filter(
-        F.transform(F.split(t, "\n"), F.trim), lambda x: x != F.lit("")
-    )
-    paras = F.filter(
-        F.transform(F.split(t, r"\n{2,}"), F.trim), lambda x: x != F.lit("")
-    )
-    words = F.filter(F.split(F.trim(t), r"\s+"), lambda w: w != F.lit(""))
-    content_len = F.greatest(
-        F.length(F.concat_ws(" ", words)), F.lit(1)
-    ).cast("double")
+    t = sql_ident(text_col)
 
-    def elem_fracs(arr: Column, prefix: str) -> dict[str, Column]:
-        census = _dup_beyond_first(arr)
-        n = F.greatest(F.size(arr), F.lit(1)).cast("double")
-        total_chars = F.greatest(
-            F.aggregate(
-                arr,
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + F.length(x).cast("long"),
-            ),
-            F.lit(1),
-        ).cast("double")
-        return {
-            f"r_dup_{prefix}_frac": F.round(
-                census["dups"].cast("double") / n, 6
-            ),
-            f"r_dup_{prefix}_char_frac": F.round(
-                census["dupchars"].cast("double") / total_chars, 6
-            ),
-        }
+    def nonblank(split_re: str) -> str:
+        return (
+            f"filter(transform(split({t}, {sql_str(split_re)}),"
+            " x -> trim(x)), x -> x != '')"
+        )
 
-    cols: dict[str, Column] = {}
-    cols.update(elem_fracs(lines, "line"))
-    cols.update(elem_fracs(paras, "para"))
+    lines = nonblank("\n")
+    paras = nonblank(r"\n{2,}")
+    words = f"filter(split(trim({t}), '\\\\s+'), w -> w != '')"
+    content_len = (
+        f"cast(greatest(length(concat_ws(' ', {words})), 1) as double)"
+    )
+
+    cols: dict[str, str] = {}
+    for prefix, arr in (("line", lines), ("para", paras)):
+        census = _dup_census_sql(arr)
+        n = f"cast(greatest(size({arr}), 1) as double)"
+        total_chars = (
+            f"cast(greatest(aggregate({arr}, 0L,"
+            f" (acc, x) -> acc + cast(length(x) as bigint)), 1) as double)"
+        )
+        cols[f"r_dup_{prefix}_frac"] = (
+            f"round(cast({census}.dups as double) / {n}, 6)"
+        )
+        cols[f"r_dup_{prefix}_char_frac"] = (
+            f"round(cast({census}.dupchars as double) / {total_chars}, 6)"
+        )
     for n in sorted(top_caps):
-        cols[f"r_top_{n}gram_char_frac"] = F.round(
-            _top_gram_mass(_word_grams(words, n)).cast("double")
-            / content_len,
-            6,
+        mass = _top_gram_mass_sql(_word_grams_sql(words, n))
+        cols[f"r_top_{n}gram_char_frac"] = (
+            f"round(cast({mass} as double) / {content_len}, 6)"
         )
     for n in sorted(dup_caps):
-        cols[f"r_dup_{n}gram_char_frac"] = F.round(
-            F.least(
-                _dup_gram_mass(_word_grams(words, n)).cast("double")
-                / content_len,
-                F.lit(1.0),
-            ),
-            6,
+        mass = _dup_gram_mass_sql(_word_grams_sql(words, n))
+        cols[f"r_dup_{n}gram_char_frac"] = (
+            f"round(least(cast({mass} as double) / {content_len}, 1.0D), 6)"
         )
-    out = df
-    for name, c in cols.items():
-        out = out.withColumn(name, c)
+    out = df.withColumns({k: F.expr(v) for k, v in cols.items()})
 
-    checks: dict[str, Column] = {
-        "r_ok_dup_line_frac": F.col("r_dup_line_frac") <= max_dup_line_frac,
-        "r_ok_dup_para_frac": F.col("r_dup_para_frac") <= max_dup_para_frac,
-        "r_ok_dup_line_char_frac": F.col("r_dup_line_char_frac")
-        <= max_dup_line_char_frac,
-        "r_ok_dup_para_char_frac": F.col("r_dup_para_char_frac")
-        <= max_dup_para_char_frac,
+    checks = {
+        "r_ok_dup_line_frac": f"r_dup_line_frac <= {sql_num(max_dup_line_frac)}",
+        "r_ok_dup_para_frac": f"r_dup_para_frac <= {sql_num(max_dup_para_frac)}",
+        "r_ok_dup_line_char_frac": (
+            f"r_dup_line_char_frac <= {sql_num(max_dup_line_char_frac)}"
+        ),
+        "r_ok_dup_para_char_frac": (
+            f"r_dup_para_char_frac <= {sql_num(max_dup_para_char_frac)}"
+        ),
     }
     for n, cap in sorted(top_caps.items()):
         checks[f"r_ok_top_{n}gram"] = (
-            F.col(f"r_top_{n}gram_char_frac") <= cap
+            f"r_top_{n}gram_char_frac <= {sql_num(cap)}"
         )
     for n, cap in sorted(dup_caps.items()):
         checks[f"r_ok_dup_{n}gram"] = (
-            F.col(f"r_dup_{n}gram_char_frac") <= cap
+            f"r_dup_{n}gram_char_frac <= {sql_num(cap)}"
         )
-    keep: Column = F.lit(True)
-    for name, cond in checks.items():
-        out = out.withColumn(name, cond)
-        keep = keep & F.col(name)
-    return out.withColumn("keep", keep)
+    out = out.withColumns({k: F.expr(v) for k, v in checks.items()})
+    return out.withColumn("keep", F.expr(" AND ".join(checks.keys())))
 
 
 def c4_clean(

@@ -376,8 +376,8 @@ def curate_corpus(
         # row-local rewrite, no row count change: no mark() needed
         out = out.withColumn(text_col, normalize_text(text_col))
 
-    q = quality_score(F.col(text_col))
-    t = token_count(F.col(text_col))
+    q = quality_score(text_col)
+    t = token_count(text_col)
     out = mark(
         "quality_gate",
         out.filter((q >= min_quality) & (t >= min_tokens)),

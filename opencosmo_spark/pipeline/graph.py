@@ -22,15 +22,17 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 
 
+# href="..." / href='...' targets; fragment-only links (#...) excluded
+_HREF_RE = r"""(?i)href\s*=\s*["']([^"'#\s][^"']*)["']"""
+
+
 def extract_links(col: Column | str) -> Column:
     """Array of href targets in an HTML document — a pure JVM
     ``regexp_extract_all`` (no parser, no Python): matches
     ``href="..."``/``href='...'`` and keeps the raw target string.
     Fragment-only links (``#...``) are excluded by the pattern."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract_all(
-        c, F.lit(r"""(?i)href\s*=\s*["']([^"'#\s][^"']*)["']"""), 1
-    )
+    return F.regexp_extract_all(c, F.lit(_HREF_RE), 1)
 
 
 def host_edges(
@@ -48,21 +50,18 @@ def host_edges(
     dedup the published host graphs apply).
 
     All JVM: link extraction and host parsing happen inside the scan;
-    the only shuffle is the final (src, dst) count aggregation.
+    the only shuffle is the final (src, dst) count aggregation. The
+    link-host array is one parsed SQL expression (the _litarr idiom).
     """
-    from .web import url_host
+    from .._litarr import sql_ident, sql_str
+    from .web import _url_host_sql, url_host
 
-    links = F.array_distinct(
-        F.filter(
-            F.transform(
-                F.filter(
-                    extract_links(html_col),
-                    lambda u: F.lower(u).rlike("^https?://"),
-                ),
-                lambda u: url_host(u),
-            ),
-            lambda h: h.isNotNull() & (h != ""),
-        )
+    raw = f"regexp_extract_all({sql_ident(html_col)}, {sql_str(_HREF_RE)}, 1)"
+    links = F.expr(
+        "array_distinct(filter(transform("
+        f"filter({raw}, u -> lower(u) rlike '^https?://'),"
+        f" u -> {_url_host_sql('u')}),"
+        " h -> h IS NOT NULL AND h != ''))"
     )
     out = (
         df.select(

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .text import words_expr
+from .text import WORD_RE, words_expr
 
 
 def _bigram_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -29,12 +29,12 @@ def _bigram_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     registered one transform + one zip_with lambda (~20 ms of py4j
     round-trips each) per call, and this builder runs 2-3x per
     LM-scoring construction (guide §4's boundary cost at the
-    driver↔JVM boundary). Same tokenizer (words_expr's regex), same
-    shifted-slice zip, same (id, h1, h2) output."""
-    from .._litarr import sql_ident as _q
+    driver↔JVM boundary). Same tokenizer (``words_expr``'s
+    ``WORD_RE``), same shifted-slice zip, same (id, h1, h2) output."""
+    from .._litarr import sql_ident as _q, sql_str
 
     tq, iq = _q(text_col), _q(id_col)
-    words = f"regexp_extract_all(lower({tq}), '[a-z0-9]+', 0)"
+    words = f"regexp_extract_all(lower({tq}), {sql_str(WORD_RE)}, 0)"
     base = df.selectExpr(
         iq, f"transform({words}, w -> xxhash64(w)) AS __wh"
     )

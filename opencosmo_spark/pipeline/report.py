@@ -73,10 +73,10 @@ def corpus_report(
 
     proj = df.select(
         *grp,
-        token_count(text).alias("__tok"),
+        token_count(text_col).alias("__tok"),
         F.length(text).alias("__chars"),
         F.octet_length(text).alias("__bytes"),
-        quality_score(text).alias("__q"),
+        quality_score(text_col).alias("__q"),
         F.md5(text).alias("__fp"),
         *([language_id(text).alias("__lang")] if with_language else []),
         *([F.col(id_col).alias("__id")] if id_col else []),
@@ -214,10 +214,10 @@ def corpus_profile(
     ).cast("string").alias("shard")
     proj = df.select(
         shard,
-        token_count(text).cast("long").alias("__tok"),
+        token_count(text_col).cast("long").alias("__tok"),
         F.length(text).cast("long").alias("__chars"),
         F.octet_length(text).cast("long").alias("__bytes"),
-        quality_score(text).alias("__q"),
+        quality_score(text_col).alias("__q"),
         F.md5(text).alias("__fp"),
         *([language_id(text).alias("__lang")] if with_language else []),
         *([F.col(id_col).cast("string").alias("__id")] if id_col else []),

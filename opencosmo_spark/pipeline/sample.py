@@ -357,7 +357,7 @@ def plan_mixture(
         .groupBy(stratum_col)
         .agg(
             F.count(F.lit(1)).alias("docs"),
-            F.sum(token_count(F.col(text_col))).alias("tokens"),
+            F.sum(token_count(text_col)).alias("tokens"),
         )
         .collect()
     )

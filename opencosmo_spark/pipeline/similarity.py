@@ -12,7 +12,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .._litarr import lit_double_array
+from .._litarr import lit_double_array, sql_double_array, sql_ident, sql_num
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -37,21 +37,6 @@ def _norm(a: Column) -> Column:
 # oracle hash-checks the downstream cosines).
 
 
-def _quote(col_name: str) -> str:
-    return "`" + col_name.replace("`", "``") + "`"
-
-
-def _double_array_sql(values) -> str | None:
-    """SQL text of a literal array<double>, or None when a value has
-    no SQL literal form (non-finite) and the caller must fall back."""
-    import math
-
-    vals = [float(v) for v in values]
-    if not vals or not all(math.isfinite(v) for v in vals):
-        return None
-    return "array(" + ",".join(f"{v!r}D" for v in vals) + ")"
-
-
 def _dot_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> "
@@ -66,10 +51,6 @@ def _norm_sql(a: str) -> str:
         f"cast(x as double) * cast(x as double)), 0.0D, "
         f"(acc, v) -> acc + v))"
     )
-
-
-def _cosine_sql(a: str, b: str) -> str:
-    return f"try_divide({_dot_sql(a, b)}, ({_norm_sql(a)} * {_norm_sql(b)}))"
 
 
 def _fold_norm(vals) -> float:
@@ -135,23 +116,12 @@ def _hyperplanes(dim: int, planes: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(planes)]
 
 
-def _bucket_expr(vec: Column, hyperplanes: list[list[float]]) -> Column:
-    key = F.lit(0)
-    for i, hp in enumerate(hyperplanes):
-        hp_col = lit_double_array(hp)
-        bit = F.when(_dot(vec, hp_col) >= 0, F.lit(1)).otherwise(F.lit(0))
-        key = key + F.shiftleft(bit, i)
-    return key
-
-
 def _bucket_expr_sql(vec_sql: str, hyperplanes: list[list[float]]) -> Column:
-    """One-py4j-call form of ``_bucket_expr`` (identical arithmetic:
-    int bit CASEs summed through shiftleft)."""
+    """Sign-pattern bucket of a vector EXPRESSION in one py4j call:
+    int bit CASEs summed through shiftleft."""
     terms = ["0"]
     for i, hp in enumerate(hyperplanes):
-        arr = _double_array_sql(hp)
-        if arr is None:  # non-finite plane: fall back wholesale
-            return None
+        arr = sql_double_array(hp)
         bit = f"(CASE WHEN {_dot_sql(vec_sql, arr)} >= 0 THEN 1 ELSE 0 END)"
         terms.append(f"shiftleft({bit}, {i})")
     return F.expr("(" + " + ".join(terms) + ")")
@@ -171,10 +141,9 @@ def add_lsh_buckets(
     reads only the ~``planes+1`` probed buckets' files instead of the
     whole corpus — that is the 100 TB path."""
     planes_w = _hyperplanes(dim, planes, seed)
-    expr = _bucket_expr_sql(_quote(vec_col), planes_w)
-    if expr is None:
-        expr = _bucket_expr(F.col(vec_col), planes_w)
-    return df.withColumn(bucket_col, expr)
+    return df.withColumn(
+        bucket_col, _bucket_expr_sql(sql_ident(vec_col), planes_w)
+    )
 
 
 def assign_ivf_cells(
@@ -193,57 +162,40 @@ def assign_ivf_cells(
     flip the winner except at exact 1e-6 ties, which the id tiebreak
     settles).
     """
-    vq = _quote(vec_col)
-    arrs = [_double_array_sql(c) for _, c in centroids]
-    norms = [_fold_norm(c) for _, c in centroids]
-    if all(a is not None for a in arrs) and all(
-        math.isfinite(n) for n in norms
-    ):
-        # SQL-text argmax, restructured for PARSE/ANALYZE cost: the old
-        # form interpolated the full per-centroid cosine text (dot +
-        # both norm folds over the literal array) into the sims array,
-        # then interpolated THAT array twice (array_position +
-        # array_max) — ~44 KB of SQL whose single withColumn cost
-        # ~1.1 s of JVM analysis per construction. Now (1) the row
-        # norm is hoisted to one helper column, (2) each centroid's
-        # norm is a Python-folded double constant (same left-fold,
-        # same IEEE ops — bit-identical to the JVM fold of the same
-        # literal array), (3) the sims array is materialized ONCE as a
-        # column so the argmax is a tiny expression and the per-row
-        # fold never runs twice.
-        nrm, sims = "__oc_nrm", "__oc_sims"
-        while nrm in df.columns or sims in df.columns:
-            nrm, sims = nrm + "_", sims + "_"
-        sims_sql = "array(" + ",".join(
-            f"round(try_divide({_dot_sql(vq, a)}, "
-            f"({_quote(nrm)} * {n!r}D)), 6)"
-            for a, n in zip(arrs, norms)
-        ) + ")"
-        return (
-            df.withColumn(nrm, F.expr(_norm_sql(vq)))
-            .withColumn(sims, F.expr(sims_sql))
-            .withColumn(
-                cell_col,
-                F.expr(
-                    f"cast(array_position({_quote(sims)}, "
-                    f"array_max({_quote(sims)})) - 1 as bigint)"
-                ),
-            )
-            .drop(nrm, sims)
+    vq = sql_ident(vec_col)
+    # SQL-text argmax, shaped for PARSE/ANALYZE cost: interpolating the
+    # full per-centroid cosine text (dot + both norm folds over the
+    # literal array) into the sims array, then that array twice
+    # (array_position + array_max), is ~44 KB of SQL whose single
+    # withColumn costs ~1.1 s of JVM analysis per construction.
+    # Instead (1) the row norm is hoisted to one helper column, (2)
+    # each centroid's norm is a Python-folded double constant (same
+    # left-fold, same IEEE ops — bit-identical to the JVM fold of the
+    # same literal array, NaN/±Inf included), (3) the sims array is
+    # materialized ONCE as a column so the argmax is a tiny expression
+    # and the per-row fold never runs twice. array_position returns
+    # the FIRST (1-based) index of the max -> lowest centroid id wins
+    # ties.
+    nrm, sims = "__oc_nrm", "__oc_sims"
+    while nrm in df.columns or sims in df.columns:
+        nrm, sims = nrm + "_", sims + "_"
+    sims_sql = "array(" + ",".join(
+        f"round(try_divide({_dot_sql(vq, sql_double_array(c))}, "
+        f"({sql_ident(nrm)} * {sql_num(_fold_norm(c))})), 6)"
+        for _, c in centroids
+    ) + ")"
+    return (
+        df.withColumn(nrm, F.expr(_norm_sql(vq)))
+        .withColumn(sims, F.expr(sims_sql))
+        .withColumn(
+            cell_col,
+            F.expr(
+                f"cast(array_position({sql_ident(sims)}, "
+                f"array_max({sql_ident(sims)})) - 1 as bigint)"
+            ),
         )
-    v = F.col(vec_col)
-    sims = F.array(
-        *[
-            F.round(
-                cosine(v, lit_double_array(c)), 6
-            )
-            for _, c in centroids
-        ]
+        .drop(nrm, sims)
     )
-    # array_position returns the FIRST index (1-based) of the max ->
-    # lowest centroid id wins ties.
-    cell = F.array_position(sims, F.array_max(sims)) - 1
-    return df.withColumn(cell_col, cell.cast("long"))
 
 
 def kmeans_parallel_init(

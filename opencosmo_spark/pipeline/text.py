@@ -27,79 +27,58 @@ _STOPWORDS = {
 }
 
 
-def token_count(text: Column | str, mode: str = "whitespace") -> Column:
-    """Token count: whitespace split or a BPE-ish word/punct regex.
-    String column names take the parsed-SQL-text path (one driver
-    call — the _litarr idiom, r15); Column inputs keep the Column
-    path. Same expressions either way."""
-    if isinstance(text, str):
-        from .._litarr import sql_ident
+# the BPE-ish token pattern: words, numbers, and single punctuation
+# marks — shared by token_count's "bpe" mode and render_chat's
+# per-part token counter
+BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
 
-        return F.expr(_token_count_sql(sql_ident(text), mode))
-    c = text
-    if mode == "whitespace":
-        return F.size(F.split(F.trim(c), r"\s+"))
-    if mode == "bpe":
-        # words, numbers, and single punctuation marks as tokens
-        toks = F.regexp_extract_all(c, F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"), 0)
-        return F.size(toks)
-    raise ValueError(mode)
+
+def token_count(text: str, mode: str = "whitespace") -> Column:
+    """Token count of the named column: whitespace split or a
+    BPE-ish word/punct regex. Parsed SQL text (one driver call — the
+    _litarr idiom)."""
+    from .._litarr import sql_col
+
+    return F.expr(_token_count_sql(sql_col(text), mode))
 
 
 def _token_count_sql(c: str, mode: str = "whitespace") -> str:
-    """SQL-text twin of :func:`token_count` (same split/regexes)."""
+    """SQL text of :func:`token_count` over a text expression."""
+    from .._litarr import sql_str
+
     if mode == "whitespace":
         return f"size(split(trim({c}), '\\\\s+'))"
     if mode == "bpe":
-        return (
-            f"size(regexp_extract_all({c},"
-            " '[A-Za-z]+|[0-9]+|[^\\\\sA-Za-z0-9]', 0))"
-        )
+        return f"size(regexp_extract_all({c}, {sql_str(BPE_TOKEN_RE)}, 0))"
     raise ValueError(mode)
 
 
-def quality_score(text: Column | str) -> Column:
-    """Heuristic document quality in [0,1]: length, mean word length,
-    alpha ratio, punctuation balance. String column names take the
-    parsed-SQL-text path (the _litarr idiom, r15) — identical
-    expression tree, ~15 py4j round-trips fewer per call."""
-    if isinstance(text, str):
-        from .._litarr import sql_ident
+def quality_score(text: str) -> Column:
+    """Heuristic document quality in [0,1] of the named column:
+    length, mean word length, alpha ratio, punctuation balance.
+    Parsed SQL text (the _litarr idiom) — one py4j call."""
+    from .._litarr import sql_col
 
-        c = sql_ident(text)
-        alpha = f"length(regexp_replace({c}, '[^A-Za-z]', ''))"
-        punct = f"length(regexp_replace({c}, '[^.,!?;:]', ''))"
-        mean_word = (
-            f"cast({alpha} as double)"
-            f" / greatest({_token_count_sql(c)}, 1)"
-        )
-        len_score = f"least(length({c}) / 500.0D, 1.0D)"
-        word_score = (
-            f"CASE WHEN {mean_word} >= 3 AND {mean_word} <= 10"
-            " THEN 1.0D ELSE 0.5D END"
-        )
-        alpha_ratio = f"cast({alpha} as double) / greatest(length({c}), 1)"
-        punct_ratio = f"cast({punct} as double) / greatest(length({c}), 1)"
-        punct_score = (
-            f"CASE WHEN {punct_ratio} < 0.1D THEN 1.0D ELSE 0.3D END"
-        )
-        return F.expr(
-            f"round(0.3D * ({len_score}) + 0.2D * ({word_score})"
-            f" + 0.3D * ({alpha_ratio}) + 0.2D * ({punct_score}), 6)"
-        )
-    c = text
-    length = F.length(c)
-    n_tok = token_count(c)
-    alpha = F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
-    punct = F.length(F.regexp_replace(c, r"[^.,!?;:]", ""))
-    mean_word = alpha.cast("double") / F.greatest(n_tok, F.lit(1))
-    len_score = F.least(length / F.lit(500.0), F.lit(1.0))
-    word_score = F.when((mean_word >= 3) & (mean_word <= 10), 1.0).otherwise(0.5)
-    alpha_ratio = alpha.cast("double") / F.greatest(length, F.lit(1))
-    punct_ratio = punct.cast("double") / F.greatest(length, F.lit(1))
-    punct_score = F.when(punct_ratio < 0.1, 1.0).otherwise(0.3)
-    return F.round(
-        0.3 * len_score + 0.2 * word_score + 0.3 * alpha_ratio + 0.2 * punct_score, 6
+    c = sql_col(text)
+    alpha = f"length(regexp_replace({c}, '[^A-Za-z]', ''))"
+    punct = f"length(regexp_replace({c}, '[^.,!?;:]', ''))"
+    mean_word = (
+        f"cast({alpha} as double)"
+        f" / greatest({_token_count_sql(c)}, 1)"
+    )
+    len_score = f"least(length({c}) / 500.0D, 1.0D)"
+    word_score = (
+        f"CASE WHEN {mean_word} >= 3 AND {mean_word} <= 10"
+        " THEN 1.0D ELSE 0.5D END"
+    )
+    alpha_ratio = f"cast({alpha} as double) / greatest(length({c}), 1)"
+    punct_ratio = f"cast({punct} as double) / greatest(length({c}), 1)"
+    punct_score = (
+        f"CASE WHEN {punct_ratio} < 0.1D THEN 1.0D ELSE 0.3D END"
+    )
+    return F.expr(
+        f"round(0.3D * ({len_score}) + 0.2D * ({word_score})"
+        f" + 0.3D * ({alpha_ratio}) + 0.2D * ({punct_score}), 6)"
     )
 
 
@@ -134,81 +113,51 @@ def document_fingerprint(text: Column | str, prefix: int = 64) -> Column:
     return F.md5(F.substring(norm, 1, prefix))
 
 
-def repetition_stats(text: Column | str) -> dict[str, Column]:
-    """Gopher-style repetition signals (Rae et al. 2021 §A1.1): the
-    strongest cheap predictors of boilerplate/spam in web corpora.
+def repetition_stats(text: str) -> dict[str, Column]:
+    """Gopher-style repetition signals (Rae et al. 2021 §A1.1) of the
+    named column: the strongest cheap predictors of boilerplate/spam
+    in web corpora.
 
     * ``dup_word_frac`` — fraction of word occurrences that are repeats
       (1 - distinct/total);
     * ``top_word_frac`` — share of the single most frequent word;
-    * ``dup_bigram_frac`` — fraction of repeated 2-grams.
+    * ``dup_bigram_frac`` — fraction of repeated 2-grams; 0.0 for
+      documents under two words (the bigram window's second word is
+      NULL there, as in the DuckDB profile's ``ws[i+1]``).
 
     All higher-order array functions — per-row JVM evaluation, no
     shuffle, no UDF; cost is O(distinct x words) per doc, bounded by
-    document length.
-
-    A string column name takes the parsed-SQL-text path (the _litarr
-    idiom, r15): the Column form registered 4 HOF lambdas per call
-    (~20 ms of py4j round-trips each, ~0.6 s cold per construction).
-    Identical expressions — same split regex, same cast/greatest
-    points, same round(…, 6) — value-checked by the oracle (q30) and
-    the text tests. Column inputs keep the Column path.
+    document length. Parsed SQL text (the _litarr idiom): one py4j
+    call per column instead of a lambda registration per HOF.
+    ``n_words`` is a long (the driver's value-hash is dtype-strict vs
+    the oracle).
     """
-    if isinstance(text, str):
-        from .._litarr import sql_ident
+    from .._litarr import sql_col
 
-        t = sql_ident(text)
-        w = f"split(trim({t}), '\\\\s+')"
-        n1 = f"greatest(size({w}), 1)"
-        dup_word = (
-            f"1.0D - cast(size(array_distinct({w})) as double) / {n1}"
-        )
-        top_word = (
-            f"cast(array_max(transform(array_distinct({w}),"
-            f" x -> size(filter({w}, y -> y = x)))) as double) / {n1}"
-        )
-        bg = (
-            f"transform(sequence(1, greatest(size({w}) - 1, 1)),"
-            f" i -> concat_ws(' ', element_at({w}, i),"
-            f" element_at({w}, i + 1)))"
-        )
-        dup_bigram = (
-            f"1.0D - cast(size(array_distinct({bg})) as double)"
-            f" / greatest(size({bg}), 1)"
-        )
-        return {
-            "n_words": F.expr(f"cast(size({w}) as bigint)"),
-            "dup_word_frac": F.expr(f"round({dup_word}, 6)"),
-            "top_word_frac": F.expr(f"round({top_word}, 6)"),
-            "dup_bigram_frac": F.expr(f"round({dup_bigram}, 6)"),
-        }
-    c = text
-    w = F.split(F.trim(c), r"\s+")
-    n = F.size(w)
-    n_distinct = F.size(F.array_distinct(w))
-    dup_word = F.lit(1.0) - n_distinct.cast("double") / F.greatest(n, F.lit(1))
-    top_count = F.array_max(
-        F.transform(
-            F.array_distinct(w),
-            lambda x: F.size(F.filter(w, lambda y: y == x)),
-        )
+    t = sql_col(text)
+    w = f"split(trim({t}), '\\\\s+')"
+    n1 = f"greatest(size({w}), 1)"
+    dup_word = (
+        f"1.0D - cast(size(array_distinct({w})) as double) / {n1}"
     )
-    top_word = top_count.cast("double") / F.greatest(n, F.lit(1))
-    bg = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.element_at(w, i), F.element_at(w, i + 1)),
+    top_word = (
+        f"cast(array_max(transform(array_distinct({w}),"
+        f" x -> size(filter({w}, y -> y = x)))) as double) / {n1}"
     )
-    nb = F.size(bg)
+    bg = (
+        f"transform(sequence(1, greatest(size({w}) - 1, 1)),"
+        f" i -> concat_ws(' ', element_at({w}, i),"
+        f" try_element_at({w}, i + 1)))"
+    )
     dup_bigram = (
-        F.lit(1.0)
-        - F.size(F.array_distinct(bg)).cast("double") / F.greatest(nb, F.lit(1))
+        f"1.0D - cast(size(array_distinct({bg})) as double)"
+        f" / greatest(size({bg}), 1)"
     )
     return {
-        # long: the driver's value-hash is dtype-strict vs the oracle
-        "n_words": n.cast("long"),
-        "dup_word_frac": F.round(dup_word, 6),
-        "top_word_frac": F.round(top_word, 6),
-        "dup_bigram_frac": F.round(dup_bigram, 6),
+        "n_words": F.expr(f"cast(size({w}) as bigint)"),
+        "dup_word_frac": F.expr(f"round({dup_word}, 6)"),
+        "top_word_frac": F.expr(f"round({top_word}, 6)"),
+        "dup_bigram_frac": F.expr(f"round({dup_bigram}, 6)"),
     }
 
 
@@ -643,8 +592,8 @@ def add_text_features(
     c = F.col(text_col)
     return df.withColumns(
         {
-            f"{prefix}n_tokens": token_count(c),
-            f"{prefix}quality": quality_score(c),
+            f"{prefix}n_tokens": token_count(text_col),
+            f"{prefix}quality": quality_score(text_col),
             f"{prefix}lang_id": language_id(c),
             f"{prefix}fingerprint": document_fingerprint(c),
         }

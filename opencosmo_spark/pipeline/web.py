@@ -641,17 +641,14 @@ _COMPOUND_SLDS = (
 )
 
 
-def url_host(col: Column | str) -> Column:
-    """Lowercased hostname of a URL (port and FQDN trailing dot
-    stripped — ``example.com.`` must blocklist-match ``example.com``),
-    NULL when the value does not parse as a URL. Pure JVM
-    (``try_parse_url``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lower(
-        F.regexp_replace(
-            F.try_parse_url(c, F.lit("HOST")), r"(:\d+|\.)$", ""
-        )
-    )
+def url_host(col: str) -> Column:
+    """Lowercased hostname of the named URL column (port and FQDN
+    trailing dot stripped — ``example.com.`` must blocklist-match
+    ``example.com``), NULL when the value does not parse as a URL.
+    Pure JVM (``try_parse_url``), one parsed SQL expression."""
+    from .._litarr import sql_col
+
+    return F.expr(_url_host_sql(sql_col(col)))
 
 
 # query parameters that carry tracking state, never content identity —
@@ -663,7 +660,7 @@ _TRACKING_PARAMS = (
 )
 
 
-def canonical_url(col: Column | str) -> Column:
+def canonical_url(col: str) -> Column:
     """Canonical form of a URL for refetch/duplicate detection — the
     normalization every crawl dedup stage applies before keying
     (RFC 3986 §6 syntax-based normalization plus the tracking-param
@@ -674,10 +671,10 @@ def canonical_url(col: Column | str) -> Column:
     parameters (param order never changes the resource), and drop the
     ``?`` entirely when nothing survives. Pure JVM —
     ``try_parse_url`` + array expressions, no Python; NULL when the
-    value does not parse as an http(s) URL."""
-    c = F.col(col) if isinstance(col, str) else col
+    value does not parse as an http(s) URL. Takes the column's name."""
+    host = url_host(col)
+    c = F.col(col)
     scheme = F.lower(F.try_parse_url(c, F.lit("PROTOCOL")))
-    host = url_host(c)
     # HOST strips the port already via url_host; recover a NON-default
     # explicit port from the authority
     auth = F.try_parse_url(c, F.lit("AUTHORITY"))
@@ -707,7 +704,7 @@ def canonical_url(col: Column | str) -> Column:
 
 
 def _url_host_sql(c: str) -> str:
-    """SQL-text twin of :func:`url_host` over a URL expression."""
+    """SQL text of :func:`url_host` over a URL expression."""
     return (
         f"lower(regexp_replace(try_parse_url({c}, 'HOST'),"
         " '(:\\\\d+|\\\\.)$', ''))"
@@ -715,7 +712,7 @@ def _url_host_sql(c: str) -> str:
 
 
 def _url_suffixes_sql(c: str) -> str:
-    """SQL-text twin of :func:`url_suffixes` over a URL expression."""
+    """SQL text of :func:`url_suffixes` over a URL expression."""
     labels = f"split({_url_host_sql(c)}, '\\\\.')"
     return (
         f"transform(sequence(1, size({labels})),"
@@ -723,26 +720,16 @@ def _url_suffixes_sql(c: str) -> str:
     )
 
 
-def url_suffixes(col: Column | str) -> Column:
-    """Array of every dot-suffix of the URL's host, longest first:
-    ``a.b.example.com -> [a.b.example.com, b.example.com, example.com,
-    com]``. Label-aligned — ``ample.com`` is NOT a suffix of
-    ``example.com``. This is the matching key for domain blocklists
-    (a listed domain blocks itself and every subdomain).
+def url_suffixes(col: str) -> Column:
+    """Array of every dot-suffix of the named URL column's host,
+    longest first: ``a.b.example.com -> [a.b.example.com,
+    b.example.com, example.com, com]``. Label-aligned — ``ample.com``
+    is NOT a suffix of ``example.com``. This is the matching key for
+    domain blocklists (a listed domain blocks itself and every
+    subdomain). One parsed SQL expression (the _litarr idiom)."""
+    from .._litarr import sql_col
 
-    String column names take the parsed-SQL-text path (one driver
-    call instead of a HOF lambda registration — the _litarr idiom)."""
-    if isinstance(col, str):
-        from .._litarr import sql_ident
-
-        return F.expr(_url_suffixes_sql(sql_ident(col)))
-    host = url_host(col)
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    return F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.array_join(F.slice(labels, i, n), "."),
-    )
+    return F.expr(_url_suffixes_sql(sql_col(col)))
 
 
 def url_features(
@@ -753,9 +740,8 @@ def url_features(
     compound-ccTLD heuristic), ``{prefix}tld``, ``{prefix}path_depth``
     (number of non-empty path segments), ``{prefix}is_ip``.
 
-    Rendered as parsed SQL text (the _litarr idiom, r15) — the Column
-    form cost ~0.2 s of py4j round-trips per construction; identical
-    expressions (same regexes, same CASE/least fallbacks), value-
+    Rendered as parsed SQL text (the _litarr idiom): a Column-API
+    build cost ~0.2 s of py4j round-trips per construction. Value-
     checked by the oracle (q30) and the web tests."""
     from .._litarr import sql_ident, sql_str
 

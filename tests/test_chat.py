@@ -88,9 +88,28 @@ def test_chat_sft_rows_filters_unsupervised(spark, convs):
     from opencosmo_spark.pipeline.text import token_count
 
     df = chat_sft_rows(convs).withColumn(
-        "n_tokens", token_count(F.col("text"))
+        "n_tokens", token_count("text")
     )
     assert df.filter("n_tokens <= 0").count() == 0
+
+
+def test_render_chat_quoted_field_names(spark):
+    """A messages struct with a field name that needs quoting in DDL
+    (``my-meta``) renders: the NULL-array fallback's cast type quotes
+    every field name."""
+    df = spark.createDataFrame(
+        [(0, [("user", "hi", "m0"), ("assistant", "yo", "m1")]), (1, None)],
+        "conv_id long, messages array<struct<role:string,content:string,"
+        "`my-meta`:string>>",
+    )
+    got = {r["conv_id"]: r for r in render_chat(df).collect()}
+    msgs = [("user", "hi"), ("assistant", "yo")]
+    text, spans = _twin(msgs)
+    assert got[0]["text"] == text
+    assert [
+        (s["start"], s["end"]) for s in got[0]["supervised_spans"]
+    ] == spans
+    assert got[1]["text"] == "" and got[1]["supervised_spans"] == []
 
 
 def test_render_chat_custom_supervised_role(spark, convs):

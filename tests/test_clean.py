@@ -271,18 +271,30 @@ def test_gopher_repetition_stays_jvm(spark):
     assert "ArrowEvalPython" not in plan
 
 
-def test_gram_mass_sql_twins_match_column_forms(spark):
-    # the SQL-text twins used by q30's repetition lane must agree with
-    # the Column originals (still used by gopher_repetition_flags) on
-    # every row shape: repeats, no repeats, short docs, empties
+def _gram_mass_twin(text, n):
+    """Plain-python reference of the gram masses: (heaviest repeated
+    gram's count x length, all duplicated grams' occurrences x
+    length), over whitespace words."""
+    from collections import Counter
+
+    words = text.split()
+    grams = Counter(
+        " ".join(words[i : i + n]) for i in range(len(words) - n + 1)
+    )
+    top = max((c * len(g) for g, c in grams.items() if c >= 2), default=0)
+    dup = sum(c * len(g) for g, c in grams.items() if c >= 2)
+    return top, dup
+
+
+def test_gram_mass_sql_values(spark):
+    # the run-length gram helpers (q30's repetition lane and
+    # gopher_repetition_flags) against a python reference on every
+    # row shape: repeats, no repeats, short docs, empties
     import pyspark.sql.functions as F
 
     from opencosmo_spark.pipeline.clean import (
-        _dup_gram_mass,
         _dup_gram_mass_sql,
-        _top_gram_mass,
         _top_gram_mass_sql,
-        _word_grams,
         _word_grams_sql,
     )
 
@@ -295,26 +307,63 @@ def test_gram_mass_sql_twins_match_column_forms(spark):
         "p q r p q r p q",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    words_col = F.filter(
-        F.split(F.trim(F.col("text")), r"\s+"), lambda w: w != F.lit("")
-    )
     words_sql = "filter(split(trim(text), '\\\\s+'), w -> w != '')"
     for n in (2, 5):
         got = df.select(
-            _top_gram_mass(_word_grams(words_col, n)).alias("tc"),
+            "text",
             F.expr(_top_gram_mass_sql(_word_grams_sql(words_sql, n))).alias("ts"),
-            _dup_gram_mass(_word_grams(words_col, n)).alias("dc"),
             F.expr(_dup_gram_mass_sql(_word_grams_sql(words_sql, n))).alias("ds"),
         ).collect()
+        assert len(got) == len(texts)
         for r in got:
-            assert r.tc == r.ts and r.dc == r.ds, (n, r)
+            assert (r.ts, r.ds) == _gram_mass_twin(r.text, n), (n, r)
 
 
-def test_text_helper_sql_paths_match_column_paths(spark):
-    # token_count / quality_score / repetition_stats string-name path
-    # (SQL text) must equal the Column path value-for-value
-    import pyspark.sql.functions as F
+def _text_helpers_twin(text):
+    """Plain-python reference of token_count / quality_score /
+    repetition_stats: Java's split on \\s+ after trim (a leading
+    empty token survives only for the empty string), the BPE-ish
+    regex, and the documented score arithmetic."""
+    import re
 
+    from opencosmo_spark.pipeline.text import BPE_TOKEN_RE
+
+    ws = re.split(r"\s+", text.strip()) if text.strip() else [""]
+    n_ws = len(ws)
+    n_bpe = len(re.findall(BPE_TOKEN_RE, text))
+    alpha = len(re.sub(r"[^A-Za-z]", "", text))
+    punct = len(re.sub(r"[^.,!?;:]", "", text))
+    mean_word = alpha / max(n_ws, 1)
+    q = round(
+        0.3 * min(len(text) / 500.0, 1.0)
+        + 0.2 * (1.0 if 3 <= mean_word <= 10 else 0.5)
+        + 0.3 * (alpha / max(len(text), 1))
+        + 0.2 * (1.0 if punct / max(len(text), 1) < 0.1 else 0.3),
+        6,
+    )
+    distinct = set(ws)
+    top = max(ws.count(x) for x in distinct)
+    bigrams = [
+        " ".join(ws[i : i + 2]) for i in range(max(len(ws) - 1, 1))
+    ]
+    return {
+        "tc_ws": n_ws,
+        "tc_bpe": n_bpe,
+        "q": q,
+        "n_words": n_ws,
+        "dup_word_frac": round(1.0 - len(distinct) / max(n_ws, 1), 6),
+        "top_word_frac": round(top / max(n_ws, 1), 6),
+        "dup_bigram_frac": round(
+            1.0 - len(set(bigrams)) / max(len(bigrams), 1), 6
+        ),
+    }
+
+
+def test_text_helper_values(spark):
+    # token_count / quality_score / repetition_stats against a
+    # python reference; sub-two-word documents ("" splits to [''] —
+    # one element too) give dup_bigram_frac 0.0: the bigram window's
+    # second word is NULL, as in the DuckDB profile's ws[i+1]
     from opencosmo_spark.pipeline.text import (
         quality_score,
         repetition_stats,
@@ -327,40 +376,53 @@ def test_text_helper_sql_paths_match_column_paths(spark):
         "  padded   words  here ",
         "punct,,,;;; !!! ???",
         "one two",
+        "one",
+        "",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     cols = {
-        "tc_ws_s": token_count("text", "whitespace"),
-        "tc_ws_c": token_count(F.col("text"), "whitespace"),
-        "tc_bpe_s": token_count("text", "bpe"),
-        "tc_bpe_c": token_count(F.col("text"), "bpe"),
-        "q_s": quality_score("text"),
-        "q_c": quality_score(F.col("text")),
+        "tc_ws": token_count("text", "whitespace"),
+        "tc_bpe": token_count("text", "bpe"),
+        "q": quality_score("text"),
+        **repetition_stats("text"),
     }
-    for name, c in repetition_stats("text").items():
-        cols[f"rs_s_{name}"] = c
-    for name, c in repetition_stats(F.col("text")).items():
-        cols[f"rs_c_{name}"] = c
-    rows = df.select(*[c.alias(n) for n, c in cols.items()]).collect()
+    rows = df.select("text", *[c.alias(n) for n, c in cols.items()]).collect()
+    assert len(rows) == len(texts)
     for r in rows:
-        assert r.tc_ws_s == r.tc_ws_c and r.tc_bpe_s == r.tc_bpe_c, r
-        assert r.q_s == r.q_c, r
-        for name in ("n_words", "dup_word_frac", "top_word_frac", "dup_bigram_frac"):
-            assert r[f"rs_s_{name}"] == r[f"rs_c_{name}"], (name, r)
-    # sub-two-word documents ("" splits to [''] — one element too):
-    # repetition_stats' bigram window probes element_at(w, 2) on a
-    # 1-element array — an ANSI out-of-bounds error PRE-EXISTING in
-    # the Column path; parity means the SQL path raises the SAME
-    # error, not that either silently succeeds
-    import pytest as _pytest
+        want = _text_helpers_twin(r.text)
+        for name, v in want.items():
+            assert r[name] == pytest.approx(v, abs=1e-6), (name, r)
+    assert {r.text: r.dup_bigram_frac for r in rows}["one"] == 0.0
+    assert {r.text: r.dup_bigram_frac for r in rows}[""] == 0.0
 
-    for text in ("one", ""):
-        one = spark.createDataFrame([(text,)], "text string")
-        for stats in (
-            repetition_stats("text"),
-            repetition_stats(F.col("text")),
-        ):
-            with _pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
-                one.select(
-                    stats["dup_bigram_frac"].alias("x")
-                ).collect()
+
+def test_column_argument_raises_type_error(spark):
+    # the SQL-text helpers take a column NAME; a Column has no SQL
+    # text and is refused with a pointer to the name form
+    from opencosmo_spark.pipeline.text import (
+        quality_score,
+        repetition_stats,
+        token_count,
+    )
+    from opencosmo_spark.pipeline.web import (
+        canonical_url,
+        url_host,
+        url_suffixes,
+    )
+
+    for helper in (
+        token_count, quality_score, repetition_stats,
+        url_host, url_suffixes, canonical_url,
+    ):
+        with pytest.raises(TypeError, match="column name"):
+            helper(F.col("text"))
+
+
+def test_gopher_fractional_min_words(spark):
+    # thresholds render as F.lit types them: a fractional min_words
+    # compares exactly (49 words < 49.5), not truncated to 49
+    doc = " ".join(["word"] * 49)
+    out = _flags(spark, [doc], min_words=49.5)
+    assert out.loc[0].g_word_count == 49
+    assert not bool(out.loc[0].g_ok_word_count)
+    assert bool(_flags(spark, [doc], min_words=49).loc[0].g_ok_word_count)

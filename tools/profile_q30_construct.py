@@ -54,9 +54,9 @@ def main():
         (text, "quality_score"),
         (text, "token_count"),
         (text, "repetition_stats"),
-        (clean, "_word_grams"),
-        (clean, "_top_gram_mass"),
-        (clean, "_dup_gram_mass"),
+        (clean, "_word_grams_sql"),
+        (clean, "_top_gram_mass_sql"),
+        (clean, "_dup_gram_mass_sql"),
         (report, "corpus_churn_lanes"),
     ]
     acc: dict[str, float] = {}
