@@ -5,7 +5,8 @@ ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is executed to completion (collect to count) — timings
-include the full scan->shuffle->result path, not plan construction.
+include building the query (Python construction, plus any eager
+jobs it runs) and the full scan->shuffle->result path.
 Each headline query runs three times and reports the fastest run:
 the steady-state number a long-lived cluster sees (the first run
 pays one-time JVM JIT, codegen compilation, and file-listing costs

@@ -245,33 +245,29 @@ def semantic_overlap(
     The codebook defaults to the first ``nlist`` CORPUS vectors by id;
     pass an explicit one to share a quantizer with other stages.
     """
-    from .similarity import _dot, _norm, assign_ivf_cells
+    from .._litarr import sql_ident
+    from .similarity import (
+        _default_codebook,
+        _dot_sql,
+        _norm_sql,
+        assign_ivf_cells,
+    )
 
-    cents = codebook or [
-        (int(r[0]), list(r[1]))
-        for r in corpus.filter(F.col(id_col) < nlist)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    ]
-    if not cents:
-        raise ValueError("no centroid rows (empty corpus?)")
+    cents = codebook or _default_codebook(corpus, nlist, vec_col, id_col)
 
     def stamp(df, side):
         out = assign_ivf_cells(df, cents, vec_col, "__cell")
         return out.select(
             F.col(id_col).alias(f"__{side}_id"),
             F.col(vec_col).alias(f"__{side}_v"),
-            _norm(F.col(vec_col)).alias(f"__{side}_n"),
+            F.expr(_norm_sql(sql_ident(vec_col))).alias(f"__{side}_n"),
             F.col("__cell").alias("cell"),
         )
 
     c = stamp(corpus, "c")
     e = stamp(eval_df, "e")
-    sim = F.round(
-        _dot(F.col("__c_v"), F.col("__e_v"))
-        / (F.col("__c_n") * F.col("__e_n")),
-        6,
+    sim = F.expr(
+        f"round({_dot_sql('__c_v', '__e_v')} / (__c_n * __e_n), 6)"
     )
     pairs = (
         c.join(e, "cell")

@@ -1077,24 +1077,16 @@ def connected_components(
     # scale the label side broadcasts and the cache only costs its
     # materialization). The cache is bounded (the edge multiset, two
     # longs per row), spills to disk, and is released before
-    # returning; the checkpoint underneath keeps per-round plans
-    # lineage-free. OC_CC_EDGE_REPART=0 is the measurement A/B switch
-    # (the OC_SPREAD_DISABLE pattern).
-    import os as _os
-
-    partitioned = not _os.environ.get("OC_CC_EDGE_REPART") == "0"
-    if partitioned:
-        # no eager localCheckpoint on this path: the partitioned cache
-        # is itself the materialization barrier (round 0 fills it in
-        # its own job — one job and one pass fewer than checkpoint
-        # THEN repartition). The upstream candidate pipeline stays in
-        # the logical lineage, so each round re-ANALYZES it
-        # (driver-side, small) but never re-executes it.
-        sym = sym.repartition(F.col("__dst")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    else:
-        sym = sym.localCheckpoint(eager=True)
+    # returning; the per-round label checkpoints keep round plans
+    # lineage-free. The edges get no eager localCheckpoint: the
+    # partitioned cache is itself the materialization barrier (round 0
+    # fills it in its own job — one job and one pass fewer than
+    # checkpoint THEN repartition). The upstream candidate pipeline
+    # stays in the logical lineage, so each round re-ANALYZES it
+    # (driver-side, small) but never re-executes it.
+    sym = sym.repartition(F.col("__dst")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # round-0 labels are the IDENTITY map (label(x) = x), so the first
     # propagation round needs no label join at all: min over the
     # closed neighborhood of __dst ids IS min over round-0 labels.
@@ -1166,8 +1158,7 @@ def connected_components(
     # labels are checkpoint-materialized every round, so the edge
     # cache is no longer reachable from the result — release it now
     # (ingest loops must not accumulate per-call caches)
-    if partitioned:
-        sym.unpersist()
+    sym.unpersist()
     return labels.select(
         F.col("__node").alias(id_col), F.col("__label").alias("cluster_id")
     )

@@ -1,9 +1,15 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k is the correctness baseline; the scale path is
-LSH random-hyperplane bucketing (candidate generation ∝ corpus size)
-— an IVF-style variant would swap the hash for a k-means assignment.
-All dot products are JVM-side ``zip_with``/``aggregate`` folds.
+Brute-force cosine top-k is the correctness baseline; the scale paths
+are LSH random-hyperplane bucketing, IVF cells over a (trained)
+k-means codebook, and product quantization. Every vector fold — dot
+product, norm, cosine — has one implementation: a JVM-side
+``zip_with``/``aggregate`` fold rendered as SQL text (``_dot_sql``,
+``_norm_sql``, ``_cos_sql``) with literal vectors through ``_litarr``,
+parsed server-side in one py4j call however many folds it holds (a
+Python-built higher-order function costs ~20 py4j round trips of
+lambda registration per fold). ``_cos_py`` is the driver-side cosine
+for ranking tiny codebooks.
 """
 
 from __future__ import annotations
@@ -13,28 +19,6 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .._litarr import lit_double_array, sql_double_array, sql_ident, sql_num
-
-
-def _dot(a: Column, b: Column) -> Column:
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a: Column) -> Column:
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v))
-
-
-# --- SQL-text twins of the fold primitives -------------------------
-# Building a higher-order function Column from Python costs ~20 ms of
-# py4j round-trips PER CALL (lambda registration); an operator that
-# embeds one fold per centroid/hyperplane spends over a second of
-# serial driver time per query constructing its expression tree
-# (measured: assign_ivf_cells over 8 centroids = 48 HOF builds =
-# ~1.3 s). Rendering the SAME expressions as one SQL string parsed
-# server-side is ~100x cheaper and yields the identical expression
-# tree (same casts, same fold order, bit-identical results — the
-# oracle hash-checks the downstream cosines).
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -53,6 +37,16 @@ def _norm_sql(a: str) -> str:
     )
 
 
+def _cos_sql(a: str, b: str) -> str:
+    # try_divide: a zero-norm vector has no direction — its cosine is
+    # NULL (never reaches a threshold, never ranks), instead of an
+    # ANSI DIVIDE_BY_ZERO that can fire even on guarded rows when the
+    # optimizer folds this expression into a combined filter predicate
+    # evaluated ahead of the guard. Nonzero divisors are bit-identical
+    # to plain division, so oracle hashes are unaffected.
+    return f"try_divide({_dot_sql(a, b)}, ({_norm_sql(a)} * {_norm_sql(b)}))"
+
+
 def _fold_norm(vals) -> float:
     """Driver-side twin of ``_norm_sql`` over a literal array: the
     same left fold of ``cast(x as double) * x`` then sqrt, in the same
@@ -64,16 +58,6 @@ def _fold_norm(vals) -> float:
         xd = float(x)
         acc += xd * xd
     return math.sqrt(acc)
-
-
-def cosine(a: Column, b: Column) -> Column:
-    # try_divide: a zero-norm vector has no direction — its cosine is
-    # NULL (never reaches a threshold, never ranks), instead of an
-    # ANSI DIVIDE_BY_ZERO that can fire even on guarded rows when the
-    # optimizer folds this expression into a combined filter predicate
-    # evaluated ahead of the guard. Nonzero divisors are bit-identical
-    # to plain division, so oracle hashes are unaffected.
-    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
 def _cos_py(a, b) -> float:
@@ -89,6 +73,116 @@ def _cos_py(a, b) -> float:
     return dot / (((na**0.5) * (nb**0.5)) or 1.0)
 
 
+def _nearest_cells(
+    query_vector: list[float],
+    codebook: list[tuple[int, list[float]]],
+    nprobe: int,
+) -> list[int]:
+    """The ``nprobe`` cells one driver-side query probes, ranked by
+    ``(-round(cos, 6), cell_id)`` — the key ``_probe_cells`` sorts by
+    on the JVM, so single-query and batch searches probe the same
+    cells."""
+    ranked = sorted(
+        codebook,
+        key=lambda e: (-round(_cos_py(query_vector, e[1]), 6), e[0]),
+    )
+    return [cid for cid, _ in ranked[:nprobe]]
+
+
+def _probe_cells(
+    vec_col: str,
+    codebook: list[tuple[int, list[float]]],
+    nprobe: int,
+) -> Column:
+    """Per-row IVF probe list: cosine to every centroid (a tiny
+    literal), sort by (negated sim rounded to 6 decimals, cell id) —
+    ``_nearest_cells``' key — slice ``nprobe``; one parsed SQL
+    expression, all JVM, no driver pass over the rows."""
+    cents = ", ".join(
+        f"struct({int(cid)} AS cell, {sql_double_array(c)} AS c)"
+        for cid, c in codebook
+    )
+    # lambda names no column name plausibly shadows: the vector
+    # column is referenced inside the outer lambda
+    cos = _cos_sql(sql_ident(vec_col), "__oc_c.c")
+    return F.expr(
+        f"transform(slice(array_sort(transform(array({cents}), __oc_c -> "
+        f"struct(-round({cos}, 6) AS neg_sim, __oc_c.cell AS cell)"
+        f")), 1, {int(nprobe)}), __oc_p -> __oc_p.cell)"
+    )
+
+
+def _default_codebook(
+    df: DataFrame, nlist: int, vec_col: str, id_col: str
+) -> list[tuple[int, list[float]]]:
+    """The deterministic default IVF codebook: the vectors with
+    ``id < nlist``, by id — reproducible and oracle-checkable; pass a
+    trained codebook (``train_ivf_codebook``) for real corpora."""
+    cents = [
+        (int(r[0]), list(r[1]))
+        for r in df.filter(F.col(id_col) < nlist)
+        .select(id_col, vec_col)
+        .orderBy(id_col)
+        .collect()
+    ]
+    if not cents:
+        raise ValueError("no centroid rows (empty corpus?)")
+    return cents
+
+
+def _hash_seeds(
+    df: DataFrame,
+    n: int,
+    vec_col: str,
+    id_col: str,
+    lane: Column | None = None,
+) -> list[list[float]]:
+    """The ``n`` vectors with the smallest hash-lane values, ties by
+    id (default lane ``xxhash64(id)``): deterministic seeds that cost
+    one top-k, no pass beyond it."""
+    if lane is None:
+        lane = F.xxhash64(F.col(id_col))
+    rows = (
+        df.select(id_col, vec_col)
+        .orderBy(lane, F.col(id_col))
+        .limit(n)
+        .collect()
+    )
+    if len(rows) < n:
+        raise ValueError(
+            f"corpus has {len(rows)} vectors; {n} seeds needed"
+        )
+    return [[float(x) for x in r[1]] for r in rows]
+
+
+def _centroid_means(
+    frame: DataFrame, keys: list[str], vec_col: str
+) -> dict[tuple[int, ...], list[float]]:
+    """Componentwise mean vector per ``keys`` group, for a k-means
+    update: ONE shuffle keyed by (keys, position) (``posexplode`` +
+    avg), then a per-group ordered reassembly. Returns
+    ``{key tuple: mean vector}``; groups with no rows are absent."""
+    means = frame.select(
+        *keys, F.posexplode(F.col(vec_col)).alias("pos", "val")
+    ).groupBy(*keys, "pos").agg(
+        F.avg(F.col("val").cast("double")).alias("m")
+    )
+    rows = (
+        means.groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                lambda s: s["m"],
+            ).alias("vec")
+        )
+        .collect()
+    )
+    return {
+        tuple(int(r[k]) for k in keys): [float(x) for x in r["vec"]]
+        for r in rows
+    }
+
+
 def brute_force_cosine_topk(
     df: DataFrame,
     query_vector: list[float],
@@ -96,13 +190,13 @@ def brute_force_cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k by cosine against one query vector. The orderBy+limit
-    plans as TakeOrderedAndProject: per-partition top-k then a driver
-    merge — no global sort shuffle."""
-    q = lit_double_array(query_vector)
-    sim = cosine(F.col(vec_col), q)
+    """Exact top-k by cosine against one query vector — also the exact
+    rerank every approximate single-query search runs on its candidate
+    frame. The orderBy+limit plans as TakeOrderedAndProject:
+    per-partition top-k then a driver merge — no global sort shuffle."""
+    sim = _cos_sql(sql_ident(vec_col), sql_double_array(query_vector))
     return (
-        df.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
+        df.select(F.col(id_col), F.expr(f"round({sim}, 6)").alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
         .limit(k)
     )
@@ -224,38 +318,24 @@ def kmeans_parallel_init(
     the candidates to ``nlist`` seeds. Total: ``2 * rounds + 1``
     corpus scans, nothing corpus-sized ever collects.
     """
+    from .dedup import md5_lane
+
     li = int(oversample or 2 * nlist)
-    first = (
-        df.select(vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(1)
-        .collect()
-    )
-    if not first:
-        raise ValueError("empty corpus")
-    cands: list[list[float]] = [[float(x) for x in first[0][0]]]
-    v = F.col(vec_col)
+    cands = _hash_seeds(df, 1, vec_col, id_col)
+    v = sql_ident(vec_col)
     for rnd in range(rounds):
-        dmin = F.least(
-            *[
-                F.lit(1.0)
-                - cosine(v, lit_double_array(c))
-                for c in cands
-            ]
-        ) if len(cands) > 1 else (
-            F.lit(1.0)
-            - cosine(v, lit_double_array(cands[0]))
-        )
+        dists = [f"1.0D - {_cos_sql(v, sql_double_array(c))}" for c in cands]
+        dmin = dists[0] if len(dists) == 1 else f"least({', '.join(dists)})"
         # distances quantized to integer micros: the global cost is
         # then an exact integer sum (partition-order independent), so
         # the acceptance threshold — and therefore the candidate set —
         # is identical under any layout
-        dm = F.round(dmin * F.lit(1e6), 0).cast("long")
-        scored = df.select(F.col(id_col), v.alias("__v"), dm.alias("__dm"))
+        dm = F.expr(f"cast(round(({dmin}) * 1000000.0D, 0) as bigint)")
+        scored = df.select(
+            F.col(id_col), F.col(vec_col).alias("__v"), dm.alias("__dm")
+        )
         # the lane draw must vary by round or every round picks the
         # same points; md5_lane is the canonical 60-bit lane
-        from .dedup import md5_lane
-
         lane = md5_lane(
             F.concat_ws(":", F.col(id_col), F.lit(str(rnd)))
         ).cast("double") / F.lit(float(2**60))
@@ -277,16 +357,14 @@ def kmeans_parallel_init(
             for r in picked.select("__v").collect()
         ]
         cands.extend(new)
-    # weight candidates by population (one JVM argmin pass)
-    sims = F.array(
-        *[
-            F.round(cosine(v, lit_double_array(c)), 6)
-            for c in cands
-        ]
+    # weight candidates by population (one JVM argmax pass)
+    wrows = (
+        assign_ivf_cells(df, list(enumerate(cands)), vec_col, "__c")
+        .groupBy("__c")
+        .count()
+        .collect()
     )
-    nearest = (F.array_position(sims, F.array_max(sims)) - 1).alias("__c")
-    wrows = df.select(nearest).groupBy("__c").agg(F.count(F.lit(1)).alias("w")).collect()
-    weights = {int(r["__c"]): float(r["w"]) for r in wrows}
+    weights = {int(r["__c"]): float(r["count"]) for r in wrows}
     import numpy as np
 
     X = np.asarray(cands, dtype=np.float64)
@@ -347,43 +425,20 @@ def train_ivf_codebook(
         return [float(x) / n for x in v]
 
     if init == "kmeans||":
-        cents = [
-            (i, _unit(c))
-            for i, c in enumerate(
-                kmeans_parallel_init(df, nlist, vec_col, id_col)
-            )
-        ]
+        seeds = kmeans_parallel_init(df, nlist, vec_col, id_col)
     elif init == "hash":
-        seeds = (
-            df.select(id_col, vec_col)
-            .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-            .limit(nlist)
-            .collect()
-        )
-        if len(seeds) < nlist:
-            raise ValueError(f"corpus has fewer than nlist={nlist} vectors")
-        cents = [(i, _unit(list(r[1]))) for i, r in enumerate(seeds)]
+        seeds = _hash_seeds(df, nlist, vec_col, id_col)
     else:
         raise ValueError(f"init must be 'hash' or 'kmeans||', got {init!r}")
+    cents = [(i, _unit(c)) for i, c in enumerate(seeds)]
     for _ in range(iters):
         assigned = assign_ivf_cells(df, cents, vec_col, "__km_cell")
-        pe = assigned.select(
-            "__km_cell", F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        means = pe.groupBy("__km_cell", "pos").agg(
-            F.avg(F.col("val").cast("double")).alias("m")
-        )
-        rows = (
-            means.groupBy("__km_cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("vec")
-            )
-            .collect()
-        )
-        updated = {int(r[0]): _unit(list(r[1])) for r in rows}
+        updated = {
+            key[0]: _unit(vec)
+            for key, vec in _centroid_means(
+                assigned, ["__km_cell"], vec_col
+            ).items()
+        }
         cents = [(cid, updated.get(cid, c)) for cid, c in cents]
     return cents
 
@@ -431,15 +486,9 @@ def ivf_lloyd_step(
         lane = F.xxhash64(F.col(id_col))
     else:
         raise ValueError(f"unknown hasher: {hasher!r}")
-    seeds = (
-        df.select(id_col, vec_col)
-        .orderBy(lane, F.col(id_col))
-        .limit(nlist)
-        .collect()
+    cents = list(
+        enumerate(_hash_seeds(df, nlist, vec_col, id_col, lane))
     )
-    if len(seeds) < nlist:
-        raise ValueError(f"corpus has fewer than nlist={nlist} vectors")
-    cents = [(i, [float(x) for x in r[1]]) for i, r in enumerate(seeds)]
     assigned = assign_ivf_cells(df, cents, vec_col, "cell")
     scale = float(10**value_decimals)
     vi = F.round(
@@ -486,32 +535,12 @@ def ivf_ann(
     corpus. Pass ``codebook`` (e.g. from ``train_ivf_codebook``) to
     search against a trained quantizer instead.
     """
-    cents = codebook or [
-        (int(r[0]), list(r[1]))
-        for r in df.filter(F.col(id_col) < nlist)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    ]
-    if not cents:
-        raise ValueError("no centroid rows (empty corpus?)")
-
-    probe = sorted(
-        ((round(_cos_py(query_vector, c), 6), cid) for cid, c in cents),
-        key=lambda t: (-t[0], t[1]),
-    )[:nprobe]
-    probe_cells = [cid for _, cid in probe]
-
+    cents = codebook or _default_codebook(df, nlist, vec_col, id_col)
+    probe_cells = _nearest_cells(query_vector, cents, nprobe)
     if cell_col not in df.columns:
         df = assign_ivf_cells(df, cents, vec_col, cell_col)
     cand = df.filter(F.col(cell_col).isin(probe_cells))
-    q = lit_double_array(query_vector)
-    sim = cosine(F.col(vec_col), q)
-    return (
-        cand.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return brute_force_cosine_topk(cand, query_vector, k, vec_col, id_col)
 
 
 def lsh_bucket_ann(
@@ -545,16 +574,10 @@ def lsh_bucket_ann(
 
     qb = bucket_py(query_vector)
     probe = [qb] + [qb ^ (1 << i) for i in range(planes)]  # Hamming<=1
-    q = lit_double_array(query_vector)
     if bucket_col not in df.columns:
         df = add_lsh_buckets(df, dim, planes, seed, vec_col, bucket_col)
     cand = df.filter(F.col(bucket_col).isin(probe))
-    sim = cosine(F.col(vec_col), q)
-    return (
-        cand.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return brute_force_cosine_topk(cand, query_vector, k, vec_col, id_col)
 
 
 def semantic_dedup(
@@ -588,22 +611,14 @@ def semantic_dedup(
     vectors by id (deterministic, oracle-checkable); pass a trained
     one (``train_ivf_codebook``) for real corpora.
     """
-    cents = codebook or [
-        (int(r[0]), list(r[1]))
-        for r in df.filter(F.col(id_col) < nlist)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    ]
-    if not cents:
-        raise ValueError("no centroid rows (empty corpus?)")
+    cents = codebook or _default_codebook(df, nlist, vec_col, id_col)
     if cell_col not in df.columns:
         df = assign_ivf_cells(df, cents, vec_col, cell_col)
     # Norms hoisted to a per-ROW column: each vector's norm is folded
     # once instead of once per pair (cells of size c pay 2c^2 extra
     # interpreted folds otherwise). The pair expression stays
-    # dot/(na*nb) — bit-identical to cosine(), so thresholds and the
-    # SQL twin are unaffected.
+    # dot/(na*nb) — bit-identical to _cos_sql, so thresholds are
+    # unaffected.
     # Persisted: stamped feeds BOTH self-join sides and the final
     # left join — without it the IVF argmax assignment and the norm
     # fold re-run 3x per row (guide §5 caching rule: reused AND
@@ -614,7 +629,7 @@ def semantic_dedup(
         F.col(id_col),
         F.col(vec_col),
         F.col(cell_col),
-        _norm(F.col(vec_col)).alias("__nrm"),
+        F.expr(_norm_sql(sql_ident(vec_col))).alias("__nrm"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     a = stamped.select(
         F.col(id_col).alias("__a"),
@@ -628,13 +643,9 @@ def semantic_dedup(
         F.col("__nrm").alias("__nb"),
         F.col(cell_col).alias("cell"),
     )
-    sim = F.try_divide(
-        _dot(F.col("__va"), F.col("__vb")),
-        F.col("__na") * F.col("__nb"),
-    )
+    sim = f"try_divide({_dot_sql('__va', '__vb')}, (__na * __nb))"
     pairs = a.join(b, "cell").filter(
-        (F.col("__b") < F.col("__a"))
-        & (F.round(sim, 6) >= F.lit(float(threshold)))
+        f"__b < __a AND round({sim}, 6) >= {sql_num(float(threshold))}"
     )
     dup = pairs.groupBy("__a").agg(F.min("__b").alias("dup_of"))
     from .dedup import _attach_cached
@@ -698,22 +709,12 @@ def pq_train_codebooks(
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     dsub = dim // m
-    seeds = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(ksub)
-        .collect()
-    )
-    if len(seeds) < ksub:
-        raise ValueError(f"corpus has fewer than ksub={ksub} vectors")
-    books = [
-        [[float(x) for x in r[1][s * dsub : (s + 1) * dsub]] for r in seeds]
-        for s in range(m)
-    ]
+    seeds = _hash_seeds(df, ksub, vec_col, id_col)
+    books = [[r[s * dsub : (s + 1) * dsub] for r in seeds] for s in range(m)]
     for _ in range(iters):
         enc = pq_encode(df, books, vec_col=vec_col, code_col="__pq")
         # one explode covers every subspace: (subspace, code, subvector)
-        pe = enc.select(
+        subs = enc.select(
             F.explode(
                 F.transform(
                     F.sequence(F.lit(0), F.lit(m - 1)),
@@ -724,25 +725,8 @@ def pq_train_codebooks(
                     ),
                 )
             ).alias("z")
-        ).select(
-            F.col("z.sub").alias("sub"),
-            F.col("z.code").alias("code"),
-            F.posexplode(F.col("z.sv")).alias("off", "val"),
-        )
-        means = pe.groupBy("sub", "code", "off").agg(
-            F.avg(F.col("val").cast("double")).alias("mval")
-        )
-        rows = (
-            means.groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("off", "mval"))),
-                    lambda st: st["mval"],
-                ).alias("cent")
-            )
-            .collect()
-        )
-        updated = {(int(r[0]), int(r[1])): [float(x) for x in r[2]] for r in rows}
+        ).select("z.sub", "z.code", "z.sv")
+        updated = _centroid_means(subs, ["sub", "code"], "sv")
         books = [
             [updated.get((s, j), books[s][j]) for j in range(ksub)]
             for s in range(m)
@@ -928,12 +912,7 @@ def ivf_pq_search(
     residual space (``write_ann_index(pq_residual=True)``) — the
     query's per-cell residual drives the ADC tables.
     """
-
-    probe = sorted(
-        ((round(_cos_py(query_vector, c), 6), cid) for cid, c in ivf_codebook),
-        key=lambda t: (-t[0], t[1]),
-    )[:nprobe]
-    probe_cells = [cid for _, cid in probe]
+    probe_cells = _nearest_cells(query_vector, ivf_codebook, nprobe)
     depth = k if rerank is None else 4 * k
     if residual:
         # residual space is PER CELL: each probed cell scores against
@@ -976,42 +955,12 @@ def ivf_pq_search(
         )
     if rerank is None:
         return adc
-    q = lit_double_array(query_vector)
-    sim = cosine(F.col(vec_col), q)
-    return (
-        rerank.join(adc.select(id_col), id_col, "left_semi")
-        .select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def _probe_cells(
-    vec: Column,
-    codebook: list[tuple[int, list[float]]],
-    nprobe: int,
-) -> Column:
-    """Per-row IVF probe list: cosine to every centroid (a tiny
-    literal), sort (desc sim, asc cell id) via a packed struct array,
-    slice ``nprobe`` — all JVM, no driver pass over the rows."""
-    cents = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cell"),
-                lit_double_array(c).alias("c"),
-            )
-            for cid, c in codebook
-        ]
-    )
-    scored = F.transform(
-        cents,
-        lambda s: F.struct(
-            (-F.round(cosine(vec, s["c"]), 9)).alias("neg_sim"),
-            s["cell"].alias("cell"),
-        ),
-    )
-    return F.transform(
-        F.slice(F.array_sort(scored), 1, nprobe), lambda s: s["cell"]
+    return brute_force_cosine_topk(
+        rerank.join(adc.select(id_col), id_col, "left_semi"),
+        query_vector,
+        k,
+        vec_col,
+        id_col,
     )
 
 
@@ -1089,14 +1038,13 @@ def mine_hard_negatives(
                 cell_col,
             ).withColumnRenamed(corpus_vec_col, "__cvec")
         q = q.withColumn(
-            cell_col,
-            F.explode(_probe_cells(F.col("__qvec"), codebook, nprobe)),
+            cell_col, F.explode(_probe_cells("__qvec", codebook, nprobe))
         )
         pairs = c.join(q, cell_col).drop(cell_col)
     else:
         raise ValueError(f"method must be broadcast|ivf, got {method!r}")
 
-    sim = F.round(cosine(F.col("__qvec"), F.col("__cvec")), 6)
+    sim = F.expr(f"round({_cos_sql('__qvec', '__cvec')}, 6)")
     pairs = pairs.select(
         query_id_col, corpus_id_col, sim.alias("cos_sim")
     )
@@ -1157,8 +1105,6 @@ def ann_recall_report(
     plans — including the directory-level cell pruning — not a live
     re-quantization.
     """
-    from pyspark import StorageLevel
-
     if index is not None:
         params = index["params"]
         corpus_df = index["df"]
@@ -1171,8 +1117,8 @@ def ann_recall_report(
             "ann_recall_report needs corpus_df+codebook, or index="
         )
 
-    truth = (
-        mine_hard_negatives(
+    def retrieve(**kw):
+        return mine_hard_negatives(
             queries_df,
             corpus_df,
             None,
@@ -1181,46 +1127,56 @@ def ann_recall_report(
             corpus_id_col=corpus_id_col,
             query_vec_col=query_vec_col,
             corpus_vec_col=corpus_vec_col,
-            method="broadcast",
+            **kw,
         )
-        .select(query_id_col, corpus_id_col)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+
+    return _recall_sweep(
+        queries_df,
+        [query_id_col, corpus_id_col],
+        retrieve(method="broadcast"),
+        "nprobe",
+        nprobes,
+        lambda np_: retrieve(
+            method="ivf", codebook=codebook, nprobe=np_, cell_col=cell_col
+        ),
     )
+
+
+def _recall_sweep(
+    queries_df: DataFrame,
+    keys: list[str],
+    truth: DataFrame,
+    point_col: str,
+    points,
+    approx,
+) -> DataFrame:
+    """Recall@k of ``approx(point)`` against the exact ``truth`` pairs
+    for every sweep point: the truth is persisted and counted once,
+    each point costs one semi-join count. Returns one row per point:
+    ``(<point_col>, n_queries, recall_at_k)`` — the fraction of truth
+    pairs (on ``keys``) the approximate retrieval found,
+    micro-averaged over queries."""
+    from pyspark import StorageLevel
+
+    truth = truth.select(*keys).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         total = truth.count()
         n_queries = queries_df.count()
         rows = []
-        for np_ in nprobes:
-            approx = mine_hard_negatives(
-                queries_df,
-                corpus_df,
-                None,
-                k,
-                query_id_col=query_id_col,
-                corpus_id_col=corpus_id_col,
-                query_vec_col=query_vec_col,
-                corpus_vec_col=corpus_vec_col,
-                method="ivf",
-                codebook=codebook,
-                nprobe=int(np_),
-                cell_col=cell_col,
-            )
+        for p in points:
             hit = (
-                approx.select(query_id_col, corpus_id_col)
-                .join(truth, [query_id_col, corpus_id_col], "left_semi")
+                approx(int(p))
+                .select(*keys)
+                .join(truth, keys, "left_semi")
                 .count()
             )
             rows.append(
-                (
-                    int(np_),
-                    int(n_queries),
-                    round(hit / total, 6) if total else 0.0,
-                )
+                (int(p), int(n_queries), round(hit / total, 6) if total else 0.0)
             )
     finally:
         truth.unpersist()
     return queries_df.sparkSession.createDataFrame(
-        rows, "nprobe int, n_queries bigint, recall_at_k double"
+        rows, f"{point_col} int, n_queries bigint, recall_at_k double"
     )
 
 
@@ -1397,22 +1353,15 @@ def ann_index_search(
             vec_col=vec_col,
             residual=bool(params.get("pq_residual")),
         )
-    probe = sorted(
-        (
-            (round(_cos_py(query_vector, c), 6), cid)
-            for cid, c in index["codebook"]
-        ),
-        key=lambda t: (-t[0], t[1]),
-    )[:nprobe]
-    cand = df.filter(F.col("ivf_cell").isin([cid for _, cid in probe]))
-    q = lit_double_array(query_vector)
-    return (
-        cand.select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    return ivf_ann(
+        df,
+        query_vector,
+        k,
+        nprobe=nprobe,
+        vec_col=vec_col,
+        id_col=id_col,
+        cell_col="ivf_cell",
+        codebook=index["codebook"],
     )
 
 
@@ -1450,9 +1399,7 @@ def _ann_batch_pq(
     residual = bool(params.get("pq_residual"))
     q = queries_df.select(
         F.col(query_id_col), F.col(query_vec_col).alias("__qvec")
-    ).withColumn(
-        "__cells", _probe_cells(F.col("__qvec"), codebook, nprobe)
-    )
+    ).withColumn("__cells", _probe_cells("__qvec", codebook, nprobe))
 
     def _table(cb, base, src):
         # closure factory: PySpark HOF lambdas must take exactly
@@ -1541,7 +1488,7 @@ def _ann_batch_pq(
         .join(vecs, id_col)
         .join(q.select(query_id_col, "__qvec"), query_id_col)
     )
-    sim = F.round(cosine(F.col(vec_col), F.col("__qvec")), 6)
+    sim = F.expr(f"round({_cos_sql(sql_ident(vec_col), '__qvec')}, 6)")
     w2 = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col(id_col)
     )
@@ -1622,7 +1569,7 @@ def ann_index_search_batch(
             r["c"]
             for r in queries_df.select(
                 F.explode(
-                    _probe_cells(F.col(query_vec_col), codebook, nprobe)
+                    _probe_cells(query_vec_col, codebook, nprobe)
                 ).alias("c")
             )
             .distinct()
@@ -1666,57 +1613,27 @@ def pq_rerank_depth_report(
     deeper rerank monotonically recovers it, and depth >= the probed
     candidate count pins recall 1.0 exactly. Returns one row per
     depth: ``(rerank_depth, n_queries, recall_at_k)``."""
-    from pyspark import StorageLevel
-
     if not index.get("pq_codebooks"):
         raise ValueError("pq_rerank_depth_report needs a PQ-encoded index")
-    truth = (
-        ann_index_search_batch(
+
+    def retrieve(**kw):
+        return ann_index_search_batch(
             index,
             queries_df,
             k=k,
             nprobe=nprobe,
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
-            score="flat",
+            **kw,
         )
-        .select(query_id_col, index["params"]["id_col"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        total = truth.count()
-        n_queries = queries_df.count()
-        rows = []
-        for d in depths:
-            got = ann_index_search_batch(
-                index,
-                queries_df,
-                k=k,
-                nprobe=nprobe,
-                query_id_col=query_id_col,
-                query_vec_col=query_vec_col,
-                rerank_depth=int(d),
-            )
-            hit = (
-                got.select(query_id_col, index["params"]["id_col"])
-                .join(
-                    truth,
-                    [query_id_col, index["params"]["id_col"]],
-                    "left_semi",
-                )
-                .count()
-            )
-            rows.append(
-                (
-                    int(d),
-                    int(n_queries),
-                    round(hit / total, 6) if total else 0.0,
-                )
-            )
-    finally:
-        truth.unpersist()
-    return queries_df.sparkSession.createDataFrame(
-        rows, "rerank_depth int, n_queries bigint, recall_at_k double"
+
+    return _recall_sweep(
+        queries_df,
+        [query_id_col, index["params"]["id_col"]],
+        retrieve(score="flat"),
+        "rerank_depth",
+        depths,
+        lambda d: retrieve(rerank_depth=d),
     )
 
 

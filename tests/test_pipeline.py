@@ -2,6 +2,8 @@
 similarity matches numpy oracles, text features behave.
 """
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -1490,23 +1492,87 @@ def test_ann_index_search_batch_pq_adc_scoring(spark, tmp_path):
         idx, queries, k=4, nprobe=3, exact_rerank=False
     ).toPandas()
     assert "adc_dist" in raw.columns
-    from opencosmo_spark.pipeline.similarity import _cos_py, _probe_cells
+    from opencosmo_spark.pipeline.similarity import _nearest_cells
 
     for row in queries.toPandas().itertuples():
         qv = [float(x) for x in row.embedding]
-        cells = sorted(
-            ((round(_cos_py(qv, c), 9), cid) for cid, c in idx["codebook"]),
-            key=lambda t: (-t[0], t[1]),
-        )[:3]
-        cand = idx["df"].filter(
-            F.col("ivf_cell").isin([cid for _, cid in cells])
-        )
+        cells = _nearest_cells(qv, idx["codebook"], 3)
+        cand = idx["df"].filter(F.col("ivf_cell").isin(cells))
         want = pq_search(
             cand, idx["pq_codebooks"], qv, k=4, id_col="vec_id"
         ).toPandas()
         sub = raw[raw.query_id == row.query_id].sort_values("rank")
         assert list(sub.vec_id) == list(want.vec_id), row.query_id
         np.testing.assert_allclose(sub.adc_dist, want.adc_dist, atol=1e-5)
+
+
+def test_single_and_batch_ivf_probes_agree_at_near_tie(spark):
+    """The driver probe ranking (single-query search) and the per-row
+    JVM one (batch search) share one key, (-round(cos, 6), cell id):
+    two centroids whose cosines to the query differ only in the 7th
+    decimal tie, and both paths probe the lower cell id."""
+    from opencosmo_spark.pipeline.similarity import (
+        ann_index_search,
+        ann_index_search_batch,
+    )
+
+    def unit(c):
+        return [c, math.sqrt(1.0 - c * c)]
+
+    codebook = [(0, unit(0.5000001)), (1, unit(0.5000004))]
+    corpus = spark.createDataFrame(
+        [(10, unit(0.6), 0), (11, unit(0.4), 1)],
+        "vec_id long, embedding array<double>, ivf_cell int",
+    )
+    index = {
+        "df": corpus,
+        "codebook": codebook,
+        "pq_codebooks": None,
+        "params": {"id_col": "vec_id", "vec_col": "embedding"},
+    }
+    single = ann_index_search(index, [1.0, 0.0], k=5, nprobe=1)
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "query_id long, embedding array<double>"
+    )
+    batch = ann_index_search_batch(index, queries, k=5, nprobe=1)
+    assert [r.vec_id for r in single.collect()] == [10]
+    assert [r.vec_id for r in batch.collect()] == [10]
+
+
+def test_lsh_bucket_ann_construction_cost(spark):
+    """Building the LSH ANN plan renders every cosine and bucket fold
+    as parsed SQL text: the py4j calls it makes on the calling thread
+    stay far below the per-lambda cost of Column-built folds (260 on
+    this 50-row, 16-dim frame when the folds were Column-built)."""
+    import threading
+
+    from opencosmo_spark.pipeline.similarity import lsh_bucket_ann
+
+    rng = np.random.default_rng(11)
+    vecs = [[float(x) for x in rng.normal(size=16)] for _ in range(50)]
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+    me = threading.get_ident()
+
+    def counted(*a, **k):
+        # py4j's finalizer thread releases dead JVM references through
+        # the same client; count only the calls the build itself makes
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(*a, **k)
+
+    client.send_command = counted
+    try:
+        out = lsh_bucket_ann(df, vecs[7], k=5)
+    finally:
+        client.send_command = send
+    assert len(calls) <= 120, len(calls)
+    top = out.first()
+    assert (top.vec_id, top.cos_sim) == (7, 1.0)
 
 
 def test_block_pack_ids_matches_python_twin(spark):
