@@ -19,7 +19,21 @@ constant casts that the optimizer folds to the same literals.
 
 The module is also the one home of SQL-text rendering: literals
 (``sql_num``, ``sql_str``, ``sql_double_array``), identifiers
-(``sql_ident``, ``sql_col``) and types (``sql_type``).
+(``sql_ident``, ``sql_col``), types (``sql_type``) and bindings
+(``sql_let``).
+
+One rule for every SQL-text builder: never interpolate a tokenizer or
+parser expression (``split``, ``regexp_extract_all``,
+``try_parse_url``, ...) into a lambda body — bind it. Spark evaluates
+a lambda body once per array element and does not share common
+subexpressions inside higher-order functions, so ``split(text)``
+pasted into ``transform(xs, x -> ... split(text) ...)`` re-tokenizes
+the row once per element (O(words^2) per document). Interpolating it
+several times outside lambdas re-tokenizes it once per copy. Bind the
+value once with ``sql_let`` and read the variable in the body, or
+project it once as a hidden column that is read outside lambda
+bodies (the optimizer inlines a projection read only once, wherever
+that read sits — the ``dedup._shingle_frame`` finding).
 """
 
 from __future__ import annotations
@@ -116,6 +130,15 @@ def sql_str(s: str) -> str:
     if len(out) == 1:
         return out[0]
     return "concat(" + ", ".join(out) + ")"
+
+
+def sql_let(value: str, var: str, body: str) -> str:
+    """SQL text that evaluates ``value`` once per row and reads it as
+    the lambda variable ``var`` in ``body``:
+    ``element_at(transform(array(value), var -> body), 1)``. Values
+    are those of ``body`` with ``value`` pasted in for ``var``, NULL
+    included (a NULL ``value`` binds ``var`` to NULL)."""
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
 
 
 def sql_ident(name: str) -> str:

@@ -15,15 +15,20 @@ The partition probe is driver-only and job-free BY CONSTRUCTION
 AQE-prepared executedPlan, and on an input containing exchanges AQE
 materializes every query stage EAGERLY — real shuffle jobs ran at
 builder time and their results were not reused by the later action
-(upstream work executed twice). The probe now inspects the PRE-AQE
-physical plan (``queryExecution().sparkPlan()``), and only for plans
-with no Exchange/Subquery node — narrow scans, the only shape worth
-spreading; a plan that already contains an exchange was just
-repartitioned by that exchange, so the spread is pointless there
-anyway. Probe results are memoized per (session, analyzed-plan
-semanticHash): physical planning (~tens of ms of driver time) runs
-once per distinct input shape per session instead of once per
-operator construction.
+(upstream work executed twice). The probe now walks the PRE-AQE
+physical plan (``queryExecution().sparkPlan()``) node by node and
+builds the RDD lineage only of a narrow chain: no ``Exchange`` node,
+no subquery expression (``execute()`` would submit the subquery
+job), and no node that requires a distribution of its children
+(aggregates, joins, windows, global sorts and limits: the exchange
+EnsureRequirements would add there repartitions the input anyway,
+and a join's broadcast side would run a job). Probe results are
+memoized per (session UUID, analyzed-plan semanticHash): physical
+planning (~tens of ms of driver time) runs once per distinct input
+shape per session instead of once per operator construction. The
+semanticHash does not see the files behind a relation, so a session
+that re-reads a growing directory keeps its first count — at worst
+one spread too many or too few, never a wrong row.
 """
 
 from __future__ import annotations
@@ -31,35 +36,54 @@ from __future__ import annotations
 import os
 from collections import OrderedDict
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import DataFrame
 
-# (session id, analyzed-plan semanticHash) -> partition count or None
-# (None = plan not probe-safe). Bounded: oldest entries evicted.
-_PROBE_MEMO: OrderedDict[tuple[int, int], int | None] = OrderedDict()
+# (session UUID, analyzed-plan semanticHash) -> partition count or None
+# (None = plan not a narrow chain). Bounded: oldest entries evicted.
+_PROBE_MEMO: OrderedDict[tuple[str, int], int | None] = OrderedDict()
 _PROBE_MEMO_MAX = 256
+
+_EXCHANGE = "org.apache.spark.sql.execution.exchange.Exchange"
+_UNSPECIFIED = (
+    "org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution$"
+)
+
+
+def _narrow_chain(gateway, plan) -> bool:
+    """True when no node of the physical ``plan`` is an Exchange,
+    holds a subquery expression or requires a child distribution."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if is_instance_of(gateway, node, _EXCHANGE):
+            return False
+        if node.subqueries().nonEmpty():
+            return False
+        dists = node.requiredChildDistribution()
+        for i in range(dists.size()):
+            if not is_instance_of(gateway, dists.apply(i), _UNSPECIFIED):
+                return False
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return True
 
 
 def _input_partitions(df: DataFrame) -> int | None:
-    """Partition count of ``df``'s input, or None when it cannot be
-    determined without running work. Job-free: uses the pre-AQE
-    physical plan, and refuses plans containing Exchange (AQE stage
-    materialization hazard; also already-parallel) or Subquery
-    (``execute()`` would submit the subquery job)."""
-    try:
-        jqe = df._jdf.queryExecution()
-        key = (id(df.sparkSession), jqe.analyzed().semanticHash())
-        if key in _PROBE_MEMO:
-            _PROBE_MEMO.move_to_end(key)
-            return _PROBE_MEMO[key]
-        plan = jqe.sparkPlan()  # physical planning only — no execution
-        txt = plan.toString()
-        if "Exchange" in txt or "Subquery" in txt:
-            n: int | None = None
-        else:
-            # building the RDD lineage of a narrow plan runs no jobs
-            n = plan.execute().getNumPartitions()
-    except Exception:  # noqa: BLE001 — probing is best-effort
-        return None
+    """Partition count of ``df``'s input, or None when its pre-AQE
+    physical plan is not a narrow chain (see the module docstring).
+    Job-free: only a narrow chain's RDD lineage is built."""
+    session = df.sparkSession
+    jqe = df._jdf.queryExecution()
+    key = (session._jsparkSession.sessionUUID(), jqe.analyzed().semanticHash())
+    if key in _PROBE_MEMO:
+        _PROBE_MEMO.move_to_end(key)
+        return _PROBE_MEMO[key]
+    plan = jqe.sparkPlan()  # physical planning only — no execution
+    n: int | None = None
+    if _narrow_chain(session.sparkContext._gateway, plan):
+        # building the RDD lineage of a narrow plan runs no jobs
+        n = plan.execute().getNumPartitions()
     _PROBE_MEMO[key] = n
     while len(_PROBE_MEMO) > _PROBE_MEMO_MAX:
         _PROBE_MEMO.popitem(last=False)

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from .._litarr import sql_ident, sql_in
 from ..column.expr import Mask
 from ..dataset import Dataset
 
@@ -305,8 +306,9 @@ class StructureCollection:
         child = self[name]
         ds = child if isinstance(child, Dataset) else child.source
         if keys is not None:
+            # one parsed IN list: ``isin`` costs a py4j call per key
             ds = Dataset(
-                ds.df.filter(F.col(child_key).isin(keys)),
+                ds.df.filter(F.expr(sql_in(sql_ident(child_key), keys))),
                 header=ds.header,
             )
         return ds.get_data("pandas")

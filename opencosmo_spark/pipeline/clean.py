@@ -69,7 +69,13 @@ def gopher_quality_flags(
     from .._litarr import sql_ident, sql_num, sql_str
 
     t = sql_ident(text_col)
-    words = f"filter(split(trim({t}), '\\\\s+'), w -> w != '')"
+    # the word and line arrays are read by several rules: project each
+    # once as a hidden column (dropped at the end) — never re-split
+    hidden = {
+        "__oc_words": f"filter(split(trim({t}), '\\\\s+'), w -> w != '')",
+        "__oc_lines": f"filter(split({t}, '\\n'), ln -> trim(ln) != '')",
+    }
+    words, lines = (sql_ident(k) for k in hidden)
     safe_n = f"cast(greatest(size({words}), 1) as double)"
     mean_wlen = (
         f"aggregate({words}, 0.0D,"
@@ -78,7 +84,6 @@ def gopher_quality_flags(
     n_hash = f"(length({t}) - length(regexp_replace({t}, '#', '')))"
     n_ellipsis = f"size(regexp_extract_all({t}, '(\\\\.\\\\.\\\\.|…)', 0))"
     symbol_ratio = f"cast(({n_hash} + {n_ellipsis}) as double) / {safe_n}"
-    lines = f"filter(split({t}, '\\n'), ln -> trim(ln) != '')"
     n_lines = f"cast(greatest(size({lines}), 1) as double)"
     bullet_ratio = (
         f"cast(size(filter({lines},"
@@ -99,7 +104,8 @@ def gopher_quality_flags(
         f"size(array_intersect(array_distinct("
         f"transform({words}, w -> lower(w))), array({stops})))"
     )
-    out = df.withColumns(
+    out = df.withColumns({k: F.expr(v) for k, v in hidden.items()})
+    out = out.withColumns(
         {
             "g_word_count": F.expr(f"size({words})"),
             "g_mean_word_len": F.expr(f"round({mean_wlen}, 6)"),
@@ -132,7 +138,8 @@ def gopher_quality_flags(
         ),
     }
     out = out.withColumns({k: F.expr(v) for k, v in checks.items()})
-    return out.withColumn("keep", F.expr(" AND ".join(checks.keys())))
+    out = out.withColumn("keep", F.expr(" AND ".join(checks.keys())))
+    return out.drop(*hidden)
 
 
 # ----- SQL-text gram helpers (the _litarr idiom) --------------------
@@ -142,19 +149,45 @@ def gopher_quality_flags(
 # Each census is a sort-then-scan inside the row — array_sort puts
 # equal elements adjacent, one run-length aggregate counts repeats —
 # so it is a JVM expression: no explode, no shuffle, O(k log k) in the
-# row's own element count.
+# row's own element count. An argument read more than once, or inside
+# a lambda body, is bound once with ``sql_let`` (the _litarr rule), so
+# a caller may pass a tokenizer expression such as ``split(text)``.
 
 
 def _word_grams_sql(words: str, n: int) -> str:
     """Space-joined word ``n``-grams of a words EXPRESSION (sequence
-    of window starts -> slice -> concat_ws). Empty array when the row
-    has fewer than ``n`` words — the CASE guard keeps ``sequence``
-    from ever seeing start > stop."""
+    of window starts -> slice -> concat_ws), the words evaluated once
+    per row. Empty array when the row has fewer than ``n`` words — the
+    CASE guard keeps ``sequence`` from ever seeing start > stop."""
+    from .._litarr import sql_let
+
+    return sql_let(
+        words, "__ws",
+        f"CASE WHEN size(__ws) >= {n} THEN "
+        f"transform(sequence(1, size(__ws) - {n - 1}), "
+        f"i -> concat_ws(' ', slice(__ws, i, {n}))) "
+        f"ELSE cast(array() as array<string>) END",
+    )
+
+
+def _max_run_sql(arr: str, weight: str, min_run: int) -> str:
+    """Sorted run-length scan of a string array EXPRESSION: the
+    maximum of ``run * weight`` over runs of equal elements at least
+    ``min_run`` (1 or 2) long, 0 when there is none. ``weight`` is a
+    bigint SQL expression of the element ``x``. ``'1L'`` with
+    ``min_run=1`` is the count of the most frequent element."""
+    first = weight if min_run <= 1 else "0L"
     return (
-        f"CASE WHEN size({words}) >= {n} THEN "
-        f"transform(sequence(1, size({words}) - {n - 1}), "
-        f"i -> concat_ws(' ', slice({words}, i, {n}))) "
-        f"ELSE cast(array() as array<string>) END"
+        f"aggregate(array_sort({arr}), "
+        "named_struct('prev', cast(null as string), 'run', 0L, "
+        "'best', 0L), "
+        "(acc, x) -> named_struct("
+        "'prev', x, "
+        "'run', CASE WHEN x <=> acc.prev THEN acc.run + 1L ELSE 1L END, "
+        "'best', greatest(acc.best, "
+        f"CASE WHEN x <=> acc.prev THEN (acc.run + 1L) * {weight} "
+        f"ELSE {first} END)), "
+        "acc -> acc.best)"
     )
 
 
@@ -163,19 +196,7 @@ def _top_gram_mass_sql(grams: str) -> str:
     of ``count * length(gram)`` over grams occurring >= 2 times (the
     most frequent gram, up to frequency ties broken toward the longer
     gram), 0 when nothing repeats — count < 2 is not repetition."""
-    return (
-        f"aggregate(array_sort({grams}), "
-        "named_struct('prev', cast(null as string), 'run', 0L, "
-        "'best_mass', 0L), "
-        "(acc, x) -> named_struct("
-        "'prev', x, "
-        "'run', CASE WHEN x <=> acc.prev THEN acc.run + 1L ELSE 1L END, "
-        "'best_mass', greatest(acc.best_mass, "
-        "CASE WHEN x <=> acc.prev "
-        "THEN (acc.run + 1L) * cast(length(x) as bigint) "
-        "ELSE 0L END)), "
-        "acc -> acc.best_mass)"
-    )
+    return _max_run_sql(grams, "cast(length(x) as bigint)", 2)
 
 
 def _dup_gram_mass_sql(grams: str) -> str:
@@ -262,9 +283,12 @@ def gopher_repetition_flags(
     would force the text through Python at 100 TB.
 
     Everything is ``array_sort`` + run-length ``aggregate`` JVM
-    expressions — row-local, shuffle-free, scan-fused; cost is
-    O(words x 9 sorts) per document and nothing leaves the row.
-    Rendered as parsed SQL text (the _litarr idiom), like
+    expressions — row-local, shuffle-free, scan-fused. The text is
+    split into lines, paragraphs and words once per row (hidden
+    columns, dropped at the end); each n-gram size then costs one
+    window pass and one sort, O(n x words x log words) per document
+    summed over the 9 sizes, and nothing leaves the row. Rendered as
+    parsed SQL text (the _litarr idiom), like
     ``gopher_quality_flags``.
     """
     from .._litarr import sql_ident, sql_num, sql_str
@@ -281,9 +305,14 @@ def gopher_repetition_flags(
             " x -> trim(x)), x -> x != '')"
         )
 
-    lines = nonblank("\n")
-    paras = nonblank(r"\n{2,}")
-    words = f"filter(split(trim({t}), '\\\\s+'), w -> w != '')"
+    # each array feeds several signals: project it once as a hidden
+    # column (dropped at the end) — never re-split per signal
+    hidden = {
+        "__oc_lines": nonblank("\n"),
+        "__oc_paras": nonblank(r"\n{2,}"),
+        "__oc_words": f"filter(split(trim({t}), '\\\\s+'), w -> w != '')",
+    }
+    lines, paras, words = (sql_ident(k) for k in hidden)
     content_len = (
         f"cast(greatest(length(concat_ws(' ', {words})), 1) as double)"
     )
@@ -312,7 +341,8 @@ def gopher_repetition_flags(
         cols[f"r_dup_{n}gram_char_frac"] = (
             f"round(least(cast({mass} as double) / {content_len}, 1.0D), 6)"
         )
-    out = df.withColumns({k: F.expr(v) for k, v in cols.items()})
+    out = df.withColumns({k: F.expr(v) for k, v in hidden.items()})
+    out = out.withColumns({k: F.expr(v) for k, v in cols.items()})
 
     checks = {
         "r_ok_dup_line_frac": f"r_dup_line_frac <= {sql_num(max_dup_line_frac)}",
@@ -333,7 +363,8 @@ def gopher_repetition_flags(
             f"r_dup_{n}gram_char_frac <= {sql_num(cap)}"
         )
     out = out.withColumns({k: F.expr(v) for k, v in checks.items()})
-    return out.withColumn("keep", F.expr(" AND ".join(checks.keys())))
+    out = out.withColumn("keep", F.expr(" AND ".join(checks.keys())))
+    return out.drop(*hidden)
 
 
 def c4_clean(

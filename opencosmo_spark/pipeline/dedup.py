@@ -45,7 +45,9 @@ def _shingle_frame(
     re-evaluating ``split(text)`` + the full word-hash transform per
     ELEMENT — O(words^2) per doc (measured 25x wall-clock at sf0.1,
     and the projection-alias "barrier" is an optimizer implementation
-    detail, not a contract). With slices, the worst case after full
+    detail, not a contract; the general rule, "never put a tokenizer
+    in a lambda body, bind it", is in ``_litarr``'s module docstring
+    with its helper ``sql_let``). With slices, the worst case after full
     inlining is k evaluations per ROW — still linear, no persist or
     exchange barrier needed, zero shuffle. Docs shorter than k words
     yield one partial window: slices past the end are empty, zip_with

@@ -57,29 +57,34 @@ def quality_score(text: str) -> Column:
     """Heuristic document quality in [0,1] of the named column:
     length, mean word length, alpha ratio, punctuation balance.
     Parsed SQL text (the _litarr idiom) — one py4j call."""
-    from .._litarr import sql_col
+    from .._litarr import sql_col, sql_let
 
     c = sql_col(text)
-    alpha = f"length(regexp_replace({c}, '[^A-Za-z]', ''))"
-    punct = f"length(regexp_replace({c}, '[^.,!?;:]', ''))"
-    mean_word = (
-        f"cast({alpha} as double)"
-        f" / greatest({_token_count_sql(c)}, 1)"
+    # the per-row measures (two regex passes, one split, the length)
+    # are bound once and read as fields of __q
+    measures = (
+        f"named_struct('len', length({c}),"
+        f" 'alpha', length(regexp_replace({c}, '[^A-Za-z]', '')),"
+        f" 'punct', length(regexp_replace({c}, '[^.,!?;:]', '')),"
+        f" 'tok', {_token_count_sql(c)})"
     )
-    len_score = f"least(length({c}) / 500.0D, 1.0D)"
+    mean_word = "cast(__q.alpha as double) / greatest(__q.tok, 1)"
+    len_score = "least(__q.len / 500.0D, 1.0D)"
     word_score = (
         f"CASE WHEN {mean_word} >= 3 AND {mean_word} <= 10"
         " THEN 1.0D ELSE 0.5D END"
     )
-    alpha_ratio = f"cast({alpha} as double) / greatest(length({c}), 1)"
-    punct_ratio = f"cast({punct} as double) / greatest(length({c}), 1)"
+    alpha_ratio = "cast(__q.alpha as double) / greatest(__q.len, 1)"
+    punct_ratio = "cast(__q.punct as double) / greatest(__q.len, 1)"
     punct_score = (
         f"CASE WHEN {punct_ratio} < 0.1D THEN 1.0D ELSE 0.3D END"
     )
-    return F.expr(
-        f"round(0.3D * ({len_score}) + 0.2D * ({word_score})"
-        f" + 0.3D * ({alpha_ratio}) + 0.2D * ({punct_score}), 6)"
+    score = sql_let(
+        measures, "__q",
+        f"0.3D * ({len_score}) + 0.2D * ({word_score})"
+        f" + 0.3D * ({alpha_ratio}) + 0.2D * ({punct_score})",
     )
+    return F.expr(f"round({score}, 6)")
 
 
 def language_id(text: Column | str) -> Column:
@@ -126,38 +131,44 @@ def repetition_stats(text: str) -> dict[str, Column]:
       NULL there, as in the DuckDB profile's ``ws[i+1]``).
 
     All higher-order array functions — per-row JVM evaluation, no
-    shuffle, no UDF; cost is O(distinct x words) per doc, bounded by
-    document length. Parsed SQL text (the _litarr idiom): one py4j
-    call per column instead of a lambda registration per HOF.
-    ``n_words`` is a long (the driver's value-hash is dtype-strict vs
-    the oracle).
+    shuffle, no UDF. Each column tokenizes the row once (``sql_let``
+    binds the split; never paste it into a lambda body) and costs
+    O(words log words): a distinct set, one sorted run-length scan
+    (``clean._max_run_sql``) or the bigram window's distinct set.
+    Parsed SQL text (the _litarr idiom): one py4j call per column
+    instead of a lambda registration per HOF. ``n_words`` is a long
+    (the driver's value-hash is dtype-strict vs the oracle).
     """
-    from .._litarr import sql_col
+    from .._litarr import sql_col, sql_let
+    from .clean import _max_run_sql
 
-    t = sql_col(text)
-    w = f"split(trim({t}), '\\\\s+')"
-    n1 = f"greatest(size({w}), 1)"
-    dup_word = (
-        f"1.0D - cast(size(array_distinct({w})) as double) / {n1}"
-    )
-    top_word = (
-        f"cast(array_max(transform(array_distinct({w}),"
-        f" x -> size(filter({w}, y -> y = x)))) as double) / {n1}"
-    )
+    w = f"split(trim({sql_col(text)}), '\\\\s+')"
+    n1 = "greatest(size(__w), 1)"
     bg = (
-        f"transform(sequence(1, greatest(size({w}) - 1, 1)),"
-        f" i -> concat_ws(' ', element_at({w}, i),"
-        f" try_element_at({w}, i + 1)))"
+        "transform(sequence(1, greatest(size(__w) - 1, 1)),"
+        " i -> concat_ws(' ', element_at(__w, i),"
+        " try_element_at(__w, i + 1)))"
     )
-    dup_bigram = (
-        f"1.0D - cast(size(array_distinct({bg})) as double)"
-        f" / greatest(size({bg}), 1)"
-    )
+    # each fraction reads the words as __w, bound once per row
+    fracs = {
+        "dup_word_frac": (
+            f"1.0D - cast(size(array_distinct(__w)) as double) / {n1}"
+        ),
+        "top_word_frac": (
+            f"cast({_max_run_sql('__w', '1L', 1)} as double) / {n1}"
+        ),
+        "dup_bigram_frac": sql_let(
+            bg, "__bg",
+            "1.0D - cast(size(array_distinct(__bg)) as double)"
+            " / greatest(size(__bg), 1)",
+        ),
+    }
     return {
         "n_words": F.expr(f"cast(size({w}) as bigint)"),
-        "dup_word_frac": F.expr(f"round({dup_word}, 6)"),
-        "top_word_frac": F.expr(f"round({top_word}, 6)"),
-        "dup_bigram_frac": F.expr(f"round({dup_bigram}, 6)"),
+        **{
+            name: F.expr(f"round({sql_let(w, '__w', body)}, 6)")
+            for name, body in fracs.items()
+        },
     }
 
 

@@ -712,11 +712,15 @@ def _url_host_sql(c: str) -> str:
 
 
 def _url_suffixes_sql(c: str) -> str:
-    """SQL text of :func:`url_suffixes` over a URL expression."""
+    """SQL text of :func:`url_suffixes` over a URL expression; the URL
+    is parsed and its host split once per row (``sql_let``)."""
+    from .._litarr import sql_let
+
     labels = f"split({_url_host_sql(c)}, '\\\\.')"
-    return (
-        f"transform(sequence(1, size({labels})),"
-        f" i -> array_join(slice({labels}, i, size({labels})), '.'))"
+    return sql_let(
+        labels, "__lb",
+        "transform(sequence(1, size(__lb)),"
+        " i -> array_join(slice(__lb, i, size(__lb)), '.'))",
     )
 
 

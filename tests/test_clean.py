@@ -156,16 +156,27 @@ def test_curate_normalize_unicode_stage(spark):
 # ---------------------------------------------------------------- A1.2
 
 
-def _rep_twin(text: str) -> dict:
+def _rep_twin(text: str | None) -> dict:
     """Python reference for gopher_repetition_flags' documented
     conventions — duplicates beyond first, heaviest repeated gram
-    (max count*len), all-duplicated-occurrence gram mass."""
+    (max count*len), all-duplicated-occurrence gram mass. Lines and
+    paragraphs are trimmed of spaces only (Spark's ``trim``). NULL
+    text has NULL line/paragraph signals and 0.0 gram signals."""
     import re
     from collections import Counter
 
-    lines = [x.strip() for x in text.split("\n") if x.strip()]
-    paras = [x.strip() for x in re.split(r"\n{2,}", text) if x.strip()]
-    words = [w for w in re.split(r"\s+", text.strip()) if w]
+    if text is None:
+        grams = [f"r_top_{n}gram_char_frac" for n in (2, 3, 4)] + [
+            f"r_dup_{n}gram_char_frac" for n in range(5, 11)
+        ]
+        return {
+            **{f"r_dup_{p}{s}": None for p in ("line", "para")
+               for s in ("_frac", "_char_frac")},
+            **dict.fromkeys(grams, 0.0),
+        }
+    lines = [x.strip(" ") for x in text.split("\n") if x.strip(" ")]
+    paras = [x.strip(" ") for x in re.split(r"\n{2,}", text) if x.strip(" ")]
+    words = [w for w in re.split(r"\s+", text.strip(" ")) if w]
     content_len = max(len(" ".join(words)), 1)
 
     def dup(arr, prefix):
@@ -321,14 +332,23 @@ def test_gram_mass_sql_values(spark):
 
 def _text_helpers_twin(text):
     """Plain-python reference of token_count / quality_score /
-    repetition_stats: Java's split on \\s+ after trim (a leading
-    empty token survives only for the empty string), the BPE-ish
-    regex, and the documented score arithmetic."""
+    repetition_stats: Java's split on \\s+ after Spark's ``trim``
+    (spaces only, so a tab or newline at an edge leaves an empty
+    token; the empty string splits to one empty token), the BPE-ish
+    regex, and the documented score arithmetic. NULL text: every
+    value NULL but ``dup_bigram_frac`` 0.0 (the bigram window has
+    one NULL-joined element)."""
     import re
 
     from opencosmo_spark.pipeline.text import BPE_TOKEN_RE
 
-    ws = re.split(r"\s+", text.strip()) if text.strip() else [""]
+    if text is None:
+        return {
+            **dict.fromkeys(("tc_ws", "tc_bpe", "q", "n_words",
+                             "dup_word_frac", "top_word_frac")),
+            "dup_bigram_frac": 0.0,
+        }
+    ws = re.split(r"\s+", text.strip(" "))
     n_ws = len(ws)
     n_bpe = len(re.findall(BPE_TOKEN_RE, text))
     alpha = len(re.sub(r"[^A-Za-z]", "", text))
@@ -426,3 +446,140 @@ def test_gopher_fractional_min_words(spark):
     assert out.loc[0].g_word_count == 49
     assert not bool(out.loc[0].g_ok_word_count)
     assert bool(_flags(spark, [doc], min_words=49).loc[0].g_ok_word_count)
+
+
+# ------------------------------------------------- edge frame, all builders
+
+EDGE_TEXTS = [
+    None, "", " ", "   ", "\t", " \t\n ", "a\tb\nc", "x\t\ty  z ",
+    "one", "two words", "dup dup dup dup dup",
+    "the cat and the dog\n\nthe cat and the dog\n\t\nthe end",
+    "- a bullet...\n* b…\n  # c ... #d\n",
+]
+EDGE_URLS = [
+    None, "", "not a url", "http://example.com", "https://a.b.Example.co.uk/x?y=1",
+    "http://127.0.0.1:8080/a", "https://host./", "ftp://x.y.z",
+]
+
+
+def _edge_frame(spark):
+    """The edge texts, one row per partition."""
+    rows = [
+        (i, t, EDGE_URLS[i % len(EDGE_URLS)]) for i, t in enumerate(EDGE_TEXTS)
+    ]
+    rdd = spark.sparkContext.parallelize(rows, len(rows))
+    df = spark.createDataFrame(rdd, "doc_id long, text string, url string")
+    assert df.rdd.getNumPartitions() == len(rows)
+    return df
+
+
+def _gq_twin(text):
+    """Plain-python reference of gopher_quality_flags' measurements
+    (default thresholds): whitespace words after Spark's ``trim``,
+    non-blank lines, the documented ratios. NULL text: all NULL."""
+    import re
+
+    from opencosmo_spark.pipeline.clean import _GOPHER_STOPWORDS
+
+    if text is None:
+        return dict.fromkeys(
+            ("g_word_count", "g_mean_word_len", "g_symbol_ratio",
+             "g_bullet_ratio", "g_ellipsis_ratio", "g_alpha_word_ratio",
+             "g_stopword_hits", "keep")
+        )
+    words = [w for w in re.split(r"\s+", text.strip(" ")) if w]
+    n = max(len(words), 1)
+    lines = [ln for ln in text.split("\n") if ln.strip(" ")]
+    nl = max(len(lines), 1)
+    ellipsis = r"(\.\.\.|…)"
+    out = {
+        "g_word_count": len(words),
+        "g_mean_word_len": sum(map(len, words)) / n,
+        "g_symbol_ratio": (text.count("#") + len(re.findall(ellipsis, text))) / n,
+        "g_bullet_ratio": sum(
+            bool(re.match(r"[-*•‣◦]", ln.strip(" "))) for ln in lines
+        ) / nl,
+        "g_ellipsis_ratio": sum(
+            bool(re.search(ellipsis + "$", ln.rstrip(" "))) for ln in lines
+        ) / nl,
+        "g_alpha_word_ratio": sum(
+            bool(re.search("[A-Za-z]", w)) for w in words
+        ) / n,
+        "g_stopword_hits": len({w.lower() for w in words} & set(_GOPHER_STOPWORDS)),
+    }
+    out["keep"] = (
+        50 <= out["g_word_count"] <= 100_000
+        and 3.0 <= out["g_mean_word_len"] <= 10.0
+        and out["g_symbol_ratio"] <= 0.1
+        and out["g_bullet_ratio"] <= 0.9
+        and out["g_ellipsis_ratio"] <= 0.3
+        and out["g_alpha_word_ratio"] >= 0.8
+        and out["g_stopword_hits"] >= 2
+    )
+    return out
+
+
+def _suffix_twin(url):
+    """Plain-python reference of url_suffixes: every dot-suffix of the
+    lowercased host (trailing dot or port stripped), NULL when the URL
+    has no host."""
+    import re
+    from urllib.parse import urlsplit
+
+    host = urlsplit(url).hostname if url else None
+    if host is None:
+        return None
+    labels = re.sub(r"(:\d+|\.)$", "", host.lower()).split(".")
+    return [".".join(labels[i:]) for i in range(len(labels))]
+
+
+def _close(got, want):
+    if want is None or got is None:
+        return got is want
+    if isinstance(want, float):
+        return abs(got - want) < 1e-6
+    return got == want
+
+
+def test_text_builders_edge_values(spark):
+    # every builder that tokenizes once per row (bound split, hidden
+    # word/line/paragraph columns) against its plain-python twin on
+    # NULL, empty, whitespace-only, tab/newline-separated, one-word,
+    # two-word and repeated-word rows, one row per partition
+    from opencosmo_spark.pipeline.clean import gopher_repetition_flags
+    from opencosmo_spark.pipeline.text import (
+        quality_score,
+        repetition_stats,
+        token_count,
+    )
+    from opencosmo_spark.pipeline.web import url_suffixes
+
+    df = _edge_frame(spark)
+    cols = {
+        "tc_ws": token_count("text"),
+        "tc_bpe": token_count("text", "bpe"),
+        "q": quality_score("text"),
+        **repetition_stats("text"),
+        "sufs": url_suffixes("url"),
+    }
+    rows = df.select(
+        "doc_id", "text", "url", *[c.alias(n) for n, c in cols.items()]
+    ).collect()
+    gq = {r.doc_id: r for r in gopher_quality_flags(df).collect()}
+    rep = {r.doc_id: r for r in gopher_repetition_flags(df).collect()}
+    assert len(rows) == len(gq) == len(rep) == len(EDGE_TEXTS)
+    for r in rows:
+        checks = [
+            (_text_helpers_twin(r.text), r),
+            (_gq_twin(r.text), gq[r.doc_id]),
+            (_rep_twin(r.text), rep[r.doc_id]),
+            ({"sufs": _suffix_twin(r.url)}, r),
+        ]
+        for want, got in checks:
+            for name, v in want.items():
+                assert _close(got[name], v), (name, r.text, r.url, got[name], v)
+    by_text = {r.text: r for r in rows}
+    # NULL text: n_words NULL, dup_bigram_frac 0.0 (as before binding)
+    assert by_text[None].n_words is None
+    assert by_text[None].dup_bigram_frac == 0.0
+    assert by_text["\t"].n_words == 2  # trim strips spaces only

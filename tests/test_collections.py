@@ -466,3 +466,41 @@ def test_lightcone_to_cartesian_matches_scalar_cosmology(spark):
         bad.collect()
     with pytest.raises(ValueError, match="n_knots"):
         lightcone_to_cartesian(df, cosmo, n_knots=2)
+
+
+def test_child_fetch_driver_cost_is_constant(spark, coll, raw, monkeypatch):
+    """The streaming path's per-batch child fetch filters on the batch's
+    keys as one parsed IN list: a few py4j calls however many keys
+    (``Column.isin`` makes one or more per key), same rows."""
+    import threading
+
+    from opencosmo_spark.dataset import Dataset
+
+    tags = sorted(raw["halos"].fof_halo_tag.tolist())
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+    me = threading.get_ident()
+
+    def counted(*a, **k):
+        # py4j's finalizer thread shares the client: count this thread
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(*a, **k)
+
+    # build the filtered child only; the fetch itself is not counted
+    monkeypatch.setattr(Dataset, "get_data", lambda self, *a, **k: self)
+    cost = {}
+    for n in (10, len(tags)):
+        keys = tags[:n]
+        calls.clear()
+        client.send_command = counted
+        try:
+            out = coll._child_pdf("dm_particles", keys=keys, child_key="halo_tag")
+        finally:
+            client.send_command = send
+        cost[n] = len(calls)
+        want = int(raw["particles"].halo_tag.isin(keys).sum())
+        assert out.df.count() == want
+    assert cost[len(tags)] <= cost[10] + 5, cost
+    assert max(cost.values()) <= 100, cost

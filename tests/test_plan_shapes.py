@@ -749,3 +749,105 @@ def test_spread_small_input_keyed(spark):
 
     wide = spark.range(0, 1000, 1, 64).withColumn("k", F.col("id"))
     assert spread_small_input(wide, key=F.col("k")) is wide
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    out = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        out.append(plan[start:end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return out
+
+
+def test_text_builders_tokenize_once(spark):
+    """Each text builder splits (or URL-parses) a row once: the split
+    is bound (``_litarr.sql_let``) or projected as a hidden column,
+    never pasted into a lambda body, where Spark re-evaluates it per
+    array element. Optimized-plan counts at the previous form:
+    text_profile 15, repetition_stats 12, gopher_repetition_flags 44,
+    gopher_quality_flags 11 splits, url_suffixes 3 URL parses."""
+    import pyspark.sql.functions as F
+
+    from opencosmo_spark.pipeline.clean import (
+        _dup_gram_mass_sql,
+        _top_gram_mass_sql,
+        _word_grams_sql,
+        gopher_quality_flags,
+        gopher_repetition_flags,
+    )
+    from opencosmo_spark.pipeline.text import (
+        quality_score,
+        repetition_stats,
+        token_count,
+    )
+    from opencosmo_spark.pipeline.web import url_suffixes
+
+    df = spark.createDataFrame(
+        [(1, "a b a", "http://a.b.c/x")], "doc_id long, text string, url string"
+    )
+    stats = [c.alias(n) for n, c in repetition_stats("text").items()]
+    # q30's entry glue passes a raw split expression to the gram helpers
+    raw = "filter(split(trim(text), '\\\\s+'), w -> w != '')"
+    frames = {
+        # the benchmark's text_profile op
+        "text_profile": (df.select(
+            "doc_id",
+            token_count("text").alias("n_tok"),
+            quality_score("text").alias("quality"),
+            *stats,
+        ), 6),
+        "repetition_stats": (df.select("doc_id", *stats), 4),
+        "gopher_repetition_flags": (gopher_repetition_flags(df), 3),
+        "gopher_quality_flags": (gopher_quality_flags(df), 2),
+        "q30_gram_glue": (df.select(
+            F.expr(_top_gram_mass_sql(_word_grams_sql(raw, 2))).alias("t2"),
+            F.expr(_dup_gram_mass_sql(_word_grams_sql(raw, 5))).alias("d5"),
+        ), 2),
+        "url_suffixes": (df.select(url_suffixes("url").alias("s")), 1),
+    }
+    for name, (out, max_splits) in frames.items():
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("split(") <= max_splits, (name, plan.count("split("))
+        for body in _lambda_bodies(plan):
+            for tok in ("split(", "regexp_extract_all(", "ParseUrlEvaluator("):
+                assert tok not in body, (name, tok, body[:300])
+        if name == "url_suffixes":
+            assert plan.count("ParseUrlEvaluator(") == 1, plan
+
+
+def test_spread_probe_walks_plan_nodes(spark):
+    """The spread probe reads a partition count only off a narrow
+    chain (no Exchange, no subquery, no child-distribution need) and
+    starts no job doing it; every other shape probes as None."""
+    import pyspark.sql.functions as F
+
+    from opencosmo_spark._parallel import _input_partitions
+
+    base = spark.range(0, 100, 1, 1).withColumn("k", F.col("id") % 7)
+    base.createOrReplaceTempView("probe_base")
+    sc = spark.sparkContext
+    sc.setJobGroup("spread-probe", "spread probe")
+    try:
+        assert _input_partitions(base.filter("k > 2").select("id")) == 1
+        assert _input_partitions(spark.range(0, 100, 1, 3).filter("id > 2")) == 3
+        for shape in (
+            base.repartition(3),
+            base.groupBy("k").count(),
+            base.join(base.select("id"), "id"),
+            base.orderBy("k"),
+            spark.sql(
+                "SELECT * FROM probe_base"
+                " WHERE id > (SELECT avg(id) FROM probe_base)"
+            ),
+        ):
+            assert _input_partitions(shape) is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("spread-probe")) == []
