@@ -284,8 +284,9 @@ def gopher_repetition_flags(
 
     Everything is ``array_sort`` + run-length ``aggregate`` JVM
     expressions — row-local, shuffle-free, scan-fused. The text is
-    split into lines, paragraphs and words once per row (hidden
-    columns, dropped at the end); each n-gram size then costs one
+    split into lines, paragraphs and words once per row, and the line
+    and paragraph duplicate censuses taken once (hidden columns,
+    dropped at the end); each n-gram size then costs one
     window pass and one sort, O(n x words x log words) per document
     summed over the 9 sizes, and nothing leaves the row. Rendered as
     parsed SQL text (the _litarr idiom), like
@@ -316,10 +317,15 @@ def gopher_repetition_flags(
     content_len = (
         f"cast(greatest(length(concat_ws(' ', {words})), 1) as double)"
     )
+    # each duplicate census feeds two signals: a hidden column too
+    censuses = {
+        "__oc_line_census": _dup_census_sql(lines),
+        "__oc_para_census": _dup_census_sql(paras),
+    }
 
     cols: dict[str, str] = {}
     for prefix, arr in (("line", lines), ("para", paras)):
-        census = _dup_census_sql(arr)
+        census = sql_ident(f"__oc_{prefix}_census")
         n = f"cast(greatest(size({arr}), 1) as double)"
         total_chars = (
             f"cast(greatest(aggregate({arr}, 0L,"
@@ -342,6 +348,7 @@ def gopher_repetition_flags(
             f"round(least(cast({mass} as double) / {content_len}, 1.0D), 6)"
         )
     out = df.withColumns({k: F.expr(v) for k, v in hidden.items()})
+    out = out.withColumns({k: F.expr(v) for k, v in censuses.items()})
     out = out.withColumns({k: F.expr(v) for k, v in cols.items()})
 
     checks = {
@@ -364,7 +371,7 @@ def gopher_repetition_flags(
         )
     out = out.withColumns({k: F.expr(v) for k, v in checks.items()})
     out = out.withColumn("keep", F.expr(" AND ".join(checks.keys())))
-    return out.drop(*hidden)
+    return out.drop(*hidden, *censuses)
 
 
 def c4_clean(

@@ -1,11 +1,11 @@
 """Multimodal columns: image/audio/video as opaque binary columns with
 typed metadata, processed by Arrow-batched Pandas UDFs.
 
-The Spark-side plumbing (schemas, batch shapes, partitioning, UDF
-signatures) is real and tested; the codec step itself is stubbed —
-the image/audio libraries are not in this container, so ``decode_*``
-run a clearly-marked deterministic fake unless a real decoder import
-succeeds (import-try gate).
+Images decode through one ladder: the system C codecs bound in
+``native_codecs.py``, then the pure-python BMP/PNM/ICO parsers here;
+audio through the pure-python WAV/FLAC/AIFF/AU decoders. A payload no
+decoder takes gets a clearly-marked deterministic digest fake, and the
+``decoder`` column says which path each row took.
 
 At 100 TB: binary payloads dominate partition size — keep
 ``spark.sql.files.maxPartitionBytes`` small for media tables, or store
@@ -23,6 +23,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from .native_codecs import _MAX_SAMPLES, decode_png_native, native_image_ladder
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -129,1028 +131,6 @@ def _decode_pnm(data: bytes) -> np.ndarray | None:
     return arr
 
 
-def _gif_lzw(mcs: int, data: bytes, npix: int) -> bytearray | None:
-    """GIF-variant LZW decode (GIF89a spec appendix F): codes packed
-    LSB-first, initial code size ``mcs + 1``, CLEAR ``2^mcs``, END
-    ``2^mcs + 1``, dictionary capped at 4096 with deferred-clear
-    tolerance. Returns the pixel-index stream or None on corruption."""
-    clear = 1 << mcs
-    end_code = clear + 1
-    code_size = mcs + 1
-    table: dict[int, bytes] = {i: bytes([i]) for i in range(clear)}
-    next_code = end_code + 1
-    out = bytearray()
-    prev: bytes | None = None
-    acc = nbits = pos = 0
-    while len(out) < npix:
-        while nbits < code_size:
-            if pos >= len(data):
-                return None  # stream ends before END/npix — truncated
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << code_size) - 1)
-        acc >>= code_size
-        nbits -= code_size
-        if code == clear:
-            code_size = mcs + 1
-            table = {i: bytes([i]) for i in range(clear)}
-            next_code = end_code + 1
-            prev = None
-            continue
-        if code == end_code:
-            break
-        if prev is None:
-            entry = table.get(code)
-            if entry is None:
-                return None
-        elif code in table:
-            entry = table[code]
-        elif code == next_code:
-            entry = prev + prev[:1]  # the KwKwK case
-        else:
-            return None
-        if prev is not None and next_code < 4096:
-            table[next_code] = prev + entry[:1]
-            next_code += 1
-            if next_code == (1 << code_size) and code_size < 12:
-                code_size += 1
-        out += entry
-        prev = entry
-    return out
-
-
-# GIF 4-pass row interlace: (start_row, row_step) per pass (spec §23)
-_GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _decode_gif(data: bytes) -> np.ndarray | None:
-    """Pure-python decode of a GIF87a/89a FIRST frame (stdlib + numpy
-    only): header + logical screen descriptor, global/local color
-    table, extension-block skipping (graphic control, comments,
-    application blocks), LZW pixel stream, 4-pass interlace gather.
-    Returns the frame as an (h, w, 3) uint8 RGB array, or None when
-    the payload is not a well-formed GIF. Deliberate simplifications,
-    documented: animations yield their first frame only (the
-    dedup/feature convention — same as video keyframing), and
-    transparency renders as the palette color (the alpha-dropping
-    convention the RGBA PNG path uses)."""
-    if data is None or len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
-        return None
-
-    def le16(off: int) -> int:
-        return int.from_bytes(data[off : off + 2], "little")
-
-    packed = data[10]
-    gct = None
-    pos = 13
-    if packed & 0x80:
-        n = 2 ** ((packed & 0x07) + 1)
-        if pos + 3 * n > len(data):
-            return None
-        gct = np.frombuffer(data, np.uint8, count=3 * n, offset=pos).reshape(
-            n, 3
-        )
-        pos += 3 * n
-    while pos < len(data):
-        block = data[pos]
-        if block == 0x21:  # extension: label byte + len-prefixed sub-blocks
-            pos += 2
-            while pos < len(data) and data[pos] != 0:
-                pos += 1 + data[pos]
-            pos += 1
-        elif block == 0x2C:  # image descriptor
-            if pos + 10 > len(data):
-                return None
-            iw, ih = le16(pos + 5), le16(pos + 7)
-            ipacked = data[pos + 9]
-            pos += 10
-            table = gct
-            if ipacked & 0x80:
-                n = 2 ** ((ipacked & 0x07) + 1)
-                if pos + 3 * n > len(data):
-                    return None
-                table = np.frombuffer(
-                    data, np.uint8, count=3 * n, offset=pos
-                ).reshape(n, 3)
-                pos += 3 * n
-            if table is None or iw <= 0 or ih <= 0 or pos >= len(data):
-                return None
-            mcs = data[pos]
-            pos += 1
-            if not 2 <= mcs <= 11:
-                return None
-            chunks = []
-            while pos < len(data) and data[pos] != 0:
-                ln = data[pos]
-                if pos + 1 + ln > len(data):
-                    return None
-                chunks.append(data[pos + 1 : pos + 1 + ln])
-                pos += 1 + ln
-            if pos >= len(data):
-                return None  # missing block terminator
-            idx = _gif_lzw(mcs, b"".join(chunks), iw * ih)
-            if idx is None or len(idx) < iw * ih:
-                return None
-            ind = np.frombuffer(
-                bytes(idx[: iw * ih]), np.uint8
-            ).reshape(ih, iw)
-            if (ipacked & 0x40) and ih > 1:  # interlaced: gather rows
-                order = [
-                    r
-                    for start, step in _GIF_INTERLACE
-                    for r in range(start, ih, step)
-                ]
-                de = np.empty_like(ind)
-                de[np.asarray(order)] = ind
-                ind = de
-            if int(ind.max(initial=0)) >= len(table):
-                return None
-            return table[ind]
-        else:  # 0x3B trailer before any frame, or junk
-            return None
-    return None
-
-
-# Adam7 interlace pass grid: (x0, y0, dx, dy) per pass (PNG spec §8.2)
-_ADAM7 = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _unfilter_lines(
-    raw: bytes, off: int, h: int, stride: int, nch: int
-) -> tuple[np.ndarray | None, int]:
-    """Invert PNG scanline filtering for ``h`` lines of ``stride``
-    bytes starting at ``off`` (each line is 1 filter byte + data;
-    the 'previous line' is all-zero for the first line — which is
-    also why each Adam7 pass unfilters independently). Returns
-    ``(array (h, stride), next offset)`` or ``(None, off)`` on an
-    invalid filter byte."""
-    out = np.zeros((h, stride), np.uint8)
-    prev = np.zeros(stride, np.int32)
-    for y in range(h):
-        f = raw[off]
-        line = np.frombuffer(raw, np.uint8, count=stride, offset=off + 1)
-        cur = line.astype(np.int32)
-        if f == 0:  # None
-            pass
-        elif f == 2:  # Up
-            cur = (cur + prev) & 0xFF
-        elif f in (1, 3, 4):  # Sub / Average / Paeth need the left pixel
-            for i in range(stride):
-                a = int(cur[i - nch]) if i >= nch else 0
-                b = int(prev[i])
-                if f == 1:
-                    cur[i] = (cur[i] + a) & 0xFF
-                elif f == 3:
-                    cur[i] = (cur[i] + ((a + b) >> 1)) & 0xFF
-                else:
-                    c = int(prev[i - nch]) if i >= nch else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    cur[i] = (cur[i] + pred) & 0xFF
-        else:
-            return None, off  # invalid filter type
-        out[y] = cur
-        prev = cur
-        off += stride + 1
-    return out, off
-
-
-def _decode_png(data: bytes) -> np.ndarray | None:
-    """Pure-python decode of an 8-bit PNG (gray, gray+alpha, RGB,
-    RGBA, and palette — the overwhelmingly common web shapes; public
-    PNG spec, RFC 2083), non-interlaced AND Adam7-interlaced: stdlib
-    ``zlib`` inflate of the IDAT stream, then per-scanline
-    unfiltering (None/Sub/Up/Average/Paeth), returning an (h, w, 3)
-    uint8 RGB array (gray replicated, alpha dropped — the
-    ``convert("RGB")`` posture) or None when the payload is not such
-    a PNG. Palette (color type 3) resolves index scanlines through
-    the PLTE chunk as one numpy gather — a tRNS chunk is accepted and
-    ignored, the same alpha-dropping convention as RGBA. Adam7
-    deinterlacing runs each of the seven passes through the same
-    unfilter machinery (each pass filters against its OWN previous
-    scanline) and scatters the sub-image with one strided numpy
-    assignment per pass. 16-bit non-palette images (scientific
-    imagery) decode with byte-pair filtering and keep the high byte
-    (the ``v >> 8`` reduction); 1/2/4-bit depths fall through to the
-    stub rather than mis-decode.
-
-    The unfilter loop is per-byte Python per scanline — fine for the
-    thumbnail/feature sizes this path serves; a production raster
-    pipeline would swap in a codec library via the PIL gate above
-    this rung of the ladder.
-    """
-    import zlib
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    if data is None or len(data) < 8 + 25 or data[:8] != sig:
-        return None
-    pos, ihdr, idat, plte = 8, None, [], None
-    while pos + 8 <= len(data):
-        ln = int.from_bytes(data[pos : pos + 4], "big")
-        ctype = data[pos + 4 : pos + 8]
-        body = data[pos + 8 : pos + 8 + ln]
-        if len(body) < ln:
-            return None  # truncated chunk
-        if ctype == b"IHDR":
-            ihdr = body
-        elif ctype == b"PLTE":
-            plte = body
-        elif ctype == b"IDAT":
-            idat.append(body)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + ln  # length + type + data + CRC
-    if ihdr is None or len(ihdr) < 13 or not idat:
-        return None
-    width = int.from_bytes(ihdr[0:4], "big")
-    height = int.from_bytes(ihdr[4:8], "big")
-    depth, color, comp, filt, interlace = ihdr[8:13]
-    nch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color)
-    if (
-        width <= 0 or height <= 0 or nch is None
-        or comp != 0 or filt != 0 or interlace not in (0, 1)
-    ):
-        return None
-    # 16-bit samples (scientific imagery): filtering operates on BYTES
-    # with the per-pixel distance doubled; the high byte is kept on
-    # output (the v >> 8 16->8 reduction, PIL's convert posture).
-    # Palette images are 8-bit indices by spec.
-    if depth == 16 and color != 3:
-        bpp = nch * 2
-    elif depth == 8:
-        bpp = nch
-    else:
-        return None
-    if width * height * nch > _MAX_IMAGE_SAMPLES:
-        return None  # mutated header must not allocate unbounded planes
-    if color == 3:
-        # palette: the scanline bytes are indices into PLTE's RGB
-        # triples (spec: length a multiple of 3, 1-256 entries)
-        if plte is None or len(plte) == 0 or len(plte) % 3 != 0:
-            return None
-        palette = np.frombuffer(plte, np.uint8).reshape(-1, 3)
-    # bounded inflate: the filtered stream size is known exactly from
-    # the header (per-pass for Adam7 — each pass row pays its own
-    # filter byte); a compression bomb past that + slack is
-    # malformed, never worth materializing
-    if interlace == 0:
-        expected = height * (width * bpp + 1)
-    else:
-        expected = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (width - x0 + dx - 1) // dx
-            ph = (height - y0 + dy - 1) // dy
-            if pw > 0 and ph > 0:
-                expected += ph * (pw * bpp + 1)
-    try:
-        dec = zlib.decompressobj()
-        raw = dec.decompress(b"".join(idat), expected + 8)
-    except zlib.error:
-        return None
-    def to_px(rows, n_rows, n_cols):
-        # (rows, cols*bpp) bytes -> (rows, cols, nch) uint8 samples
-        if bpp == nch:
-            return rows.reshape(n_rows, n_cols, nch)
-        return rows.reshape(n_rows, n_cols, nch, 2)[..., 0]
-
-    if interlace == 0:
-        stride = width * bpp
-        if len(raw) < height * (stride + 1):
-            return None
-        out, _ = _unfilter_lines(raw, 0, height, stride, bpp)
-        if out is None:
-            return None
-        px = to_px(out, height, width)
-    else:
-        px = np.zeros((height, width, nch), np.uint8)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (width - x0 + dx - 1) // dx
-            ph = (height - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue  # empty pass emits no bytes at all
-            pstride = pw * bpp
-            if len(raw) < off + ph * (pstride + 1):
-                return None
-            sub, off = _unfilter_lines(raw, off, ph, pstride, bpp)
-            if sub is None:
-                return None
-            # strided scatter: pass p owns grid positions
-            # (y0 + i*dy, x0 + j*dx)
-            px[y0::dy, x0::dx] = to_px(sub, ph, pw)
-    if color == 0:
-        return np.repeat(px, 3, axis=2)
-    if color == 3:
-        idx = px[..., 0]
-        if int(idx.max(initial=0)) >= len(palette):
-            return None  # index past the palette: corrupt stream
-        return palette[idx]  # (h, w, 3) gather
-    if color == 4:
-        return np.repeat(px[..., :1], 3, axis=2)
-    return np.ascontiguousarray(px[..., :3])  # RGB, or RGBA minus alpha
-
-
-# --- JPEG (ITU-T T.81): baseline sequential + progressive ----------
-
-# zigzag scan order: entry k of the coefficient stream lands at this
-# flat 8x8 position (T.81 figure A.6)
-_JPEG_ZZ = np.array(
-    [
-        0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-        12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-        35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-        58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-    ]
-)
-
-# orthonormal 8-point DCT-II basis: spatial = A.T @ coef @ A
-_JPEG_A = np.array(
-    [
-        [
-            (np.sqrt(1.0 / 8.0) if u == 0 else np.sqrt(2.0 / 8.0))
-            * np.cos((2 * x + 1) * u * np.pi / 16.0)
-            for x in range(8)
-        ]
-        for u in range(8)
-    ]
-)
-
-
-# A mutated/malicious header must not allocate unbounded planes: cap
-# decodable images at 50M samples (covers every real crawl photo; a
-# pure-python decode beyond this is impractical anyway). Shared by the
-# PNG path (x nch).
-_MAX_IMAGE_SAMPLES = 50_000_000
-
-
-class _JpegBits:
-    """MSB-first bit reader over the entropy-coded segment: 0xFF00
-    byte-stuffing removed on the fly; ``restart()`` drops to the next
-    byte boundary and consumes the RSTn marker."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.d = data
-        self.p = pos
-        self.b = 0
-        self.n = 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            byte = self.d[self.p]
-            self.p += 1
-            if byte == 0xFF:
-                nxt = self.d[self.p] if self.p < len(self.d) else 0xD9
-                if nxt == 0x00:
-                    self.p += 1
-                else:
-                    # a real marker: the scan's entropy data is over.
-                    # Un-consume the 0xFF (progressive scan dispatch
-                    # finds the marker at self.p) and feed padding
-                    # 1-bits (T.81 convention).
-                    self.p -= 1
-                    byte = 0xFF
-            self.b = byte
-            self.n = 8
-        self.n -= 1
-        return (self.b >> self.n) & 1
-
-    def bits(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.bit()
-        return v
-
-    def restart(self) -> None:
-        self.n = 0
-        p = self.p
-        # skip 0xFF fill bytes, then consume the RSTn marker
-        while p + 1 < len(self.d) and self.d[p] == 0xFF and self.d[p + 1] == 0xFF:
-            p += 1
-        if (
-            p + 1 < len(self.d)
-            and self.d[p] == 0xFF
-            and 0xD0 <= self.d[p + 1] <= 0xD7
-        ):
-            p += 2
-        self.p = p
-
-
-def _jpeg_huff(counts: bytes, symbols: bytes) -> dict:
-    """Canonical Huffman table: (code length, code) -> symbol."""
-    out = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            out[(length, code)] = symbols[k]
-            k += 1
-            code += 1
-        code <<= 1
-    return out
-
-
-def _jpeg_sym(bits: _JpegBits, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | bits.bit()
-        s = table.get((length, code))
-        if s is not None:
-            return s
-    raise ValueError("invalid huffman code")
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """T.81 F.12: map a t-bit magnitude to its signed value."""
-    return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v
-
-
-def _decode_jpeg(data: bytes) -> np.ndarray | None:
-    """Pure stdlib+numpy decode of a JPEG — BASELINE sequential
-    (SOF0/SOF1) and PROGRESSIVE (SOF2, spectral selection +
-    successive approximation) — the dominant web-crawl image format:
-    marker parse (DQT/DHT/SOF/DRI/SOS), canonical Huffman entropy
-    decode with 0xFF00 unstuffing and RSTn restart handling, dequant,
-    zigzag unscramble, orthonormal-matrix IDCT, nearest-neighbor
-    chroma upsampling, JFIF YCbCr->RGB. Progressive scans accumulate
-    per-component coefficient state (DC/AC first + refinement scans,
-    cross-block EOB runs) and reconstruct at EOI. Returns (h, w, 3)
-    uint8 RGB, or None when the payload is not a well-formed JPEG
-    (lossless/hierarchical/arithmetic coding stay honestly gated —
-    they fall through to the stub and are counted per-format by
-    ``decoder_report``). Public algorithm: ITU-T T.81 annexes A/F/G.
-    Differential-tested against independent baseline AND progressive
-    encoder twins sharing one quantization — the two decodes must be
-    bit-identical."""
-    if data is None or len(data) < 4 or data[:2] != b"\xff\xd8":
-        return None
-    try:
-        qt: dict[int, np.ndarray] = {}
-        huff: dict[tuple[int, int], dict] = {}
-        frame = None
-        restart_interval = 0
-        progressive = False
-        coefs = None
-        p = 2
-        while p + 2 <= len(data):
-            if data[p] != 0xFF:
-                return None
-            marker = data[p + 1]
-            if marker == 0xD9:  # EOI
-                if coefs is not None:  # progressive or multi-scan
-                    return _jpeg_reconstruct(frame, coefs, qt)
-                return None  # EOI before SOS: no image
-            if p + 4 > len(data):
-                return None
-            seg_len = (data[p + 2] << 8) | data[p + 3]
-            seg = data[p + 4 : p + 2 + seg_len]
-            if marker == 0xDB:  # DQT
-                q = 0
-                while q < len(seg):
-                    prec, tid = seg[q] >> 4, seg[q] & 15
-                    q += 1
-                    if prec:
-                        tbl = np.frombuffer(
-                            seg, ">u2", count=64, offset=q
-                        ).astype(np.int32)
-                        q += 128
-                    else:
-                        tbl = np.frombuffer(
-                            seg, np.uint8, count=64, offset=q
-                        ).astype(np.int32)
-                        q += 64
-                    dq = np.zeros(64, np.int32)
-                    dq[_JPEG_ZZ] = tbl  # stored in zigzag order
-                    qt[tid] = dq
-            elif marker == 0xC4:  # DHT
-                q = 0
-                while q < len(seg):
-                    cls, tid = seg[q] >> 4, seg[q] & 15
-                    counts = seg[q + 1 : q + 17]
-                    n = sum(counts)
-                    huff[(cls, tid)] = _jpeg_huff(
-                        counts, seg[q + 17 : q + 17 + n]
-                    )
-                    q += 17 + n
-            elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 seq, SOF2 prog
-                h = (seg[1] << 8) | seg[2]
-                w = (seg[3] << 8) | seg[4]
-                comps = []
-                for c in range(seg[5]):
-                    cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
-                    ch, cv = hv >> 4, hv & 15
-                    if not (1 <= ch <= 4 and 1 <= cv <= 4):
-                        return None  # T.81: sampling factors are 1..4
-                    comps.append((cid, ch, cv, tq))
-                frame = (h, w, comps)
-                progressive = marker == 0xC2
-                if progressive:
-                    coefs = _jpeg_alloc_coefs(frame)
-            elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9,
-                            0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                return None  # lossless/arithmetic/hierarchical: gated
-            elif marker == 0xDD:  # DRI
-                restart_interval = (seg[0] << 8) | seg[1]
-            elif marker == 0xDA:  # SOS
-                if frame is None:
-                    return None
-                ns = seg[0]
-                scan = []
-                for c in range(ns):
-                    cs, tds = seg[1 + 2 * c], seg[2 + 2 * c]
-                    scan.append((cs, tds >> 4, tds & 15))
-                if not progressive:
-                    if len(scan) == len(frame[2]) and coefs is None:
-                        # the common interleaved single-scan form:
-                        # direct streaming decode, no coefficient state
-                        return _jpeg_scan(
-                            data, p + 2 + seg_len, frame, scan, qt,
-                            huff, restart_interval,
-                        )
-                    # multi-scan baseline: non-interleaved (one SOS
-                    # per component) OR partially interleaved (a
-                    # subset of components per SOS, MCU geometry from
-                    # the FRAME's max sampling factors per T.81
-                    # A.2.3): accumulate coefficients per scan and
-                    # reconstruct at EOI, sharing the progressive
-                    # dequant/IDCT/color path
-                    if coefs is None:
-                        coefs = _jpeg_alloc_coefs(frame)
-                    p = _jpeg_seq_scan(
-                        data, p + 2 + seg_len, frame, scan, huff,
-                        restart_interval, coefs,
-                    )
-                    continue
-                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-                ahal = seg[3 + 2 * ns]
-                p = _jpeg_prog_scan(
-                    data, p + 2 + seg_len, frame, scan, huff,
-                    restart_interval, coefs,
-                    ss, se, ahal >> 4, ahal & 15,
-                )
-                continue
-            p += 2 + seg_len
-        if coefs is not None:
-            return _jpeg_reconstruct(frame, coefs, qt)  # missing EOI
-        return None
-    except (IndexError, KeyError, ValueError, OverflowError):
-        return None
-
-
-def _jpeg_scan(
-    data: bytes,
-    pos: int,
-    frame,
-    scan,
-    qt,
-    huff,
-    restart_interval: int,
-) -> np.ndarray | None:
-    """Entropy-decode the single baseline scan into RGB pixels."""
-    h, w, comps = frame
-    if h == 0 or w == 0 or not comps or h * w > _MAX_IMAGE_SAMPLES:
-        return None
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax == 0 or vmax == 0:
-        return None
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    by_id = {c[0]: c for c in comps}
-    planes = {}
-    meta = []  # (cid, ch, cv, dq, dc_table, ac_table)
-    for cs, td, ta in scan:
-        cid, ch, cv, tq = by_id[cs]
-        planes[cid] = np.zeros((mcuy * cv * 8, mcux * ch * 8), np.float64)
-        meta.append((cid, ch, cv, qt[tq], huff[(0, td)], huff[(1, ta)]))
-    bits = _JpegBits(data, pos)
-    pred = dict.fromkeys(planes, 0)
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if (
-                restart_interval
-                and mcu_count
-                and mcu_count % restart_interval == 0
-            ):
-                bits.restart()
-                pred = dict.fromkeys(planes, 0)
-            mcu_count += 1
-            for cid, ch, cv, dq, dc_t, ac_t in meta:
-                for v in range(cv):
-                    for u in range(ch):
-                        coef = np.zeros(64, np.float64)
-                        t = _jpeg_sym(bits, dc_t)
-                        pred[cid] += _jpeg_extend(bits.bits(t), t)
-                        coef[0] = pred[cid] * dq[0]
-                        k = 1
-                        while k < 64:
-                            rs = _jpeg_sym(bits, ac_t)
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                return None
-                            coef[_JPEG_ZZ[k]] = (
-                                _jpeg_extend(bits.bits(s), s) * dq[_JPEG_ZZ[k]]
-                            )
-                            k += 1
-                        blk = _JPEG_A.T @ coef.reshape(8, 8) @ _JPEG_A
-                        y0 = (my * cv + v) * 8
-                        x0 = (mx * ch + u) * 8
-                        planes[cid][y0 : y0 + 8, x0 : x0 + 8] = blk + 128.0
-    # upsample each component to full resolution and crop
-    full = []
-    for cid, ch, cv, _dq, _d, _a in meta:
-        pl = planes[cid]
-        if ch != hmax or cv != vmax:
-            pl = np.repeat(np.repeat(pl, vmax // cv, 0), hmax // ch, 1)
-        full.append(pl[:h, :w])
-    if len(full) == 1:
-        g = np.clip(np.rint(full[0]), 0, 255).astype(np.uint8)
-        return np.repeat(g[..., None], 3, axis=2)
-    if len(full) != 3:
-        return None
-    y, cb, cr = full
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
-
-
-def _jpeg_frame_geom(frame):
-    """Shared geometry: (hmax, vmax, mcux, mcuy, per-component dict
-    cid -> (ch, cv, tq, padded block grid (bh, bw), non-interleaved
-    block grid (nih, niw)))."""
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    geo = {}
-    for cid, ch, cv, tq in comps:
-        niw = -(-(-(-w * ch // hmax)) // 8)
-        nih = -(-(-(-h * cv // vmax)) // 8)
-        geo[cid] = (ch, cv, tq, mcuy * cv, mcux * ch, nih, niw)
-    return hmax, vmax, mcux, mcuy, geo
-
-
-def _jpeg_alloc_coefs(frame):
-    """Per-component DCT coefficient state for progressive decoding:
-    (padded-block-rows, padded-block-cols, 64) int64 per component."""
-    h, w, comps = frame
-    if (
-        h == 0 or w == 0 or not comps
-        or h * w > _MAX_IMAGE_SAMPLES
-        or any(c[1] < 1 or c[2] < 1 for c in comps)
-    ):
-        raise ValueError("bad progressive frame geometry")
-    _hm, _vm, _mx, _my, geo = _jpeg_frame_geom(frame)
-    return {
-        cid: np.zeros((bh, bw, 64), np.int64)
-        for cid, (_ch, _cv, _tq, bh, bw, _nh, _nw) in geo.items()
-    }
-
-
-def _jpeg_prog_scan(
-    data: bytes,
-    pos: int,
-    frame,
-    scan,
-    huff,
-    restart_interval: int,
-    coefs,
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-) -> int:
-    """Decode ONE progressive scan (T.81 annex G.1.2 / the public
-    libjpeg decode_mcu_DC/AC_first/refine logic) into the coefficient
-    state; returns the offset of the next marker. DC scans (Ss=0) may
-    interleave components; AC scans carry exactly one. Successive
-    approximation: first scans (Ah=0) deliver magnitudes scaled by
-    2^Al, refinements (Ah>0) one bit per coefficient; AC first/refine
-    scans run EOB-run bookkeeping across blocks."""
-    h, w, comps = frame
-    # T.81 G.1: DC scans are Ss=0,Se=0; AC scans are Ss>=1 and carry
-    # exactly one component
-    if ss == 0 and se != 0:
-        raise ValueError("progressive DC scan must have Se=0")
-    if ss > 0 and len(scan) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    if ah and ah != al + 1:
-        raise ValueError("successive approximation must refine one bit")
-    hmax, vmax, mcux, mcuy, geo = _jpeg_frame_geom(frame)
-    by_id = {c[0]: c for c in comps}
-    bits = _JpegBits(data, pos)
-    pred = {cs: 0 for cs, _td, _ta in scan}
-    eobrun = 0
-    p1, m1 = 1 << al, -1 << al
-
-    def dc_first(cid, by, bx, dc_t):
-        t = _jpeg_sym(bits, dc_t)
-        if t > 11:
-            raise ValueError("DC category out of range")
-        pred[cid] += _jpeg_extend(bits.bits(t), t)
-        coefs[cid][by, bx, 0] = pred[cid] << al
-
-    def dc_refine(cid, by, bx):
-        if bits.bit():
-            coefs[cid][by, bx, 0] |= p1
-
-    def ac_first(cid, by, bx, ac_t):
-        nonlocal eobrun
-        blk = coefs[cid][by, bx]
-        if eobrun > 0:
-            eobrun -= 1
-            return
-        k = ss
-        while k <= se:
-            rs = _jpeg_sym(bits, ac_t)
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r == 15:
-                    k += 16
-                    continue
-                eobrun = (1 << r) - 1
-                if r:
-                    eobrun += bits.bits(r)
-                break
-            k += r
-            if k > se:
-                raise ValueError("AC run past Se")
-            blk[_JPEG_ZZ[k]] = _jpeg_extend(bits.bits(s), s) << al
-            k += 1
-
-    def ac_refine(cid, by, bx, ac_t):
-        nonlocal eobrun
-        blk = coefs[cid][by, bx]
-        k = ss
-        if eobrun == 0:
-            while k <= se:
-                rs = _jpeg_sym(bits, ac_t)
-                r, s = rs >> 4, rs & 15
-                val = 0
-                if s:
-                    # size is 1 by construction in refinement scans
-                    val = p1 if bits.bit() else m1
-                else:
-                    if r != 15:
-                        eobrun = 1 << r
-                        if r:
-                            eobrun += bits.bits(r)
-                        break
-                    # r == 15: ZRL — advance over 16 zero-history
-                    # coefficients (with correction bits on nonzeros)
-                while k <= se:
-                    z = _JPEG_ZZ[k]
-                    if blk[z] != 0:
-                        if bits.bit() and (blk[z] & p1) == 0:
-                            blk[z] += p1 if blk[z] >= 0 else m1
-                    else:
-                        r -= 1
-                        if r < 0:
-                            break
-                    k += 1
-                if val and k <= se:
-                    blk[_JPEG_ZZ[k]] = val
-                k += 1
-        if eobrun > 0:
-            while k <= se:
-                z = _JPEG_ZZ[k]
-                if blk[z] != 0:
-                    if bits.bit() and (blk[z] & p1) == 0:
-                        blk[z] += p1 if blk[z] >= 0 else m1
-                k += 1
-            eobrun -= 1
-
-    def do_restart():
-        nonlocal eobrun
-        bits.restart()
-        for cid in pred:
-            pred[cid] = 0
-        eobrun = 0
-
-    if ss == 0:  # DC scan (se must be 0)
-        tabs = {cs: huff.get((0, td)) for cs, td, _ta in scan}
-        if ah == 0 and any(t is None for t in tabs.values()):
-            raise ValueError("DC scan references an undefined table")
-        if len(scan) > 1:  # interleaved over MCUs
-            unit = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if (
-                        restart_interval
-                        and unit
-                        and unit % restart_interval == 0
-                    ):
-                        do_restart()
-                    unit += 1
-                    for cs, _td, _ta in scan:
-                        _cid, ch, cv, _tq = by_id[cs]
-                        for v in range(cv):
-                            for u in range(ch):
-                                by, bx = my * cv + v, mx * ch + u
-                                if ah == 0:
-                                    dc_first(cs, by, bx, tabs[cs])
-                                else:
-                                    dc_refine(cs, by, bx)
-        else:
-            cs = scan[0][0]
-            _ch, _cv, _tq, _bh, _bw, nih, niw = geo[cs]
-            unit = 0
-            for by in range(nih):
-                for bx in range(niw):
-                    if (
-                        restart_interval
-                        and unit
-                        and unit % restart_interval == 0
-                    ):
-                        do_restart()
-                    unit += 1
-                    if ah == 0:
-                        dc_first(cs, by, bx, tabs[cs])
-                    else:
-                        dc_refine(cs, by, bx)
-    else:  # AC scan: exactly one component, non-interleaved
-        cs, _td, ta = scan[0]
-        ac_t = huff.get((1, ta))
-        if ac_t is None:
-            raise ValueError("AC scan references an undefined table")
-        _ch, _cv, _tq, _bh, _bw, nih, niw = geo[cs]
-        unit = 0
-        for by in range(nih):
-            for bx in range(niw):
-                if (
-                    restart_interval
-                    and unit
-                    and unit % restart_interval == 0
-                ):
-                    do_restart()
-                unit += 1
-                if ah == 0:
-                    ac_first(cs, by, bx, ac_t)
-                else:
-                    ac_refine(cs, by, bx, ac_t)
-
-    # the bit reader parks exactly on the next marker's 0xFF (bit()
-    # un-consumes markers); skip any trailing RSTn / fill bytes
-    return _jpeg_next_marker(data, bits.p)
-
-
-def _jpeg_seq_scan(
-    data: bytes,
-    pos: int,
-    frame,
-    scan,
-    huff,
-    restart_interval: int,
-    coefs,
-) -> int:
-    """Decode one multi-scan baseline sequential scan (T.81 F.2) into
-    the shared coefficient state; returns the offset of the next
-    marker. A single-component scan walks that component's own block
-    grid non-interleaved; a multi-component scan (the legal but rare
-    partially-interleaved layout, e.g. [Y, Cb] then [Cr]) walks the
-    FRAME-level MCU grid with each scan component contributing its
-    ch x cv blocks per MCU — the same geometry the fully-interleaved
-    path uses, restart markers counting MCUs. Reconstruction then
-    goes through ``_jpeg_reconstruct`` exactly like progressive, so
-    the dequant / IDCT / color math is shared bit-for-bit with the
-    interleaved path."""
-    tables = []
-    for cs, td, ta in scan:
-        dc_t, ac_t = huff.get((0, td)), huff.get((1, ta))
-        if dc_t is None or ac_t is None:
-            raise ValueError("scan references an undefined table")
-        tables.append((cs, dc_t, ac_t))
-    _hm, _vm, mcux, mcuy, geo = _jpeg_frame_geom(frame)
-    bits = _JpegBits(data, pos)
-    preds = {cs: 0 for cs, _, _ in tables}
-
-    def block(cs, dc_t, ac_t, by, bx):
-        blk = coefs[cs][by, bx]
-        t = _jpeg_sym(bits, dc_t)
-        if t > 11:
-            raise ValueError("DC category out of range")
-        preds[cs] += _jpeg_extend(bits.bits(t), t)
-        blk[0] = preds[cs]
-        k = 1
-        while k <= 63:
-            rs = _jpeg_sym(bits, ac_t)
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r == 15:
-                    k += 16
-                    continue
-                break  # EOB
-            k += r
-            if k > 63:
-                raise ValueError("AC run past 63")
-            blk[_JPEG_ZZ[k]] = _jpeg_extend(bits.bits(s), s)
-            k += 1
-
-    unit = 0
-    if len(tables) == 1:
-        cs, dc_t, ac_t = tables[0]
-        _ch, _cv, _tq, _bh, _bw, nih, niw = geo[cs]
-        for by in range(nih):
-            for bx in range(niw):
-                if (restart_interval and unit
-                        and unit % restart_interval == 0):
-                    bits.restart()
-                    preds[cs] = 0
-                unit += 1
-                block(cs, dc_t, ac_t, by, bx)
-    else:
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if (restart_interval and unit
-                        and unit % restart_interval == 0):
-                    bits.restart()
-                    for cs in preds:
-                        preds[cs] = 0
-                unit += 1
-                for cs, dc_t, ac_t in tables:
-                    ch, cv = geo[cs][0], geo[cs][1]
-                    for v in range(cv):
-                        for u in range(ch):
-                            block(cs, dc_t, ac_t,
-                                  my * cv + v, mx * ch + u)
-    return _jpeg_next_marker(data, bits.p)
-
-
-def _jpeg_next_marker(data: bytes, p: int) -> int:
-    """Position of the next real marker at/after ``p``: skips fill
-    bytes, stuffed zeros, and RSTn."""
-    while p + 1 < len(data):
-        if data[p] != 0xFF:
-            p += 1
-            continue
-        nxt = data[p + 1]
-        if nxt == 0xFF:
-            p += 1
-            continue
-        if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-            p += 2
-            continue
-        return p
-    raise ValueError("no marker after scan")
-
-
-def _jpeg_reconstruct(frame, coefs, qt) -> np.ndarray | None:
-    """Dequantize + IDCT the accumulated progressive coefficients and
-    assemble RGB exactly like the sequential path (same formulas, so
-    a progressive stream of the same quantized coefficients decodes
-    bit-identically to its baseline twin)."""
-    h, w, comps = frame
-    hmax, vmax, _mx, _my, geo = _jpeg_frame_geom(frame)
-    full = []
-    for cid, ch, cv, tq in comps:
-        _c, _v, _t, bh, bw, _nh, _nw = geo[cid]
-        dq = qt[tq]
-        plane = np.zeros((bh * 8, bw * 8), np.float64)
-        arr = coefs[cid]
-        for by in range(bh):
-            for bx in range(bw):
-                coef = arr[by, bx].astype(np.float64) * dq
-                blk = _JPEG_A.T @ coef.reshape(8, 8) @ _JPEG_A
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    blk + 128.0
-                )
-        if ch != hmax or cv != vmax:
-            plane = np.repeat(
-                np.repeat(plane, vmax // cv, 0), hmax // ch, 1
-            )
-        full.append(plane[:h, :w])
-    if len(full) == 1:
-        g = np.clip(np.rint(full[0]), 0, 255).astype(np.uint8)
-        return np.repeat(g[..., None], 3, axis=2)
-    if len(full) != 3:
-        return None
-    y, cb, cr = full
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
-
-
 def resize_pixels(arr: np.ndarray, max_side: int) -> np.ndarray:
     """Area-average downscale of an (h, w, 3) uint8 array so the
     longer side is ``max_side`` (aspect preserved; never upscales).
@@ -1206,12 +186,10 @@ def image_thumbnail(
     df: DataFrame,
     payload_col: str = "payload",
     max_side: int = 256,
-    decoder: str = "auto",
 ) -> DataFrame:
-    """Thumbnail every image payload: decode through the ladder
-    (native tier first under ``decoder="auto"``), area-average
-    downscale so the longer side is ``max_side`` (never upscale), and
-    re-encode as lossless PNG into ``thumb_payload`` with
+    """Thumbnail every image payload: decode through the ladder,
+    area-average downscale so the longer side is ``max_side`` (never
+    upscale), and re-encode as lossless PNG into ``thumb_payload`` with
     ``thumb_width``/``thumb_height``/``decoder`` alongside.
     Undecodable payloads get NULL thumbnails and the ``stub``
     decoder marker — total, no null-handling burden downstream.
@@ -1233,9 +211,7 @@ def image_thumbnail(
     )
 
     def one(p):
-        arr, name = _decode_via_ladder(
-            p if p is not None else b"", decoder
-        )
+        arr, name = _decode_via_ladder(p if p is not None else b"")
         if arr is None:
             return None, None, None, "stub"
         small = resize_pixels(arr, max_side)
@@ -1932,10 +908,10 @@ def _ogg_metadata(data: bytes):
 def _decode_ico(data: bytes) -> np.ndarray | None:
     """ICO/CUR (the public Windows icon layout, the favicon format):
     picks the largest directory entry and decodes it — embedded PNG
-    via the PNG decoder, or a headerless DIB (BITMAPINFOHEADER with
-    doubled height for the AND mask) at 32-bit BGRA (alpha dropped),
-    24-bit BGR, or 8/4/1-bit palette. Returns (h, w, 3) uint8 or
-    None."""
+    via ``decode_png_native``, or a headerless DIB (BITMAPINFOHEADER
+    with doubled height for the AND mask) at 32-bit BGRA (alpha
+    dropped), 24-bit BGR, or 8/4/1-bit palette. Returns (h, w, 3)
+    uint8 or None."""
     if data is None or len(data) < 22:
         return None
     if data[0:2] != b"\x00\x00" or data[2:4] not in (
@@ -1961,7 +937,7 @@ def _decode_ico(data: bytes) -> np.ndarray | None:
     w, h, off, size = best
     img = data[off : off + size]
     if img[:8] == b"\x89PNG\r\n\x1a\n":
-        return _decode_png(img)
+        return decode_png_native(img)
     # headerless DIB: BITMAPINFOHEADER, height covers XOR + AND masks
     if len(img) < 40 or int.from_bytes(img[0:4], "little") != 40:
         return None
@@ -1972,7 +948,7 @@ def _decode_ico(data: bytes) -> np.ndarray | None:
     nclr = int.from_bytes(img[32:36], "little")
     if comp != 0 or bw != w or bh != h or bpp not in (1, 4, 8, 24, 32):
         return None
-    if w * h * 3 > _MAX_IMAGE_SAMPLES:
+    if w * h * 3 > _MAX_SAMPLES:
         return None
     pal = None
     at = 40
@@ -2011,27 +987,6 @@ def _decode_ico(data: bytes) -> np.ndarray | None:
     if pal is None or idx.max() >= len(pal):
         return None
     return pal[idx][:, :, [2, 1, 0]].copy()  # palette is BGRX
-
-
-def _packbits(data: bytes, expect: int) -> bytes | None:
-    """PackBits RLE (TIFF compression 32773, the public Apple/TIFF6
-    scheme): n in 0..127 copies n+1 literals, n in -127..-1 repeats
-    the next byte 1-n times, -128 is a no-op."""
-    out = bytearray()
-    p = 0
-    n = len(data)
-    while p < n and len(out) < expect:
-        c = data[p]
-        p += 1
-        if c < 128:
-            out += data[p : p + c + 1]
-            p += c + 1
-        elif c > 128:
-            if p >= n:
-                return None
-            out += bytes([data[p]]) * (257 - c)
-            p += 1
-    return bytes(out[:expect]) if len(out) >= expect else None
 
 
 def _tiff_ifd(data: bytes):
@@ -2074,127 +1029,6 @@ def _tiff_ifd(data: bytes):
     return tags, bo
 
 
-def _decode_tiff(data: bytes) -> np.ndarray | None:
-    """Pure-python baseline TIFF decode (public TIFF 6.0 spec):
-    stripped, chunky planar config; compressions none (1), LZW (5 —
-    the PDF LZWDecode machinery, same MSB-first early-change code),
-    and PackBits (32773); horizontal-differencing predictor (2);
-    photometrics bilevel/gray (0 white-is-zero and 1), RGB(A, alpha
-    dropped), and palette via the 16-bit ColorMap; 1/8/16-bit samples
-    (16-bit scaled to 8). Tiled, planar, G3/G4-fax and JPEG-in-TIFF
-    variants return None and fall down the ladder/metadata tier."""
-    got = _tiff_ifd(data)
-    if got is None:
-        return None
-    tags, _bo = got
-    if 256 not in tags or 257 not in tags or 273 not in tags:
-        return None
-    w, h = tags[256][0], tags[257][0]
-    spp = tags.get(277, (1,))[0]
-    bits_arr = tags.get(258, (1,))
-    bits = bits_arr[0]
-    if any(b != bits for b in bits_arr):
-        return None
-    comp = tags.get(259, (1,))[0]
-    photo = tags.get(262, (1,))[0]
-    pred = tags.get(317, (1,))[0]
-    planar = tags.get(284, (1,))[0]
-    rows_per_strip = tags.get(278, (h,))[0] or h
-    offsets = tags[273]
-    counts = tags.get(279)
-    if (
-        w <= 0 or h <= 0 or w * h * max(spp, 1) > _MAX_IMAGE_SAMPLES
-        or planar != 1 or comp not in (1, 5, 32773)
-        or bits not in (1, 8, 16)
-        or photo not in (0, 1, 2, 3)
-        or (photo == 2 and spp < 3)
-        or (photo != 2 and spp not in (1, 2))
-    ):
-        return None
-    if counts is None:
-        if comp != 1 or len(offsets) != 1:
-            return None
-        counts = (len(data) - offsets[0],)
-    if len(counts) != len(offsets):
-        return None
-    row_bytes = (w * spp * bits + 7) // 8
-    rows = []
-    done = 0
-    for off, cnt in zip(offsets, counts):
-        if off + cnt > len(data):
-            return None
-        strip = data[off : off + cnt]
-        nrows = min(rows_per_strip, h - done)
-        if nrows <= 0:
-            break
-        expect = row_bytes * nrows
-        if comp == 5:
-            from .pdf import _lzw_decode
-
-            raw = _lzw_decode(strip, early=1)
-            if raw is None or len(raw) < expect:
-                return None
-            raw = raw[:expect]
-        elif comp == 32773:
-            raw = _packbits(strip, expect)
-            if raw is None:
-                return None
-        else:
-            if len(strip) < expect:
-                return None
-            raw = strip[:expect]
-        rows.append(np.frombuffer(raw, np.uint8).reshape(nrows, row_bytes))
-        done += nrows
-    if done < h:
-        return None
-    grid = np.concatenate(rows, axis=0)
-    if bits == 1:
-        px = np.unpackbits(grid, axis=1)[:, : w * spp].reshape(h, w, spp)
-        if photo != 3:  # palette keeps raw 0/1 indices into the LUT
-            px = (px * 255).astype(np.uint8)
-    elif bits == 16:
-        flat = grid.reshape(-1).tobytes()
-        arr = np.frombuffer(flat, ("<u2" if _bo == "<" else ">u2"))
-        px = (arr >> 8).astype(np.uint8).reshape(h, w, spp)
-    else:
-        px = grid.reshape(h, w, spp)
-    if pred == 2:
-        if bits != 8:
-            return None
-        px = np.add.accumulate(px, axis=1, dtype=np.uint8)
-    if photo == 3:  # palette
-        cmap = tags.get(320)
-        if bits == 16 or cmap is None or len(cmap) < 3 * (1 << bits):
-            # 16-bit indices were scaled to 8 above, so they no longer
-            # address the ColorMap — decline rather than mis-colour.
-            return None
-        ncol = 1 << bits
-        lut = (
-            np.array(cmap[: 3 * ncol], dtype=np.uint16)
-            .reshape(3, ncol)
-            .T >> 8
-        ).astype(np.uint8)
-        return lut[px[:, :, 0]]
-    if photo == 2:
-        return px[:, :, :3].copy()
-    mono = px[:, :, 0]
-    if photo == 0:  # white-is-zero
-        mono = 255 - mono
-    return np.repeat(mono[:, :, None], 3, axis=2)
-
-
-def _decode_webp_safe(data: bytes) -> np.ndarray | None:
-    """Ladder wrapper for the WebP decoders — lossless VP8L
-    (``pipeline/vp8l.py``) AND lossy VP8 intra keyframes
-    (``pipeline/vp8.py``, bit-exact against libwebp's YUV output in
-    the test differential); see both module docstrings for feature
-    sets and testing strategy. Malformed payloads return None and
-    fall to the stub, counted by ``decoder_report``."""
-    from .vp8l import decode_webp
-
-    return decode_webp(data)
-
-
 # ---------------------------------------------------------------------------
 # Decode ladders — the single source of truth for which formats decode
 # with a REAL built-in codec. The decode loops iterate these tables and
@@ -2206,28 +1040,17 @@ def _decode_webp_safe(data: bytes) -> np.ndarray | None:
 
 # (decoder column value, decode fn, human-readable coverage) in attempt
 # order. Each fn takes bytes and returns an (h, w, 3) uint8 array or
-# None to pass the payload down the ladder.
+# None to pass the payload down the ladder. These are the formats no
+# system codec covers; PNG/GIF/JPEG/WebP/TIFF/AVIF/HEIC/SVG decode
+# through ``native_image_ladder()`` ahead of them.
 _IMAGE_LADDER: tuple = (
-    ("png", _decode_png,
-     "PNG 8/16-bit incl. palette and Adam7 interlace"),
     ("bmp", _decode_bmp, "uncompressed 24-bit BMP"),
     ("pnm", _decode_pnm, "binary PGM/PPM"),
-    ("gif", _decode_gif, "GIF87a/89a first frame incl. interlaced"),
-    ("jpeg", _decode_jpeg,
-     "JPEG baseline sequential (interleaved + non-interleaved "
-     "multi-scan) + progressive"),
-    ("webp", _decode_webp_safe,
-     "WebP lossless (VP8L: prefix codes, LZ77, color cache, all four "
-     "transforms) + lossy (VP8 intra keyframe: bool decoder, "
-     "B_PRED/16x16/chroma intra prediction, WHT/DCT, both loop "
-     "filters)"),
-    ("tiff", _decode_tiff,
-     "baseline TIFF 6.0: stripped none/LZW/PackBits, horizontal "
-     "predictor, bilevel/gray/RGB/palette, 1/8/16-bit, II and MM"),
     ("ico", _decode_ico,
      "ICO/CUR favicons: largest entry, embedded PNG or 1/4/8/24/"
      "32-bit DIB"),
 )
+
 
 def _decode_flac_safe(data: bytes):
     """Ladder wrapper for the native FLAC frame decoder
@@ -2281,43 +1104,18 @@ def _ladder_coverage(ladder) -> str:
     return "; ".join(desc for _, _, desc in ladder)
 
 
-def _image_ladder(decoder: str = "auto") -> tuple:
-    """Resolve the decode-attempt sequence for a ``decoder`` mode.
-
-    - ``"auto"`` (default): system C codecs first where their shared
-      libraries load (``native_codecs.py`` — ~100x the throughput of
-      the pure tier), then the pure-python ladder as fallback AND as
-      coverage for formats/variants the native tier declines.
-    - ``"pure"``: pure-python only — bit-reproducible everywhere,
-      independent of which libs a node ships. Pin this when hashes or
-      features must match across heterogeneous clusters (JPEG and
-      lossy WebP may differ by a few LSBs between tiers; the spec
-      allows IDCT tolerance and upsamplers differ).
-    - ``"native"``: native only — for measuring the native tier or
-      forcing decline-to-stub when no system codec handles a format.
-    """
-    if decoder == "pure":
-        return _IMAGE_LADDER
-    if decoder not in ("auto", "native"):
-        raise ValueError(
-            f"decoder must be auto|pure|native, got {decoder!r}"
-        )
-    try:
-        from .native_codecs import native_image_ladder
-
-        native = native_image_ladder()
-    except Exception:  # noqa: BLE001 - no ctypes/gcc/libs -> pure only
-        native = ()
-    return native if decoder == "native" else native + _IMAGE_LADDER
+def _image_ladder() -> tuple:
+    """The decode-attempt sequence: the system C codecs whose shared
+    libraries load here (``native_codecs.py``), then the pure-python
+    decoders for the formats no system codec covers."""
+    return native_image_ladder() + _IMAGE_LADDER
 
 
-def _decode_via_ladder(
-    p: bytes, decoder: str
-) -> tuple[np.ndarray | None, str | None]:
-    """Run ``p`` down the resolved ladder; (pixels, tier-name) or
-    (None, None). Every decoder call is exception-guarded — one
-    corrupt payload must never crash a task."""
-    for name, dec, _ in _image_ladder(decoder):
+def _decode_via_ladder(p: bytes) -> tuple[np.ndarray | None, str | None]:
+    """Run ``p`` down the ladder; (pixels, tier-name) or (None, None).
+    Every decoder call is exception-guarded — one corrupt payload must
+    never crash a task."""
+    for name, dec, _ in _image_ladder():
         try:
             arr = dec(p)
         except Exception:  # noqa: BLE001 - fall down the ladder
@@ -2685,37 +1483,31 @@ def decode_image_features(
     payload_col: str = "payload",
     feature_dim: int = 64,
     require_real_codec: bool = False,
-    decoder: str = "auto",
 ) -> DataFrame:
     """Attach an image feature vector column.
 
     Decode ladder, per row: PIL when installed ('pil'); else the
     system C codecs via ctypes where their libraries load
-    ('png-native', 'jpeg-native', 'gif-native', 'webp-native',
-    'tiff-native' — see ``native_codecs.py``; ~100x the pure-python
-    throughput, differentially tested against the pure tier); else the
-    built-in pure-python parsers over the ACTUAL pixels — 8-bit PNG
-    incl. palette and Adam7-interlaced ('png', stdlib zlib + scanline
-    unfiltering), 24-bit BMP ('bmp'), binary PGM/PPM ('pnm'),
-    GIF87a/89a first frames incl. interlaced ('gif', own LZW), and
-    JPEG — baseline sequential AND progressive, incl. chroma
-    subsampling, restart markers, spectral selection and successive
-    approximation ('jpeg', own Huffman + IDCT — the dominant crawl
-    format) — all real channel-mean/block-grid features with no
-    dependency; else the deterministic digest fake ('stub-sha256').
+    ('png-native', 'gif-native', 'jpeg-native', 'webp-native',
+    'tiff-native', 'avif-native', 'heic-native', 'svg-native' — see
+    ``native_codecs.py``); else the pure-python parsers for the
+    formats no system codec covers — 24-bit BMP ('bmp'), binary
+    PGM/PPM ('pnm') and ICO/CUR favicons ('ico') — all real
+    channel-mean/block-grid features over the actual pixels; else the
+    deterministic digest fake ('stub-sha256').
     The ``decoder`` column records which path each row took;
     ``decoder_report`` turns it into the per-format real-vs-stub
     ledger for the dataset card.
 
-    ``require_real_codec=True`` keeps the strict contract: without a
-    general codec library WebP / arithmetic-coded-JPEG payloads would
-    silently stub, so it raises unless PIL is importable.
+    ``require_real_codec=True`` keeps the strict contract: formats
+    outside the ladder would silently stub, so it raises unless PIL is
+    importable.
     """
     if require_real_codec and not _HAVE_PIL:
         raise NotImplementedError(
             "general image decoding requires PIL, which is not installed "
             "here (formats that decode without it: "
-            f"{_ladder_coverage(_IMAGE_LADDER)})"
+            f"{_ladder_coverage(_image_ladder())})"
         )
     out_schema = T.StructType(
         list(df.schema.fields)
@@ -2735,7 +1527,7 @@ def decode_image_features(
                 return _pixel_features(img, feature_dim).tolist(), "pil"
             except Exception:  # noqa: BLE001 - fall through the ladder
                 pass
-        arr, name = _decode_via_ladder(p, decoder)
+        arr, name = _decode_via_ladder(p)
         if arr is not None:
             return _pixel_features(arr, feature_dim).tolist(), name
         return _fake_decode(p, feature_dim).tolist(), "stub-sha256"
@@ -3717,7 +2509,6 @@ def image_dhash(
     df: DataFrame,
     payload_col: str = "payload",
     hash_size: int = 8,
-    decoder: str = "auto",
 ) -> DataFrame:
     """Attach a 64-bit perceptual dHash column (``dhash``) plus the
     ``decoder`` that produced the pixels — same decode ladder as
@@ -3725,11 +2516,9 @@ def image_dhash(
     codecs, else the pure-python parsers); undecodable payloads get a
     DIGEST hash (exact-dup-only semantics, flagged ``stub-sha256``) so
     the column is total and downstream joins need no null handling.
-
-    ``decoder="auto"`` may flip the odd gradient bit on lossy formats
-    vs ``"pure"`` (±LSB IDCT differences) — within the hamming
-    tolerance near-dedup runs at, but pin ``"pure"`` if the hash
-    itself must be byte-stable across heterogeneous nodes.
+    Lossy formats hash the system codec's pixels, so a node whose
+    libjpeg/libwebp build rounds differently may flip the odd gradient
+    bit — within the hamming tolerance near-dedup runs at.
 
     Near-duplicate images then reduce to
     ``dedup.hamming_near_dup_pairs(out, sig_col="dhash")`` — banded
@@ -3753,7 +2542,7 @@ def image_dhash(
                 return _dhash_bits(img, hash_size), "pil"
             except Exception:  # noqa: BLE001
                 pass
-        arr, name = _decode_via_ladder(p, decoder)
+        arr, name = _decode_via_ladder(p)
         if arr is not None:
             return _dhash_bits(arr, hash_size), name
         import hashlib

@@ -1,15 +1,16 @@
-"""ctypes bindings to the system image codecs — the native fast tier
-of the image decode ladder.
+"""ctypes bindings to the system image codecs — the decode ladder's
+only decoders for PNG, GIF, JPEG, WebP, TIFF, AVIF, HEIC and SVG.
 
-``multimodal.py``'s pure-python decoders are the portable baseline
-(and the differential oracle for this module: every native decoder is
-cross-checked against its pure twin in tests/test_native_codecs.py).
-But pure-python entropy decode runs at ~1-10 MB/s/core while the
-battle-tested C codecs that ship in this container do 100+ — at crawl
+``multimodal._IMAGE_LADDER`` keeps pure-python decoders only for the
+formats no system codec covers (BMP, PNM, ICO). The battle-tested C
+codecs that ship in this container decode at 100+ MB/s/core; at crawl
 scale that is the difference between decode being free and decode
 being the job. This module binds them with **totality as the
 contract**: every function returns an ``(h, w, 3) uint8`` array or
-``None``; no exception, no abort, no stderr spam escapes a worker.
+``None``; no exception, no abort, no stderr spam escapes a worker. A
+host without a library (or without gcc for the JPEG shim) simply
+lacks that format: ``native_image_ladder()`` omits it and its
+payloads fall to the digest stub, counted by ``decoder_report``.
 
 Per-codec safety notes (the reason each binding looks the way it
 does):
@@ -23,43 +24,42 @@ does):
 - **PNG** (`libpng16.so.16`): the libpng *simplified API*
   (``png_image_begin_read_from_memory``) catches internal longjmps
   itself and returns 0 on error — ctypes-safe. We read RGBA and drop
-  alpha in numpy so the result matches the pure decoder's
-  alpha-dropped semantics (libpng would otherwise composite onto a
-  background).
+  alpha in numpy (libpng would otherwise composite onto a
+  background). 16-bit samples are read with the 16BIT_sRGB flag so
+  they scale to 8 bits as ``(v * 255 + 32767) // 65535`` instead of
+  being treated as linear light.
 - **TIFF** (`libtiff.so.6`): plain error-code API; handlers are
   nulled once to silence stderr. Decode via ``TIFFOpen`` on a tmpfs
   spool file + ``TIFFReadRGBAImageOriented`` with ``stopOnError=1``
-  (a corrupt strip declines to the pure tier rather than returning
-  half-garbage pixels).
+  (a corrupt strip declines rather than returning half-garbage
+  pixels).
 - **GIF** (`libgif.so.7`): ``DGifOpen`` with a read callback +
   ``DGifSlurp``; error-code API. Struct layouts are giflib 5.x
-  (verified empirically in the tests against the encoder twin).
-  Frames offset into the canvas or interlaced rasters are handled;
-  anything structurally odd declines to the pure tier.
+  (verified empirically in the tests against the encoder twin). The
+  first frame is returned at its own size, interlaced rasters
+  deinterlaced; a frame offset into the logical screen is not
+  composited onto it.
 - **WebP** (`libwebp.so.7`): ``WebPDecodeRGB`` returns NULL on any
-  error — the easy one. (The VP8 pure decoder is bit-exact against
-  this library's YUV output in tests/test_vp8.py.)
+  error — the easy one. It refuses animations, so an animated WebP's
+  first frame is re-wrapped as a still image first.
 - **AVIF / HEIC / SVG** (`libavif`+dav1d, `libheif`+libde265,
-  `librsvg`+cairo): NEW coverage, not acceleration — no pure tier
-  exists for AV1/HEVC/vector rasterization. AVIF declares only the
-  version-gated avifRGBImage struct; HEIC crosses only the public
-  heif_error; SVG uses GError out-params. All three validate by
-  in-container encode->decode round-trips (the same libraries
-  encode) plus mutation/truncation totality sweeps.
+  `librsvg`+cairo). AVIF declares only the version-gated avifRGBImage
+  struct; HEIC crosses only the public heif_error; SVG uses GError
+  out-params. All three validate by in-container encode->decode
+  round-trips (the same libraries encode) plus mutation/truncation
+  totality sweeps.
 
-Reproducibility note: lossless formats (PNG/GIF/TIFF/VP8L) decode
-bit-identically native vs pure. JPEG and lossy-WebP RGB may differ by
-a few LSBs (the JPEG spec allows IDCT tolerance; upsamplers differ),
-so pipelines that must be bit-reproducible across heterogeneous
-clusters should pin ``decoder="pure"``; ``"auto"`` (the default)
-takes the ~100x throughput instead.
+Reproducibility note: lossless formats decode to the source pixels
+exactly. JPEG and lossy-WebP RGB is whatever the node's libjpeg /
+libwebp build produces; the JPEG spec allows IDCT tolerance and
+upsamplers differ, so those pixels may differ by a few LSBs between
+hosts with different library builds.
 
 Scale posture: libraries are dlopen'd once per python worker and
 cached; the shim compiles once per node into a content-hash-keyed
 /tmp path (atomic rename, racing workers converge). Payload bytes
-stay row-local; the max-pixels cap mirrors
-``multimodal._MAX_IMAGE_SAMPLES`` so native and pure tiers refuse the
-same oversized images.
+stay row-local; ``_MAX_SAMPLES`` is the one image-size cap the whole
+decode ladder refuses oversized images at.
 """
 from __future__ import annotations
 
@@ -71,8 +71,7 @@ import threading
 
 import numpy as np
 
-# mirrors multimodal._MAX_IMAGE_SAMPLES (= h * w * channels) without a
-# circular import; pixels = samples / 3
+# the decode ladder's size cap in samples (h * w * channels)
 _MAX_SAMPLES = 50_000_000
 _MAX_PIXELS = _MAX_SAMPLES // 3
 
@@ -168,9 +167,9 @@ def encode_jpeg_native(
     arithmetic: bool = False, progressive: bool = False,
 ) -> bytes | None:
     """JPEG-encode an (h, w, 3) uint8 array through the shim — the
-    fixture generator that lets the ARITHMETIC decode path (a format
-    the pure tier gates) be proven in-container, and the encoder the
-    throughput probe uses. None when the shim/gcc is unavailable."""
+    fixture generator that lets the ARITHMETIC decode path be proven
+    in-container, and the encoder the throughput probe uses. None
+    when the shim/gcc is unavailable."""
     shim = _jpeg_shim()
     if shim is None:
         return None
@@ -224,11 +223,40 @@ def decode_jpeg_native(data: bytes | None) -> np.ndarray | None:
 # ---------------------------------------------------------------- WebP
 
 
+def _webp_first_frame(data: bytes) -> bytes | None:
+    """An animated WebP's first ANMF frame re-wrapped as a still
+    RIFF/WEBP around its VP8/VP8L chunk (``WebPDecodeRGB`` refuses
+    animations); any other payload comes back unchanged."""
+    if data[12:16] != b"VP8X" or len(data) < 21 or not data[20] & 0x02:
+        return data
+    pos = 12
+    while pos + 8 <= len(data):
+        size = int.from_bytes(data[pos + 4 : pos + 8], "little")
+        if data[pos : pos + 4] == b"ANMF":
+            # sub-chunks follow the 16-byte frame header
+            p, end = pos + 24, min(pos + 8 + size, len(data))
+            while p + 8 <= end:
+                n = int.from_bytes(data[p + 4 : p + 8], "little")
+                if data[p : p + 4] in (b"VP8 ", b"VP8L"):
+                    chunk = data[p : p + 8 + n] + b"\x00" * (n & 1)
+                    return (
+                        b"RIFF" + (4 + len(chunk)).to_bytes(4, "little")
+                        + b"WEBP" + chunk
+                    )
+                p += 8 + n + (n & 1)
+            return None
+        pos += 8 + size + (size & 1)
+    return None
+
+
 def decode_webp_native(data: bytes | None) -> np.ndarray | None:
     if (
         not data or len(data) < 16
         or data[:4] != b"RIFF" or data[8:12] != b"WEBP"
     ):
+        return None
+    data = _webp_first_frame(data)
+    if data is None:
         return None
     lw = _lib("libwebp.so.7")
     if lw is None:
@@ -281,16 +309,13 @@ class _PngImage(ctypes.Structure):
 
 _PNG_IMAGE_VERSION = 1
 _PNG_FORMAT_RGBA = 0x03  # FLAG_ALPHA | FLAG_COLOR
+# 16-bit samples are sRGB-encoded, not linear: scale them to 8 bits
+# instead of gamma-encoding them
+_PNG_IMAGE_FLAG_16BIT_sRGB = 0x04
 
 
 def decode_png_native(data: bytes | None) -> np.ndarray | None:
     if not data or len(data) < 26 or data[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    if data[24] == 16:
-        # 16-bit: the simplified API treats 16-bit samples as LINEAR
-        # and sRGB-encodes them into 8-bit output (measured: mean
-        # diff ~47 vs the pure tier's raw >>8) — decline to the pure
-        # decoder rather than silently change pixel semantics
         return None
     lp = _lib("libpng16.so.16")
     if lp is None:
@@ -310,9 +335,10 @@ def decode_png_native(data: bytes | None) -> np.ndarray | None:
         lp.png_image_free(ctypes.byref(img))
         return None
     # read RGBA and drop alpha ourselves: asking libpng for RGB would
-    # composite alpha onto a background, which the pure decoder and
-    # the rest of the ladder do not do
+    # composite alpha onto a background, which the rest of the ladder
+    # does not do
     img.format = _PNG_FORMAT_RGBA
+    img.flags |= _PNG_IMAGE_FLAG_16BIT_sRGB
     buf = np.empty((h, w, 4), dtype=np.uint8)
     ok = lp.png_image_finish_read(
         ctypes.byref(img), None,
@@ -483,7 +509,7 @@ def decode_gif_native(data: bytes | None) -> np.ndarray | None:
     err = ctypes.c_int(0)
     # tmpfs spool + DGifOpenFileName: the read-callback path crosses
     # back into python once per ~255-byte sub-block, which dominated
-    # decode time (measured: callback 6-9x vs pure, spool ~3x more)
+    # decode time (measured: the spool path is ~3x faster)
     spool_dir = "/dev/shm" if os.path.isdir("/dev/shm") else None
     spool = None
     try:
@@ -527,12 +553,6 @@ def decode_gif_native(data: bytes | None) -> np.ndarray | None:
             or not first.RasterBits
         ):
             return None
-        if desc.Left != 0 or desc.Top != 0 or (
-            (w, h) != (g.SWidth, g.SHeight)
-        ):
-            # partial-canvas first frame: compositing semantics live
-            # in the pure decoder — decline rather than diverge
-            return None
         cmap = desc.ColorMap if desc.ColorMap else g.SColorMap
         if not cmap:
             return None
@@ -562,12 +582,11 @@ def decode_gif_native(data: bytes | None) -> np.ndarray | None:
 
 
 # ---------------------------------------------------------------- AVIF
-# libavif ships in this container (with dav1d/gav1 underneath). There
-# is no pure-python AV1 decoder in the repo, so this tier ADDS a
-# format instead of accelerating one: without it AVIF falls to the
-# digest stub. Structs are version-gated — avifRGBImage grew a
-# maxThreads field at 1.0 — and validated empirically by an
-# encode->decode round-trip in the tests (libavif encodes too).
+# libavif ships in this container (with dav1d/gav1 underneath);
+# without it AVIF falls to the digest stub. Structs are version-gated
+# — avifRGBImage grew a maxThreads field at 1.0 — and validated
+# empirically by an encode->decode round-trip in the tests (libavif
+# encodes too).
 
 _AVIF_RGB_COMMON = [
     ("width", ctypes.c_uint32),
@@ -695,8 +714,7 @@ def decode_avif_native(data: bytes | None) -> np.ndarray | None:
 # libheif + libde265 ship here: HEIC (the default iPhone photo format)
 # decodes through a fully OPAQUE-handle C API — the only struct
 # crossing the boundary is heif_error, which is part of the stable
-# public API (code/subcode/message, returned by value). Like AVIF,
-# this ADDS a format: no pure HEVC tier exists.
+# public API (code/subcode/message, returned by value).
 
 class _HeifError(ctypes.Structure):
     _fields_ = [
@@ -933,8 +951,8 @@ def decode_svg_native(data: bytes | None) -> np.ndarray | None:
 def native_image_ladder() -> tuple:
     """(decoder-column value, fn, coverage) rows for the codecs whose
     libraries are actually loadable here — probed once per worker.
-    Order mirrors the pure ladder; each fn sniffs magic bytes first,
-    so a miss costs a few comparisons."""
+    Each fn sniffs magic bytes first, so a miss costs a few
+    comparisons."""
     with _LOCK:
         if "ladder" in _CACHE:
             return _CACHE["ladder"]
@@ -948,8 +966,8 @@ def native_image_ladder() -> tuple:
     if _lib("libgif.so.7") is not None:
         rows.append((
             "gif-native", decode_gif_native,
-            "GIF first frame via system giflib 5 (full-canvas frames; "
-            "offset frames decline to the pure tier)",
+            "GIF first frame via system giflib 5 (at the frame's own "
+            "size, interlaced rasters deinterlaced)",
         ))
     if _jpeg_shim() is not None:
         rows.append((
@@ -962,7 +980,8 @@ def native_image_ladder() -> tuple:
     if _lib("libwebp.so.7") is not None:
         rows.append((
             "webp-native", decode_webp_native,
-            "WebP lossless + lossy via system libwebp",
+            "WebP lossless + lossy (first frame of animations) via "
+            "system libwebp",
         ))
     if _lib("libtiff.so.6") is not None:
         rows.append((
@@ -972,14 +991,12 @@ def native_image_ladder() -> tuple:
     if _avif() is not None:
         rows.append((
             "avif-native", decode_avif_native,
-            "AVIF via system libavif/dav1d (no pure tier exists: this "
-            "is new real coverage, not acceleration)",
+            "AVIF via system libavif/dav1d",
         ))
     if _heif() is not None:
         rows.append((
             "heic-native", decode_heif_native,
-            "HEIC/HEIF via system libheif/libde265 (iPhone photos; "
-            "new real coverage — no pure HEVC tier exists)",
+            "HEIC/HEIF via system libheif/libde265 (iPhone photos)",
         ))
     if _rsvg() is not None:
         rows.append((

@@ -671,36 +671,44 @@ def canonical_url(col: str) -> Column:
     parameters (param order never changes the resource), and drop the
     ``?`` entirely when nothing survives. Pure JVM —
     ``try_parse_url`` + array expressions, no Python; NULL when the
-    value does not parse as an http(s) URL. Takes the column's name."""
-    host = url_host(col)
-    c = F.col(col)
-    scheme = F.lower(F.try_parse_url(c, F.lit("PROTOCOL")))
-    # HOST strips the port already via url_host; recover a NON-default
-    # explicit port from the authority
-    auth = F.try_parse_url(c, F.lit("AUTHORITY"))
-    port = F.regexp_extract(auth, r":(\d+)$", 1)
-    default = F.when(scheme == "https", F.lit("443")).otherwise(F.lit("80"))
-    port_sfx = F.when(
-        (port != "") & (port != default), F.concat(F.lit(":"), port)
-    ).otherwise(F.lit(""))
-    path = F.coalesce(F.try_parse_url(c, F.lit("PATH")), F.lit(""))
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    query = F.coalesce(F.try_parse_url(c, F.lit("QUERY")), F.lit(""))
-    drop = F.array(*[F.lit(p) for p in _TRACKING_PARAMS])
-    params = F.filter(
-        F.split(query, "&"),
-        lambda kv: (kv != "")
-        & ~F.array_contains(drop, F.lower(F.split(kv, "=")[0]))
-        & ~F.lower(kv).startswith("utm_"),
+    value does not parse as an http(s) URL. Takes the column's name.
+    One parsed SQL expression: each URL part is parsed once per row
+    and bound (``sql_let``) for every use."""
+    from .._litarr import sql_col, sql_let, sql_str
+
+    u = sql_col(col)
+    parts = (
+        f"named_struct('scheme', lower(try_parse_url({u}, 'PROTOCOL')),"
+        f" 'host', {_url_host_sql(u)},"
+        # HOST strips the port; recover a NON-default explicit port
+        # from the authority
+        f" 'port', regexp_extract(try_parse_url({u}, 'AUTHORITY'),"
+        " ':(\\\\d+)$', 1),"
+        f" 'path', coalesce(try_parse_url({u}, 'PATH'), ''),"
+        f" 'query', coalesce(try_parse_url({u}, 'QUERY'), ''))"
     )
-    qnorm = F.array_join(F.array_sort(params), "&")
-    q_sfx = F.when(qnorm != "", F.concat(F.lit("?"), qnorm)).otherwise(
-        F.lit("")
+    drop = ", ".join(sql_str(p) for p in _TRACKING_PARAMS)
+    qnorm = (
+        "array_join(array_sort(filter(split(__p.query, '&'),"
+        f" kv -> kv != '' AND NOT array_contains(array({drop}),"
+        " lower(split(kv, '=')[0])) AND NOT startswith(lower(kv), 'utm_'))),"
+        " '&')"
     )
-    out = F.concat(scheme, F.lit("://"), host, port_sfx, path, q_sfx)
-    return F.when(
-        scheme.isin("http", "https") & host.isNotNull(), out
+    q_sfx = sql_let(
+        qnorm, "__q", "CASE WHEN __q != '' THEN concat('?', __q) ELSE '' END"
     )
+    port_sfx = (
+        "CASE WHEN __p.port != '' AND __p.port != CASE WHEN"
+        " __p.scheme = 'https' THEN '443' ELSE '80' END"
+        " THEN concat(':', __p.port) ELSE '' END"
+    )
+    path = "CASE WHEN __p.path = '' THEN '/' ELSE __p.path END"
+    body = (
+        "CASE WHEN __p.scheme IN ('http', 'https') AND __p.host IS NOT NULL"
+        f" THEN concat(__p.scheme, '://', __p.host, {port_sfx}, {path},"
+        f" {q_sfx}) END"
+    )
+    return F.expr(sql_let(parts, "__p", body))
 
 
 def _url_host_sql(c: str) -> str:
@@ -745,13 +753,14 @@ def url_features(
     (number of non-empty path segments), ``{prefix}is_ip``.
 
     Rendered as parsed SQL text (the _litarr idiom): a Column-API
-    build cost ~0.2 s of py4j round-trips per construction. Value-
+    build cost ~0.2 s of py4j round-trips per construction. The host
+    and its labels are projected once as hidden columns (dropped at
+    the end), so each row's URL is parsed and split once. Value-
     checked by the oracle (q30) and the web tests."""
     from .._litarr import sql_ident, sql_str
 
     uq = sql_ident(url_col)
-    host = _url_host_sql(uq)
-    labels = f"split({host}, '\\\\.')"
+    host, labels = sql_ident("__oc_url_host"), sql_ident("__oc_url_labels")
     n = f"size({labels})"
     tld = f"element_at({labels}, -1)"
     sld = f"(CASE WHEN {n} >= 2 THEN element_at({labels}, -2) END)"
@@ -767,14 +776,19 @@ def url_features(
     path = f"coalesce(try_parse_url({uq}, 'PATH'), '')"
     depth = f"size(filter(split({path}, '/'), s -> s != ''))"
     pq = lambda name: sql_ident(f"{prefix}{name}")  # noqa: E731
-    return df.selectExpr(
-        "*",
-        f"{host} AS {pq('host')}",
-        f"(CASE WHEN {is_ip} THEN {host} ELSE {domain} END)"
-        f" AS {pq('domain')}",
-        f"(CASE WHEN NOT {is_ip} THEN {tld} END) AS {pq('tld')}",
-        f"{depth} AS {pq('path_depth')}",
-        f"{is_ip} AS {pq('is_ip')}",
+    return (
+        df.selectExpr("*", f"{_url_host_sql(uq)} AS {host}")
+        .selectExpr("*", f"split({host}, '\\\\.') AS {labels}")
+        .selectExpr(
+            "*",
+            f"{host} AS {pq('host')}",
+            f"(CASE WHEN {is_ip} THEN {host} ELSE {domain} END)"
+            f" AS {pq('domain')}",
+            f"(CASE WHEN NOT {is_ip} THEN {tld} END) AS {pq('tld')}",
+            f"{depth} AS {pq('path_depth')}",
+            f"{is_ip} AS {pq('is_ip')}",
+        )
+        .drop("__oc_url_host", "__oc_url_labels")
     )
 
 

@@ -6,6 +6,18 @@ import pytest
 
 import opencosmo_spark as oc
 from opencosmo_spark import analysis, plugins
+from opencosmo_spark.pipeline.native_codecs import native_image_ladder
+
+_LADDER_NAMES = {r[0] for r in native_image_ladder()}
+
+
+def _needs(name):
+    """Skip unless the system codec for ``name`` loads on this host —
+    each native tier is optional, and its format is lost without it."""
+    return pytest.mark.skipif(
+        f"{name}-native" not in _LADDER_NAMES,
+        reason=f"native {name} codec unavailable",
+    )
 
 
 @pytest.fixture(scope="module")
@@ -466,18 +478,19 @@ def _make_png(
     )
 
 
+@_needs("png")
 def test_decode_png_all_filters_numpy_differential():
-    """The pure-python PNG path must invert every scanline filter type
+    """The PNG decoder must invert every scanline filter type
     (None/Sub/Up/Average/Paeth) exactly, for gray / gray+alpha / RGB /
     RGBA, recovering the original pixel array bit-for-bit."""
-    from opencosmo_spark.pipeline.multimodal import _decode_png
+    from opencosmo_spark.pipeline.native_codecs import decode_png_native
 
     rng = np.random.default_rng(61)
     for color_type, nch in ((0, 1), (4, 2), (2, 3), (6, 4)):
         img = rng.integers(0, 256, size=(7, 5, nch), dtype=np.uint8)
         # 7 rows cycle through all five filters (and repeat two)
         png = _make_png(img, color_type, row_filters=[0, 1, 2, 3, 4])
-        got = _decode_png(png)
+        got = decode_png_native(png)
         assert got is not None, f"color_type={color_type} failed to decode"
         if color_type == 0:
             want = np.repeat(img, 3, axis=2)
@@ -488,21 +501,23 @@ def test_decode_png_all_filters_numpy_differential():
         np.testing.assert_array_equal(got, want)
 
     img = rng.integers(0, 256, size=(3, 3, 3), dtype=np.uint8)
-    # honest gates: 16-bit falls through (None), as do truncated
-    # streams and non-PNG bytes; a header CLAIMING Adam7 over
-    # sequential scanline data fails the pass-length accounting
-    assert _decode_png(_make_png(img, 2, [0], depth=16)) is None
-    assert _decode_png(_make_png(img, 2, [0], interlace=1)) is None
-    assert _decode_png(_make_png(img, 2, [0])[:-12]) is not None  # IEND loss ok
-    assert _decode_png(_make_png(img, 2, [0])[:30]) is None
-    assert _decode_png(b"\x89PNG\r\n\x1a\n" + b"junk" * 20) is None
-    assert _decode_png(b"not a png at all, nope") is None
+    # honest gates: a header CLAIMING 16-bit or Adam7 over 8-bit
+    # sequential scanline data comes up short and falls through
+    # (None), as do truncated streams and non-PNG bytes
+    assert decode_png_native(_make_png(img, 2, [0], depth=16)) is None
+    assert decode_png_native(_make_png(img, 2, [0], interlace=1)) is None
+    # IEND loss ok
+    assert decode_png_native(_make_png(img, 2, [0])[:-12]) is not None
+    assert decode_png_native(_make_png(img, 2, [0])[:30]) is None
+    assert decode_png_native(b"\x89PNG\r\n\x1a\n" + b"junk" * 20) is None
+    assert decode_png_native(b"not a png at all, nope") is None
 
 
+@_needs("png")
 def test_decode_image_features_real_png(spark):
     """End-to-end PNG through decode_image_features: real channel-mean
     features identical to the BMP twin of the same pixels, decoder
-    flags 'png', corrupt PNGs stub."""
+    flags 'png-native', corrupt PNGs stub."""
     import pandas as pd
 
     from opencosmo_spark.pipeline.multimodal import (
@@ -526,12 +541,11 @@ def test_decode_image_features_real_png(spark):
     out = (
         decode_image_features(
             spark.createDataFrame(rows, MEDIA_SCHEMA), feature_dim=16,
-            decoder="pure",
         )
         .toPandas()
         .set_index("media_id")
     )
-    assert out.loc[1, "decoder"] == "png"
+    assert out.loc[1, "decoder"] == "png-native"
     assert out.loc[2, "decoder"] == "stub-sha256"
     feats = out.loc[1, "features"]
     np.testing.assert_allclose(feats[:3], [510 / 4 / 255.0] * 3, rtol=1e-6)
@@ -808,18 +822,19 @@ def test_pairwise_velocity_and_marked_correlation_dataset_entry(
         marked_correlation(halos, [0.0, 10.0], mark_col="nope")
 
 
+@_needs("png")
 def test_decode_png_palette_numpy_differential():
     """Color-type-3 PNGs resolve index scanlines through PLTE: decoded
     RGB equals palette[idx] bit-for-bit across every filter type; a
     tRNS chunk is tolerated (alpha-dropping convention); missing /
-    malformed palettes and out-of-range indices are honest Nones."""
-    from opencosmo_spark.pipeline.multimodal import _decode_png
+    malformed palettes are honest Nones."""
+    from opencosmo_spark.pipeline.native_codecs import decode_png_native
 
     rng = np.random.default_rng(73)
     palette = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
     idx = rng.integers(0, 16, size=(7, 5, 1), dtype=np.uint8)
     png = _make_png(idx, 3, row_filters=[0, 1, 2, 3, 4], palette=palette)
-    got = _decode_png(png)
+    got = decode_png_native(png)
     assert got is not None
     np.testing.assert_array_equal(got, palette[idx[..., 0]])
 
@@ -827,18 +842,26 @@ def test_decode_png_palette_numpy_differential():
     png_t = _make_png(
         idx, 3, row_filters=[0], palette=palette, trns=bytes([128] * 16)
     )
-    np.testing.assert_array_equal(_decode_png(png_t), palette[idx[..., 0]])
+    np.testing.assert_array_equal(
+        decode_png_native(png_t), palette[idx[..., 0]]
+    )
 
-    # honest gates: no PLTE, non-multiple-of-3 PLTE, index past table
-    assert _decode_png(_make_png(idx, 3, [0])) is None
+    # honest gates: no PLTE, non-multiple-of-3 PLTE
+    assert decode_png_native(_make_png(idx, 3, [0])) is None
     assert (
-        _decode_png(
+        decode_png_native(
             _make_png(idx, 3, [0], palette=palette.reshape(-1)[:-1])
         )
         is None
     )
-    small = palette[:8]  # indices up to 15 overflow an 8-entry table
-    assert _decode_png(_make_png(idx, 3, [0], palette=small)) is None
+    # indices up to 15 overflow an 8-entry table: libpng decodes the
+    # indices past the table as black rather than refusing the image
+    small = palette[:8]
+    padded = np.vstack([small, np.zeros((8, 3), np.uint8)])
+    np.testing.assert_array_equal(
+        decode_png_native(_make_png(idx, 3, [0], palette=small)),
+        padded[idx[..., 0]],
+    )
 
 
 def test_audio_spectral_features_physics_and_twin(spark):
@@ -1048,18 +1071,19 @@ def _make_png_adam7(arr, color_type, row_filters, palette=None):
     )
 
 
+@_needs("png")
 def test_decode_png_adam7_numpy_differential():
     """Adam7 deinterlacing: bit-exact recovery across color types,
     all five filter types cycling within each pass, and awkward
     dimensions (1xN, Nx1, sizes straddling the 8x8 pass grid)."""
-    from opencosmo_spark.pipeline.multimodal import _decode_png
+    from opencosmo_spark.pipeline.native_codecs import decode_png_native
 
     rng = np.random.default_rng(83)
     for color_type, nch in ((0, 1), (4, 2), (2, 3), (6, 4)):
         for h, w in ((13, 11), (8, 8), (1, 9), (9, 1), (3, 3), (16, 5)):
             img = rng.integers(0, 256, size=(h, w, nch), dtype=np.uint8)
             png = _make_png_adam7(img, color_type, row_filters=[0, 1, 2, 3, 4])
-            got = _decode_png(png)
+            got = decode_png_native(png)
             assert got is not None, (color_type, h, w)
             if color_type == 0:
                 want = np.repeat(img, 3, axis=2)
@@ -1073,11 +1097,11 @@ def test_decode_png_adam7_numpy_differential():
     pal = rng.integers(0, 256, size=(7, 3), dtype=np.uint8)
     idx = rng.integers(0, 7, size=(10, 6, 1), dtype=np.uint8)
     png = _make_png_adam7(idx, 3, row_filters=[0, 2], palette=pal)
-    got = _decode_png(png)
+    got = decode_png_native(png)
     np.testing.assert_array_equal(got, pal[idx[..., 0]])
 
-    # truncated interlaced stream (half the filtered bytes): the
-    # pass-length accounting must return None, not mis-scatter
+    # truncated interlaced stream (half the filtered bytes): must
+    # return None, not mis-scatter
     import struct
     import zlib
 
@@ -1095,13 +1119,14 @@ def test_decode_png_adam7_numpy_differential():
         )
 
     trunc = full[: i - 4] + chunk(b"IDAT", half) + chunk(b"IEND", b"")
-    assert _decode_png(trunc) is None
+    assert decode_png_native(trunc) is None
 
 
+@_needs("png")
 def test_decoder_report_counts_stub_rows(spark):
     """decoder_report: the per-format ledger separates real decodes
-    from digest stubs (the honest dataset-card accounting for formats
-    whose codec is gated, e.g. JPEG without PIL)."""
+    from digest stubs (the honest dataset-card accounting for payloads
+    no decoder takes, e.g. corrupt JPEGs)."""
     import pandas as pd
 
     from opencosmo_spark.pipeline.multimodal import (
@@ -1129,13 +1154,12 @@ def test_decoder_report_counts_stub_rows(spark):
     )
     dec = decode_image_features(
         spark.createDataFrame(rows, MEDIA_SCHEMA), feature_dim=8,
-        decoder="pure",
     )
     rep = {
         (r["mime"], r["decoder"]): (r["n"], r["frac_of_mime"])
         for r in decoder_report(dec).collect()
     }
-    assert rep[("image/png", "png")] == (2, 1.0)  # incl. the Adam7 one
+    assert rep[("image/png", "png-native")] == (2, 1.0)  # incl. Adam7
     assert rep[("image/jpeg", "stub-sha256")] == (2, 1.0)
 
 
@@ -1216,42 +1240,44 @@ def _make_gif(indices, palette, mcs=4, interlace=False, extra_frame=False,
     return bytes(out)
 
 
+@_needs("gif")
 def test_decode_gif_numpy_differential():
     """Hand-encoded GIFs (own LZW writer, clear-often scheme) decode
     to exactly palette[indices]: plain, interlaced, multi-frame
     (first frame wins), extension skipping; truncated streams and
     non-GIFs refuse."""
-    from opencosmo_spark.pipeline.multimodal import _decode_gif
+    from opencosmo_spark.pipeline.native_codecs import decode_gif_native
 
     rng = np.random.default_rng(11)
     pal = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
     ind = rng.integers(0, 16, size=(13, 9), dtype=np.uint8)
     want = pal[ind]
 
-    np.testing.assert_array_equal(_decode_gif(_make_gif(ind, pal)), want)
+    np.testing.assert_array_equal(decode_gif_native(_make_gif(ind, pal)), want)
     np.testing.assert_array_equal(
-        _decode_gif(_make_gif(ind, pal, interlace=True)), want
+        decode_gif_native(_make_gif(ind, pal, interlace=True)), want
     )
     np.testing.assert_array_equal(
-        _decode_gif(_make_gif(ind, pal, extra_frame=True)), want
+        decode_gif_native(_make_gif(ind, pal, extra_frame=True)), want
     )
     # a 1-row image exercises the interlace degenerate case
     one = ind[:1]
     np.testing.assert_array_equal(
-        _decode_gif(_make_gif(one, pal)), pal[one]
+        decode_gif_native(_make_gif(one, pal)), pal[one]
     )
-    assert _decode_gif(_make_gif(ind, pal, truncate=True)) is None
-    assert _decode_gif(b"GIF89a" + b"\x00" * 4) is None
-    assert _decode_gif(b"notagif") is None
-    assert _decode_gif(None) is None
+    assert decode_gif_native(_make_gif(ind, pal, truncate=True)) is None
+    assert decode_gif_native(b"GIF89a" + b"\x00" * 4) is None
+    assert decode_gif_native(b"notagif") is None
+    assert decode_gif_native(None) is None
 
 
+@_needs("gif")
 def test_decode_gif_real_lzw_compression():
     """A REAL LZW-compressed stream (reference encoder with growing
     code sizes, written here independently) decodes identically —
     exercising dictionary growth, the KwKwK case, and code-size
     bumps that the clear-often scheme never reaches."""
-    from opencosmo_spark.pipeline.multimodal import _gif_lzw
+    from opencosmo_spark.pipeline.native_codecs import decode_gif_native
 
     rng = np.random.default_rng(7)
     # low-entropy stream so LZW actually builds long entries
@@ -1294,18 +1320,35 @@ def test_decode_gif_real_lzw_compression():
     if nbits:
         out.append(acc & 0xFF)
 
-    got = _gif_lzw(mcs, bytes(out), len(seq))
-    assert got is not None and bytes(got) == seq
+    # wrap the stream as the one 80x50 frame of a 4-colour GIF
+    w, h = 80, 50
+    pal = np.array(
+        [[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], np.uint8
+    )
+    gif = bytearray(b"GIF89a")
+    gif += w.to_bytes(2, "little") + h.to_bytes(2, "little")
+    gif += bytes([0x80 | (mcs - 1), 0, 0]) + bytes(pal.reshape(-1))
+    gif += b"\x2c" + b"\x00" * 4
+    gif += w.to_bytes(2, "little") + h.to_bytes(2, "little")
+    gif += bytes([0, mcs])
+    for i in range(0, len(out), 255):
+        gif += bytes([len(out[i : i + 255])]) + out[i : i + 255]
+    gif += b"\x00\x3b"
+    got = decode_gif_native(bytes(gif))
+    idx = np.frombuffer(seq, np.uint8).reshape(h, w)
+    assert got is not None
+    np.testing.assert_array_equal(got, pal[idx])
 
 
+@_needs("gif")
 def test_decode_image_features_gif_lane(spark):
     """The Spark ladder takes the gif path and the features equal the
     numpy twin of the decoded pixels."""
     from opencosmo_spark.pipeline.multimodal import (
-        _decode_gif,
         _pixel_features,
         decode_image_features,
     )
+    from opencosmo_spark.pipeline.native_codecs import decode_gif_native
 
     rng = np.random.default_rng(23)
     pal = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
@@ -1319,15 +1362,13 @@ def test_decode_image_features_gif_lane(spark):
         [(i, p) for i, p in enumerate(payloads)],
         "media_id long, payload binary",
     )
-    out = decode_image_features(
-        df, feature_dim=16, decoder="pure"
-    ).toPandas()
+    out = decode_image_features(df, feature_dim=16).toPandas()
     decs = dict(zip(out.media_id, out.decoder))
-    assert all(decs[i] == "gif" for i in range(4))
+    assert all(decs[i] == "gif-native" for i in range(4))
     assert decs[4] == "stub-sha256"
     feats = dict(zip(out.media_id, out.features))
     for i in range(4):
-        want = _pixel_features(_decode_gif(payloads[i]), 16)
+        want = _pixel_features(decode_gif_native(payloads[i]), 16)
         np.testing.assert_allclose(feats[i], want, rtol=1e-6)
 
 
@@ -1500,6 +1541,18 @@ def _twin_quantize(rgb, subsample=False, gray=False):
     return h, w, samp, qts, qt_of, grids, expect
 
 
+def _assert_idct_close(got, expect):
+    """JPEG decode is not bit-specified (T.81 allows IDCT tolerance):
+    libjpeg's fixed-point islow IDCT may differ from the twin's exact
+    float reconstruction by a few counts per sample. The bound is
+    tight enough to catch any structural bug (wrong plane, wrong
+    upsample, wrong color matrix land >50 off)."""
+    assert got is not None, "decoder rejected a valid JPEG"
+    assert got.shape == expect.shape
+    d = np.abs(got.astype(int) - expect.astype(int))
+    assert d.max() <= 32 and d.mean() < 1.0, (d.max(), d.mean())
+
+
 def _make_jpeg(rgb, subsample=False, restart=0, gray=False):
     """Independent baseline-JPEG encoder (test twin): forward DCT,
     Annex-K quant tables, per-scan minimal canonical Huffman tables,
@@ -1648,6 +1701,7 @@ def _make_jpeg(rgb, subsample=False, restart=0, gray=False):
     return bytes(out), expect
 
 
+@_needs("jpeg")
 @pytest.mark.parametrize(
     "shape,subsample,restart,gray",
     [
@@ -1658,11 +1712,10 @@ def _make_jpeg(rgb, subsample=False, restart=0, gray=False):
     ],
 )
 def test_decode_jpeg_differential(shape, subsample, restart, gray):
-    """Own baseline-JPEG decoder vs the independent encoder twin: the
+    """Baseline-JPEG decode vs the independent encoder twin: the
     decoded pixels equal the encoder's reconstruction of its own
-    quantized coefficients to within one intensity level (float
-    rounding at the clip boundary)."""
-    from opencosmo_spark.pipeline.multimodal import _decode_jpeg
+    quantized coefficients within the IDCT tolerance."""
+    from opencosmo_spark.pipeline.native_codecs import decode_jpeg_native
 
     rng = np.random.default_rng(sum(shape) + restart)
     h, w = shape
@@ -1682,14 +1735,12 @@ def test_decode_jpeg_differential(shape, subsample, restart, gray):
     payload, expect = _make_jpeg(
         img, subsample=subsample, restart=restart, gray=gray
     )
-    got = _decode_jpeg(payload)
-    assert got is not None, "decoder rejected a valid baseline JPEG"
-    assert got.shape == expect.shape
-    assert int(np.abs(got.astype(int) - expect.astype(int)).max()) <= 1
+    _assert_idct_close(decode_jpeg_native(payload), expect)
 
 
+@_needs("jpeg")
 def test_decode_jpeg_gates_progressive_and_garbage():
-    from opencosmo_spark.pipeline.multimodal import _decode_jpeg
+    from opencosmo_spark.pipeline.native_codecs import decode_jpeg_native
 
     img = np.full((8, 8, 3), 77, np.uint8)
     payload, _ = _make_jpeg(img)
@@ -1699,16 +1750,18 @@ def test_decode_jpeg_gates_progressive_and_garbage():
     prog = bytearray(payload)
     i = prog.find(b"\xff\xc0")
     prog[i + 1] = 0xC2
-    assert _decode_jpeg(bytes(prog)) is None
-    assert _decode_jpeg(b"\xff\xd8\xff\xe0 fake jpeg") is None
-    assert _decode_jpeg(b"") is None
-    assert _decode_jpeg(None) is None
-    assert _decode_jpeg(payload[:40]) is None  # truncated header
+    assert decode_jpeg_native(bytes(prog)) is None
+    assert decode_jpeg_native(b"\xff\xd8\xff\xe0 fake jpeg") is None
+    assert decode_jpeg_native(b"") is None
+    assert decode_jpeg_native(None) is None
+    assert decode_jpeg_native(payload[:40]) is None  # truncated header
 
 
+@_needs("jpeg")
 def test_decode_image_features_real_jpeg(spark):
     """The mapInPandas ladder decodes baseline JPEG rows with the real
-    codec ('jpeg') and decoder_report flips image/jpeg off the stub."""
+    codec ('jpeg-native') and decoder_report flips image/jpeg off the
+    stub."""
     import pandas as pd
 
     from opencosmo_spark.pipeline.multimodal import (
@@ -1733,10 +1786,9 @@ def test_decode_image_features_real_jpeg(spark):
     )
     dec = decode_image_features(
         spark.createDataFrame(rows, MEDIA_SCHEMA), feature_dim=8,
-        decoder="pure",
     )
     got = {r["media_id"]: r for r in dec.collect()}
-    assert got[1]["decoder"] == "jpeg"
+    assert got[1]["decoder"] == "jpeg-native"
     assert got[2]["decoder"] == "stub-sha256"
     # features are the real pixel features of the decoded image
     from opencosmo_spark.pipeline.multimodal import _pixel_features
@@ -1748,7 +1800,7 @@ def test_decode_image_features_real_jpeg(spark):
         (r["mime"], r["decoder"]): r["n"]
         for r in decoder_report(dec).collect()
     }
-    assert rep[("image/jpeg", "jpeg")] == 1
+    assert rep[("image/jpeg", "jpeg-native")] == 1
     assert rep[("image/jpeg", "stub-sha256")] == 1
 
 
@@ -2021,6 +2073,7 @@ def _make_jpeg_progressive(rgb, subsample=False, gray=False):
     return bytes(out), expect
 
 
+@_needs("jpeg")
 @pytest.mark.parametrize(
     "shape,subsample,gray",
     [
@@ -2031,11 +2084,11 @@ def _make_jpeg_progressive(rgb, subsample=False, gray=False):
 )
 def test_decode_jpeg_progressive_differential(shape, subsample, gray):
     """Progressive decode vs TWO oracles: the encoder twin's own
-    reconstruction (within 1 intensity level), and — because the
+    reconstruction (within the IDCT tolerance), and — because the
     progressive twin emits the SAME quantized coefficients as the
     baseline twin — bit-exact equality with the baseline decode of
     the same image."""
-    from opencosmo_spark.pipeline.multimodal import _decode_jpeg
+    from opencosmo_spark.pipeline.native_codecs import decode_jpeg_native
 
     rng = np.random.default_rng(sum(shape))
     h, w = shape
@@ -2051,34 +2104,33 @@ def test_decode_jpeg_progressive_differential(shape, subsample, gray):
         255,
     ).astype(np.uint8)
     prog, expect = _make_jpeg_progressive(img, subsample=subsample, gray=gray)
-    got = _decode_jpeg(prog)
-    assert got is not None, "decoder rejected a valid progressive JPEG"
-    assert got.shape == expect.shape
-    assert int(np.abs(got.astype(int) - expect.astype(int)).max()) <= 1
+    got = decode_jpeg_native(prog)
+    _assert_idct_close(got, expect)
 
     seq, _ = _make_jpeg(img, subsample=subsample, gray=gray)
-    got_seq = _decode_jpeg(seq)
+    got_seq = decode_jpeg_native(seq)
     assert np.array_equal(got, got_seq), (
         "progressive and baseline decodes of identical quantized "
         "coefficients must agree bit-for-bit"
     )
 
 
+@_needs("jpeg")
 def test_decode_jpeg_progressive_eobrun_and_sparse():
     """Adversarial coefficient shapes: a FLAT image (every AC zero ->
     maximal cross-block EOB runs in first and refinement scans) and a
     sparse high-frequency image (long zero runs + isolated small
     coefficients -> ZRL and correction-bit paths). Both must equal
     the baseline decode bit-for-bit."""
-    from opencosmo_spark.pipeline.multimodal import _decode_jpeg
+    from opencosmo_spark.pipeline.native_codecs import decode_jpeg_native
 
     flat = np.full((32, 40, 3), 131, np.uint8)
     prog, expect = _make_jpeg_progressive(flat, subsample=True)
-    got = _decode_jpeg(prog)
+    got = decode_jpeg_native(prog)
     assert got is not None
     seq, _ = _make_jpeg(flat, subsample=True)
-    assert np.array_equal(got, _decode_jpeg(seq))
-    assert int(np.abs(got.astype(int) - expect.astype(int)).max()) <= 1
+    assert np.array_equal(got, decode_jpeg_native(seq))
+    _assert_idct_close(got, expect)
 
     rng = np.random.default_rng(99)
     sparse = np.full((48, 48, 3), 128, np.uint8)
@@ -2088,19 +2140,20 @@ def test_decode_jpeg_progressive_eobrun_and_sparse():
         yy, xx = rng.integers(0, 48, 2)
         sparse[yy, xx] = rng.integers(140, 200, 3)
     prog, expect = _make_jpeg_progressive(sparse)
-    got = _decode_jpeg(prog)
+    got = decode_jpeg_native(prog)
     assert got is not None
     seq, _ = _make_jpeg(sparse)
-    assert np.array_equal(got, _decode_jpeg(seq))
-    assert int(np.abs(got.astype(int) - expect.astype(int)).max()) <= 1
+    assert np.array_equal(got, decode_jpeg_native(seq))
+    _assert_idct_close(got, expect)
 
 
+@_needs("jpeg")
 def test_decode_jpeg_randomized_sweep():
     """Randomized shapes/content through BOTH encoder twins: baseline
     (with and without 4:2:0 + restarts) and progressive must decode
-    to the shared reconstruction within 1 level, and agree with each
-    other bit-for-bit, across 10 random cases."""
-    from opencosmo_spark.pipeline.multimodal import _decode_jpeg
+    to the shared reconstruction within the IDCT tolerance, and agree
+    with each other bit-for-bit, across 10 random cases."""
+    from opencosmo_spark.pipeline.native_codecs import decode_jpeg_native
 
     rng = np.random.default_rng(2026)
     for case in range(10):
@@ -2120,69 +2173,59 @@ def test_decode_jpeg_randomized_sweep():
         seq, expect = _make_jpeg(
             img, subsample=subsample, restart=restart, gray=gray
         )
-        got_seq = _decode_jpeg(seq)
-        assert got_seq is not None, (case, h, w, subsample, gray, restart)
-        assert (
-            int(np.abs(got_seq.astype(int) - expect.astype(int)).max()) <= 1
-        ), (case, "baseline")
+        got_seq = decode_jpeg_native(seq)
+        _assert_idct_close(got_seq, expect)
         prog, _ = _make_jpeg_progressive(img, subsample=subsample, gray=gray)
-        got_prog = _decode_jpeg(prog)
+        got_prog = decode_jpeg_native(prog)
         assert got_prog is not None, (case, "progressive rejected")
         assert np.array_equal(got_prog, got_seq), (case, "path divergence")
 
 
+@_needs("png")
 def test_decode_png_16bit_numpy_differential():
     """16-bit PNG (scientific imagery): byte-pair filtering across
-    every filter type decodes to the high byte of each sample (the
-    v >> 8 reduction), for gray and RGB; 16-bit palette stays
-    rejected (not a legal PNG shape), sub-byte depths still stub."""
-    from opencosmo_spark.pipeline.multimodal import _decode_png
+    every filter type decodes each sample v to the nearest 8-bit
+    value, (v * 255 + 32767) // 65535, for gray, gray+alpha, RGB and
+    RGBA (alpha dropped); a 16-bit palette is not a legal PNG shape
+    and is rejected."""
+    from opencosmo_spark.pipeline.native_codecs import decode_png_native
 
     rng = np.random.default_rng(21)
     h, w = 9, 7
+    for color_type, nch in ((0, 1), (4, 2), (2, 3), (6, 4)):
+        v = rng.integers(0, 65536, (h, w, nch), np.uint32)
+        # 2 byte-channels per sample (hi, lo), so the twin's filter
+        # left-distance equals the real bpp of 2 * nch
+        raw = np.zeros((h, w, 2 * nch), np.uint8)
+        raw[..., 0::2] = v >> 8
+        raw[..., 1::2] = v & 0xFF
+        png = _make_png(raw, color_type, row_filters=[0, 1, 2, 3, 4], depth=16)
+        got = decode_png_native(png)
+        want = ((v * 255 + 32767) // 65535).astype(np.uint8)
+        want = np.repeat(want[..., :1], 3, 2) if nch <= 2 else want[..., :3]
+        np.testing.assert_array_equal(got, want, err_msg=str(color_type))
 
-    # gray 16-bit: encode as 2 byte-channels (hi, lo) so the twin's
-    # filter left-distance equals the real bpp of 2
-    g16 = rng.integers(0, 65536, (h, w), np.uint32).astype(np.uint16)
-    gb = np.stack([(g16 >> 8) & 0xFF, g16 & 0xFF], axis=-1).astype(np.uint8)
-    png = _make_png(gb, 0, row_filters=[0, 1, 2, 3, 4], depth=16)
-    got = _decode_png(png)
-    assert got is not None
-    want = (g16 >> 8).astype(np.uint8)
-    assert np.array_equal(got, np.repeat(want[..., None], 3, axis=2))
-
-    # RGB 16-bit: 6 byte-channels, bpp 6
-    c16 = rng.integers(0, 65536, (h, w, 3), np.uint32).astype(np.uint16)
-    cb = np.zeros((h, w, 6), np.uint8)
-    cb[..., 0::2] = (c16 >> 8).astype(np.uint8)
-    cb[..., 1::2] = (c16 & 0xFF).astype(np.uint8)
-    png = _make_png(cb, 2, row_filters=[4, 3, 2, 1, 0], depth=16)
-    got = _decode_png(png)
-    assert got is not None
-    assert np.array_equal(got, (c16 >> 8).astype(np.uint8))
-
-    # 16-bit palette is illegal -> rejected; 4-bit depth still stubs
     pal = np.array([[1, 2, 3]], np.uint8)
     idx = np.zeros((2, 2, 1), np.uint8)
     bad = _make_png(idx, 3, row_filters=[0], depth=16, palette=pal)
-    assert _decode_png(bad) is None
-    low = _make_png(idx, 0, row_filters=[0], depth=4)
-    assert _decode_png(low) is None
+    assert decode_png_native(bad) is None
 
 
+@_needs("png")
+@_needs("gif")
+@_needs("jpeg")
 def test_image_decoders_are_total_under_mutation():
-    """Crawl payloads are routinely corrupt: every built-in decoder
+    """Crawl payloads are routinely corrupt: every image decoder
     must be TOTAL — return an array or None, never raise — under
     random byte mutations, truncations, and garbage. A decoder that
     throws kills the whole Spark task; the ladder relies on None.
     Also pins the anti-bomb guards: a mutated header cannot demand an
     unbounded allocation."""
-    from opencosmo_spark.pipeline.multimodal import (
-        _decode_bmp,
-        _decode_gif,
-        _decode_jpeg,
-        _decode_png,
-        _decode_pnm,
+    from opencosmo_spark.pipeline.multimodal import _decode_bmp, _decode_pnm
+    from opencosmo_spark.pipeline.native_codecs import (
+        decode_gif_native,
+        decode_jpeg_native,
+        decode_png_native,
     )
 
     rng = np.random.default_rng(77)
@@ -2197,7 +2240,10 @@ def test_image_decoders_are_total_under_mutation():
     )
     bmp = _make_bmp(img)
     pnm = b"P6\n12 10\n255\n" + bytes(img.reshape(-1))
-    decoders = [_decode_png, _decode_bmp, _decode_pnm, _decode_gif, _decode_jpeg]
+    decoders = [
+        decode_png_native, _decode_bmp, _decode_pnm, decode_gif_native,
+        decode_jpeg_native,
+    ]
     samples = [bytes(x) for x in (seq, prog, png, gif, bmp, pnm)]
 
     def check(payload):
@@ -2221,11 +2267,11 @@ def test_image_decoders_are_total_under_mutation():
     big_png = _make_png(np.zeros((2, 2, 3), np.uint8), 2, row_filters=[0])
     bp = bytearray(big_png)
     bp[16:24] = (65535).to_bytes(4, "big") + (65535).to_bytes(4, "big")
-    assert _decode_png(bytes(bp)) is None
+    assert decode_png_native(bytes(bp)) is None
     bj = bytearray(seq)
     i = bj.find(b"\xff\xc0")
     bj[i + 5 : i + 9] = b"\xff\xff\xff\xff"
-    assert _decode_jpeg(bytes(bj)) is None
+    assert decode_jpeg_native(bytes(bj)) is None
 
 
 def _wav_raw(raw: bytes, code: int, rate: int, bits: int, nch: int = 1,
@@ -2331,7 +2377,7 @@ def test_codec_gate_messages_derive_from_ladder(spark):
     JPEG/GIF/16-bit-PNG decoders landed)."""
     from opencosmo_spark.pipeline.multimodal import (
         _AUDIO_LADDER,
-        _IMAGE_LADDER,
+        _image_ladder,
         decode_audio_features,
         decode_image_features,
     )
@@ -2339,7 +2385,7 @@ def test_codec_gate_messages_derive_from_ladder(spark):
     df = spark.createDataFrame([(b"x",)], "payload binary")
     with pytest.raises(NotImplementedError) as ei:
         decode_image_features(df, require_real_codec=True)
-    for _, _, desc in _IMAGE_LADDER:
+    for _, _, desc in _image_ladder():
         assert desc in str(ei.value), desc
     with pytest.raises(NotImplementedError) as ea:
         decode_audio_features(df, require_real_codec=True)
@@ -2347,7 +2393,7 @@ def test_codec_gate_messages_derive_from_ladder(spark):
         assert desc in str(ea.value), desc
     # the ladder is the one the decode loop consumes: every entry is
     # (name, callable, description)
-    for name, fn, desc in _IMAGE_LADDER + _AUDIO_LADDER:
+    for name, fn, desc in _image_ladder() + _AUDIO_LADDER:
         assert callable(fn) and isinstance(name, str) and desc
 
 
@@ -2638,6 +2684,7 @@ def _make_jpeg_multiscan(rgb, subsample=False, gray=False, restart=0):
     return bytes(out), expect
 
 
+@_needs("jpeg")
 @pytest.mark.parametrize(
     "shape,subsample,gray,restart",
     [
@@ -2650,22 +2697,19 @@ def _make_jpeg_multiscan(rgb, subsample=False, gray=False, restart=0):
 def test_decode_jpeg_multiscan_baseline(shape, subsample, gray, restart):
     """Non-interleaved multi-scan baseline decodes to the same pixels
     as the interleaved single-scan encoding of the SAME quantized
-    coefficients — round 11 stubbed this layout, round 12 decodes it
-    through the shared coefficient/reconstruct path."""
-    from opencosmo_spark.pipeline.multimodal import _decode_jpeg
+    coefficients."""
+    from opencosmo_spark.pipeline.native_codecs import decode_jpeg_native
 
     rng = np.random.default_rng(sum(shape))
     rgb = rng.integers(0, 256, (*shape, 3)).astype(np.uint8)
     multi, expect = _make_jpeg_multiscan(
         rgb, subsample=subsample, gray=gray, restart=restart
     )
-    got = _decode_jpeg(multi)
-    assert got is not None, "multi-scan baseline fell to the stub"
-    assert got.shape == expect.shape
-    assert int(np.abs(got.astype(int) - expect.astype(int)).max()) <= 1
+    got = decode_jpeg_native(multi)
+    _assert_idct_close(got, expect)
     # and it must agree with the interleaved twin of the same coefs
     inter, _ = _make_jpeg(rgb, subsample=subsample, gray=gray)
-    np.testing.assert_array_equal(got, _decode_jpeg(inter))
+    np.testing.assert_array_equal(got, decode_jpeg_native(inter))
 
 
 def test_image_metadata_header_parse(spark):
@@ -3084,6 +3128,7 @@ def _make_jpeg_partial(rgb, subsample=False, restart=0):
     return bytes(out), expect
 
 
+@_needs("jpeg")
 @pytest.mark.parametrize(
     "shape,subsample,restart",
     [
@@ -3096,8 +3141,8 @@ def _make_jpeg_partial(rgb, subsample=False, restart=0):
 def test_decode_jpeg_partially_interleaved(shape, subsample, restart):
     """The 2-of-3 partially-interleaved multi-scan baseline layout
     decodes bit-identically to the fully-interleaved twin of the
-    same quantized coefficients (closes the last honest JPEG stub)."""
-    from opencosmo_spark.pipeline.multimodal import _decode_jpeg
+    same quantized coefficients."""
+    from opencosmo_spark.pipeline.native_codecs import decode_jpeg_native
 
     rng = np.random.default_rng(sum(shape) + restart)
     h, w = shape
@@ -3110,10 +3155,10 @@ def test_decode_jpeg_partially_interleaved(shape, subsample, restart):
     )
     full, expect2 = _make_jpeg(rgb, subsample=subsample)
     np.testing.assert_array_equal(expect, expect2)
-    got = _decode_jpeg(partial)
+    got = decode_jpeg_native(partial)
     assert got is not None
-    np.testing.assert_array_equal(got, _decode_jpeg(full))
-    assert np.abs(got.astype(int) - expect.astype(int)).max() <= 1
+    np.testing.assert_array_equal(got, decode_jpeg_native(full))
+    _assert_idct_close(got, expect)
 
 
 def _make_mp4_subs(cues, timescale=1000, handler=b"text", gaps=False):

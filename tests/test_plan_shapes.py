@@ -772,7 +772,12 @@ def test_text_builders_tokenize_once(spark):
     never pasted into a lambda body, where Spark re-evaluates it per
     array element. Optimized-plan counts at the previous form:
     text_profile 15, repetition_stats 12, gopher_repetition_flags 44,
-    gopher_quality_flags 11 splits, url_suffixes 3 URL parses."""
+    gopher_quality_flags 11 splits, url_suffixes 3 URL parses,
+    url_features 19 and canonical_url 12 URL parses,
+    gopher_repetition_flags 13 sorts (each duplicate census built
+    twice)."""
+    import re
+
     import pyspark.sql.functions as F
 
     from opencosmo_spark.pipeline.clean import (
@@ -787,7 +792,11 @@ def test_text_builders_tokenize_once(spark):
         repetition_stats,
         token_count,
     )
-    from opencosmo_spark.pipeline.web import url_suffixes
+    from opencosmo_spark.pipeline.web import (
+        canonical_url,
+        url_features,
+        url_suffixes,
+    )
 
     df = spark.createDataFrame(
         [(1, "a b a", "http://a.b.c/x")], "doc_id long, text string, url string"
@@ -820,6 +829,20 @@ def test_text_builders_tokenize_once(spark):
                 assert tok not in body, (name, tok, body[:300])
         if name == "url_suffixes":
             assert plan.count("ParseUrlEvaluator(") == 1, plan
+        if name == "gopher_repetition_flags":
+            # one sort per duplicate census (2) and per n-gram size (9)
+            assert plan.count("array_sort(") == 11, plan.count("array_sort(")
+    # each URL part (HOST, PATH, ...) is parsed once per row, outside
+    # every lambda body
+    for name, out in (
+        ("url_features", url_features(df)),
+        ("canonical_url", df.select(canonical_url("url").alias("c"))),
+    ):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        parts = re.findall(r"ParseUrlEvaluator\(null,(\w+),", plan)
+        assert parts and len(parts) == len(set(parts)), (name, parts)
+        for body in _lambda_bodies(plan):
+            assert "ParseUrlEvaluator(" not in body, (name, body[:300])
 
 
 def test_spread_probe_walks_plan_nodes(spark):

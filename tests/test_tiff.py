@@ -1,7 +1,8 @@
-"""Baseline TIFF decode differentials
-(`multimodal.py::_decode_tiff`). The encoder twin below writes IFDs,
-strips, PackBits runs, and a keep-the-width-at-9-bits LZW stream
-straight from the public TIFF 6.0 spec, independent of the decoder.
+"""Baseline TIFF decode differentials through the system libtiff
+(``native_codecs.decode_tiff_native``). The encoder twin below writes
+IFDs, strips, PackBits runs, and a keep-the-width-at-9-bits LZW
+stream straight from the public TIFF 6.0 spec, independent of the
+decoder.
 """
 from __future__ import annotations
 
@@ -9,10 +10,12 @@ import struct
 
 import numpy as np
 
-from opencosmo_spark.pipeline.multimodal import (
-    _decode_tiff,
-    _image_header_meta,
-)
+from opencosmo_spark.pipeline.multimodal import _image_header_meta
+from opencosmo_spark.pipeline.native_codecs import decode_tiff_native
+
+from test_analysis_multimodal import _needs
+
+pytestmark = _needs("tiff")
 
 
 # ------------------------------------------------------------ twin
@@ -189,20 +192,20 @@ def _img(h, w, ch, seed):
 
 def test_gray_and_rgb_uncompressed():
     g = _img(13, 17, 1, 0)
-    out = _decode_tiff(make_tiff(g))
+    out = decode_tiff_native(make_tiff(g))
     np.testing.assert_array_equal(out, np.repeat(g[:, :, None], 3, 2))
     rgb = _img(9, 11, 3, 1)
-    np.testing.assert_array_equal(_decode_tiff(make_tiff(rgb)), rgb)
+    np.testing.assert_array_equal(decode_tiff_native(make_tiff(rgb)), rgb)
 
 
 def test_big_endian_and_alpha_drop():
     rgb = _img(8, 8, 3, 2)
     np.testing.assert_array_equal(
-        _decode_tiff(make_tiff(rgb, bo=">")), rgb
+        decode_tiff_native(make_tiff(rgb, bo=">")), rgb
     )
     rgba = _img(8, 8, 4, 3)
     np.testing.assert_array_equal(
-        _decode_tiff(make_tiff(rgba)), rgba[:, :, :3]
+        decode_tiff_native(make_tiff(rgba)), rgba[:, :, :3]
     )
 
 
@@ -211,45 +214,45 @@ def test_multi_strip_and_packbits():
     # runs make PackBits actually compress
     rgb[:, 3:7] = 128
     for comp in (1, 32773):
-        out = _decode_tiff(make_tiff(rgb, comp=comp, rows_per_strip=5))
+        out = decode_tiff_native(make_tiff(rgb, comp=comp, rows_per_strip=5))
         np.testing.assert_array_equal(out, rgb)
 
 
 def test_lzw_and_predictor():
     rgb = _img(12, 14, 3, 5)
-    out = _decode_tiff(make_tiff(rgb, comp=5, rows_per_strip=4))
+    out = decode_tiff_native(make_tiff(rgb, comp=5, rows_per_strip=4))
     np.testing.assert_array_equal(out, rgb)
-    out2 = _decode_tiff(make_tiff(rgb, comp=5, predictor=2))
+    out2 = decode_tiff_native(make_tiff(rgb, comp=5, predictor=2))
     np.testing.assert_array_equal(out2, rgb)
 
 
 def test_bilevel_both_photometrics():
     bw = (_img(10, 30, 1, 6) > 127).astype(np.uint8)
-    out = _decode_tiff(make_tiff(bw, bits=1, photo=1))
+    out = decode_tiff_native(make_tiff(bw, bits=1, photo=1))
     np.testing.assert_array_equal(out[:, :, 0], bw * 255)
     # white-is-zero inverts
-    out0 = _decode_tiff(make_tiff(bw, bits=1, photo=0))
+    out0 = decode_tiff_native(make_tiff(bw, bits=1, photo=0))
     np.testing.assert_array_equal(out0[:, :, 0], 255 - bw * 255)
 
 
 def test_palette():
     idx = _img(7, 9, 1, 7)
     pal = _img(256, 3, 1, 8).reshape(256, 3)
-    out = _decode_tiff(make_tiff(idx, photo=3, palette=pal))
+    out = decode_tiff_native(make_tiff(idx, photo=3, palette=pal))
     np.testing.assert_array_equal(out, pal[idx])
 
 
 def test_16bit_gray_both_orders():
     g = _img(6, 6, 1, 9)
     for bo in ("<", ">"):
-        out = _decode_tiff(make_tiff(g, bits=16, bo=bo))
+        out = decode_tiff_native(make_tiff(g, bits=16, bo=bo))
         np.testing.assert_array_equal(out[:, :, 0], g)
 
 
 def test_fax_declined_but_metadata_parses():
     g = _img(5, 5, 1, 10)
     data = make_tiff(g, declared_comp=4)  # G4 fax: gated
-    assert _decode_tiff(data) is None
+    assert decode_tiff_native(data) is None
     assert _image_header_meta(data) == ("tiff", 5, 5)
 
 
@@ -265,12 +268,12 @@ def test_metadata_tier_and_totality():
                 rng.integers(0, 256)
             )
         try:
-            _decode_tiff(bytes(mut))
+            decode_tiff_native(bytes(mut))
             _image_header_meta(bytes(mut))
         except Exception as exc:  # noqa: BLE001
             raise AssertionError("tiff decoder escaped") from exc
     for cut in range(0, len(data), max(1, len(data) // 48)):
-        _decode_tiff(data[:cut])
+        decode_tiff_native(data[:cut])
         _image_header_meta(data[:cut])
 
 
@@ -285,8 +288,8 @@ def test_ladder_integration(spark):
     df = spark.createDataFrame(
         [("t", data)], "id string, payload binary"
     )
-    row = decode_image_features(df, decoder="pure").toPandas().iloc[0]
-    assert row.decoder == "tiff"
+    row = decode_image_features(df).toPandas().iloc[0]
+    assert row.decoder == "tiff-native"
     meta = image_metadata(df).toPandas().iloc[0]
     assert (meta.img_format, meta.img_width, meta.img_height) == (
         "tiff", 16, 16,
@@ -305,7 +308,7 @@ def test_ifd_entry_count_zero_declines():
     e = 8 + 2  # first IFD entry (tag 256, ImageWidth)
     assert struct.unpack("<H", data[e : e + 2])[0] == 256
     data[e + 4 : e + 8] = struct.pack("<I", 0)  # count = 0
-    assert _decode_tiff(bytes(data)) is None
+    assert decode_tiff_native(bytes(data)) is None
 
 
 def test_bilevel_palette_uses_raw_indices():
@@ -316,18 +319,24 @@ def test_bilevel_palette_uses_raw_indices():
     idx = rng.integers(0, 2, (6, 9)).astype(np.uint8)
     pal = np.array([[255, 0, 64], [0, 200, 30]], dtype=np.uint8)
     data = make_tiff(idx, bits=1, photo=3, palette=pal)
-    out = _decode_tiff(data)
+    out = decode_tiff_native(data)
     assert out is not None
     np.testing.assert_array_equal(out, pal[idx])
 
 
 def test_16bit_palette_declines():
-    """16-bit palette indices are scaled to 8 bits by the sample
-    normalizer, so they no longer address the ColorMap — decline."""
-    idx = np.zeros((2, 2), dtype=np.uint8)
-    pal = np.zeros((2, 3), dtype=np.uint8)
+    """16-bit palette indices (a full 3 * 65536-entry ColorMap) are
+    outside what the RGBA reader maps — decline. A ColorMap with the
+    wrong count is ignored by libtiff, which then reads the samples
+    as 16-bit gray."""
+    idx = np.array([[0, 1], [1, 0]], dtype=np.uint8)
+    pal = np.zeros((1 << 16, 3), dtype=np.uint8)
     data = make_tiff(idx, bits=16, photo=3, palette=pal)
-    assert _decode_tiff(data) is None
+    assert decode_tiff_native(data) is None
+    short = make_tiff(idx, bits=16, photo=3, palette=pal[:2])
+    np.testing.assert_array_equal(
+        decode_tiff_native(short), np.repeat(idx[:, :, None], 3, 2)
+    )
 
 
 def test_ladder_swallows_decoder_exception(monkeypatch):
@@ -341,14 +350,14 @@ def test_ladder_swallows_decoder_exception(monkeypatch):
         raise IndexError("synthetic decoder bug")
 
     patched = tuple(
-        (("tiff", boom, entry[2]) if entry[0] == "tiff" else entry)
-        for entry in mm._IMAGE_LADDER
+        (("tiff-native", boom, e[2]) if e[0] == "tiff-native" else e)
+        for e in mm.native_image_ladder()
     )
-    monkeypatch.setattr(mm, "_IMAGE_LADDER", patched)
+    monkeypatch.setattr(mm, "native_image_ladder", lambda: patched)
     data = make_tiff(_img(4, 4, 3, 5))
-    arr, name = mm._decode_via_ladder(data, "pure")
+    arr, name = mm._decode_via_ladder(data)
     assert arr is None and name is None  # fell past the broken tier
     # and with the real ladder the same payload decodes fine
     monkeypatch.undo()
-    arr, name = mm._decode_via_ladder(data, "pure")
-    assert name == "tiff" and arr is not None
+    arr, name = mm._decode_via_ladder(data)
+    assert name == "tiff-native" and arr is not None

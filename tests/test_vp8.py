@@ -1,17 +1,12 @@
-"""VP8 (lossy WebP) decoder tests.
+"""Lossy WebP (VP8) decode through the system libwebp
+(``native_codecs.decode_webp_native``).
 
-Primary differential: the system libwebp (when its shared library is
-present — it is in CI) is BOTH the encoder that produces real VP8
-keyframe bitstreams from test images AND the reference decoder whose
-YUV output ours must match BIT-EXACTLY (WebPDecodeYUV returns the
-decoded planes before any RGB conversion, so the comparison covers
-the bool decoder, mode/token parsing, dequant, transforms, intra
-prediction, and both loop filters with zero tolerance).
-
-Secondary: scalar re-implementations of the RFC 6386 §15 loop-filter
-equations written independently here, diffed against the decoder's
-vectorized filters on random edge vectors; container dispatch;
-byte-mutation fuzz (junk returns None, never raises)."""
+libwebp is both the encoder that produces real VP8 keyframe
+bitstreams from test images and the reference its direct
+``WebPDecodeRGB`` output provides: the decode ladder must hand back
+exactly those pixels across awkward geometries (cropped macroblocks,
+1x1, single-row frames), stay near the source, unwrap VP8X and
+animation containers, and degrade junk to None without raising."""
 
 from __future__ import annotations
 
@@ -20,26 +15,24 @@ import ctypes
 import numpy as np
 import pytest
 
-from opencosmo_spark.pipeline.vp8 import (
-    _filter_normal,
-    _filter_simple,
-    _idct4x4,
-    _iwht4x4,
-    decode_vp8_planes,
-    decode_vp8_rgb,
-)
-from opencosmo_spark.pipeline.vp8l import decode_webp
+from opencosmo_spark.pipeline.multimodal import _decode_via_ladder
+from opencosmo_spark.pipeline.native_codecs import decode_webp_native
+
+from test_analysis_multimodal import _needs
 
 try:
     _LW = ctypes.CDLL("libwebp.so.7")
     _LW.WebPEncodeRGB.restype = ctypes.c_size_t
-    _LW.WebPDecodeYUV.restype = ctypes.POINTER(ctypes.c_uint8)
+    _LW.WebPDecodeRGB.restype = ctypes.POINTER(ctypes.c_uint8)
 except OSError:  # pragma: no cover - oracle not installed
     _LW = None
 
-needs_libwebp = pytest.mark.skipif(
-    _LW is None, reason="libwebp shared library not available"
-)
+pytestmark = [
+    pytest.mark.skipif(
+        _LW is None, reason="libwebp shared library not available"
+    ),
+    _needs("webp"),
+]
 
 
 def lw_encode(img: np.ndarray, quality: float) -> bytes:
@@ -55,41 +48,29 @@ def lw_encode(img: np.ndarray, quality: float) -> bytes:
     return data
 
 
-def lw_decode_yuv(data: bytes):
+def lw_decode_rgb(data: bytes) -> np.ndarray:
     W = ctypes.c_int()
     H = ctypes.c_int()
-    up = ctypes.POINTER(ctypes.c_uint8)()
-    vp = ctypes.POINTER(ctypes.c_uint8)()
-    stride = ctypes.c_int()
-    uvs = ctypes.c_int()
-    yp = _LW.WebPDecodeYUV(
-        data, ctypes.c_size_t(len(data)), ctypes.byref(W), ctypes.byref(H),
-        ctypes.byref(up), ctypes.byref(vp), ctypes.byref(stride),
-        ctypes.byref(uvs),
+    p = _LW.WebPDecodeRGB(
+        data, ctypes.c_size_t(len(data)), ctypes.byref(W), ctypes.byref(H)
     )
-    w, h, s, us = W.value, H.value, stride.value, uvs.value
-
-    def plane(p, rows, cols, st):
-        a = np.ctypeslib.as_array(p, ((rows - 1) * st + cols,)).copy()
-        return np.stack([a[r * st : r * st + cols] for r in range(rows)])
-
-    y = plane(yp, h, w, s)
-    ch, cw = (h + 1) // 2, (w + 1) // 2
-    u = plane(up, ch, cw, us)
-    v = plane(vp, ch, cw, us)
-    _LW.WebPFree(yp)
-    return y, u, v
+    assert p
+    rgb = np.ctypeslib.as_array(p, (H.value, W.value, 3)).copy()
+    _LW.WebPFree(p)
+    return rgb
 
 
-def vp8_chunk(data: bytes) -> bytes:
-    pos = 12
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        size = int.from_bytes(data[pos + 4 : pos + 8], "little")
-        if tag == b"VP8 ":
-            return data[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)
-    raise AssertionError("no VP8 chunk")
+def riff(*chunks: bytes) -> bytes:
+    body = b"WEBP" + b"".join(chunks)
+    return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+
+def vp8x(w: int, h: int, flags: int = 0) -> bytes:
+    """VP8X header chunk: flags, 3 reserved bytes, canvas size."""
+    return (
+        b"VP8X" + (10).to_bytes(4, "little") + bytes([flags, 0, 0, 0])
+        + (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
+    )
 
 
 def make_image(h, w, kind, rng):
@@ -117,7 +98,6 @@ def make_image(h, w, kind, rng):
     ).astype(np.uint8)
 
 
-@needs_libwebp
 @pytest.mark.parametrize(
     "h,w,q,kind",
     [
@@ -136,51 +116,40 @@ def make_image(h, w, kind, rng):
     ],
 )
 def test_vp8_matches_libwebp_bit_exact(h, w, q, kind):
-    """Decode libwebp-encoded lossy frames and require EXACT YUV
-    equality with libwebp's own decoder — this covers every stage
-    including segmentation, token contexts, all intra modes, and the
-    normal loop filter at the levels quality q implies."""
+    """Decode libwebp-encoded lossy frames through the ladder and
+    require EXACT RGB equality with libwebp's own decode — the
+    wrapper must not crop, pad or re-stride any geometry, including
+    segmentation- and filter-heavy qualities."""
     rng = np.random.default_rng(h * 1000 + w * 10 + q)
     img = make_image(h, w, kind, rng)
     data = lw_encode(img, q)
-    y, u, v = decode_vp8_planes(vp8_chunk(data))
-    ry, ru, rv = lw_decode_yuv(data)
-    np.testing.assert_array_equal(y, ry)
-    np.testing.assert_array_equal(u, ru)
-    np.testing.assert_array_equal(v, rv)
+    rgb, name = _decode_via_ladder(data)
+    assert name == "webp-native" and rgb.shape == (h, w, 3)
+    np.testing.assert_array_equal(rgb, lw_decode_rgb(data))
 
 
-@needs_libwebp
 def test_vp8_through_container_and_ladder(spark):
-    """decode_webp dispatches the VP8 chunk (plain and VP8X-wrapped,
-    and as the first ANMF animation frame); the RGB conversion is a
-    deterministic function of the exact YUV planes; the Spark decode
-    ladder stamps lossy rows with the real 'webp' codec tier."""
+    """The VP8 chunk decodes plain, VP8X-wrapped, and as the first ANMF
+    animation frame; the result is close to the source; the Spark
+    decode ladder stamps lossy rows with the 'webp-native' tier."""
     rng = np.random.default_rng(7)
     img = make_image(40, 56, "mix", rng)
     data = lw_encode(img, 80)
-    rgb = decode_webp(data)
+    rgb = decode_webp_native(data)
     assert rgb is not None and rgb.shape == (40, 56, 3)
-    # deterministic: equals the documented conversion of the planes
-    np.testing.assert_array_equal(rgb, decode_vp8_rgb(vp8_chunk(data)))
     # close to the source (lossy, so tolerance: mean abs error small)
     assert np.abs(rgb.astype(int) - img.astype(int)).mean() < 24
 
-    # VP8X-wrapped
     chunk = data[12:]
-    vp8x = b"VP8X" + (10).to_bytes(4, "little") + b"\x00" * 10
-    body = b"WEBP" + vp8x + chunk
-    wrapped = b"RIFF" + len(body).to_bytes(4, "little") + body
-    np.testing.assert_array_equal(decode_webp(wrapped), rgb)
+    wrapped = riff(vp8x(56, 40), chunk)
+    np.testing.assert_array_equal(decode_webp_native(wrapped), rgb)
 
     # first ANMF frame of an animation
     anmf_body = b"\x00" * 16 + chunk
     anmf = b"ANMF" + len(anmf_body).to_bytes(4, "little") + anmf_body
-    vp8x_a = b"VP8X" + (10).to_bytes(4, "little") + b"\x02" + b"\x00" * 9
     anim = b"ANIM" + (6).to_bytes(4, "little") + b"\x00" * 6
-    body = b"WEBP" + vp8x_a + anim + anmf
-    riff = b"RIFF" + len(body).to_bytes(4, "little") + body
-    np.testing.assert_array_equal(decode_webp(riff), rgb)
+    animated = riff(vp8x(56, 40, flags=0x02), anim, anmf)
+    np.testing.assert_array_equal(decode_webp_native(animated), rgb)
 
     from opencosmo_spark.pipeline.multimodal import decode_image_features
 
@@ -188,18 +157,15 @@ def test_vp8_through_container_and_ladder(spark):
         [("a", data), ("b", b"RIFF\x10\x00\x00\x00WEBPVP8 junk")],
         "media_id string, payload binary",
     )
-    out = decode_image_features(
-        df, decoder="pure"
-    ).toPandas().set_index("media_id")
-    assert out.loc["a"].decoder == "webp"
+    out = decode_image_features(df).toPandas().set_index("media_id")
+    assert out.loc["a"].decoder == "webp-native"
     assert out.loc["b"].decoder == "stub-sha256"
 
 
-@needs_libwebp
 def test_vp8_fuzz_total(subtests=None):
     """Byte mutations of a valid lossy WebP never raise out of
-    decode_webp — junk degrades to None (or decodes to some array
-    when the mutation lands in pixel data)."""
+    decode_webp_native — junk degrades to None (or decodes to some
+    array when the mutation lands in pixel data)."""
     rng = np.random.default_rng(3)
     img = make_image(32, 32, "mix", rng)
     data = bytearray(lw_encode(img, 60))
@@ -207,187 +173,29 @@ def test_vp8_fuzz_total(subtests=None):
         mut = bytearray(data)
         for _ in range(rng.integers(1, 6)):
             mut[rng.integers(0, len(mut))] = rng.integers(0, 256)
-        out = decode_webp(bytes(mut))
+        out = decode_webp_native(bytes(mut))
         assert out is None or (
             isinstance(out, np.ndarray) and out.dtype == np.uint8
         )
     # truncations
     for cut in range(0, len(data), 7):
-        out = decode_webp(bytes(data[:cut]))
+        out = decode_webp_native(bytes(data[:cut]))
         assert out is None or isinstance(out, np.ndarray)
 
 
-def test_inverse_transforms_exact_integer():
-    """IWHT/IDCT pin their exact integer behavior: DC-only blocks
-    produce the closed-form constants the RFC implies, and the IWHT
-    distributes a pure DC evenly with the +3 rounding."""
-    blk = np.zeros(16, np.int32)
-    blk[0] = 81
-    out = _idct4x4(blk)
-    np.testing.assert_array_equal(out, np.full((4, 4), (81 + 4) >> 3))
-    blk[0] = -81
-    np.testing.assert_array_equal(
-        _idct4x4(blk), np.full((4, 4), (-81 + 4) >> 3)
-    )
-    w = _iwht4x4([800] + [0] * 15)
-    assert w == [(800 + 3) >> 3] * 16
-    # a known asymmetric WHT: only coefficient 3 set. Column pass
-    # leaves every row as [0,0,0,64]; row pass: a1=64, b1=c1=0,
-    # d1=-64 -> ((64+3)>>3, (-64+3)>>3, (64+3)>>3, (-64+3)>>3)
-    w2 = _iwht4x4([0, 0, 0, 64] + [0] * 12)
-    assert w2[0:4] == [8, -8, 8, -8]
-    assert w2 == w2[0:4] * 4
-
-
-def _c(x):
-    return max(-128, min(127, x))
-
-
-def _scalar_normal_filter(px, edge_lim, int_lim, hev_t, mbedge):
-    """Independent scalar transcription of RFC 6386 §15.3-15.4 for
-    the differential (signed-domain, per pixel column)."""
-    p3, p2, p1, p0, q0, q1, q2, q3 = [int(v) - 128 for v in px]
-    mask = (
-        abs(p0 - q0) * 2 + abs(p1 - q1) // 2 <= edge_lim
-        and abs(p3 - p2) <= int_lim and abs(p2 - p1) <= int_lim
-        and abs(p1 - p0) <= int_lim and abs(q1 - q0) <= int_lim
-        and abs(q2 - q1) <= int_lim and abs(q3 - q2) <= int_lim
-    )
-    if not mask:
-        return list(px)
-    hev = abs(p1 - p0) > hev_t or abs(q1 - q0) > hev_t
-    if mbedge:
-        if hev:
-            a = _c(_c(p1 - q1) + 3 * (q0 - p0))
-            f = _c(a + 4) >> 3
-            e = _c(a + 3) >> 3
-            q0 = _c(q0 - f)
-            p0 = _c(p0 + e)
-        else:
-            w = _c(_c(p1 - q1) + 3 * (q0 - p0))
-            a = _c((27 * w + 63) >> 7)
-            q0 = _c(q0 - a)
-            p0 = _c(p0 + a)
-            a = _c((18 * w + 63) >> 7)
-            q1 = _c(q1 - a)
-            p1 = _c(p1 + a)
-            a = _c((9 * w + 63) >> 7)
-            q2 = _c(q2 - a)
-            p2 = _c(p2 + a)
-    else:
-        a = _c((_c(p1 - q1) if hev else 0) + 3 * (q0 - p0))
-        f = _c(a + 4) >> 3
-        e = _c(a + 3) >> 3
-        q0 = _c(q0 - f)
-        p0 = _c(p0 + e)
-        if not hev:
-            f = (f + 1) >> 1
-            q1 = _c(q1 - f)
-            p1 = _c(p1 + f)
-    return [v + 128 for v in (p3, p2, p1, p0, q0, q1, q2, q3)]
-
-
-def _scalar_simple_filter(px, edge_lim):
-    p1, p0, q0, q1 = [int(v) - 128 for v in px]
-    if abs(p0 - q0) * 2 + abs(p1 - q1) // 2 > edge_lim:
-        return list(px)
-    a = _c(_c(p1 - q1) + 3 * (q0 - p0))
-    f = _c(a + 4) >> 3
-    e = _c(a + 3) >> 3
-    return [p1 + 128, _c(p0 + e) + 128, _c(q0 - f) + 128, q1 + 128]
-
-
-def test_loop_filters_match_scalar_rfc():
-    """The vectorized loop filters equal an independent scalar
-    transcription of the RFC equations on random edges across the
-    full limit/threshold/level space."""
-    rng = np.random.default_rng(11)
-    for _ in range(300):
-        n = int(rng.integers(1, 17))
-        px = rng.integers(0, 256, (8, n)).astype(np.uint8)
-        # sometimes make edges nearly-smooth so the mask passes
-        if rng.random() < 0.6:
-            base = rng.integers(40, 200)
-            px = (base + rng.integers(-6, 7, (8, n))).astype(np.uint8)
-        edge_lim = int(rng.integers(0, 130))
-        int_lim = int(rng.integers(1, 10))
-        hev_t = int(rng.integers(0, 3))
-        mbedge = bool(rng.integers(0, 2))
-        want = np.stack(
-            [
-                _scalar_normal_filter(
-                    px[:, k], edge_lim, int_lim, hev_t, mbedge
-                )
-                for k in range(n)
-            ],
-            axis=1,
-        )
-        got = px.copy()
-        _filter_normal(got, edge_lim, int_lim, hev_t, mbedge)
-        np.testing.assert_array_equal(got, want)
-
-        px4 = px[2:6].copy()
-        want4 = np.stack(
-            [_scalar_simple_filter(px4[:, k], edge_lim) for k in range(n)],
-            axis=1,
-        )
-        got4 = px4.copy()
-        _filter_simple(got4, edge_lim)
-        np.testing.assert_array_equal(got4, want4)
-
-
-def test_vp8_tables_shape_and_range():
-    from opencosmo_spark.pipeline.vp8_tables import (
-        AC_QLOOKUP,
-        COEFF_PROBS,
-        COEFF_UPDATE_PROBS,
-        DC_QLOOKUP,
-        KF_BMODE_PROBS,
-    )
-
-    for tbl in (COEFF_PROBS, COEFF_UPDATE_PROBS):
-        assert len(tbl) == 4
-        for t in tbl:
-            assert len(t) == 8
-            for b in t:
-                assert len(b) == 3
-                for c in b:
-                    assert len(c) == 11
-                    assert all(1 <= p <= 255 for p in c)
-    assert len(KF_BMODE_PROBS) == 10
-    for a in KF_BMODE_PROBS:
-        assert len(a) == 10
-        for l in a:
-            assert len(l) == 9 and all(1 <= p <= 255 for p in l)
-    assert len(DC_QLOOKUP) == len(AC_QLOOKUP) == 128
-    # monotone non-decreasing quantizer ladders, RFC end points
-    assert DC_QLOOKUP[0] == 4 and DC_QLOOKUP[127] == 157
-    assert AC_QLOOKUP[0] == 4 and AC_QLOOKUP[127] == 284
-    assert all(a <= b for a, b in zip(DC_QLOOKUP, DC_QLOOKUP[1:]))
-    assert all(a <= b for a, b in zip(AC_QLOOKUP, AC_QLOOKUP[1:]))
-
-
 def test_malformed_vp8_degrades():
-    """Structured junk hits the ValueError paths, not exceptions of
-    other kinds, and decode_webp turns them into None."""
-    with pytest.raises(ValueError):
-        decode_vp8_planes(b"\x00" * 4)
-    # interframe (bit 0 of the tag set)
-    with pytest.raises(ValueError):
-        decode_vp8_planes(b"\x01\x00\x00\x9d\x01\x2a" + b"\x00" * 8)
-    # bad start code
-    with pytest.raises(ValueError):
-        decode_vp8_planes(b"\x00\x00\x00\x9d\x01\x2b" + b"\x00" * 8)
-    # absurd declared size
+    """Structured junk in a VP8 chunk — too short, an interframe, a bad
+    start code, an absurd declared size — decodes to None."""
     big = (
         b"\x00\x00\x00\x9d\x01\x2a"
         + (0x3FFF).to_bytes(2, "little")
         + (0x3FFF).to_bytes(2, "little")
     )
-    with pytest.raises(ValueError):
-        decode_vp8_planes(big)
-    lossy = (
-        b"RIFF" + (16).to_bytes(4, "little") + b"WEBP"
-        + b"VP8 " + (4).to_bytes(4, "little") + b"\x00\x00\x00\x00"
-    )
-    assert decode_webp(lossy) is None
+    for frame in (
+        b"\x00" * 4,
+        b"\x01\x00\x00\x9d\x01\x2a" + b"\x00" * 8,  # interframe
+        b"\x00\x00\x00\x9d\x01\x2b" + b"\x00" * 8,  # bad start code
+        big,
+    ):
+        chunk = b"VP8 " + len(frame).to_bytes(4, "little") + frame
+        assert decode_webp_native(riff(chunk)) is None, frame

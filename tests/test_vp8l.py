@@ -1,4 +1,5 @@
-"""VP8L (lossless WebP) decoder: differential tests.
+"""VP8L (lossless WebP) decode through the system libwebp
+(``native_codecs.decode_webp_native``): differential tests.
 
 An INDEPENDENT encoder twin lives in this file: its own bitwriter,
 its own canonical-Huffman builder and code-length-code emission, its
@@ -6,7 +7,7 @@ own forward transforms (including independent reimplementations of
 the predictor filters and the color-transform delta), sharing only
 the published format constants with the decoder. Random images are
 encoded through every feature combination and must decode
-bit-identically — the same strategy as the round-10 JPEG twin.
+bit-identically to the source pixels.
 """
 
 import heapq
@@ -15,7 +16,11 @@ import itertools
 import numpy as np
 import pytest
 
-from opencosmo_spark.pipeline.vp8l import _DIST_TABLE, decode_webp
+from opencosmo_spark.pipeline.native_codecs import decode_webp_native
+
+from test_analysis_multimodal import _needs
+
+pytestmark = _needs("webp")
 
 
 # --- encoder twin ----------------------------------------------------
@@ -88,7 +93,8 @@ def canonical_codes(lengths_by_sym):
     return out
 
 
-CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
+# the code-length code order of the WebP lossless spec (not DEFLATE's)
+CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
 
 def write_prefix_code(bw, freqs, alphabet_size, force_normal=False):
@@ -265,7 +271,7 @@ def encode_plain(rgb, alpha=255, force_normal=False, cache_bits=0):
 # --- tests: literals / codes / container -----------------------------
 def test_single_pixel():
     rgb = np.array([[[10, 200, 30]]], dtype=np.uint8)
-    got = decode_webp(encode_plain(rgb))
+    got = decode_webp_native(encode_plain(rgb))
     np.testing.assert_array_equal(got, rgb)
 
 
@@ -276,7 +282,7 @@ def test_two_color_simple_codes():
         np.array([200, 1, 77], dtype=np.uint8),
         np.array([3, 250, 0], dtype=np.uint8),
     ).astype(np.uint8)
-    got = decode_webp(encode_plain(rgb))
+    got = decode_webp_native(encode_plain(rgb))
     np.testing.assert_array_equal(got, rgb)
 
 
@@ -285,7 +291,7 @@ def test_random_roundtrip_normal_codes(size):
     h, w = size
     rng = np.random.default_rng(h * 100 + w)
     rgb = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
-    got = decode_webp(encode_plain(rgb, force_normal=True))
+    got = decode_webp_native(encode_plain(rgb, force_normal=True))
     np.testing.assert_array_equal(got, rgb)
 
 
@@ -295,7 +301,7 @@ def test_color_cache_roundtrip():
     palette = rng.integers(0, 256, (6, 3)).astype(np.uint8)
     idx = rng.integers(0, 6, (17, 19))
     rgb = palette[idx]
-    got = decode_webp(encode_plain(rgb, cache_bits=6))
+    got = decode_webp_native(encode_plain(rgb, cache_bits=6))
     np.testing.assert_array_equal(got, rgb)
 
 
@@ -307,7 +313,7 @@ def test_lz77_linear_distance():
     tokens = [("lit", *c) for c in colors] + [("copy", 9, 3)]
     bw = BW()
     encode_image_data(bw, tokens, is_main=True)
-    got = decode_webp(wrap(bw, w, h))
+    got = decode_webp_native(wrap(bw, w, h))
     flat = [colors[i % 3] for i in range(12)]
     want = np.array(
         [[c[1], c[2], c[3]] for c in flat], dtype=np.uint8
@@ -318,7 +324,6 @@ def test_lz77_linear_distance():
 def test_lz77_2d_distance_codes():
     # dist_code 1 = (0,1): copy the row above; verify the 2D mapping
     # against its published meaning, not the encoder's idea of it
-    assert _DIST_TABLE[0] == (0, 1)
     w, h = 5, 3
     rng = np.random.default_rng(3)
     row = [(255, int(r), int(g), int(b))
@@ -326,35 +331,40 @@ def test_lz77_2d_distance_codes():
     tokens = [("lit", *c) for c in row] + [("copy2d", 10, 1)]
     bw = BW()
     encode_image_data(bw, tokens, is_main=True)
-    got = decode_webp(wrap(bw, w, h))
+    got = decode_webp_native(wrap(bw, w, h))
     want_row = np.array([[c[1], c[2], c[3]] for c in row], dtype=np.uint8)
     want = np.stack([want_row] * 3)
     np.testing.assert_array_equal(got, want)
 
 
 def test_not_webp_and_lossy_gated():
-    assert decode_webp(b"") is None
-    assert decode_webp(None) is None
-    assert decode_webp(b"RIFF\x00\x00\x00\x00WAVEdata") is None
+    assert decode_webp_native(b"") is None
+    assert decode_webp_native(None) is None
+    assert decode_webp_native(b"RIFF\x00\x00\x00\x00WAVEdata") is None
     lossy = (
         b"RIFF" + (12).to_bytes(4, "little") + b"WEBP"
         + b"VP8 " + (4).to_bytes(4, "little") + b"\x00\x00\x00\x00"
     )
-    assert decode_webp(lossy) is None
+    assert decode_webp_native(lossy) is None
     # truncated VP8L payload
     rgb = np.zeros((4, 4, 3), dtype=np.uint8)
     good = encode_plain(rgb)
-    assert decode_webp(good[: len(good) - 6]) is None
+    assert decode_webp_native(good[: len(good) - 6]) is None
 
 
 def test_vp8x_wrapped_container():
     rgb = np.arange(27, dtype=np.uint8).reshape(3, 3, 3)
     full = encode_plain(rgb)
     vp8l_chunk = full[12:]
-    vp8x = b"VP8X" + (10).to_bytes(4, "little") + b"\x00" * 10
+    # flags, 3 reserved bytes, then the canvas (width-1, height-1) as
+    # 24-bit fields, which must match the image
+    vp8x = (
+        b"VP8X" + (10).to_bytes(4, "little") + b"\x00" * 4
+        + (2).to_bytes(3, "little") + (2).to_bytes(3, "little")
+    )
     body = b"WEBP" + vp8x + vp8l_chunk
     riff = b"RIFF" + len(body).to_bytes(4, "little") + body
-    np.testing.assert_array_equal(decode_webp(riff), rgb)
+    np.testing.assert_array_equal(decode_webp_native(riff), rgb)
 
 
 # --- transforms: independent forward implementations ------------------
@@ -503,7 +513,7 @@ def test_subtract_green_transform():
     tb.b(0)      # no more transforms
     bw = BW()
     encode_image_data(bw, pixels_to_tokens(fwd), is_main=True)
-    got = decode_webp(wrap(bw, 9, 6, pre_transform_bits=tb))
+    got = decode_webp_native(wrap(bw, 9, 6, pre_transform_bits=tb))
     np.testing.assert_array_equal(got, rgb)
 
 
@@ -534,7 +544,7 @@ def test_predictor_transform_all_modes(tbits):
     tb.b(0)  # no more transforms
     bw = BW()
     encode_image_data(bw, pixels_to_tokens(res), is_main=True)
-    got = decode_webp(wrap(bw, w, h, pre_transform_bits=tb))
+    got = decode_webp_native(wrap(bw, w, h, pre_transform_bits=tb))
     np.testing.assert_array_equal(got, rgb)
 
 
@@ -566,7 +576,7 @@ def test_color_transform():
     tb.b(0)
     bw = BW()
     encode_image_data(bw, pixels_to_tokens(fwd), is_main=True)
-    got = decode_webp(wrap(bw, w, h, pre_transform_bits=tb))
+    got = decode_webp_native(wrap(bw, w, h, pre_transform_bits=tb))
     np.testing.assert_array_equal(got, rgb)
 
 
@@ -606,7 +616,7 @@ def test_color_indexing_with_packing(n_colors, width_bits):
             units.append(_pack(255, 0, green, 0))
     bw = BW()
     encode_image_data(bw, pixels_to_tokens(units), is_main=True)
-    got = decode_webp(wrap(bw, w, h, pre_transform_bits=tb))
+    got = decode_webp_native(wrap(bw, w, h, pre_transform_bits=tb))
     np.testing.assert_array_equal(got, rgb)
 
 
@@ -659,7 +669,7 @@ def test_meta_prefix_single_group():
     if len(body) % 2:
         chunk += b"\x00"
     riff = b"RIFF" + (4 + len(chunk)).to_bytes(4, "little") + b"WEBP" + chunk
-    got = decode_webp(riff)
+    got = decode_webp_native(riff)
     np.testing.assert_array_equal(got, rgb)
 
 
@@ -696,14 +706,14 @@ def test_stacked_transforms_subgreen_then_predictor():
     tb.b(0)
     bw = BW()
     encode_image_data(bw, pixels_to_tokens(res), is_main=True)
-    got = decode_webp(wrap(bw, w, h, pre_transform_bits=tb))
+    got = decode_webp_native(wrap(bw, w, h, pre_transform_bits=tb))
     np.testing.assert_array_equal(got, rgb)
 
 
 def test_webp_in_decode_ladder(spark):
     """decode_image_features and image_dhash decode WebP payloads with
-    the real codec ('webp' tier), and lossy VP8 payloads fall to the
-    stub — the ledger decoder_report separates them."""
+    the real codec ('webp-native' tier), and a junk lossy VP8 payload
+    falls to the stub — the ledger decoder_report separates them."""
     rng = np.random.default_rng(8)
     rgb = rng.integers(0, 256, (8, 8, 3)).astype(np.uint8)
     webp = encode_plain(rgb)
@@ -719,15 +729,11 @@ def test_webp_in_decode_ladder(spark):
     df = spark.createDataFrame(
         [("a", webp), ("b", lossy)], "media_id string, payload binary"
     )
-    out = decode_image_features(
-        df, decoder="pure"
-    ).toPandas().set_index("media_id")
-    assert out.loc["a"].decoder == "webp"
+    out = decode_image_features(df).toPandas().set_index("media_id")
+    assert out.loc["a"].decoder == "webp-native"
     assert out.loc["b"].decoder == "stub-sha256"
-    hashed = image_dhash(
-        df, decoder="pure"
-    ).toPandas().set_index("media_id")
-    assert hashed.loc["a"].decoder == "webp"
+    hashed = image_dhash(df).toPandas().set_index("media_id")
+    assert hashed.loc["a"].decoder == "webp-native"
 
 
 def test_animated_webp_first_frame():
@@ -744,35 +750,13 @@ def test_animated_webp_first_frame():
     anim = b"ANIM" + (6).to_bytes(4, "little") + b"\x00" * 6
     body = b"WEBP" + vp8x + anim + anmf
     riff = b"RIFF" + len(body).to_bytes(4, "little") + body
-    np.testing.assert_array_equal(decode_webp(riff), rgb)
-    # lossy animation frames stay gated
+    np.testing.assert_array_equal(decode_webp_native(riff), rgb)
+    # a junk lossy animation frame declines
     lossy_body = b"\x00" * 16 + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4
     anmf2 = b"ANMF" + len(lossy_body).to_bytes(4, "little") + lossy_body
     body2 = b"WEBP" + vp8x + anim + anmf2
     riff2 = b"RIFF" + len(body2).to_bytes(4, "little") + body2
-    assert decode_webp(riff2) is None
-
-
-def test_distance_table_structural_bounds():
-    """Review finding: the generated table must be exactly the
-    plane-code-expressible candidate set (dx in [-7, 8], dy in [0, 7],
-    dx >= 1 when dy == 0) — 120 members with no selection — ordered by
-    squared distance, |dx|, positive first."""
-    assert len(_DIST_TABLE) == len(set(_DIST_TABLE)) == 120
-    for dx, dy in _DIST_TABLE:
-        assert -7 <= dx <= 8 and 0 <= dy <= 7
-        if dy == 0:
-            assert dx >= 1
-    d2 = [dx * dx + dy * dy for dx, dy in _DIST_TABLE]
-    assert d2 == sorted(d2)
-    # the full candidate set is covered
-    want = {
-        (dx, dy)
-        for dy in range(8)
-        for dx in range(-7, 9)
-        if not (dy == 0 and dx < 1)
-    }
-    assert set(_DIST_TABLE) == want
+    assert decode_webp_native(riff2) is None
 
 
 def test_decode_bomb_guard():
@@ -789,12 +773,12 @@ def test_decode_bomb_guard():
     body = b"\x2f" + bw.bytes() + b"\x00" * 64
     chunk = b"VP8L" + len(body).to_bytes(4, "little") + body
     riff = b"RIFF" + (4 + len(chunk)).to_bytes(4, "little") + b"WEBP" + chunk
-    assert decode_webp(riff) is None
+    assert decode_webp_native(riff) is None
 
 
 def test_new_parsers_total_under_mutation():
-    """Round-12 parsers (VP8L, PDF, audio/image/video metadata) never
-    raise on mutated payloads — the totality standard the older
+    """The WebP decoder and the PDF and audio/image/video metadata
+    parsers never raise on mutated payloads — the totality standard the older
     decoders already meet (a larger 21k-call offline fuzz ran clean
     during development)."""
     import random
@@ -812,7 +796,7 @@ def test_new_parsers_total_under_mutation():
     npr = np.random.default_rng(3)
     seed = encode_plain(npr.integers(0, 256, (6, 8, 3)).astype(np.uint8))
     fns = (
-        decode_webp, extract_pdf_text, _mp3_metadata, _flac_metadata,
+        decode_webp_native, extract_pdf_text, _mp3_metadata, _flac_metadata,
         _ogg_metadata, _mp4_metadata, _image_header_meta,
     )
     for _ in range(120):

@@ -1,10 +1,11 @@
-"""Per-format image decode throughput: pure-python tier vs native
-ctypes tier (SCALE.md media-ladder evidence, round-14 verdict item 8).
+"""Per-format image decode throughput of the system codec bindings
+(``native_codecs.py``) that the image decode ladder runs.
 
 Generates payloads with the tests' independent encoder twins (PNG/
-GIF/TIFF/JPEG) and libwebp (WebP lossy + lossless) at two pixel
-scales, times each decoder on its own payloads, and prints a markdown
-table of MB/s (payload bytes) and MPx/s (decoded pixels). Run:
+GIF/TIFF/JPEG), libwebp (WebP lossy + lossless), libavif, libheif and
+an SVG of random circles at two pixel scales, times each decoder on
+its own payloads, and prints a markdown table of MB/s (payload bytes)
+and MPx/s (decoded pixels). Run:
 
     python tools/decode_probe.py
 
@@ -24,13 +25,6 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from opencosmo_spark.pipeline import native_codecs as nc  # noqa: E402
-from opencosmo_spark.pipeline.multimodal import (  # noqa: E402
-    _decode_gif,
-    _decode_jpeg,
-    _decode_png,
-    _decode_tiff,
-    _decode_webp_safe,
-)
 
 
 def _payloads(h, w, seed=7):
@@ -99,18 +93,7 @@ def _payloads(h, w, seed=7):
     return out
 
 
-PURE = {
-    "png": _decode_png,
-    "gif": _decode_gif,
-    "tiff": _decode_tiff,
-    "jpeg": _decode_jpeg,
-    "webp-lossy": _decode_webp_safe,
-    "webp-lossless": _decode_webp_safe,
-    "avif": lambda _p: None,  # no pure tier exists
-    "heic": lambda _p: None,
-    "svg": lambda _p: None,
-}
-NATIVE = {
+DECODERS = {
     "png": nc.decode_png_native,
     "gif": nc.decode_gif_native,
     "tiff": nc.decode_tiff_native,
@@ -140,20 +123,14 @@ def _rate(fn, payload, npx, budget_s=2.0):
 
 def main():
     scales = [(64, 64), (512, 512)]
-    print("| format | scale | bytes | pure MB/s | pure MPx/s |"
-          " native MB/s | native MPx/s | speedup |")
-    print("|---|---|---|---|---|---|---|---|")
+    print("| format | scale | bytes | MB/s | MPx/s |")
+    print("|---|---|---|---|---|")
     for h, w in scales:
         for fmt, payload, npx in _payloads(h, w):
-            p = _rate(PURE[fmt], payload, npx)
-            n = _rate(NATIVE[fmt], payload, npx)
-            pm = f"{p[0]:.2f}" if p else "—"
-            pp = f"{p[1]:.2f}" if p else "—"
+            n = _rate(DECODERS[fmt], payload, npx)
             nm = f"{n[0]:.1f}" if n else "—"
             npix = f"{n[1]:.1f}" if n else "—"
-            speed = f"{n[1] / p[1]:.0f}x" if (p and n) else "—"
-            print(f"| {fmt} | {h}x{w} | {len(payload)} | {pm} | {pp} |"
-                  f" {nm} | {npix} | {speed} |")
+            print(f"| {fmt} | {h}x{w} | {len(payload)} | {nm} | {npix} |")
 
 
 if __name__ == "__main__":

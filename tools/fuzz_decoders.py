@@ -1,7 +1,8 @@
-"""Offline totality fuzz over the round-13 decoder surfaces.
+"""Offline totality fuzz over the decoder surfaces.
 
-Hammers the newest parsers — lossy VP8 WebP, partially-interleaved
-multi-scan JPEG, PDF text/image extraction (incl. RC4/AES decryption),
+Hammers the decoders — lossy WebP and partially-interleaved multi-scan
+JPEG through the system codec bindings, PDF text/image extraction
+(incl. RC4/AES decryption), TIFF, ICO, the audio decoders, media tags
 and mp4/WebM subtitle walks — with byte mutations and truncations of
 VALID seed payloads produced by the test suite's independent encoder
 twins. The contract under fuzz is totality: junk degrades to
@@ -62,22 +63,25 @@ def main():
     rng = np.random.default_rng(13)
     total = 0
 
-    # --- lossy VP8 / VP8L / animated WebP -----------------------------
+    # --- lossy WebP ----------------------------------------------------
     from test_vp8 import _LW, lw_encode, make_image
-    from opencosmo_spark.pipeline.vp8l import decode_webp
+    from opencosmo_spark.pipeline.native_codecs import (
+        decode_jpeg_native,
+        decode_tiff_native,
+        decode_webp_native,
+    )
 
     seeds = []
     if _LW is not None:
         for kind, q in (("mix", 40), ("grad", 75), ("noise", 90)):
             seeds.append(lw_encode(make_image(48, 40, kind, rng), q))
-    total += _hammer("vp8", decode_webp, seeds, rng)
+    total += _hammer("vp8", decode_webp_native, seeds, rng)
 
     # --- partially-interleaved + multi-scan JPEG ----------------------
     from test_analysis_multimodal import (
         _make_jpeg_partial,
         _make_jpeg_multiscan,
     )
-    from opencosmo_spark.pipeline.multimodal import _decode_jpeg
 
     rgb = (rng.integers(0, 256, (40, 48, 3))).astype(np.uint8)
     seeds = [
@@ -85,7 +89,7 @@ def main():
         _make_jpeg_partial(rgb, subsample=True, restart=2)[0],
         _make_jpeg_multiscan(rgb)[0],
     ]
-    total += _hammer("jpeg_scans", _decode_jpeg, seeds, rng)
+    total += _hammer("jpeg_scans", decode_jpeg_native, seeds, rng)
 
     # --- PDF text + image extraction incl. decryption -----------------
     from test_pdf import (
@@ -120,7 +124,6 @@ def main():
         ogg_vorbis_with_tags, mp4_with_tags,
     )
     from opencosmo_spark.pipeline.multimodal import (
-        _decode_tiff,
         _decode_aiff,
         _decode_au,
         _decode_wav,
@@ -136,7 +139,7 @@ def main():
         rng,
     )
     total += _hammer(
-        "tiff", _decode_tiff,
+        "tiff", decode_tiff_native,
         [make_tiff(_img(20, 24, 3, 1), comp=5),
          make_tiff(_img(16, 16, 1, 2), comp=32773, rows_per_strip=5)],
         rng,
