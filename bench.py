@@ -25,18 +25,26 @@ Noise self-identification (added after round 9, where a mid-suite
 host-noise window inflated the recorded headline 27.2s vs a
 quiet-window 9.5s while BOTH start/end calibration probes read
 quiet): flags any query whose max/min run spread exceeds
-NOISE_SPREAD (3x) OR whose best exceeds HISTORY_RATIO (2.5x) times
-its median across prior rounds' BENCH_r*.json (a sustained noise
-window slows all three runs together and evades the spread gate —
-observed r10), quiet-retries every flagged query once after the
+NOISE_SPREAD (3x), quiet-retries every flagged query once after the
 suite (taking the better best-of), and annotates each query with a
-CPU micro-probe reading taken immediately before it.
+CPU micro-probe reading taken immediately before it. Every gate acts
+on the current run only: times recorded on another host are never
+a reference.
+
+Per-layer breakdown: after its timed runs each query runs once more,
+untimed, through perfbench's tracer (``perfbench.run.Runner`` with
+``trace=True``): construction time, py4j calls, jobs started before
+the action, Catalyst phases and the status store's stage metrics.
+The record is aggregated by ``perfbench.run.aggregate_layers`` into
+the same keys ``perfbench/run.py --trace 1`` reports, printed as one
+``# layers <query> {...}`` stderr line and stored in the sidecar's
+``query_layers``.
 
 Output contract: stdout's LAST line is the compact driver JSON
 (<1.5 KB — the driver keeps only the final ~2000 chars, r10's 4.6 KB
 line was truncated into an unparseable artifact); the full per-run
-diagnostics (query_runs, query_spread, micro_probe_sec, history
-medians) go to the BENCH_DETAIL.json sidecar next to this script.
+diagnostics (query_runs, query_spread, micro_probe_sec,
+query_layers) go to the BENCH_DETAIL.json sidecar next to this script.
 """
 
 from __future__ import annotations
@@ -51,6 +59,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from opencosmo_spark import get_spark
+from perfbench import common
+from perfbench.run import Runner, aggregate_layers
 
 # The 18 headline queries fixed since round 1 — the "value" total stays
 # round-over-round comparable. Later operators are timed separately in
@@ -101,14 +111,6 @@ EXTRA_QUERIES = [
 # the host.
 NOISE_SPREAD = 3.0
 
-# A noise window longer than one query's three runs evades the spread
-# gate entirely (observed r10: q35 ran [12.5, 9.9, 13.2] — spread 1.34,
-# unflagged — 10x its steady state). Cross-check each recorded best
-# against the query's MEDIAN across prior rounds' BENCH_r*.json and
-# quiet-retry anything above this ratio. Genuine regressions survive
-# the retry and still get recorded; only transient noise is purged.
-HISTORY_RATIO = 2.5
-
 # Chronic noise-suspects (flagged two consecutive rounds, r12-r13):
 # both are cache()-heavy dedup queries whose FIRST timed run still
 # pays executor-side cache materialization, so run 1 reads ~20% slow
@@ -119,73 +121,49 @@ HISTORY_RATIO = 2.5
 # per-query codegen/JIT warmup, so the lane is kept.)
 WARM_LANE = {"q31_dedup_fingerprint", "q35_minhash_lsh"}
 
-# History gate validity horizon: when a query's DEFINITION grows (more
-# lanes, more oracle surface), earlier rounds measured a smaller query
-# and their medians would flag the new shape forever. Map query -> the
-# first round whose artifact measures the current definition.
-# q31 gained the corpus_churn lanes in r13 (commit a944796): r1-r12
-# recorded the bare fingerprint dedup (~0.3s) vs today's +churn shape
-# (~0.8s) — the r14 "0.825s vs median 0.310s" flag was this, not a
-# regression (verified by decomposition: simple part 0.56s, churn
-# 0.78s, both dominated by fixed small-data job overhead).
-# The persist-using operators are pinned to r15: earlier rounds'
-# recorded bests include cross-rep cache hits the r15 between-run
-# release eliminated (see _release_caches), so pre-r15 medians would
-# flag every honest reading as noise forever.
-HISTORY_SINCE = {
-    "q31_dedup_fingerprint": 15,
-    "q35_minhash_lsh": 15,
-    "q39_ngram_jaccard": 15,
-    "q60_semantic_dedup": 15,
-    "q62_line_dedup": 15,
-    "q63_bm25_topk": 15,
-    "q64_nb_classify": 15,
-    "q65_dup_spans": 15,
-}
+
+class BenchQueries(common.WorkloadBase):
+    """The bench queries as a perfbench workload, so perfbench's Runner
+    traces them: an op is one query (its name is the op kind), built
+    inside the ``entry.query`` span and ended by the count the timed
+    runs take. ``DataFrame.count()`` executes ``groupBy().count()``;
+    collecting that frame runs the same plan and keeps its
+    QueryExecution, whose Catalyst phases the record reads."""
+
+    name = "bench"
+
+    def __init__(self, queries: dict, sf_dir: str):
+        self.queries, self.sf_dir = queries, sf_dir
+
+    def after(self) -> None:
+        pass  # no query writes output
+
+    def run(self, spark, tr, kind: str, p: dict) -> int:
+        with tr.span("entry.query"):
+            df = self.queries[kind](spark, self.sf_dir)
+        tr.mark_action()
+        counted = df.groupBy().count()
+        tr.op.frames += [df, counted]
+        with tr.span("collect"):
+            n = counted.collect()[0][0]
+        tr.count("collect.rows", float(n))
+        return n
 
 
-def _round_of(path: str) -> int:
-    import re
-
-    m = re.search(r"BENCH_r(\d+)\.json$", path)
-    return int(m.group(1)) if m else 0
-
-
-def _history_medians(repo_dir: str, sf=None) -> dict[str, float]:
-    """Per-query median best-time across all prior BENCH_r*.json
-    artifacts in the repo root, restricted to rounds run at the same
-    scale factor (times aren't comparable across SFs) and to rounds
-    measuring the query's CURRENT definition (HISTORY_SINCE). Accepts
-    both the raw one-line format and the driver's wrapper (metric line
-    inside a "tail" string); unparseable rounds are skipped. Empty
-    dict when no history."""
-    import glob
-    import statistics
-
-    hist: dict[str, list[float]] = {}
-    for path in sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))):
-        rnd = _round_of(path)
-        try:
-            with open(path) as f:
-                text = f.read()
-            doc = json.loads(text)
-            if "metric" not in doc:
-                tail = doc.get("tail", "") or ""
-                start = tail.rfind('{"metric"')
-                if start < 0:
-                    continue
-                doc = json.loads(tail[start:].splitlines()[0])
-        except (OSError, json.JSONDecodeError, ValueError):
-            continue
-        if sf is not None and doc.get("sf") != sf:
-            continue
-        for bucket in ("queries", "extra_queries"):
-            for q, t in (doc.get(bucket) or {}).items():
-                if rnd < HISTORY_SINCE.get(q, 0):
-                    continue  # older rounds measured a smaller query
-                if isinstance(t, (int, float)) and t > 0:
-                    hist.setdefault(q, []).append(float(t))
-    return {q: statistics.median(v) for q, v in hist.items()}
+def _traced_layers(runner: Runner, name: str) -> dict[str, float]:
+    """One untimed traced run of ``name``: its per-layer record,
+    aggregated as ``perfbench/run.py --trace 1`` aggregates an op kind
+    and printed in the same ``# layers`` line."""
+    rec = runner.one(name, {})
+    if rec["error"] is not None:
+        raise RuntimeError(rec["error"])
+    m = rec["layers"]
+    per = aggregate_layers([m], runner.spark.sparkContext.defaultParallelism)
+    per["op.s"] = m["op.s"]
+    per["exec.run_per_op_s"] = per["exec.executor_run_s"] / per["op.s"]
+    per = {k: round(v, 6) for k, v in per.items()}
+    print(f"# layers {name} {json.dumps(per)}", file=sys.stderr)
+    return per
 
 
 def _calibration_probe(spark) -> float:
@@ -225,42 +203,25 @@ def _micro_probe() -> float:
     return round(time.perf_counter() - t0, 4)
 
 
-def _release_caches(spark, df) -> None:
-    """Drop every cache a query execution materialized so the NEXT run
-    recomputes from parquet: the operator-registered intermediates
-    (``_oc_cached``, the dedup builders' release protocol) plus a
-    whole-session ``clearCache()`` belt for persists without a hook.
-    Without this, CacheManager plan-matching let runs 2-3 read run 1's
-    cache and best-of-3 recorded cross-run-cache times (r14 audit)."""
-    for c in getattr(df, "_oc_cached", []):
-        try:
-            c.unpersist()
-        except Exception:  # noqa: BLE001 — release is best-effort
-            pass
-    try:
-        spark.catalog.clearCache()
-    except Exception:  # noqa: BLE001
-        pass
-
-
 def _time_query(fn, spark, sf_dir, reps: int = 3, warm: bool = False):
     """Run a query `reps` times; return (all run times, row count).
-    Caches are released BETWEEN runs (see _release_caches) so each
-    timed run is a full single-execution recompute. ``warm`` adds one
-    UNTIMED run first (WARM_LANE queries — absorbs codegen/JIT
+    Caches are released BETWEEN runs (``common.release_caches``) so
+    each timed run is a full single-execution recompute: without it,
+    CacheManager plan-matching let runs 2-3 read run 1's cache (r14
+    audit). ``warm`` adds one UNTIMED run first (WARM_LANE queries — absorbs codegen/JIT
     warmup; its caches are released too)."""
     runs = []
     n = 0
     if warm:
         df = fn(spark, sf_dir)
         df.count()
-        _release_caches(spark, df)
+        common.release_caches(spark, [df])
     for _ in range(reps):
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         n = df.count()
         runs.append(round(time.perf_counter() - t0, 3))
-        _release_caches(spark, df)
+        common.release_caches(spark, [df])
     return runs, n
 
 
@@ -284,15 +245,9 @@ def main():
     probes: dict[str, float] = {}
     errors: dict[str, str] = {}
     noise_suspect: list[str] = []
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        # malformed sf string ("1.2.3", "12.") — history lookup simply
-        # finds no matching rounds; never abort the bench run over it
-        sf_val = sf
-    history = _history_medians(
-        os.path.dirname(os.path.abspath(__file__)), sf=sf_val
-    )
+    layers: dict[str, dict[str, float]] = {}
+    layer_errors: dict[str, str] = {}
+    runner = Runner(spark, BenchQueries(qs, sf_dir), trace=True)
 
     def run_suite(names, bucket, tag=""):
         for name in names:
@@ -317,20 +272,16 @@ def main():
             if spread > NOISE_SPREAD:
                 noise_suspect.append(name)
                 why = " [noise-suspect: spread]"
-            elif name in history and best > HISTORY_RATIO * history[name]:
-                # sustained-window blind spot: all three runs slow
-                # together, spread looks clean, but the best is far
-                # off this query's cross-round steady state
-                noise_suspect.append(name)
-                why = (
-                    f" [noise-suspect: {best:.3f}s vs history median"
-                    f" {history[name]:.3f}s]"
-                )
             print(
                 f"# {name}: {best:.3f}s (runs={runs}, spread={spread}x,"
                 f" {n} rows){tag}{why}",
                 file=sys.stderr,
             )
+            try:
+                layers[name] = _traced_layers(runner, name)
+            except RuntimeError as e:  # a failed traced run loses one record
+                layer_errors[name] = str(e)[:500]
+                print(f"# layers {name}: ERROR {layer_errors[name]}", file=sys.stderr)
 
     run_suite(BENCH_QUERIES, timings)
 
@@ -398,8 +349,10 @@ def main():
         query_runs=all_runs,
         query_spread=spreads,
         micro_probe_sec=probes,
-        history_median_sec={q: round(t, 3) for q, t in history.items()},
+        query_layers=layers,
     )
+    if layer_errors:
+        detail["layer_errors"] = layer_errors
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )

@@ -33,7 +33,6 @@ one spread too many or too few, never a wrong row.
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 
 from py4j.java_gateway import is_instance_of
@@ -104,17 +103,8 @@ def spread_small_input(
     default so retried tasks reproduce the row->partition map — guide
     §2.5), which serializes in exactly the single map task this helper
     exists to relieve; a deterministic key needs no such sort and is
-    retry-safe by construction.
-
-    ``OC_SPREAD_DISABLE=1`` turns the helper into a no-op — the A/B
-    switch measurement harnesses flip without rebuilding plans."""
-    if os.environ.get("OC_SPREAD_DISABLE"):
-        return df
-    try:
-        sc = df.sparkSession.sparkContext
-        want = int(min_parts or sc.defaultParallelism)
-    except Exception:  # noqa: BLE001 — spreading is best-effort
-        return df
+    retry-safe by construction."""
+    want = int(min_parts or df.sparkSession.sparkContext.defaultParallelism)
     have = _input_partitions(df)
     if have is None or have >= want or want <= 1:
         return df

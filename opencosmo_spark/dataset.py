@@ -666,9 +666,9 @@ class Dataset:
         (reference dataset.py:838-883).
 
         Small ranges (``end`` <= ``head_max``, default
-        ``_POSITIONAL_HEAD_MAX``) plan as
-        TakeOrderedAndProject (limit end) + a row_number over only
-        those rows — optimal when the range is a page. Larger ranges
+        ``_POSITIONAL_HEAD_MAX``) plan as one
+        TakeOrderedAndProject (limit end, offset start) — optimal when
+        the range is a page. Larger ranges
         switch to the fully distributed rank
         (``_ranked_distributed``): per-value-bucket row numbers +
         broadcast offsets, so a ``take_range(0, 50M)`` at 100x scale
@@ -686,20 +686,11 @@ class Dataset:
                     (F.col("__rn") >= start) & (F.col("__rn") < end)
                 ).drop("__rn")
                 return self._clone(out)
-        if order:
-            head = df.orderBy(*order).limit(end)
-        else:
-            head = df.limit(end)
         if start == 0:
+            head = df.orderBy(*order).limit(end) if order else df.limit(end)
             return self._clone(head)
-        from pyspark.sql import Window
-
-        if not order:
-            order = self._require_order("take_range with start > 0")
-        w = Window.orderBy(*order)
-        ranked = head.withColumn("__rn", F.row_number().over(w))
-        out = ranked.filter(F.col("__rn") > start).drop("__rn")
-        return self._clone(out)
+        order = self._require_order("take_range with start > 0")
+        return self._clone(df.orderBy(*order).limit(end).offset(start))
 
     def take_rows(
         self, rows: Iterable[int], head_max: int | None = None

@@ -325,7 +325,6 @@ def fof_groups(
     cols: tuple[str, str, str] = ("x", "y", "z"),
     periodic: bool = True,
     max_iterations: int = 30,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Friends-of-friends group finding (Davis et al. 1985): particles
     closer than ``linking_length`` are friends; groups are the
@@ -335,10 +334,9 @@ def fof_groups(
     dedup pipeline already proves at scale (cell-keyed pair join +
     distributed connected components). FoF percolation chains are the
     HIGH-DIAMETER connected-components case (a filament of length L
-    needs L min-label rounds), so the default here is the
+    needs L min-label rounds), so this always runs the
     large-star/small-star algorithm (O(log n) rounds regardless of
-    chain length); pass ``algorithm="minlabel"`` for the
-    diameter-bounded propagation loop.
+    chain length), as ``sky_fof_groups`` does.
     """
     from ..pipeline.dedup import connected_components
 
@@ -348,7 +346,7 @@ def fof_groups(
     nodes = df.select(F.col(id_col))
     labels = connected_components(
         pairs, nodes, id_col, "a", "b", max_iterations=max_iterations,
-        algorithm=algorithm,
+        algorithm="star",
     )
     return labels.withColumnRenamed("cluster_id", "group_id")
 

@@ -1,87 +1,21 @@
-"""bench.py noise-hygiene helpers: the history-median gate that
-catches sustained noise windows (all three runs slow together, intra-
-run spread clean — r10's q35 recorded 9.881s at spread 1.34, 8.7x its
-steady state) and the compact-driver-line contract."""
+"""bench.py: the query lists resolve, and the traced lane records
+perfbench's per-layer breakdown for a bench query."""
 
-import json
 import os
 import sys
-
-import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 
-
-def _write(path, doc):
-    with open(path, "w") as f:
-        json.dump(doc, f)
-
-
-def test_history_medians_same_sf_only(tmp_path):
-    d = str(tmp_path)
-    _write(
-        f"{d}/BENCH_r01.json",
-        {"metric": "x", "sf": 0.1, "queries": {"q1": 1.0}, "extra_queries": {"e1": 2.0}},
-    )
-    _write(
-        f"{d}/BENCH_r02.json",
-        {"metric": "x", "sf": 0.1, "queries": {"q1": 3.0}},
-    )
-    _write(
-        f"{d}/BENCH_r03.json",
-        {"metric": "x", "sf": 0.01, "queries": {"q1": 100.0}},  # other SF
-    )
-    h = bench._history_medians(d, sf=0.1)
-    assert h["q1"] == 2.0  # median of 1.0, 3.0 — the 0.01 round excluded
-    assert h["e1"] == 2.0
-    # no sf filter -> all rounds pool
-    assert bench._history_medians(d)["q1"] == 3.0
-
-
-def test_history_medians_driver_wrapper_and_junk(tmp_path):
-    d = str(tmp_path)
-    line = json.dumps({"metric": "x", "sf": 0.1, "queries": {"q1": 4.0}})
-    _write(
-        f"{d}/BENCH_r01.json",
-        {"parsed": None, "tail": "WARN noise\n" + line + "\n"},
-    )
-    with open(f"{d}/BENCH_r02.json", "w") as f:
-        f.write("not json at all")
-    _write(f"{d}/BENCH_r03.json", {"parsed": None, "tail": "no metric here"})
-    h = bench._history_medians(d, sf=0.1)
-    assert h == {"q1": 4.0}
-
-
-def test_history_gate_replays_r10_sustained_window(monkeypatch):
-    """The real artifact history must flag r10's sustained-noise q35
-    measurement (9.881s, intra-run spread only 1.34x) at the 2.5x
-    gate, while its quiet steady state (~0.96s) passes. q35's LIVE
-    history starts at r15 (HISTORY_SINCE — the pre-r15 bests include
-    cross-rep cache hits), so the replay unpins the horizon: the gate
-    ARITHMETIC against the r1-r14 artifacts is what this test pins."""
-    monkeypatch.setattr(bench, "HISTORY_SINCE", {})
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    h = bench._history_medians(repo, sf=0.1)
-    if "q35_minhash_lsh" not in h:
-        import pytest
-
-        pytest.skip("no sf0.1 bench history in this checkout")
-    med = h["q35_minhash_lsh"]
-    assert 9.881 > bench.HISTORY_RATIO * med  # the r10 miss now flags
-    assert 0.957 <= bench.HISTORY_RATIO * med  # steady state passes
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_bench_query_lists_resolve():
     """Every bench lane must name a real queries() entry with an
     oracle (except documented non-SQL ops) — catches drift when
     queries are added or renamed."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
-    import bench
 
     qs = set(e.queries())
     oracles = set(e.oracle_sql())
@@ -90,30 +24,21 @@ def test_bench_query_lists_resolve():
         assert name in oracles, f"bench query {name} lacks an oracle"
     for lane in bench.WARM_LANE:
         assert lane in qs
-    for q in bench.HISTORY_SINCE:
-        assert q in qs
 
 
-def test_history_since_scopes_medians(tmp_path):
-    """Rounds older than a query's HISTORY_SINCE are excluded from
-    its median (query-definition changes must not flag forever)."""
-    import json
+def test_traced_lane_records_layers(spark):
+    """One traced run of a cheap query through perfbench's Runner gives
+    every per-op layer key perfbench reports, with the driver's py4j
+    calls and the query's jobs counted."""
+    import __spark_entry__ as e
+    from perfbench import common
+    from perfbench.run import RUN_LEVEL, Runner
 
-    import bench
-
-    for rnd, t in ((1, 0.3), (2, 0.3), (13, 0.8), (14, 0.85)):
-        (tmp_path / f"BENCH_r{rnd:02d}.json").write_text(json.dumps({
-            "metric": "headline_queries_total", "value": 1.0,
-            "sf": 0.1, "queries": {"q31_dedup_fingerprint": t,
-                                   "q01_scan_filter_project": 0.3},
-        }))
-    old = dict(bench.HISTORY_SINCE)
-    try:
-        bench.HISTORY_SINCE.clear()
-        bench.HISTORY_SINCE["q31_dedup_fingerprint"] = 13
-        m = bench._history_medians(str(tmp_path), sf=0.1)
-    finally:
-        bench.HISTORY_SINCE.clear()
-        bench.HISTORY_SINCE.update(old)
-    assert m["q31_dedup_fingerprint"] == pytest.approx(0.825)
-    assert m["q01_scan_filter_project"] == pytest.approx(0.3)
+    wl = bench.BenchQueries(e.queries(), SF_DIR)
+    layers = bench._traced_layers(
+        Runner(spark, wl, trace=True), "q01_scan_filter_project"
+    )
+    assert set(common.LAYER_UNITS) - set(RUN_LEVEL) <= set(layers)
+    assert layers["api.py4j_calls"] > 0
+    assert layers["exec.jobs"] >= 1
+    assert layers["collect.rows"] > 0

@@ -73,6 +73,15 @@ def test_q08_topk_is_take_ordered(spark):
     assert "range" not in partitionings(plan)
 
 
+def test_q08_take_range_plans_no_window(spark):
+    """take_range(start > 0) is one TakeOrderedAndProject with an
+    offset, not a row_number over an unpartitioned window (which pulls
+    every row through one task and warns ``No Partition Defined``)."""
+    n = nodes(plan_of(spark, "q08_sort_topk"))
+    assert not any("Window" in x for x in n)
+    assert n.count("TakeOrderedAndProject") == 2  # the head and the range
+
+
 def test_q01_filter_pushed_to_scan(spark):
     plan = plan_of(spark, "q01_scan_filter_project")
     assert "PushedFilters: [" in plan
@@ -173,18 +182,21 @@ def test_q51_star_join_broadcasts_and_pushes(spark):
 def test_q50_sample_is_pushable_scan_filter(spark, monkeypatch):
     """Stratified sampling compiles to a bare filter over one scan: no
     exchange, no join, no Python. The query adds ONE scale-adaptive
-    keyed spread (a no-op at real scale — OC_SPREAD_DISABLE pins the
-    operator's intrinsic shape here); with the spread on, the only
+    keyed spread (a no-op at real scale — patching the helper out pins
+    the operator's intrinsic shape here); with the spread on, the only
     exchange allowed is that hash repartition and the stratified lane
     filter must still sit BELOW it (survivors-only shuffle)."""
-    monkeypatch.setenv("OC_SPREAD_DISABLE", "1")
-    plan = plan_of(spark, "q50_stratified_sample")
+    with monkeypatch.context() as m:
+        m.setattr(
+            "opencosmo_spark._parallel.spread_small_input",
+            lambda df, *a, **k: df,
+        )
+        plan = plan_of(spark, "q50_stratified_sample")
     n = nodes(plan)
     assert "Exchange" not in n
     assert not any("Join" in x for x in n)
     assert "BatchEvalPython" not in n
 
-    monkeypatch.delenv("OC_SPREAD_DISABLE")
     plan = plan_of(spark, "q50_stratified_sample")
     n = nodes(plan)
     assert n.count("Exchange") <= 2  # one keyed spread per branch
