@@ -15,9 +15,9 @@ DataFrame-sized, never driver-sized). Each merge round then
 
 So ``n_merges`` rounds cost n_merges aggregations over the word table
 (not the corpus), and the driver only ever holds the merge list. The
-word table is localCheckpoint()ed each round to truncate the plan
-(the symbol rewrite would otherwise nest n_merges transforms deep) —
-swap for ``checkpoint()`` on a real cluster.
+word table is checkpointed each round (``_rounds.checkpoint_round``)
+to truncate the plan; the symbol rewrite would otherwise nest
+n_merges transforms deep.
 
 Determinism: ties on pair count break by the pair's symbols
 lexicographically, so the merge list is reproducible across runs and
@@ -29,6 +29,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .._rounds import checkpoint_round
 from .text import words_expr
 
 _EOW = "</w>"
@@ -175,13 +176,12 @@ def train_bpe_merges(
     printable ranges)."""
     _check_mode(mode)
     init = _initial_symbols if mode == "char" else _byte_symbols
-    words = (
-        word_frequencies(df, text_col, mode=mode)
-        .select(init(F.col("word")).alias("symbols"), "freq")
-        .localCheckpoint()
+    words = word_frequencies(df, text_col, mode=mode).select(
+        init(F.col("word")).alias("symbols"), "freq"
     )
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
+        words, _ = checkpoint_round(words)
         top = (
             _pair_counts(words)
             .orderBy(F.col("n").desc(), F.col("pair"))
@@ -194,7 +194,7 @@ def train_bpe_merges(
         merges.append((a, b))
         words = words.select(
             _merge_symbols(F.col("symbols"), a, b).alias("symbols"), "freq"
-        ).localCheckpoint()
+        )
     return merges
 
 

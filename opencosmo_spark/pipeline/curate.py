@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .._rounds import checkpoint_round
 from .dedup import (
     dedup_by_clusters,
     exact_dedup,
@@ -286,13 +287,12 @@ def curate_corpus(
 
     def mark(name: str, d: DataFrame) -> DataFrame:
         if report:
-            # checkpoint at the stage boundary so each count pays for
-            # its OWN stage, not the whole lineage prefix again
-            # (measured 3x at sf0.1); report mode is for recipe
+            # checkpoint at the stage boundary (``_rounds``) so each
+            # stage runs once, not once per later stage, and its row
+            # count rides the same job; report mode is for recipe
             # tuning — production runs use report=False and stay lazy.
-            # On a cluster swap localCheckpoint for checkpoint().
-            d = d.localCheckpoint(eager=True)
-            counts[name] = d.count()
+            d, m = checkpoint_round(d, F.count(F.lit(1)).alias("n"))
+            counts[name] = m["n"]
         if return_dropped:
             cur = d.select(id_col)
             if prev_ids:

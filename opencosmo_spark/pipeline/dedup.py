@@ -9,10 +9,11 @@ size, not corpus²); only candidates pay the exact-Jaccard verify.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from .._parallel import spread_small_input
+from .._rounds import checkpoint_round
 
 
 def md5_lane(c, hex_digits: int = 15) -> F.Column:
@@ -1014,35 +1015,47 @@ def connected_components(
       shrinks toward one edge per non-root node), so per-round cost is
       comparable to a minlabel round on the same graph.
 
-    Both paths localCheckpoint per round to truncate lineage — at
-    cluster scale swap for ``checkpoint()`` against distributed
-    storage.
+    Both paths cut the lineage every round through
+    ``_rounds.checkpoint_round``; their convergence numbers ride that
+    round's checkpoint job.
     """
-    if algorithm == "star":
-        return _star_components(
-            edges, nodes, id_col, a_col, b_col, max_iterations
-        )
-    if algorithm != "minlabel":
+    if algorithm not in ("minlabel", "star"):
         raise ValueError(
             f"algorithm must be 'minlabel' or 'star', got {algorithm!r}"
         )
-    # materialize the edge list ONCE: it is re-joined every round, and
-    # upstream candidate generation (LSH banding, Jaccard verify) must
-    # not be re-executed per iteration. Self-loops (n, n) fold the
-    # node's OWN label into the neighborhood min, so each round below
-    # is one join + one grouped min producing the new labels directly
-    # — the old shape (neighbor-min agg, then a second left-join of
-    # labels against it with least/coalesce) re-shuffled the label
-    # table once more per round and, under AQE, materialized an extra
-    # broadcast per round (guide §2.4: two operations keyed the same
-    # way share one exchange; the closed-neighborhood min IS the new
-    # label, so the second join computed nothing the agg could not).
-    # both edge directions come out of ONE explode over each edge row
-    # — the old two-branch union consumed `edges` twice, re-running
-    # the WHOLE upstream candidate generation (LSH banding + exact
-    # verify) once per direction (two identical heavy map stages in
-    # the q47 profile; guide §2.4/§5: reused and expensive subtrees
-    # must not be re-evaluated). Same row multiset, same types.
+    run = _star_components if algorithm == "star" else _minlabel_components
+    labels, converged = run(edges, nodes, id_col, a_col, b_col, max_iterations)
+    if not converged:
+        # a silent partial result would let dedup_by_clusters keep >1
+        # "canonical" row per true cluster — surface it loudly
+        import warnings
+
+        warnings.warn(
+            f"connected_components(algorithm={algorithm!r}) exhausted "
+            f"max_iterations={max_iterations} before its fixpoint; labels "
+            f"may be unconverged (raise max_iterations — minlabel needs "
+            f"graph-diameter rounds, star O(log^2 n))",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    return labels
+
+
+def _minlabel_components(
+    edges: DataFrame,
+    nodes: DataFrame,
+    id_col: str,
+    a_col: str,
+    b_col: str,
+    max_iterations: int,
+) -> tuple[DataFrame, bool]:
+    """Min-label propagation; returns (labels, converged)."""
+    # the edge list is re-joined every round, so it is materialized once
+    # (below) and candidate generation upstream never re-runs. Self-loops
+    # (n, n) fold each node's own label into its neighborhood min, so a
+    # round is one join + one grouped min yielding the new labels. Both
+    # edge directions come out of ONE explode per edge row, so `edges`
+    # (the whole candidate pipeline) is consumed once.
     from pyspark import StorageLevel
 
     sym = (
@@ -1067,35 +1080,21 @@ def connected_components(
             )
         )
     )
-    # r15: a checkpointed frame reports UnknownPartitioning, so EVERY
-    # round's join used to re-shuffle the whole edge table (the BIG
-    # side of CC). Hash-partition it ONCE by the join key and cache:
-    # each round's join then reuses the cached partitioning and only
-    # the (smaller) label table shuffles (guide §2.4 — operations
-    # keyed the same way share one exchange). One extra up-front
-    # shuffle buys rounds-1 avoided edge shuffles — net-positive for
-    # any graph needing >= 2 rounds, i.e. all of them, WHEN the
-    # per-round join is a shuffle join (the at-scale case; at toy
-    # scale the label side broadcasts and the cache only costs its
-    # materialization). The cache is bounded (the edge multiset, two
-    # longs per row), spills to disk, and is released before
-    # returning; the per-round label checkpoints keep round plans
-    # lineage-free. The edges get no eager localCheckpoint: the
-    # partitioned cache is itself the materialization barrier (round 0
-    # fills it in its own job — one job and one pass fewer than
-    # checkpoint THEN repartition). The upstream candidate pipeline
-    # stays in the logical lineage, so each round re-ANALYZES it
-    # (driver-side, small) but never re-executes it.
+    # a checkpointed frame reports UnknownPartitioning, so the edge
+    # table (the big side) is hash-partitioned ONCE by the join key and
+    # cached: each round's join reuses that partitioning and only the
+    # label table shuffles. The cache is the materialization barrier
+    # (round 0 fills it; the edges get no checkpoint job of their own),
+    # spills to disk, and is released before returning. The candidate
+    # pipeline stays in the logical lineage: each round re-analyzes it
+    # on the driver but never re-executes it.
     sym = sym.repartition(F.col("__dst")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # round-0 labels are the IDENTITY map (label(x) = x), so the first
-    # propagation round needs no label join at all: min over the
-    # closed neighborhood of __dst ids IS min over round-0 labels.
-    # The loop below therefore starts from the round-1 result directly
-    # — one grouped shuffle replaces (eager identity checkpoint job +
-    # join + grouped shuffle): two fewer jobs per call (guide §2.4
-    # remove shuffles outright).
+    # round needs no label join: the min over the closed neighborhood of
+    # __dst ids is the round-1 label. The loop starts from there, with
+    # no identity checkpoint job.
     labels = nodes.select(
         F.col(id_col).alias("__node"), F.col(id_col).alias("__label")
     )
@@ -1108,62 +1107,40 @@ def connected_components(
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
          T.FloatType, T.DoubleType, T.DecimalType),
     )
+    lbl = F.col("__label")
+    conv_sum = F.sum(
+        (lbl if numeric_ids else F.xxhash64(lbl)).cast("decimal(38,0)")
+    ).alias("s")
 
-    def _conv_metric():
-        lbl = F.col("__label")
-        return F.sum(
-            (lbl if numeric_ids else F.xxhash64(lbl)).cast("decimal(38,0)")
-        ).alias("s")
-
-    prev_sum = None
-    converged = False
-    for it in range(max_iterations):
-        # the convergence scalar rides the SAME job that materializes
-        # the checkpoint (Observation = CollectMetrics in the plan) —
-        # one pass over labels per round instead of two
-        obs = Observation()
-        if it == 0:
-            # identity labels: label(__dst) == __dst, the join is a
-            # no-op — aggregate sym directly (see round-0 note above)
-            new = sym.groupBy("__src").agg(
-                F.min("__dst").alias("__label")
+    prev_sum, converged = None, False
+    try:
+        for it in range(max_iterations):
+            if it == 0:
+                # identity labels: label(__dst) == __dst, the join is a
+                # no-op — aggregate sym directly (see round-0 note above)
+                new = sym.groupBy("__src").agg(
+                    F.min("__dst").alias("__label")
+                )
+            else:
+                new = (
+                    sym.join(labels, sym["__dst"] == labels["__node"])
+                    .groupBy("__src")
+                    .agg(F.min("__label").alias("__label"))
+                )
+            labels, m = checkpoint_round(
+                new.select(F.col("__src").alias("__node"), "__label"), conv_sum
             )
-        else:
-            new = (
-                sym.join(labels, sym["__dst"] == labels["__node"])
-                .groupBy("__src")
-                .agg(F.min("__label").alias("__label"))
-            )
-        labels = (
-            new.select(F.col("__src").alias("__node"), "__label")
-            .observe(obs, _conv_metric())
-            .localCheckpoint(eager=True)
-        )
-        cur = obs.get["s"]
-        if cur == prev_sum:
-            converged = True
-            break
-        prev_sum = cur
-    if not converged:
-        # a silent partial result would let dedup_by_clusters keep >1
-        # "canonical" row per true cluster — surface it loudly
-        import warnings
-
-        warnings.warn(
-            f"connected_components exhausted max_iterations="
-            f"{max_iterations} before the label fixpoint; labels may "
-            f"be unconverged (raise max_iterations — rounds needed = "
-            f"graph diameter)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # labels are checkpoint-materialized every round, so the edge
-    # cache is no longer reachable from the result — release it now
-    # (ingest loops must not accumulate per-call caches)
-    sym.unpersist()
+            converged = m["s"] == prev_sum
+            if converged:
+                break
+            prev_sum = m["s"]
+    finally:
+        # labels are checkpointed every round, so the result never reads
+        # the edge cache; ingest loops must not accumulate per-call caches
+        sym.unpersist()
     return labels.select(
         F.col("__node").alias(id_col), F.col("__label").alias("cluster_id")
-    )
+    ), converged
 
 
 def _star_components(
@@ -1173,8 +1150,9 @@ def _star_components(
     a_col: str,
     b_col: str,
     max_iterations: int,
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al. 2014).
+) -> tuple[DataFrame, bool]:
+    """Large-star/small-star connected components (Kiveris et al. 2014);
+    returns (labels, converged).
 
     Invariant per round (edge set E over numeric node ids):
 
@@ -1200,14 +1178,12 @@ def _star_components(
     heavy-hitter node costs a skewed join (AQE-splittable), not an
     OOM-sized array.
     """
-    e = (
+    e, _ = checkpoint_round(
         edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    prev = None
-    converged = False
+    prev, converged = None, False
     for _ in range(max_iterations):
         # large-star over the symmetric edge set
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1228,41 +1204,24 @@ def _star_components(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         omins = oriented.groupBy("u").agg(F.min("v").alias("__m"))
-        obs = Observation()
-        e = (
+        e, m = checkpoint_round(
             oriented.join(omins, "u")
             .select(F.col("v").alias("__n"), F.col("__m"))
             .union(omins.select(F.col("u").alias("__n"), F.col("__m")))
             .filter(F.col("__n") != F.col("__m"))
             .select(F.col("__n").alias("u"), F.col("__m").alias("v"))
-            .distinct()
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("chk"),
-            )
-            .localCheckpoint(eager=True)
+            .distinct(),
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("chk"),
         )
-        # observed during the checkpoint job — no second pass; the
-        # one-edge-per-child forest property is not separately checked
-        # because the final labeling aggregates min(v) per child, which
-        # is exact at any composition fixpoint
-        row = obs.get
-        cur = (row["n"], row["chk"])
-        if cur == prev:
-            converged = True
+        # the one-edge-per-child forest property is not separately
+        # checked because the final labeling aggregates min(v) per
+        # child, which is exact at any composition fixpoint
+        cur = (m["n"], m["chk"])
+        converged = cur == prev
+        if converged:
             break
         prev = cur
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"star connected_components exhausted max_iterations="
-            f"{max_iterations} before the star-forest fixpoint; labels "
-            f"may be unconverged (rounds needed = O(log^2 n))",
-            RuntimeWarning,
-            stacklevel=3,
-        )
     # at fixpoint e is (child -> component-min root); min-aggregate per
     # child (exact when the forest property holds, still correct-min if
     # a pathological stable-but-multi-edge state ever slipped through),
@@ -1279,7 +1238,7 @@ def _star_components(
             F.col("__node").alias(id_col),
             F.coalesce("__root", "__node").alias("cluster_id"),
         )
-    )
+    ), converged
 
 
 def remove_duplicate_spans(

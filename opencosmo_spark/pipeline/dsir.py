@@ -25,6 +25,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from .._rounds import checkpoint_round
 from .dedup import md5_lane
 from .text import words_expr
 
@@ -200,15 +201,13 @@ def dsir_resample(
             "__w", F.exp(F.col("log_weight") - F.lit(float(mx)))
         )
         # the surviving (id, log_weight) set is narrow — materialize
-        # it eagerly so the explode lineage is fully consumed before
-        # the unpersist, and the returned plan is corpus ⋈ small-ids
-        # (swap localCheckpoint for checkpoint on a cluster)
-        kept = (
+        # it eagerly (``_rounds.checkpoint_round``) so the explode
+        # lineage is fully consumed before the unpersist, and the
+        # returned plan is corpus ⋈ small-ids
+        kept, _ = checkpoint_round(
             importance_sample(
                 weighted, "__w", target_frac, id_col=id_col, salt=salt
-            )
-            .drop("__w")
-            .localCheckpoint(eager=True)
+            ).drop("__w")
         )
     finally:
         scores.unpersist()

@@ -7,19 +7,21 @@ Scale shape: PageRank is the canonical iterative Spark workload. Each
 iteration is one equi-join (ranks ⋈ edges on src) and one hash
 aggregation (contributions by dst) — keyed shuffles over node ids,
 never over URLs or text. Edges are degree-annotated ONCE and
-persisted; ranks are ``localCheckpoint``ed every iteration so the
-plan never grows with the iteration count (the classic iterative-
-Spark failure mode). The convergence delta and the NEXT iteration's
-dangling mass come from one combined aggregate over the materialized
-ranks — two driver jobs per iteration total. On a cluster, bucket the
+persisted. The node table is checkpointed once, and the ranks every
+iteration, through ``_rounds.checkpoint_round``, so the plan never
+grows with the iteration count (the classic iterative-Spark failure
+mode); the convergence delta and the NEXT iteration's dangling mass
+are observed on that same checkpoint job. On a cluster, bucket the
 edge table by ``src`` to make the per-iteration join exchange-free on
-the big side, and swap ``localCheckpoint`` for ``checkpoint``.
+the big side.
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
+
+from .._rounds import checkpoint_round
 
 
 # href="..." / href='...' targets; fragment-only links (#...) excluded
@@ -90,31 +92,37 @@ def pagerank(
     given.
 
     Stops early when the L1 rank delta drops below ``tol``. Per
-    iteration: the contribution join+aggregation materializes the new
-    ranks (one job, via ``localCheckpoint``), then ONE combined
-    aggregate over new-vs-old ranks yields both the delta and the next
-    iteration's dangling mass — no third pass. The node set is the
-    union of sources and destinations, fixed and flagged up front.
+    iteration: one checkpoint materializes the new ranks next to the
+    old ones, and observes both the delta and the next iteration's
+    dangling mass. The node set is the union of sources and
+    destinations, fixed, counted and flagged up front by one more
+    such checkpoint.
     """
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"), w.alias("_w")
     )
     deg = e.groupBy("_src").agg(F.sum("_w").alias("_deg"))
-    nodes = (
+    # the node table is round 0: its size and dangling count are
+    # observed on the job that materializes it
+    nodes, size = checkpoint_round(
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
         .distinct()
         .join(deg, F.col("node") == deg["_src"], "left")
-        .select(
-            "node", F.col("_deg").isNull().alias("_dang")
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("node", F.col("_deg").isNull().alias("_dang")),
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("_dang"), 1)).alias("dang"),
     )
-    n = nodes.count()
+    n = size["n"]
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("rank"))
-
+    base = (1.0 - damping) / n
+    # dangling mass under the uniform start: (#dangling)/n
+    dangling_mass = size["dang"] / n
+    # the carried frame holds every node with its flag, so each round's
+    # left join against it needs no separate node table
+    ranks = nodes.select("node", "_dang", F.lit(1.0 / n).alias("rank"))
     # out-strength folded into the edges once: the per-iteration join
     # carries (src, dst, share) only
     shares = (
@@ -122,47 +130,31 @@ def pagerank(
         .select("_src", "_dst", (F.col("_w") / F.col("_deg")).alias("_share"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    # dangling mass under the uniform start: (#dangling)/n — a driver
-    # computation off the already-counted node set
-    dangling_mass = (
-        nodes.filter("_dang").count() / n
-    )
-    for _ in range(max_iter):
-        contrib = (
-            shares.join(ranks, shares["_src"] == ranks["node"])
-            .groupBy("_dst")
-            .agg(F.sum(F.col("rank") * F.col("_share")).alias("_in"))
-        )
-        dangle = damping * dangling_mass / n
-        new = (
-            nodes.join(contrib, nodes["node"] == contrib["_dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(base + dangle)
-                    + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-                "_dang",
+    try:
+        for _ in range(max_iter):
+            contrib = (
+                shares.join(ranks, shares["_src"] == ranks["node"])
+                .groupBy("_dst")
+                .agg(F.sum(F.col("rank") * F.col("_share")).alias("_in"))
             )
-            .localCheckpoint(eager=True)
-        )
-        stats = (
-            new.join(
-                ranks.select("node", F.col("rank").alias("_old")), "node"
-            )
-            .agg(
+            dangle = damping * dangling_mass / n
+            ranks, stats = checkpoint_round(
+                ranks.join(contrib, ranks["node"] == contrib["_dst"], "left")
+                .select(
+                    "node",
+                    "_dang",
+                    (
+                        F.lit(base + dangle)
+                        + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
+                    ).alias("rank"),
+                    F.col("rank").alias("_old"),
+                ),
                 F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
                 F.sum(F.when(F.col("_dang"), F.col("rank"))).alias("dmass"),
             )
-            .first()
-        )
-        ranks = new.select("node", "rank")
-        dangling_mass = stats["dmass"] or 0.0
-        if stats["delta"] is not None and stats["delta"] < tol:
-            break
-    shares.unpersist()
-    nodes.unpersist()
-    return ranks
+            dangling_mass = stats["dmass"] or 0.0
+            if stats["delta"] is not None and stats["delta"] < tol:
+                break
+    finally:
+        shares.unpersist()
+    return ranks.select("node", "rank")

@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -37,6 +38,45 @@ def spark():
     cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
     s = get_spark("tests", master=f"local[{cpus}]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` in its own job group and returns
+    (its result, the number of Spark jobs it started)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        # a group keeps its jobs for the life of the app: one per call
+        group = f"count_jobs-{uuid.uuid4()}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+            # the status store is fed by the listener bus: drain it first
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return run
+
+
+@pytest.fixture
+def cached_rdd_ids(spark):
+    """``cached_rdd_ids()`` is the set of RDD ids pinned by a persist.
+    Locally checkpointed RDDs are persisted too, but hold a lineage cut
+    that lives until the driver garbage-collects its frame; they are
+    left out."""
+    sc = spark.sparkContext
+
+    def ids():
+        return {
+            k for k, rdd in sc._jsc.getPersistentRDDs().items()
+            if not rdd.isCheckpointed()
+        }
+
+    return ids
 
 
 def _halo_frame(rng: np.random.Generator) -> pd.DataFrame:

@@ -114,3 +114,38 @@ def test_extract_links_and_host_edges(spark):
     assert edges[("example.com", "other.org")] == 2
     assert edges[("example.com", "third.net")] == 1
     assert len(edges) == 2
+
+
+def test_pagerank_round_is_one_checkpoint_job(spark, graph_df, count_jobs):
+    """Each round's delta and next dangling mass are observed on the
+    round's checkpoint job: no separate stats join, aggregate and
+    first() per round (which made 9 jobs a round)."""
+    df = graph_df[0]
+    _, ten = count_jobs(lambda: pagerank(df, max_iter=10, tol=0.0))
+    _, twenty = count_jobs(lambda: pagerank(df, max_iter=20, tol=0.0))
+    assert (twenty - ten) / 10 <= 5
+
+
+def test_pagerank_releases_its_caches_on_every_path(
+    spark, graph_df, cached_rdd_ids, monkeypatch
+):
+    from opencosmo_spark.pipeline import graph
+
+    before = cached_rdd_ids()
+    empty = spark.createDataFrame([], "src string, dst string")
+    assert pagerank(empty).collect() == []
+    assert cached_rdd_ids() - before == set()
+
+    real, calls = graph.checkpoint_round, []
+
+    def fail_second_round(df, *metrics):
+        # call 1 builds the node table, call 2 is round one
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("round failed")
+        return real(df, *metrics)
+
+    monkeypatch.setattr(graph, "checkpoint_round", fail_second_round)
+    with pytest.raises(RuntimeError, match="round failed"):
+        pagerank(graph_df[0], max_iter=5, tol=0.0)
+    assert cached_rdd_ids() - before == set()

@@ -380,6 +380,45 @@ def test_star_vs_minlabel_differential(spark):
     assert pa == pb
 
 
+@pytest.mark.parametrize("algorithm", ["minlabel", "star"])
+def test_connected_components_warns_when_rounds_run_out(spark, algorithm):
+    """A 10-node chain needs more than two rounds under either
+    algorithm; a partial labeling must not pass silently."""
+    from opencosmo_spark.pipeline.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        pd.DataFrame({"a": list(range(9)), "b": list(range(1, 10))})
+    )
+    nodes = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(10))}))
+    with pytest.warns(RuntimeWarning, match="max_iterations=2"):
+        connected_components(
+            edges, nodes, id_col="doc_id", max_iterations=2,
+            algorithm=algorithm,
+        )
+
+
+def test_minlabel_releases_edge_cache_when_a_round_fails(
+    spark, cached_rdd_ids, monkeypatch
+):
+    from opencosmo_spark.pipeline import dedup
+
+    edges = spark.createDataFrame(pd.DataFrame({"a": [1, 2], "b": [2, 3]}))
+    nodes = spark.createDataFrame(pd.DataFrame({"doc_id": [1, 2, 3]}))
+    real, calls = dedup.checkpoint_round, []
+
+    def fail_second_round(df, *metrics):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("round failed")
+        return real(df, *metrics)
+
+    before = cached_rdd_ids()
+    monkeypatch.setattr(dedup, "checkpoint_round", fail_second_round)
+    with pytest.raises(RuntimeError, match="round failed"):
+        dedup.connected_components(edges, nodes, id_col="doc_id")
+    assert cached_rdd_ids() - before == set()
+
+
 def test_dedup_clusters_group_planted_duplicates(docs_with_dups):
     """End-to-end: LSH pairs over the planted corpus -> components.
     Every (base, exact-dup, near-dup) triple must land in ONE cluster

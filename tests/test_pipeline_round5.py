@@ -596,6 +596,34 @@ def test_curate_corpus_span_removal_mode(spark):
         curate_corpus(df, max_dup_span_frac=0.5, remove_dup_spans=True)
 
 
+def _dup_corpus(spark):
+    base = [
+        f"record {i} describes subject {i % 5} using several distinct "
+        f"words and a closing number {i}"
+        for i in range(24)
+    ]
+    rows = [(i, t) for i, t in enumerate(base)]
+    rows += [(100 + i, base[i]) for i in range(4)]  # exact copies
+    rows += [(200 + i, base[i] + " extra") for i in range(4)]  # near copies
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def test_curate_report_counts_ride_the_stage_checkpoints(spark, count_jobs):
+    """Report mode reads each stage's row count from the observation on
+    that stage's checkpoint job; a separate count() per stage made the
+    same call start 31 jobs."""
+    from opencosmo_spark.pipeline import curate_corpus
+
+    df = _dup_corpus(spark)
+    (_, counts), jobs = count_jobs(
+        lambda: curate_corpus(df, min_quality=0.0, min_tokens=1, report=True)
+    )
+    assert counts == {
+        "input": 32, "quality_gate": 32, "exact_dedup": 28, "near_dedup": 24,
+    }
+    assert jobs <= 31 - len(counts)
+
+
 def test_curate_corpus_cache_ownership(spark):
     """report=True frees the LSH signature cache itself; report=False
     hands it forward on the returned frame for release_cached."""

@@ -8,9 +8,10 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# a fresh interpreter with no arguments, so a tool's module-level work
-# (sys.path edits, argv parsing, a session it might start) sees a plain
-# start and cannot leak into the suite
+# a fresh interpreter, so a tool's module-level work (sys.path edits, a
+# session it might start) cannot leak into the suite; it gets arguments,
+# as the suite's own process does, so a tool that parses them at import
+# fails here
 _IMPORT_ALL = """
 import glob, importlib.util, os
 from pyspark import SparkContext
@@ -26,7 +27,7 @@ for path in paths:
 
 def test_tools_import_without_starting_spark():
     out = subprocess.run(
-        [sys.executable, "-c", _IMPORT_ALL],
+        [sys.executable, "-c", _IMPORT_ALL, "tests/"],
         env=dict(os.environ, TOOLS_ROOT=ROOT),
         capture_output=True, text=True, timeout=120,
     )

@@ -17,6 +17,7 @@ mutated payload written to /tmp for reproduction.
 """
 from __future__ import annotations
 
+import functools
 import sys
 import traceback
 from pathlib import Path
@@ -25,8 +26,6 @@ import numpy as np
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tests"))
-
-TRIALS = int(sys.argv[1]) if len(sys.argv) > 1 else 600
 
 
 def _mutants(rng, seed_bytes, trials):
@@ -42,7 +41,7 @@ def _mutants(rng, seed_bytes, trials):
         yield bytes(data[:cut])
 
 
-def _hammer(name, fn, seeds, rng, trials=TRIALS):
+def _hammer(name, fn, seeds, rng, trials):
     calls = 0
     for si, seed in enumerate(seeds):
         for mut in _mutants(rng, seed, trials):
@@ -59,8 +58,9 @@ def _hammer(name, fn, seeds, rng, trials=TRIALS):
     return calls
 
 
-def main():
+def main(trials):
     rng = np.random.default_rng(13)
+    hammer = functools.partial(_hammer, trials=trials)
     total = 0
 
     # --- lossy WebP ----------------------------------------------------
@@ -75,7 +75,7 @@ def main():
     if _LW is not None:
         for kind, q in (("mix", 40), ("grad", 75), ("noise", 90)):
             seeds.append(lw_encode(make_image(48, 40, kind, rng), q))
-    total += _hammer("vp8", decode_webp_native, seeds, rng)
+    total += hammer("vp8", decode_webp_native, seeds, rng)
 
     # --- partially-interleaved + multi-scan JPEG ----------------------
     from test_analysis_multimodal import (
@@ -89,7 +89,7 @@ def main():
         _make_jpeg_partial(rgb, subsample=True, restart=2)[0],
         _make_jpeg_multiscan(rgb)[0],
     ]
-    total += _hammer("jpeg_scans", decode_jpeg_native, seeds, rng)
+    total += hammer("jpeg_scans", decode_jpeg_native, seeds, rng)
 
     # --- PDF text + image extraction incl. decryption -----------------
     from test_pdf import (
@@ -112,8 +112,8 @@ def main():
         make_pdf_objstm(pages),
         scanned,
     ]
-    total += _hammer("pdf_text", extract_pdf_text, seeds, rng)
-    total += _hammer("pdf_images", extract_pdf_images, [scanned], rng)
+    total += hammer("pdf_text", extract_pdf_text, seeds, rng)
+    total += hammer("pdf_images", extract_pdf_images, [scanned], rng)
 
     # --- TIFF / AIFF / AU / ADPCM / media tags -------------------------
     from test_tiff import make_tiff, _img
@@ -133,24 +133,24 @@ def main():
     from test_ico import ico_file, _dib
     from opencosmo_spark.pipeline.multimodal import _decode_ico
 
-    total += _hammer(
+    total += hammer(
         "ico", _decode_ico,
         [ico_file([_dib(_img(16, 16, 3, 9), 32)], [(16, 16)])],
         rng,
     )
-    total += _hammer(
+    total += hammer(
         "tiff", decode_tiff_native,
         [make_tiff(_img(20, 24, 3, 1), comp=5),
          make_tiff(_img(16, 16, 1, 2), comp=32773, rows_per_strip=5)],
         rng,
     )
     sig = list(range(-100, 100)) * 4
-    total += _hammer("aiff", _decode_aiff,
+    total += hammer("aiff", _decode_aiff,
                      [aiff_file([sig], 8000, 16)], rng)
-    total += _hammer("au", _decode_au, [au_file([sig], 8000, 3)], rng)
+    total += hammer("au", _decode_au, [au_file([sig], 8000, 3)], rng)
     ima_payload, _ = ima_encode([sig], 33)
     ms_payload, _ = ms_encode([sig], 32)
-    total += _hammer(
+    total += hammer(
         "wav_adpcm", _decode_wav,
         [wav_file(0x11, 1, 8000, 20, 33, ima_payload),
          wav_file(2, 1, 8000, 22, 32, ms_payload)],
@@ -165,7 +165,7 @@ def main():
         for _name, art_fn in _ART_PARSERS:
             art_fn(blob)
 
-    total += _hammer(
+    total += hammer(
         "mediatags", parse_all_tags,
         [mk_id3([("TIT2", t_frame("t")),
                  ("USLT", lang_frame("eng", "", "l"))]),
@@ -194,7 +194,7 @@ def main():
                     {"type": "verbatim"}]],
         ),
     ]
-    total += _hammer("flac", decode_flac_samples, seeds, rng)
+    total += hammer("flac", decode_flac_samples, seeds, rng)
 
     # --- subtitle walks ------------------------------------------------
     from test_analysis_multimodal import _make_mp4_subs, _make_webm_subs
@@ -205,10 +205,10 @@ def main():
 
     mp4_cues = [("first cue", 1200), ("second cue", 900)]
     webm_cues = [(0, 1200, "first cue"), (1500, 900, "second cue")]
-    total += _hammer(
+    total += hammer(
         "mp4_subs", _mp4_subtitles, [_make_mp4_subs(mp4_cues)], rng
     )
-    total += _hammer(
+    total += hammer(
         "webm_subs", _webm_subtitles, [_make_webm_subs(webm_cues)], rng
     )
 
@@ -216,4 +216,4 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    main(int(sys.argv[1]) if len(sys.argv) > 1 else 600)
