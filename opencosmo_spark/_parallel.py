@@ -29,6 +29,12 @@ shape per session instead of once per operator construction. The
 semanticHash does not see the files behind a relation, so a session
 that re-reads a growing directory keeps its first count — at worst
 one spread too many or too few, never a wrong row.
+
+The same walk answers ``oc.write``'s question "does every partition
+of this frame already stream rows of one cell-clustered file?"
+(``streamed_scans``): there it descends only through row-preserving
+nodes and the streamed side of a broadcast hash join, and returns the
+Parquet scans it reaches.
 """
 
 from __future__ import annotations
@@ -49,23 +55,96 @@ _UNSPECIFIED = (
 )
 
 
+def _children(node) -> list:
+    children = node.children()
+    return [children.apply(i) for i in range(children.size())]
+
+
+def _walk(plan, step, state=None) -> list | None:
+    """Walk a physical plan from its root. ``step(node, state)`` returns
+    the ``(child, state)`` pairs to descend into, ``[]`` at a leaf, or
+    None to reject the plan. Returns the ``(leaf, state)`` pairs
+    reached, or None when a step rejected."""
+    leaves, stack = [], [(plan, state)]
+    while stack:
+        node, state = stack.pop()
+        nxt = step(node, state)
+        if nxt is None:
+            return None
+        if nxt:
+            stack.extend(nxt)
+        else:
+            leaves.append((node, state))
+    return leaves
+
+
 def _narrow_chain(gateway, plan) -> bool:
     """True when no node of the physical ``plan`` is an Exchange,
     holds a subquery expression or requires a child distribution."""
-    stack = [plan]
-    while stack:
-        node = stack.pop()
+
+    def step(node, _):
         if is_instance_of(gateway, node, _EXCHANGE):
-            return False
+            return None
         if node.subqueries().nonEmpty():
-            return False
+            return None
         dists = node.requiredChildDistribution()
         for i in range(dists.size()):
             if not is_instance_of(gateway, dists.apply(i), _UNSPECIFIED):
-                return False
-        children = node.children()
-        stack.extend(children.apply(i) for i in range(children.size()))
-    return True
+                return None
+        return [(c, None) for c in _children(node)]
+
+    return _walk(plan, step) is not None
+
+
+# one child whose rows and attributes pass through (ColumnarToRow only
+# appears after preparation; it is listed for plans that carry it)
+_PASS_THROUGH = frozenset({"Project", "Filter", "ColumnarToRow"})
+
+
+def _streamed_step(node, attr):
+    """``_walk`` step of ``streamed_scans``: the streamed children of a
+    row-preserving node, each with its own attribute for ``attr``."""
+    name = node.nodeName()
+    if node.subqueries().nonEmpty():
+        return None
+    if name in _PASS_THROUGH:
+        return [(node.child(), attr)]
+    if name == "BroadcastHashJoin":
+        # the build side is broadcast whole to every task: only the
+        # streamed side decides what a partition holds
+        left = node.buildSide().toString() == "BuildRight"
+        return [(node.left() if left else node.right(), attr)]
+    if name == "Union":
+        # a Union's output takes its first child's attributes; the
+        # other children carry theirs at the same position
+        pos = node.output().indexOf(attr)
+        if pos < 0:
+            return None
+        return [(c, c.output().apply(pos)) for c in _children(node)]
+    if name.startswith("Scan parquet"):
+        return []
+    return None
+
+
+def streamed_scans(df: DataFrame, column: str) -> list[str] | None:
+    """Root paths of the Parquet scans that ``df``'s partitions stream,
+    or None unless its pre-AQE physical plan is a streamed path of
+    Project / Filter / Union nodes and broadcast hash joins (build side
+    not walked) down to Parquet scans that each output ``column``'s
+    attribute itself, not a recomputation of it. Job-free: no RDD is
+    built. A scan reading several root paths is reported as one path
+    per line."""
+    plan = df._jdf.queryExecution().sparkPlan()
+    attr = plan.output().apply(df.columns.index(column))
+    leaves = _walk(plan, _streamed_step, attr)
+    if leaves is None:
+        return None
+    paths = []
+    for scan, a in leaves:
+        if not scan.outputSet().contains(a):
+            return None
+        paths.append(scan.relation().location().rootPaths().mkString("\n"))
+    return paths
 
 
 def _input_partitions(df: DataFrame) -> int | None:

@@ -10,6 +10,11 @@ all rounds before it.
 Lineage policy: ``localCheckpoint`` keeps blocks on the executors that
 computed them. On a cluster that can lose executors, swap it for
 ``checkpoint()`` against distributed storage, here and nowhere else.
+
+Each checkpoint stays registered (its blocks stored) until the JVM
+collects its frame, which a loop of many rounds does not wait for: a
+loop hands its previous round's checkpoint to ``release_checkpoint``
+as soon as the new round's exists, so it holds one at a time.
 """
 
 from __future__ import annotations
@@ -29,3 +34,10 @@ def checkpoint_round(
         return df.localCheckpoint(eager=True), {}
     obs = Observation()
     return df.observe(obs, *metrics).localCheckpoint(eager=True), obs.get
+
+
+def release_checkpoint(ckpt: DataFrame | None) -> None:
+    """Drop the stored blocks of ``ckpt``, a frame ``checkpoint_round``
+    returned (None: nothing to drop). Nothing may read it after."""
+    if ckpt is not None:
+        ckpt._jdf.logicalPlan().rdd().unpersist(False)

@@ -45,8 +45,8 @@ HIDDEN_PREFIX = "__"
 ROW_ID = "__row_id"
 
 # positional take: ranges whose upper bound fits comfortably through
-# TakeOrderedAndProject + one window task use the head path; anything
-# larger switches to the distributed bucket rank (_ranked_distributed)
+# one TakeOrderedAndProject task use the head path; anything larger
+# switches to the distributed bucket rank (_ranked_distributed)
 _POSITIONAL_HEAD_MAX = 4_000_000
 
 
@@ -392,12 +392,12 @@ class Dataset:
         array) as columns, aligned to the current row order (reference
         dataset/columns.py in-memory columns, test/test_im_col.py).
 
-        The array is O(n) driver memory by construction, so the
-        row_number alignment join is bounded by what the caller could
-        build anyway; the literal side is broadcast.
+        The array is O(n) driver memory by construction, so ranking
+        the ordered head of all n rows (``_ranked_head``) is bounded
+        by what the caller could build anyway; the literal side is
+        broadcast and joined on each row's position.
         """
         import pandas as pd  # noqa: PLC0415
-        from pyspark.sql import Window  # noqa: PLC0415
 
         n = len(self)
         data: dict[str, object] = {}
@@ -416,16 +416,14 @@ class Dataset:
             units[k] = unit
             if descriptions and k in descriptions:
                 descs[k] = descriptions[k]
-        data["__pos"] = list(range(n))
+        data["__rn"] = list(range(n))
         lit_df = self._df.sparkSession.createDataFrame(pd.DataFrame(data))
 
         order = self._require_order("literal array columns")
-        w = Window.orderBy(*order)
-        pos = (F.row_number().over(w) - 1).alias("__pos")
         joined = (
-            self._df.withColumn("__pos", pos)
-            .join(F.broadcast(lit_df), "__pos")
-            .drop("__pos")
+            self._ranked_head(n, order)
+            .join(F.broadcast(lit_df), "__rn")
+            .drop("__rn")
         )
         return self._clone(joined, units=units, descriptions=descs)
 
@@ -541,7 +539,7 @@ class Dataset:
         Returns a df with ``__rn`` (0-based global position) or None
         when the order shape doesn't qualify (non-numeric or
         descending leading key) — callers fall back to the bounded
-        head+window path.
+        ordered-head rank (``_ranked_head``).
         """
         from pyspark.sql import Window
         from pyspark.sql import types as T
@@ -697,15 +695,14 @@ class Dataset:
     ) -> "Dataset":
         """Select explicit row positions in the current order
         (reference dataset.py:885-912). Positions are joined against a
-        row_number — a broadcast semi-join on the positions list.
-        Positions past ``_POSITIONAL_HEAD_MAX`` rank distributedly
-        (``_ranked_distributed``) instead of limiting a head through
-        one window task."""
+        rank — a broadcast semi-join on the positions list. The rank is
+        the ordered head's (``_ranked_head``); positions past
+        ``_POSITIONAL_HEAD_MAX`` rank distributedly
+        (``_ranked_distributed``) instead of sorting a head in one
+        task."""
         positions = sorted(set(int(r) for r in rows))
         if not positions:
             return self._clone(self._df.limit(0))
-        from pyspark.sql import Window
-
         order = self._require_order("take_rows")
         spark = self._df.sparkSession
         if head_max is None:
@@ -719,11 +716,17 @@ class Dataset:
                     F.broadcast(pos_df), "__rn", "left_semi"
                 ).drop("__rn")
                 return self._clone(out)
-        head = self._df.orderBy(*[c for c in order]).limit(hi)
-        w = Window.orderBy(*order)
-        ranked = head.withColumn("__rn", F.row_number().over(w) - 1)
+        ranked = self._ranked_head(hi, order)
         out = ranked.join(F.broadcast(pos_df), "__rn", "left_semi").drop("__rn")
         return self._clone(out)
+
+    def _ranked_head(self, n: int, order: list[SparkColumn]) -> DataFrame:
+        """The first ``n`` rows in ``order`` with their 0-based position
+        ``__rn``. One TakeOrderedAndProject leaves them sorted in a
+        single partition, where ``monotonically_increasing_id`` counts
+        0, 1, 2, ...: a rank with no un-partitioned window."""
+        head = self._df.orderBy(*order).limit(n)
+        return head.withColumn("__rn", F.monotonically_increasing_id())
 
     # ------------------------------------------------------------------
     # spatial

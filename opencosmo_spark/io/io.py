@@ -6,18 +6,31 @@ HDF5 layout (column datasets + attrs + positional link/tree metadata,
 SPEC.md) maps to:
 
 * ``<name>.ocs/data.parquet/`` — Spark-written Parquet (partitioned,
-  clustered on the spatial cell column when present);
+  clustered on the spatial cell column when present: each file owns
+  a cell range and is sorted by the cell);
 * ``<name>.ocs/header.json`` — header + per-column units/descriptions
   + link metadata (replaces HDF5 attrs) + the Parquet data's Spark
   schema, so ``oc.open`` reads with it and starts no schema-inference
   job (a sidecar without ``schema``, written before it was stored,
-  still opens by inference);
+  still opens by inference), and ``clustered_on``: the cell column
+  the files are clustered on (absent when there is none, or a
+  ``partition`` plugin re-laid the rows out);
 * collections are directories of member datasets + ``collection.json``.
 
 Positional links (start/size, idx) become explicit key columns at
 ingest (SURVEY §1.2) — ``oc.write`` of a StructureCollection persists
 the key-linked tables, and MPI-parallel writes are simply Spark's
 normal parallel Parquet write.
+
+A write range-partitions on the cell column (a sampling job over the
+whole input, then a shuffle) unless the input already streams each
+partition from ``clustered_on`` files: a plain scan of a catalog this
+module wrote, filtered, projected or broadcast-semi-joined (a
+``bound()`` selection, a cascade child). Such a subset is still
+cell-clustered, so it is only sorted within its partitions and written
+in one pass, as any subset of the reference's tree-ordered HDF5 layout
+stays tree-ordered. The write's jobs are named
+``opencosmo_spark.io.write``.
 """
 
 from __future__ import annotations
@@ -26,9 +39,12 @@ import json
 import os
 import shutil
 from typing import TYPE_CHECKING
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession, functions as F, types as T
 
+from .._jobscope import job_scope
+from .._parallel import streamed_scans
 from ..dataset import ROW_ID, Dataset
 from ..header import OpenCosmoHeader
 from ..units import parse_unit
@@ -131,25 +147,30 @@ def write_dataset(path: str, ds, overwrite: bool = False) -> None:
             ]
             df = df.orderBy(*order)
         df = df.withColumn(ROW_ID, F.monotonically_increasing_id())
-    # Cluster on the spatial cell for pruning on re-open: range-partition
-    # so each output FILE owns a contiguous cell range (file-level skip),
-    # then sort within partitions so row-group min/max stats are tight.
-    # One extra shuffle at write time buys every future spatial query
-    # its partition pruning — the 100 TB trade the reference makes with
-    # its tree-ordered HDF5 layout (SPEC.md:56-60).
-    for cluster_col in ("__cell_id", "pixel_cell", "pixel"):
-        if cluster_col in df.columns:
-            df = df.repartitionByRange(cluster_col).sortWithinPartitions(
-                cluster_col
-            )
-            break
-    # partition hook: a plugin may re-layout the DataFrame before the
-    # write (reference PartitionCtx, dtypes/diffsky.py:186-216 keeps
-    # host-satellite groups co-resident the same way)
+    # Cluster on the spatial cell for pruning on re-open: each output
+    # FILE owns a contiguous cell range (file-level skip) and is sorted
+    # within by the cell, so row-group min/max stats are tight. One
+    # range shuffle at write time buys every future spatial query its
+    # pruning — the 100 TB trade the reference makes with its
+    # tree-ordered HDF5 layout (SPEC.md:56-60). An input whose
+    # partitions already stream ``clustered_on`` files (a selection of
+    # a catalog written here) skips the shuffle: each partition holds
+    # the cells of the file splits it reads, and the sort is its pass.
+    cluster_col = next(
+        (c for c in ("__cell_id", "pixel_cell", "pixel") if c in df.columns), None
+    )
     from ..plugins import fire
 
-    df = fire("partition", df, dataset=ds, path=path)
-    df.write.mode("overwrite").parquet(os.path.join(path, DATA_DIR))
+    with job_scope(df.sparkSession.sparkContext, "opencosmo_spark.io.write"):
+        if cluster_col is not None:
+            if not _clustered_input(df, cluster_col):
+                df = df.repartitionByRange(cluster_col)
+            df = df.sortWithinPartitions(cluster_col)
+        # partition hook: a plugin may re-layout the DataFrame before the
+        # write (reference PartitionCtx, dtypes/diffsky.py:186-216 keeps
+        # host-satellite groups co-resident the same way)
+        out = fire("partition", df, dataset=ds, path=path)
+        out.write.mode("overwrite").parquet(os.path.join(path, DATA_DIR))
     sidecar = {
         "type": dtype,
         "header": json.loads(ds.header.to_json()),
@@ -157,10 +178,37 @@ def write_dataset(path: str, ds, overwrite: bool = False) -> None:
         "descriptions": dict(ds._descriptions),
         "convention": ds.convention,
         "extra": {"nside": ds.nside} if isinstance(ds, HealpixMap) else {},
-        "schema": _read_schema(df.schema).jsonValue(),
+        "schema": _read_schema(out.schema).jsonValue(),
     }
+    if cluster_col is not None and out is df:
+        sidecar["clustered_on"] = cluster_col
     with open(os.path.join(path, HEADER_FILE), "w") as f:
         json.dump(sidecar, f, indent=2)
+
+
+def _clustered_input(df, column: str) -> bool:
+    """True when every partition of ``df`` streams rows of ``oc.write``
+    data directories whose sidecar records ``clustered_on: column``
+    (``_parallel.streamed_scans``). Older sidecars lack the key: their
+    selections take the range shuffle."""
+    paths = streamed_scans(df, column)
+    if paths is None:
+        return False
+    for p in paths:
+        uri = urlparse(p)
+        if (
+            "\n" in p
+            or uri.scheme not in ("", "file")
+            or os.path.basename(uri.path) != DATA_DIR
+        ):
+            return False
+        hfile = os.path.join(os.path.dirname(uri.path), HEADER_FILE)
+        if not os.path.exists(hfile):
+            return False
+        with open(hfile) as f:
+            if json.load(f).get("clustered_on") != column:
+                return False
+    return True
 
 
 def _open_single(spark: SparkSession, path: str):

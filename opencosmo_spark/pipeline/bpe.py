@@ -29,7 +29,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .._rounds import checkpoint_round
+from .._rounds import checkpoint_round, release_checkpoint
 from .text import words_expr
 
 _EOW = "</w>"
@@ -180,8 +180,11 @@ def train_bpe_merges(
         init(F.col("word")).alias("symbols"), "freq"
     )
     merges: list[tuple[str, str]] = []
+    held = None  # the previous round's checkpoint
     for _ in range(n_merges):
         words, _ = checkpoint_round(words)
+        release_checkpoint(held)
+        held = words
         top = (
             _pair_counts(words)
             .orderBy(F.col("n").desc(), F.col("pair"))

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from .._parallel import spread_small_input
-from .._rounds import checkpoint_round
+from .._rounds import checkpoint_round, release_checkpoint
 
 
 def md5_lane(c, hex_digits: int = 15) -> F.Column:
@@ -1127,9 +1127,11 @@ def _minlabel_components(
                     .groupBy("__src")
                     .agg(F.min("__label").alias("__label"))
                 )
+            held = labels if it else None  # round 0 reads no checkpoint
             labels, m = checkpoint_round(
                 new.select(F.col("__src").alias("__node"), "__label"), conv_sum
             )
+            release_checkpoint(held)
             converged = m["s"] == prev_sum
             if converged:
                 break
@@ -1185,6 +1187,7 @@ def _star_components(
     )
     prev, converged = None, False
     for _ in range(max_iterations):
+        held = e  # this round's input checkpoint
         # large-star over the symmetric edge set
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = (
@@ -1214,6 +1217,7 @@ def _star_components(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("chk"),
         )
+        release_checkpoint(held)
         # the one-edge-per-child forest property is not separately
         # checked because the final labeling aggregates min(v) per
         # child, which is exact at any composition fixpoint

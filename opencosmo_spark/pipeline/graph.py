@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .._rounds import checkpoint_round
+from .._rounds import checkpoint_round, release_checkpoint
 
 
 # href="..." / href='...' targets; fragment-only links (#...) excluded
@@ -123,6 +123,7 @@ def pagerank(
     # the carried frame holds every node with its flag, so each round's
     # left join against it needs no separate node table
     ranks = nodes.select("node", "_dang", F.lit(1.0 / n).alias("rank"))
+    held = nodes  # the checkpoint ranks reads, released by the next round
     # out-strength folded into the edges once: the per-iteration join
     # carries (src, dst, share) only
     shares = (
@@ -152,6 +153,8 @@ def pagerank(
                 F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
                 F.sum(F.when(F.col("_dang"), F.col("rank"))).alias("dmass"),
             )
+            release_checkpoint(held)
+            held = ranks
             dangling_mass = stats["dmass"] or 0.0
             if stats["delta"] is not None and stats["delta"] < tol:
                 break

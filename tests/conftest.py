@@ -24,7 +24,7 @@ from opencosmo_spark.units import parse_unit
 BOX = 64.0
 N_HALOS = 2000
 SEED = 42
-FIXDIR = "/tmp/ocs_fixtures_v5"
+FIXDIR = "/tmp/ocs_fixtures_v6"
 
 
 @pytest.fixture(scope="session")
@@ -43,10 +43,11 @@ def spark():
 @pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` runs ``fn()`` in its own job group and returns
-    (its result, the number of Spark jobs it started)."""
+    (its result, the number of Spark jobs it started); with ``name``,
+    only the jobs of that name (the status store's job name)."""
     sc = spark.sparkContext
 
-    def run(fn):
+    def run(fn, name=None):
         # a group keeps its jobs for the life of the app: one per call
         group = f"count_jobs-{uuid.uuid4()}"
         sc.setJobGroup(group, group)
@@ -54,7 +55,11 @@ def count_jobs(spark):
             out = fn()
             # the status store is fed by the listener bus: drain it first
             sc._jsc.sc().listenerBus().waitUntilEmpty()
-            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+            ids = sc.statusTracker().getJobIdsForGroup(group)
+            if name is not None:
+                store = sc._jsc.sc().statusStore()
+                ids = [i for i in ids if store.job(i).name() == name]
+            return out, len(ids)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
@@ -74,6 +79,21 @@ def cached_rdd_ids(spark):
         return {
             k for k, rdd in sc._jsc.getPersistentRDDs().items()
             if not rdd.isCheckpointed()
+        }
+
+    return ids
+
+
+@pytest.fixture
+def checkpoint_rdd_ids(spark):
+    """``checkpoint_rdd_ids()`` is the set of locally checkpointed RDD
+    ids whose blocks are still stored."""
+    sc = spark.sparkContext
+
+    def ids():
+        return {
+            k for k, rdd in sc._jsc.getPersistentRDDs().items()
+            if rdd.isCheckpointed()
         }
 
     return ids

@@ -102,6 +102,15 @@ def test_apply_bpe_matches_reference(spark):
         assert toks[i] == want, i
 
 
+def test_train_bpe_holds_one_round_checkpoint(spark, checkpoint_rdd_ids):
+    """Each round releases the previous round's word-table checkpoint:
+    twelve rounds leave one stored (one per round before)."""
+    df = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(TEXTS)])
+    before = checkpoint_rdd_ids()
+    assert train_bpe_merges(df, n_merges=12) == _ref_bpe(TEXTS, 12)
+    assert len(checkpoint_rdd_ids() - before) <= 1
+
+
 def test_train_bpe_early_stop(spark):
     # every word unique, every pair frequency 1 -> no merges at default
     # min_pair_freq=2

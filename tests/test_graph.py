@@ -149,3 +149,21 @@ def test_pagerank_releases_its_caches_on_every_path(
     with pytest.raises(RuntimeError, match="round failed"):
         pagerank(graph_df[0], max_iter=5, tol=0.0)
     assert cached_rdd_ids() - before == set()
+
+
+def test_pagerank_holds_one_round_checkpoint(spark, graph_df, checkpoint_rdd_ids):
+    """Each round releases the previous round's checkpoint (the node
+    table in round one): ten rounds leave one stored, and the ranks
+    still equal the dense twin's."""
+    df, edges, _, _ = graph_df
+    nodes = sorted({x for e in edges for x in e})
+    idx = {v: i for i, v in enumerate(nodes)}
+    dense = _numpy_pagerank(
+        [(idx[a], idx[b]) for a, b in edges], len(nodes), iters=10
+    )
+    before = checkpoint_rdd_ids()
+    ranks = pagerank(df, max_iter=10, tol=0.0)
+    assert len(checkpoint_rdd_ids() - before) <= 1
+    got = {r["node"]: r["rank"] for r in ranks.collect()}
+    for v in nodes:
+        assert got[f"h{v}"] == pytest.approx(dense[idx[v]], abs=1e-12)

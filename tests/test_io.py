@@ -479,3 +479,167 @@ def test_structure_collection_hdf5_export_gated(spark, tmp_path):
     assert sorted(cx[s : s + z].tolist()) == [0.2, 0.4]
     s, z = by_tag[30]
     assert sorted(cx[s : s + z].tolist()) == [0.1, 0.3]
+
+
+# ---------------------------------------------------------------------
+# clustered writes: a selection of a written catalog is written in one
+# pass; anything else takes the range shuffle
+# ---------------------------------------------------------------------
+WRITE_JOB = "opencosmo_spark.io.write"
+CENTER = ("fof_halo_center_x", "fof_halo_center_y", "fof_halo_center_z")
+LO, HI = (8.0, 8.0, 8.0), (40.0, 40.0, 40.0)
+
+
+@pytest.fixture(scope="module")
+def catalog(spark, fixtures):
+    return oc.open(f"{fixtures}/halo_properties", f"{fixtures}/dm_particles")
+
+
+def _cell_spans(path):
+    """(min, max, sorted?) of ``__cell_id`` in each non-empty file."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    spans = []
+    for f in sorted(glob.glob(os.path.join(path, "data.parquet", "*.parquet"))):
+        c = pq.read_table(f, columns=["__cell_id"])["__cell_id"].to_numpy()
+        if len(c):
+            spans.append((int(c.min()), int(c.max()), bool((np.diff(c) >= 0).all())))
+    return spans
+
+
+def _clustered_on(path):
+    import json
+    import os
+
+    with open(os.path.join(path, "header.json")) as f:
+        return json.load(f).get("clustered_on")
+
+
+def _took_range_path(monkeypatch):
+    """Record what ``write_dataset`` decided for each write."""
+    from opencosmo_spark.io import io as iomod
+
+    real, seen = iomod._clustered_input, []
+
+    def spy(df, column):
+        seen.append(real(df, column))
+        return seen[-1]
+
+    monkeypatch.setattr(iomod, "_clustered_input", spy)
+    return seen
+
+
+def test_bounded_selection_writes_in_one_pass(catalog, count_jobs, tmp_path):
+    """A bound() selection of a written catalog and its cascade child
+    stream cell-clustered files: they are sorted within partitions and
+    written, with no range sample or shuffle (3 and 5 jobs on the range
+    path)."""
+    from opencosmo_spark import make_box
+
+    sel = catalog.bound(make_box(LO, HI))
+    src, child = str(tmp_path / "halos"), str(tmp_path / "particles")
+    _, n_src = count_jobs(lambda: oc.write(src, sel.source), WRITE_JOB)
+    _, n_child = count_jobs(lambda: oc.write(child, sel["dm_particles"]), WRITE_JOB)
+    assert n_src == 1
+    assert n_child <= 2  # the broadcast of the semi-join's keys + the write
+    for path in (src, child):
+        assert _clustered_on(path) == "__cell_id"
+        spans = _cell_spans(path)
+        assert spans and all(ok for _, _, ok in spans)
+    assert len(oc.open(src)) == len(sel.source)
+    assert len(oc.open(child)) == len(sel["dm_particles"])
+
+
+def test_write_names_its_jobs_and_restores_the_call_site(
+    spark, catalog, count_jobs, tmp_path
+):
+    sc = spark.sparkContext
+    sc.setLocalProperty("callSite.short", "caller")
+    try:
+        _, total = count_jobs(lambda: oc.write(str(tmp_path / "a"), catalog.source))
+        _, named = count_jobs(
+            lambda: oc.write(str(tmp_path / "b"), catalog.source), WRITE_JOB
+        )
+        assert total == named > 0
+        assert sc.getLocalProperty("callSite.short") == "caller"
+        assert sc.getLocalProperty("callSite.long") is None
+    finally:
+        sc.setLocalProperty("callSite.short", None)
+
+
+def test_written_selection_keeps_bound_pruning(catalog, tmp_path):
+    """bound() on the reopened subset pushes the same filters as on the
+    catalog and returns the brute-force rows."""
+    import re
+
+    from opencosmo_spark import make_box
+
+    path = str(tmp_path / "halos")
+    oc.write(path, catalog.bound(make_box(LO, HI)).source)
+    lo2, hi2 = (12.0, 20.0, 8.0), (30.0, 36.0, 24.0)
+    inner = make_box(lo2, hi2)
+    back = oc.open(path).bound(inner)
+
+    def pushed(ds):
+        plan = ds.spark_df._jdf.queryExecution().executedPlan().toString()
+        return re.findall(r"PushedFilters: \[[^\]]*\]", plan)
+
+    assert pushed(back) == pushed(catalog.source.bound(inner))
+    raw = catalog.source.get_data("pandas")
+    keep = np.ones(len(raw), bool)
+    for (a, b), (c, d), axis in zip(zip(LO, HI), zip(lo2, hi2), CENTER):
+        v = raw[axis].to_numpy()
+        keep &= (v >= max(a, c)) & (v < min(b, d))
+    got = sorted(back.get_data("pandas").fof_halo_tag)
+    assert got == sorted(raw.fof_halo_tag[keep])
+    assert got
+
+
+def test_other_inputs_take_the_range_path(
+    spark, fixtures, catalog, monkeypatch, tmp_path
+):
+    """Raw ingested input, a sort_by head, a catalog whose sidecar
+    predates ``clustered_on`` and a cascade child joined by shuffle are
+    range-partitioned: each written file owns its own cell range."""
+    import json
+    import shutil
+
+    from opencosmo_spark import Dataset, make_box
+    from opencosmo_spark.io.ingest import ingest_snapshot
+
+    box = make_box(LO, HI)
+    raw = catalog.source.get_data("pandas")
+    ingested = Dataset(
+        ingest_snapshot(spark.createDataFrame(raw), CENTER, 64.0, cluster=False),
+        header=catalog.source.header,
+    )
+    older = str(tmp_path / "older")
+    shutil.copytree(f"{fixtures}/halo_properties", older)
+    with open(f"{older}/header.json") as f:
+        side = json.load(f)
+    del side["clustered_on"]
+    with open(f"{older}/header.json", "w") as f:
+        json.dump(side, f)
+
+    seen = _took_range_path(monkeypatch)
+    inputs = {
+        "ingested": lambda: ingested,
+        "sort_by": lambda: catalog.source.sort_by("fof_halo_mass").take(500),
+        "older": lambda: oc.open(older).bound(box),
+        "shuffle_join": lambda: catalog.bound(box)["dm_particles"],
+    }
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for name, make in inputs.items():
+        if name == "shuffle_join":
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            oc.write(str(tmp_path / "out" / name), make())
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        spans = sorted(_cell_spans(str(tmp_path / "out" / name)))
+        assert spans and all(ok for _, _, ok in spans), name
+        assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), name
+    assert seen == [False] * len(inputs)

@@ -397,6 +397,28 @@ def test_connected_components_warns_when_rounds_run_out(spark, algorithm):
         )
 
 
+@pytest.mark.parametrize("algorithm", ["minlabel", "star"])
+def test_connected_components_hold_one_round_checkpoint(
+    spark, algorithm, checkpoint_rdd_ids
+):
+    """Each round releases the previous round's checkpoint: the rounds
+    a 12-node chain takes leave one stored, and the labels are whole."""
+    from opencosmo_spark.pipeline.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        pd.DataFrame({"a": list(range(11)), "b": list(range(1, 12))})
+    )
+    nodes = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(12))}))
+    before = checkpoint_rdd_ids()
+    labels = connected_components(
+        edges, nodes, id_col="doc_id", max_iterations=30, algorithm=algorithm
+    )
+    assert len(checkpoint_rdd_ids() - before) <= 1
+    assert {r["doc_id"]: r["cluster_id"] for r in labels.collect()} == {
+        i: 0 for i in range(12)
+    }
+
+
 def test_minlabel_releases_edge_cache_when_a_round_fails(
     spark, cached_rdd_ids, monkeypatch
 ):

@@ -886,3 +886,63 @@ def test_spread_probe_walks_plan_nodes(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("spread-probe")) == []
+
+
+def _global_windows(df) -> list[bool]:
+    """For each Window node with no PARTITION BY in ``df``'s physical
+    plan (the node that warns ``No Partition Defined`` and pulls its
+    whole input through one task): whether a limit below it bounds
+    that input."""
+    limits = {"TakeOrderedAndProject", "GlobalLimit", "CollectLimit"}
+    found, stack = [], [(df._jdf.queryExecution().sparkPlan(), False)]
+    while stack:
+        node, bounded = stack.pop()
+        name = node.nodeName()
+        if name == "Window" and node.partitionSpec().isEmpty():
+            found.append(bounded)
+        children = node.children()
+        stack.extend(
+            (children.apply(i), bounded or name in limits)
+            for i in range(children.size())
+        )
+    return found
+
+
+def test_no_bench_plan_has_an_unbounded_global_window(spark):
+    import bench
+
+    for q in bench.BENCH_QUERIES + bench.EXTRA_QUERIES:
+        assert all(_global_windows(entry.queries()[q](spark, SF))), q
+
+
+def test_positional_ranks_plan_no_global_window(spark):
+    """take_rows and literal-array columns rank the ordered head: no
+    row_number over an un-partitioned window, same rows as pandas."""
+    import numpy as np
+
+    import opencosmo_spark as oc
+
+    keys = ["l_orderkey", "l_linenumber"]
+    ds = oc.open(f"{SF}/lineitem.parquet").sort_by(*keys)
+    pdf = ds.get_data("pandas").sort_values(keys)
+
+    rows = ds.take_rows([5, 10, 100])
+    assert _global_windows(rows.spark_df) == []
+    got = rows.get_data("pandas").sort_values(keys)[keys].to_numpy()
+    np.testing.assert_array_equal(got, pdf.iloc[[5, 10, 100]][keys].to_numpy())
+
+    # literal arrays need a total order: k is a permutation of 0..n-1
+    from pyspark.sql import functions as F
+
+    n = 5000
+    perm = oc.Dataset(
+        spark.range(0, n, 1, 3).select(((F.col("id") * 7919) % n).alias("k"))
+    )
+    for invert in (False, True):
+        out = perm.sort_by("k", invert=invert).with_new_columns(
+            pos=np.arange(n, dtype=np.int64)
+        )
+        assert _global_windows(out.spark_df) == []
+        got = out.get_data("pandas").sort_values("pos")
+        want = np.arange(n)[::-1] if invert else np.arange(n)
+        np.testing.assert_array_equal(got["k"].to_numpy(), want)
